@@ -130,7 +130,7 @@ object Bench {
     * `queries_omitted`) per the repo's no-silent-caps convention,
     * and `full` names the complete artifact written alongside. */
   private[graft] def renderBenchLine(times: Seq[(String, Double)],
-      errors: Seq[String], leaks: Seq[String], samples: Int,
+      errors: Seq[String], leaks: Seq[String], samples: Int, cpus: Int,
       sfDir: String): String = {
     val byName = times.toMap
     val inHead = headline.filter(byName.contains)
@@ -149,6 +149,7 @@ object Bench {
     def meta(omitted: Int): String =
       s"""{"metric":"total","value":${compact(total, 3)},""" +
         s""""unit":"sec","samples":$samples,"sf":"$sfDir",""" +
+        s""""cpus":$cpus,""" +
         s""""errors_total":${errors.size},"errors":$errJson,""" +
         s""""leaked_total":${leaks.size},""" +
         s""""leaked_streams":$leakJson,""" +
@@ -365,7 +366,7 @@ object Bench {
       (renderFullJson(times, gcs, errors.toSeq, leaks.toSeq, samples,
         sfDir) + "\n").getBytes("UTF-8"))
     println(renderBenchLine(times, errors.toSeq, leaks.toSeq, samples,
-      sfDir))
+      cpus.toInt, sfDir))
     System.out.flush()
     // the http gate fixtures' dispatcher threads are non-daemon; a
     // plain return would leave the JVM (and the driver's bench step)

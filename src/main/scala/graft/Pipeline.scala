@@ -133,13 +133,15 @@ object Pipeline {
     val sinksStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
     // operator-persisted frames (ngram candidates, benchmark grams)
     // live exactly as long as THIS run's sink actions need them; the
-    // scope releases them at the end — unless this run started
-    // streaming queries, whose live micro-batch plans may reference
+    // scope releases them at the end — unless this run built
+    // streaming frames, whose live micro-batch plans may reference
     // a tracked frame (e.g. a batch http snapshot joined into a
     // stream); those frames fall to session cleanup (clearCache).
+    // Decided from this run's own collections, not a global query
+    // count: another run may start a stream at the same moment.
     val cacheScope = graft.ops.CacheTracker.beginScope()
     var scopeClosed = false
-    val queriesBefore = graft.streaming.StreamRunner.allQueries.size
+    var built = Map.empty[String, DataFrame]
     try {
       val (collections, actions) =
         try runPhased(spark, configText, args, context,
@@ -167,14 +169,12 @@ object Pipeline {
                 depth + 1)
             }
         }
+      built = collections
       actions.foreach(_.apply())
       collections
     } finally {
-      if (!scopeClosed) {
-        val startedStreaming =
-          graft.streaming.StreamRunner.allQueries.size > queriesBefore
-        cacheScope.close(release = !startedStreaming)
-      }
+      if (!scopeClosed)
+        cacheScope.close(release = !built.values.exists(_.isStreaming))
     }
   }
 
@@ -227,18 +227,15 @@ object Pipeline {
     // from the data, so large frames keep their width. Restored
     // after construction (consumers planned under the default treat
     // the cached output partitioning conservatively — correct either
-    // way); an explicitly user-set value wins and is left alone.
+    // way); an explicitly user-set value wins and is left alone
+    // (nested runs therefore re-scope idempotently).
     val cacheAqeKey =
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val cacheAqeUserSet = spark.sessionState.conf.contains(cacheAqeKey)
-    if (!cacheAqeUserSet) spark.conf.set(cacheAqeKey, "true")
-    try runPhased0(spark, configText, args, context, executeSinks,
-      sinksStarted)
-    // unset, not set-back-to-prior: a set() would mark the key as
-    // explicitly configured, so every LATER run would read it as
-    // user-set and skip the scope (and nested runs re-scope
-    // idempotently either way)
-    finally if (!cacheAqeUserSet) spark.conf.unset(cacheAqeKey)
+    val scoped =
+      if (spark.sessionState.conf.contains(cacheAqeKey)) Nil
+      else Seq(cacheAqeKey -> "true")
+    graft.ops.ConfScope(spark, scoped: _*)(runPhased0(spark, configText,
+      args, context, executeSinks, sinksStarted))
   }
 
   private def runPhased0(spark: SparkSession, configText: String,

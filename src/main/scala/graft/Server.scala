@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `MPipelineServer` (`MPipelineServer.java:16-40`,
   * `api/PipelineService.java`, `api/SchemaService.java`): a thin
   * servlet layer over the same config lifecycle as [[Run]], sharing
-  * one SparkSession across requests.
+  * one SparkContext across requests.
   *
   * Endpoints:
   *  - `GET  /probe` — liveness, returns `ok` (the reference's probe).
@@ -20,10 +20,19 @@ import org.apache.spark.sql.SparkSession
   *    `counts=true` (counting forces full computation — opt-in).
   *    Errors return 400 with the exception message.
   *
-  * Requests execute SERIALLY (one pipeline at a time on the shared
-  * session) — the reference's lifecycle is likewise one pipeline
-  * per request; parallel job submission on a shared SparkSession is
-  * a scheduler-pool decision a deployment makes, not a default.
+  * Each `/run` and `/schema` request runs on its own clone of the
+  * server's session (`cloneSession`), so its temp views (`sql`
+  * modules), scoped confs and listener registrations stay with the
+  * request and never reach the server's session; the SparkContext
+  * and cache manager are shared. Requests run CONCURRENTLY on one
+  * handler thread per core — most of a request is single-threaded
+  * planning work (config resolution, graph construction, Catalyst)
+  * that one thread would serialize — except `drain=true`, which drains
+  * every registered streaming query and so runs alone: it takes the
+  * write side of a read/write lock every other request reads.
+  * Streaming queries a request starts live in its clone; a
+  * `StreamingQueryListener` on the server's session does not see
+  * them.
   *
   *   spark-submit --class graft.Server pipelinespark.jar [port]
   */
@@ -51,7 +60,25 @@ object Server {
       : com.sun.net.httpserver.HttpServer = {
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
-    val lock = new Object
+    // one handler thread per core; idle ones exit, so a stopped
+    // server leaves no threads behind
+    val threads = spark.sparkContext.defaultParallelism
+    val pool = new java.util.concurrent.ThreadPoolExecutor(threads,
+      threads, 2L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-server")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    srv.setExecutor(pool)
+    // fair: a waiting drain is not starved by a stream of readers
+    val drainLock =
+      new java.util.concurrent.locks.ReentrantReadWriteLock(true)
+    // once on the server's session: every clone inherits them, so no
+    // request registers them again
+    graft.operators.SqlTransform.registerMdtUdfs(spark)
 
     def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int,
         body: String, ctype: String = "application/json"): Unit = {
@@ -71,10 +98,17 @@ object Server {
             java.net.URLDecoder.decode(v, "UTF-8")
         }.toMap
 
-    def handle(ex: com.sun.net.httpserver.HttpExchange)(
-        f: => (Int, String)): Unit =
+    /** Run `f` on a fresh clone of the server's session. */
+    def handle(ex: com.sun.net.httpserver.HttpExchange,
+        exclusive: => Boolean = false)(
+        f: SparkSession => (Int, String)): Unit =
       try {
-        val (code, body) = lock.synchronized(f)
+        val lock =
+          if (exclusive) drainLock.writeLock else drainLock.readLock
+        lock.lock()
+        val (code, body) =
+          try f(org.apache.spark.sql.graft.SessionBridge.cloneSession(spark))
+          finally lock.unlock()
         respond(ex, code, body)
       } catch {
         case e: Throwable =>
@@ -89,10 +123,10 @@ object Server {
         respond(ex, 200, "ok", "text/plain"))
 
     srv.createContext("/schema",
-      (ex: com.sun.net.httpserver.HttpExchange) => handle(ex) {
+      (ex: com.sun.net.httpserver.HttpExchange) => handle(ex) { sess =>
         val cfg = new String(ex.getRequestBody.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
-        val built = Pipeline.build(spark, cfg,
+        val built = Pipeline.build(sess, cfg,
           queryParams(ex).collect {
             case (k, v) if k.startsWith("args.") =>
               k.stripPrefix("args.") -> v
@@ -105,8 +139,11 @@ object Server {
         (200, o.toString)
       })
 
+    def drain(q: Map[String, String]) = q.get("drain").contains("true")
+
     srv.createContext("/run",
-      (ex: com.sun.net.httpserver.HttpExchange) => handle(ex) {
+      (ex: com.sun.net.httpserver.HttpExchange) =>
+        handle(ex, exclusive = drain(queryParams(ex))) { sess =>
         val q = queryParams(ex)
         val cfg = new String(ex.getRequestBody.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
@@ -114,9 +151,8 @@ object Server {
           case (k, v) if k.startsWith("args.") =>
             k.stripPrefix("args.") -> v
         }
-        val built = Pipeline.execute(spark, cfg, args, q.get("context"))
-        if (q.get("drain").contains("true"))
-          graft.streaming.StreamRunner.drainAll()
+        val built = Pipeline.execute(sess, cfg, args, q.get("context"))
+        if (drain(q)) graft.streaming.StreamRunner.drainAll()
         val o = graft.config.Json.obj()
         val names = o.putArray("collections")
         built.keys.toSeq.sorted.foreach(names.add)

@@ -6585,7 +6585,7 @@ sinks:
     }),
 
     // HTTP server mode driven END-TO-END (previously unit-only):
-    // a real loopback POST /run executes a config on the shared
+    // a real loopback POST /run executes a config on a clone of the
     // session — the reference's MPipelineServer lifecycle — and the
     // sink's parquet output is compared against a plain oracle
     "q159_server" -> ((s: SparkSession, dir: String) => {

@@ -134,24 +134,15 @@ object TransformCommon {
     * count. */
   def withLoopPlanning[A](df: DataFrame)(body: => A): A = {
     val sess = df.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqePrior = sess.conf.get(aqeKey)
-    val partPrior = sess.conf.get(partKey)
-    val perSplit = BigInt(sess.sessionState.conf.filesMaxPartitionBytes)
+    val conf = sess.sessionState.conf
+    val parts = BigInt(conf.defaultNumShufflePartitions)
+    val perSplit = BigInt(conf.filesMaxPartitionBytes)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val sentinel = BigInt(sess.sessionState.conf.defaultSizeInBytes)
     val loopParts =
-      if (bytes >= sentinel) BigInt(partPrior.toInt)
-      else ((bytes + perSplit - 1) / perSplit)
-        .min(BigInt(partPrior.toInt)).max(BigInt(1))
-    sess.conf.set(aqeKey, "false")
-    sess.conf.set(partKey, loopParts.toString)
-    try body
-    finally {
-      sess.conf.set(aqeKey, aqePrior)
-      sess.conf.set(partKey, partPrior)
-    }
+      if (bytes >= BigInt(conf.defaultSizeInBytes)) parts
+      else ((bytes + perSplit - 1) / perSplit).min(parts).max(BigInt(1))
+    graft.ops.ConfScope(sess, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopParts.toString)(body)
   }
 
   /** Raise map-side parallelism when a batch input arrives in fewer
@@ -1198,16 +1189,17 @@ object SqlTransform {
   /** Scalar MDT_* UDFs with the reference's exact null semantics
     * (MathFunctions/ArrayFunctions: greatest/least treat null as
     * missing; contains_all is false on any null input). */
-  // once per session: re-registration is harmless but logs a
-  // "replaced a previously registered function" WARN per query, which
-  // polluted the bench harness's stdout enough to break its one-line
-  // JSON contract (rounds 3-5 shipped unparseable bench files)
-  private val mdtRegistered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  private def registerMdtUdfs(spark: SparkSession): Unit = {
-    if (!mdtRegistered.add(spark)) return
+  // once per function registry: re-registration is harmless but logs
+  // a "replaced a previously registered function" WARN per query,
+  // which polluted the bench harness's stdout enough to break its
+  // one-line JSON contract (rounds 3-5 shipped unparseable bench
+  // files). Probing the registry, not a per-session set, also covers
+  // cloned sessions, which inherit their parent's functions.
+  private[graft] def registerMdtUdfs(
+      spark: SparkSession): Unit = synchronized {
+    if (spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(
+          "MDT_GREATEST_INT64"))) return
     def g[T](ge: Boolean)(implicit ord: Ordering[T]): (T, T) => T =
       (a, b) =>
         if (a == null) b else if (b == null) a

@@ -5,6 +5,7 @@ import graft.config.Json._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.jdk.CollectionConverters._
 
 /** Starts streaming sinks (SURVEY §2.9): `writeStream` with the
   * module's trigger; output mode maps Beam accumulation
@@ -17,18 +18,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * can drain with `processAllAvailable` or block on `awaitAny`. */
 object StreamRunner {
 
-  private val active = scala.collection.mutable.ListBuffer[StreamingQuery]()
+  // concurrent server requests start queries at the same time
+  private val active =
+    new java.util.concurrent.CopyOnWriteArrayList[StreamingQuery]()
 
-  def activeQueries: Seq[StreamingQuery] = active.toSeq.filter(_.isActive)
+  def activeQueries: Seq[StreamingQuery] = allQueries.filter(_.isActive)
 
   /** Register an externally-started query (failure-sink drains, custom
     * sources) for the same drain/stop lifecycle as sink queries. */
-  def register(q: StreamingQuery): Unit = active += q
+  def register(q: StreamingQuery): Unit = active.add(q)
 
   /** Every query started this session, dead or alive — consult this
     * (not activeQueries) when surfacing failures: a query that died in
     * its first micro-batch is already inactive. */
-  def allQueries: Seq[StreamingQuery] = active.toSeq
+  def allQueries: Seq[StreamingQuery] = active.asScala.toSeq
 
   /** Pane store for triggered memory/debug sinks: one buffer of
     * (paneTiming, row) per query name. */
@@ -264,13 +267,13 @@ object StreamRunner {
         }.getOrElse(lit("early")),
         post = b => if (hasLate) b else b.filter(col("__pane") =!= "late")))
       .start()
-    active += earlyQ
+    register(earlyQ)
     val finalQ = df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint(cfg) + "/final")
       .foreachBatch(paneWriter(cfg, "onTime"))
       .start()
-    active += finalQ
+    register(finalQ)
     finalQ
   }
 
@@ -371,7 +374,7 @@ object StreamRunner {
         }
       }
       .start()
-    active += q
+    register(q)
     q
   }
 
@@ -394,17 +397,19 @@ object StreamRunner {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Session-conf overrides scoped to the running pipeline: each
-    * entry restores one key to its pre-set value; stopAll runs and
+    * entry restores one key to its pre-set state; stopAll runs and
     * clears them. */
   private val confRestores = scala.collection.mutable.ListBuffer[() => Unit]()
 
-  /** Currently-scoped key → value, for conflict detection: every
-    * query of a pipeline starts AFTER every module builds, so two
-    * modules scoping the SAME key to DIFFERENT values cannot both
+  /** Currently-scoped (session, key) → value, for conflict detection:
+    * every query of a pipeline starts AFTER every module builds, so
+    * two modules scoping the SAME key to DIFFERENT values cannot both
     * get their value — the last write would silently win for every
-    * query's checkpoint. Cleared with confRestores. */
+    * query's checkpoint. Keyed by session: pipelines on different
+    * sessions (the server's per-request clones) have separate confs.
+    * Cleared with confRestores. */
   private val scopedValues =
-    scala.collection.mutable.Map[String, String]()
+    scala.collection.mutable.Map[(SparkSession, String), String]()
 
   /** Set a session conf for the lifetime of the queries this
     * pipeline starts; the prior value (or unset state) is restored
@@ -415,10 +420,10 @@ object StreamRunner {
     * run fails loudly (queries start after all builds, so only the
     * last value could ever take effect); re-scoping to the same
     * value is a no-op. */
-  def scopeConf(sess: SparkSession, key: String, value: String): Unit = {
+  def scopeConf(sess: SparkSession, key: String, value: String): Unit =
     confRestores.synchronized {
-      scopedValues.get(key) match {
-        case Some(v) if v == value => return // idempotent re-scope
+      scopedValues.get((sess, key)) match {
+        case Some(v) if v == value => // idempotent re-scope
         case Some(v) => throw new IllegalArgumentException(
           s"conflicting per-job values for $key in one pipeline " +
             s"($v vs $value): Spark captures the conf when each " +
@@ -426,16 +431,10 @@ object StreamRunner {
             "one value per pipeline can take effect. Run the " +
             "modules in separate pipelines")
         case None =>
-          val prior = sess.conf.getOption(key)
-          scopedValues(key) = value
-          confRestores += (() => prior match {
-            case Some(v) => sess.conf.set(key, v)
-            case None => sess.conf.unset(key)
-          })
+          scopedValues((sess, key)) = value
+          confRestores += graft.ops.ConfScope.set(sess, key, value)
       }
     }
-    sess.conf.set(key, value)
-  }
 
   /** Plan-level emptiness probe for foreachBatch micro-batches
     * (r22): a no-data batch (watermark-advance cleanup, restart
@@ -1160,7 +1159,7 @@ object StreamRunner {
         }
       }
       .start()
-    active += q
+    register(q)
     q
   }
 
@@ -1183,7 +1182,7 @@ object StreamRunner {
       .foreachBatch(paneWriter(cfg, "pane",
         pre = b => b.filter(col(countField) >= n)))
       .start()
-    active += q
+    register(q)
     q
   }
 
@@ -1276,7 +1275,7 @@ object StreamRunner {
       case other =>
         throw new IllegalArgumentException(s"streaming sink: $other")
     }
-    active += q
+    register(q)
     q
   }
 
@@ -1289,7 +1288,7 @@ object StreamRunner {
     * that already died is surfaced here instead of silently filtered
     * out by the isActive check. */
   def drainAll(): Unit = {
-    active.toSeq.foreach { q =>
+    allQueries.foreach { q =>
       q.exception.foreach(e => throw e)
       if (q.isActive) q.processAllAvailable()
     }

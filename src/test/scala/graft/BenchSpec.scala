@@ -42,7 +42,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("bench line fits the tail budget and accounts for omissions") {
     val times = fakeTimes(realNames)
-    val line = Bench.renderBenchLine(times, Nil, Nil, 3,
+    val line = Bench.renderBenchLine(times, Nil, Nil, 3, 4,
       "/root/testdata/sf0.1")
     assert(line.length <= Bench.lineBudget,
       s"bench line is ${line.length} bytes — over the " +
@@ -54,6 +54,7 @@ class BenchSpec extends AnyFunSuite {
     assert(node.get("queries_total").asInt == times.size)
     assert(node.get("queries_omitted").asInt == times.size - qs.size())
     assert(node.get("full").asText == "bench_full.json")
+    assert(node.get("cpus").asInt == 4)
     // every headline query present in the real set made the cut
     Bench.headline.filter(times.map(_._1).toSet).foreach { h =>
       assert(qs.get(h) != null, s"headline $h omitted")
@@ -71,7 +72,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("the 2000-char stdout tail holds the line complete") {
     val times = fakeTimes(realNames)
-    val line = Bench.renderBenchLine(times, Nil, Nil, 3,
+    val line = Bench.renderBenchLine(times, Nil, Nil, 3, 4,
       "/root/testdata/sf0.1")
     val out = ("x" * 5000) + "\n" + line + sbtSuffix
     val tail = out.substring(out.length - 2000)
@@ -86,7 +87,7 @@ class BenchSpec extends AnyFunSuite {
   test("a round's worth of extra gates still fits (omitted grows)") {
     val extra = (0 until 12).map(i => f"q2$i%02d_future_gate_name")
     val times = fakeTimes(realNames ++ extra)
-    val line = Bench.renderBenchLine(times, Nil, Nil, 3,
+    val line = Bench.renderBenchLine(times, Nil, Nil, 3, 4,
       "/root/testdata/sf0.1")
     assert(line.length <= Bench.lineBudget)
     val node = parse(line)
@@ -101,7 +102,7 @@ class BenchSpec extends AnyFunSuite {
     val times = fakeTimes(names)
     // every gate failed AND leaked — the worst artifact a broken
     // build can produce
-    val line = Bench.renderBenchLine(times, names, names, 3,
+    val line = Bench.renderBenchLine(times, names, names, 3, 4,
       "/root/testdata/sf0.1")
     assert(line.length <= Bench.lineBudget,
       s"mass-failure line is ${line.length} bytes")
