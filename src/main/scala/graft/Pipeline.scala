@@ -107,11 +107,16 @@ object Pipeline {
     VendorSlots.sinks
 
   /** Parse + build all collections; sinks are NOT executed.
-    * `context` selects tagged modules (reference `--context=`). */
+    * `context` selects tagged modules (reference `--context=`). The
+    * run's conf overrides are restored on return; its persisted
+    * frames stay for the caller's actions (see [[ops.CacheTracker]]). */
   def build(spark: SparkSession, configText: String,
       args: Map[String, String] = Map.empty,
-      context: Option[String] = None): Map[String, DataFrame] =
-    run(spark, configText, args, context, executeSinks = false)
+      context: Option[String] = None): Map[String, DataFrame] = {
+    val scope = graft.ops.CacheTracker.beginScope()
+    try runPhased(spark, configText, args, context, executeSinks = false)._1
+    finally scope.close(release = false)
+  }
 
   /** Parse + build + execute sink actions in dependency order. On
     * failure, falls back to `system.failure.alterConfig` when one is
@@ -132,11 +137,14 @@ object Pipeline {
     // triggered case, where a sink action runs DURING construction.
     val sinksStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
     // operator-persisted frames (ngram candidates, benchmark grams)
-    // live exactly as long as THIS run's sink actions need them; the
-    // scope releases them at the end — unless this run built
-    // streaming frames, whose live micro-batch plans may reference
-    // a tracked frame (e.g. a batch http snapshot joined into a
-    // stream); those frames fall to session cleanup (clearCache).
+    // and module conf overrides (stateShufflePartitions) live exactly
+    // as long as THIS run's sink actions need them: every query
+    // captures its confs at start(), so closing the scope restores
+    // the confs on success and failure alike. It releases the frames
+    // too — unless this run built streaming frames, whose live
+    // micro-batch plans may reference a tracked frame (e.g. a batch
+    // http snapshot joined into a stream); those frames fall to
+    // session cleanup (clearCache).
     // Decided from this run's own collections, not a global query
     // count: another run may start a stream at the same moment.
     val cacheScope = graft.ops.CacheTracker.beginScope()
@@ -156,7 +164,8 @@ object Pipeline {
               catch { case _: Throwable => None }
             if (alter.isEmpty || depth >= 4 || sinksStarted.get) throw e
             else {
-              // the failed attempt's frames are orphans: no sink ran
+              // the failed attempt's confs are restored and its
+              // frames are orphans: no sink ran
               // (sinksStarted guards the waits case, which rethrows
               // above), so nothing — including any streaming query
               // the RETRY starts — can reference them. Release here,
@@ -195,15 +204,6 @@ object Pipeline {
           "casts null out / route to failure outputs); under ANSI " +
           "mode they raise instead. Set spark.sql.ansi.enabled=false " +
           "for reference-parity behavior.")
-
-  private def run(spark: SparkSession, configText: String,
-      args: Map[String, String], context: Option[String],
-      executeSinks: Boolean): Map[String, DataFrame] = {
-    val (collections, actions) =
-      runPhased(spark, configText, args, context, executeSinks)
-    actions.foreach(_.apply())
-    collections
-  }
 
   /** Build the whole collection graph, returning the deferred sink /
     * failure-sink actions instead of running them — the Beam-like

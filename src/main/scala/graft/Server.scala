@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    as JSON (the reference's SchemaService).
   *  - `POST /run[?drain=true][&counts=true][&context=c]` — body =
   *    config; executes it (sinks run; `drain` processes all
-  *    available streaming data then stops, like Run's --drain).
+  *    available data of the streaming queries THIS request started,
+  *    like Run's --drain).
   *    Returns the built collection names, plus row counts when
   *    `counts=true` (counting forces full computation — opt-in).
   *    Errors return 400 with the exception message.
@@ -27,9 +28,7 @@ import org.apache.spark.sql.SparkSession
   * and cache manager are shared. Requests run CONCURRENTLY on one
   * handler thread per core — most of a request is single-threaded
   * planning work (config resolution, graph construction, Catalyst)
-  * that one thread would serialize — except `drain=true`, which drains
-  * every registered streaming query and so runs alone: it takes the
-  * write side of a read/write lock every other request reads.
+  * that one thread would serialize; the server holds no lock.
   * Streaming queries a request starts live in its clone; a
   * `StreamingQueryListener` on the server's session does not see
   * them.
@@ -73,9 +72,6 @@ object Server {
       })
     pool.allowCoreThreadTimeOut(true)
     srv.setExecutor(pool)
-    // fair: a waiting drain is not starved by a stream of readers
-    val drainLock =
-      new java.util.concurrent.locks.ReentrantReadWriteLock(true)
     // once on the server's session: every clone inherits them, so no
     // request registers them again
     graft.operators.SqlTransform.registerMdtUdfs(spark)
@@ -99,16 +95,11 @@ object Server {
         }.toMap
 
     /** Run `f` on a fresh clone of the server's session. */
-    def handle(ex: com.sun.net.httpserver.HttpExchange,
-        exclusive: => Boolean = false)(
+    def handle(ex: com.sun.net.httpserver.HttpExchange)(
         f: SparkSession => (Int, String)): Unit =
       try {
-        val lock =
-          if (exclusive) drainLock.writeLock else drainLock.readLock
-        lock.lock()
         val (code, body) =
-          try f(org.apache.spark.sql.graft.SessionBridge.cloneSession(spark))
-          finally lock.unlock()
+          f(org.apache.spark.sql.graft.SessionBridge.cloneSession(spark))
         respond(ex, code, body)
       } catch {
         case e: Throwable =>
@@ -139,11 +130,8 @@ object Server {
         (200, o.toString)
       })
 
-    def drain(q: Map[String, String]) = q.get("drain").contains("true")
-
     srv.createContext("/run",
-      (ex: com.sun.net.httpserver.HttpExchange) =>
-        handle(ex, exclusive = drain(queryParams(ex))) { sess =>
+      (ex: com.sun.net.httpserver.HttpExchange) => handle(ex) { sess =>
         val q = queryParams(ex)
         val cfg = new String(ex.getRequestBody.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
@@ -152,7 +140,11 @@ object Server {
             k.stripPrefix("args.") -> v
         }
         val built = Pipeline.execute(sess, cfg, args, q.get("context"))
-        if (drain(q)) graft.streaming.StreamRunner.drainAll()
+        // the clone is this request's own: its queries are exactly
+        // the ones it started
+        if (q.get("drain").contains("true"))
+          graft.streaming.StreamRunner.drainAll(graft.streaming
+            .StreamRunner.allQueries.filter(_.sparkSession eq sess))
         val o = graft.config.Json.obj()
         val names = o.putArray("collections")
         built.keys.toSeq.sorted.foreach(names.add)

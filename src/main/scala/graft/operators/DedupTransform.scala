@@ -80,12 +80,9 @@ object DedupTransform {
         "reference corpus. Use method: decontaminate for " +
         "stream-against-static matching, or dedup against the " +
         "reference in a batch stage")
-    // pre-validate the streaming contract BEFORE any scoped session
-    // conf mutates: scopeConf's only restore path is stopAll, which
-    // a failed build never reaches — mutating first would leak the
-    // override into the session when a later check throws. The
-    // validated (strategy, ts) pair is passed down so the contract
-    // (and its unknown-key warning) runs exactly once per build
+    // pre-validate the streaming contract up front: the validated
+    // (strategy, ts) pair is passed down so the contract (and its
+    // unknown-key warning) runs exactly once per build
     var streamContract: Option[
       (com.fasterxml.jackson.databind.JsonNode, String)] = None
     if (raw.isStreaming) method match {
@@ -125,14 +122,14 @@ object DedupTransform {
     // with the stream-stream join's knob): streaming dedup keeps one
     // state store per shuffle partition, and the right count follows
     // the job's fingerprint/bucket cardinality, not the session.
-    // Scoped via StreamRunner, restored on stopAll; Spark bakes the
+    // Scoped to the run (CacheTracker.runConf); Spark bakes the
     // count into the checkpoint at first start.
     if (raw.isStreaming)
       p.int("stateShufflePartitions").foreach { n =>
         require(n > 0,
           s"dedup ${cfg.name}: stateShufflePartitions must be " +
             s"positive, got $n")
-        graft.streaming.StreamRunner.scopeConf(raw.sparkSession,
+        graft.ops.CacheTracker.runConf(raw.sparkSession,
           "spark.sql.shuffle.partitions", n.toString)
       }
     if (raw.isStreaming && method == "exact") {

@@ -288,14 +288,15 @@ object JoinTransform {
     // state volume, not of the session (a low-cardinality join on
     // 32+ partitions pays 32 store commits per batch for a handful
     // of keys — measured 5x on the q163 gate; a 100 TB deployment
-    // wants hundreds). Scoped via StreamRunner (restored on
-    // stopAll); Spark bakes the count into the checkpoint at the
-    // query's FIRST start — changing it later needs a fresh
-    // checkpoint, so it is validated loudly here.
+    // wants hundreds). Scoped to the run (CacheTracker.runConf,
+    // restored when the build or execute returns — the query has
+    // captured it at start by then); Spark bakes the count into the
+    // checkpoint at the query's FIRST start — changing it later needs
+    // a fresh checkpoint, so it is validated loudly here.
     p.int("stateShufflePartitions").foreach { n =>
       require(n > 0,
         s"$name: stateShufflePartitions must be positive, got $n")
-      graft.streaming.StreamRunner.scopeConf(l.sparkSession,
+      graft.ops.CacheTracker.runConf(l.sparkSession,
         "spark.sql.shuffle.partitions", n.toString)
     }
     // event-time columns must be true timestamps for Spark's

@@ -153,10 +153,6 @@ object TransformCommon {
     * cores, and on streaming frames. */
   def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    // `spark.graft.widen=false` skips the probe entirely for very
-    // large plans where even optimizing twice is noticeable
-    if (!df.sparkSession.conf.get("spark.graft.widen", "true").toBoolean)
-      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // estimate split count from optimizer stats (file-listing size /
     // maxPartitionBytes) instead of df.rdd.getNumPartitions — the RDD

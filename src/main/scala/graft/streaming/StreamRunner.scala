@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.Pipeline.ModuleCfg
 import graft.config.Json._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.jdk.CollectionConverters._
 
@@ -15,7 +16,9 @@ import scala.jdk.CollectionConverters._
   * each pane holds only since-last-firing elements) while
   * `accumulating` runs the stateful update+append query pair.
   * Started queries are registered here so callers (tests, drivers)
-  * can drain with `processAllAvailable` or block on `awaitAny`. */
+  * can drain with `processAllAvailable` or block on `awaitAny`; that
+  * registry and the memory-sink pane buffer are the only state kept
+  * here — pane trigger state lives with each query (`PaneState`). */
 object StreamRunner {
 
   // concurrent server requests start queries at the same time
@@ -132,6 +135,10 @@ object StreamRunner {
     // sink-level strategy wins; otherwise the nearest upstream
     // module's (where the reference declares it — see Pipeline)
     val strategy = cfg.node("strategy").orElse(upstreamStrategy)
+    // a fresh run starts a fresh pane buffer — a retry (alterConfig)
+    // or second execute in the same session must not append to the
+    // failed attempt's panes
+    paneStore.remove(cfg.name)
     // only the sink's OWN strategy block is validated here — an
     // upstream module's was already checked where it was consumed
     cfg.node("strategy").foreach(Strategy.warnUnknownKeys(_, cfg.name))
@@ -153,27 +160,39 @@ object StreamRunner {
     startPlain(cfg, df, trig, strategy)
   }
 
-  /** Beam `AfterWatermark.pastEndOfWindow().withEarlyFirings(
-    * afterProcessingTime(delay))` approximation
-    * (`module/Strategy.java:276-297`): TWO queries over the same
-    * aggregation plan — an UPDATE-mode query with a ProcessingTime
-    * trigger of the early-firing delay emits speculative panes
-    * (`__pane = early`) every interval while windows are open, and an
-    * APPEND-mode query emits each window exactly once when the
-    * watermark closes it (`__pane = onTime`, Beam's ON_TIME pane).
-    * The cost of the approximation is duplicated aggregation state —
-    * the price of pane multiplexing on an engine with one output mode
-    * per query. Returns the append (authoritative) query; both
-    * register for drain/stop. */
-  /** Per-sink event-time frontier: the max window end (epoch millis)
-    * seen in batches BEFORE the current one. Beam pane timing maps
-    * onto it — a pane for a window whose end precedes the frontier
-    * fires after event time passed the window, i.e. a LATE pane;
-    * the frontier advances after each batch, mirroring how a
-    * watermark in effect during batch N was computed from batch N-1.
-    * Driver-side, one long per sink. */
-  private val frontiers = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Long]()
+  /** Trigger state of ONE pane query, created when it starts and
+    * captured by its foreachBatch closure (a query's micro-batches
+    * run one at a time on its own thread), so two queries never see
+    * each other's state — whatever their sinks are named.
+    *
+    *  - `frontier`: the max window end (epoch millis) seen in batches
+    *    BEFORE the current one. Beam pane timing maps onto it — a
+    *    pane for a window whose end precedes the frontier fires after
+    *    event time passed the window, i.e. a LATE pane; the frontier
+    *    advances after each batch, mirroring how a watermark in
+    *    effect during batch N was computed from batch N-1.
+    *  - `fired`: windows (by end, epoch seconds) whose ON_TIME pane
+    *    already fired — drives the early/onTime/late split. Bounded
+    *    by the windows a run observes (coarse), not by keys.
+    *  - `memPaneIdx`: per-key+window pane ordinal for exact
+    *    accumulating panes on MEMORY/debug sinks (test surface — the
+    *    pane buffer is driver-side anyway). File sinks derive the
+    *    ordinal from their own prior output instead, keeping the
+    *    driver key-free.
+    *  - `lastBatch`: highest batchId already applied by an exact-pane
+    *    query — a same-process micro-batch retry re-enters
+    *    foreachBatch with the same id and must be a no-op (the
+    *    element store, this state, and the sink were all already
+    *    updated). Cross-restart replay safety comes from the on-disk
+    *    layout instead: the store is batch-stamped (`__gbatch=<id>`
+    *    overwritten on replay) and file-sink panes publish as
+    *    `b<id>-*` files that a replay deletes before re-publishing. */
+  private final class PaneState {
+    var frontier: Long = Long.MinValue
+    val fired = scala.collection.mutable.Set[Long]()
+    val memPaneIdx = scala.collection.mutable.Map[Seq[Any], Long]()
+    var lastBatch: Long = -1L
+  }
 
   /** Window-end column of a pane batch, if windowed. */
   private def windowEndCol(batch: DataFrame): Option[Column] =
@@ -239,11 +258,7 @@ object StreamRunner {
     val early = trig("earlyFiringTrigger").get
     val delayMs = delayMillis(early)
     val hasLate = trig("lateFiringTrigger").isDefined
-    frontiers.remove(cfg.name)
-    // a fresh run starts a fresh pane buffer — a retry (alterConfig)
-    // or second execute in the same session must not append to the
-    // failed attempt's panes
-    paneStore.remove(cfg.name)
+    val st = new PaneState
     // each query needs its OWN checkpoint: a shared configured path
     // would collide on query metadata/offsets
     val earlyQ = df.writeStream
@@ -252,16 +267,13 @@ object StreamRunner {
       .option("checkpointLocation", checkpoint(cfg) + "/early")
       .foreachBatch(paneWriter(cfg, "early",
         tagOf = batch => windowEndCol(batch).map { end =>
-          val fPrev = frontiers.getOrDefault(cfg.name,
-            java.lang.Long.MIN_VALUE).longValue()
+          val fPrev = st.frontier
           // advance the frontier AFTER snapshotting it: panes in this
           // batch are judged against where event time stood before it
           val batchMax = batch.agg(max(end.cast("long"))).collect()
             .headOption.flatMap(r => Option(r.get(0)))
             .map(_.asInstanceOf[Long] * 1000L)
-          batchMax.foreach(m => frontiers.merge(cfg.name,
-            java.lang.Long.valueOf(m),
-            (a, b) => if (a >= b) a else b))
+          batchMax.foreach(m => st.frontier = math.max(st.frontier, m))
           when(end.cast("long") * 1000L < fPrev, "late")
             .otherwise("early")
         }.getOrElse(lit("early")),
@@ -276,13 +288,6 @@ object StreamRunner {
     register(finalQ)
     finalQ
   }
-
-  /** Windows whose ON_TIME pane already fired, per sink — drives the
-    * early/onTime/late split of the discarding pane engine. Bounded
-    * by the number of distinct windows a run observes (coarse), not
-    * by keys. */
-  private val firedOnTime = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.Set[java.lang.Long]]()
 
   /** Beam DISCARDING accumulation with early firings — exact, not
     * approximated: each ProcessingTime micro-batch of the
@@ -318,12 +323,10 @@ object StreamRunner {
     val hasLate = trig("lateFiringTrigger").isDefined
     val latenessMs = Strategy.allowedLatenessSeconds(strategy)
       .getOrElse(0L) * 1000L
-    frontiers.remove(cfg.name)
-    firedOnTime.remove(cfg.name)
-    paneStore.remove(cfg.name)
+    val st = new PaneState
     val ckpt = checkpoint(cfg)
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
-    restoreTriggerState(cfg.name, triggerStateDir)
+    restoreTriggerState(st, triggerStateDir)
     val q = recipe.preAgg.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(delayMs))
@@ -336,8 +339,7 @@ object StreamRunner {
               paneWriter(cfg, "early")(agged, id)
             case Some(end) =>
               val endSec = end.cast("long")
-              val fPrev = frontiers.getOrDefault(cfg.name,
-                java.lang.Long.MIN_VALUE).longValue()
+              val fPrev = st.frontier
               // Beam expired-window drop: a pane row for a window
               // whose end + allowedLateness the frontier already
               // passed contains only beyond-lateness elements —
@@ -352,14 +354,10 @@ object StreamRunner {
               val ends = pane.select(endSec).distinct().collect()
                 .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
               if (ends.nonEmpty)
-                frontiers.merge(cfg.name,
-                  java.lang.Long.valueOf(ends.max * 1000L),
-                  (a, b) => if (a >= b) a else b)
-              val fired = firedOnTime.computeIfAbsent(cfg.name,
-                _ => java.util.concurrent.ConcurrentHashMap.newKeySet())
+                st.frontier = math.max(st.frontier, ends.max * 1000L)
               val tagOf = ends.map { e =>
                 e -> (if (e * 1000L >= fPrev) "early"
-                else if (fired.add(e)) "onTime"
+                else if (st.fired.add(e)) "onTime"
                 else "late")
               }.toMap
               val tagExpr = tagOf.foldLeft(lit("early")) {
@@ -370,71 +368,13 @@ object StreamRunner {
                   if (hasLate) b
                   else b.filter(col("__pane") =!= "late"))(pane, id)
           }
-          persistTriggerState(cfg.name, triggerStateDir, id, latenessMs)
+          persistTriggerState(st, triggerStateDir, id, latenessMs)
         }
       }
       .start()
     register(q)
     q
   }
-
-  /** Per-sink, per-key+window pane ordinal for exact accumulating
-    * panes on MEMORY/debug sinks (test surface — the pane buffer is
-    * driver-side anyway). File sinks derive the ordinal from their
-    * own prior output instead, keeping the driver key-free. */
-  private val memPaneIdx = new java.util.concurrent.ConcurrentHashMap[
-    String, scala.collection.mutable.Map[Seq[Any], Long]]()
-
-  /** Highest batchId already applied per exact-pane sink — a
-    * same-process micro-batch retry re-enters foreachBatch with the
-    * same id and must be a no-op (the element store, the driver pane
-    * maps, and the sink were all already updated). Cross-restart
-    * replay safety comes from the on-disk layout instead: the store
-    * is batch-stamped (`__gbatch=<id>` overwritten on replay) and
-    * file-sink panes publish as `b<id>-*` files that a replay deletes
-    * before re-publishing. */
-  private val lastPaneBatch =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Session-conf overrides scoped to the running pipeline: each
-    * entry restores one key to its pre-set state; stopAll runs and
-    * clears them. */
-  private val confRestores = scala.collection.mutable.ListBuffer[() => Unit]()
-
-  /** Currently-scoped (session, key) → value, for conflict detection:
-    * every query of a pipeline starts AFTER every module builds, so
-    * two modules scoping the SAME key to DIFFERENT values cannot both
-    * get their value — the last write would silently win for every
-    * query's checkpoint. Keyed by session: pipelines on different
-    * sessions (the server's per-request clones) have separate confs.
-    * Cleared with confRestores. */
-  private val scopedValues =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
-
-  /** Set a session conf for the lifetime of the queries this
-    * pipeline starts; the prior value (or unset state) is restored
-    * by stopAll. Used by module builders that need a conf captured
-    * at query start (e.g. the stream-stream join's / streaming
-    * dedup's stateShufflePartitions) without leaking it
-    * session-wide. Scoping one key to two DIFFERENT values in one
-    * run fails loudly (queries start after all builds, so only the
-    * last value could ever take effect); re-scoping to the same
-    * value is a no-op. */
-  def scopeConf(sess: SparkSession, key: String, value: String): Unit =
-    confRestores.synchronized {
-      scopedValues.get((sess, key)) match {
-        case Some(v) if v == value => // idempotent re-scope
-        case Some(v) => throw new IllegalArgumentException(
-          s"conflicting per-job values for $key in one pipeline " +
-            s"($v vs $value): Spark captures the conf when each " +
-            "query STARTS — after every module has built — so only " +
-            "one value per pipeline can take effect. Run the " +
-            "modules in separate pipelines")
-        case None =>
-          scopedValues((sess, key)) = value
-          confRestores += graft.ops.ConfScope.set(sess, key, value)
-      }
-    }
 
   /** Plan-level emptiness probe for foreachBatch micro-batches
     * (r22): a no-data batch (watermark-advance cleanup, restart
@@ -449,19 +389,6 @@ object StreamRunner {
     * batch-id guard. */
   private def hasInput(df: DataFrame): Boolean =
     df.queryExecution.toRdd.getNumPartitions > 0
-
-  /** Dev-only phase timing for the exact-pane engine
-    * (GRAFT_PANE_TIMING=1): one stderr line per phase per batch. */
-  private val paneTiming = sys.env.contains("GRAFT_PANE_TIMING")
-  @inline private def timed[A](what: String)(f: => A): A =
-    if (!paneTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[pane-timing] $what%-18s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
 
   /** Beam-parity PERSISTENT trigger state (Beam keeps pane timing in
     * durable trigger state; Structured Streaming's checkpoint covers
@@ -480,26 +407,15 @@ object StreamRunner {
     * also bounds the set. The latest two snapshots survive (current
     * + prior) so a replayed batch can overwrite its own and still
     * find its predecessor. */
-  private def persistTriggerState(name: String, dir: java.io.File,
+  private def persistTriggerState(st: PaneState, dir: java.io.File,
       batchId: Long, latenessMs: Long): Unit = {
     dir.mkdirs()
     val o = graft.config.Json.obj()
-    val f = frontiers.get(name)
-    if (f != null) o.put("frontier", f.longValue())
-    val fired = Option(firedOnTime.get(name)) match {
-      case None => Seq.empty[Long]
-      case Some(s) =>
-        val it = s.iterator(); val b = Seq.newBuilder[Long]
-        while (it.hasNext) {
-          val e = it.next().longValue()
-          if (f == null || e * 1000L + latenessMs >= f.longValue())
-            b += e
-          else it.remove() // expired: can never fire again
-        }
-        b.result().sorted
-    }
+    if (st.frontier != Long.MinValue) o.put("frontier", st.frontier)
+    // expired windows can never fire again
+    st.fired.filterInPlace(e => e * 1000L + latenessMs >= st.frontier)
     val fa = o.putArray("fired")
-    fired.foreach(e => fa.add(e))
+    st.fired.toSeq.sorted.foreach(e => fa.add(e))
     val tmp = new java.io.File(dir, s".tmp-$batchId")
     java.nio.file.Files.write(tmp.toPath,
       o.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -519,19 +435,15 @@ object StreamRunner {
   /** Restore the latest trigger-state snapshot, if the checkpoint has
     * one (a fresh checkpoint starts fresh — reusing a checkpoint dir
     * IS the restart contract, exactly as for offsets). */
-  private def restoreTriggerState(name: String,
+  private def restoreTriggerState(st: PaneState,
       dir: java.io.File): Unit =
     triggerSnapIds(dir).sorted.lastOption.foreach { id =>
       val n = graft.config.Json.parse(new String(
         java.nio.file.Files.readAllBytes(
           new java.io.File(dir, s"__tbatch=$id.json").toPath),
         java.nio.charset.StandardCharsets.UTF_8))
-      n.long("frontier").foreach(f =>
-        frontiers.put(name, java.lang.Long.valueOf(f)))
-      val fired = firedOnTime.computeIfAbsent(name,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet())
-      n.arrOf("fired").foreach(e =>
-        fired.add(java.lang.Long.valueOf(e.asLong)))
+      n.long("frontier").foreach(st.frontier = _)
+      n.arrOf("fired").foreach(e => st.fired += e.asLong)
     }
 
   /** Distinct retention horizons present in the element store's
@@ -666,25 +578,11 @@ object StreamRunner {
     val hasLate = trig("lateFiringTrigger").isDefined
     val latenessMs = Strategy.allowedLatenessSeconds(strategy)
       .getOrElse(0L) * 1000L
-    frontiers.remove(cfg.name)
-    firedOnTime.remove(cfg.name)
-    paneStore.remove(cfg.name)
-    memPaneIdx.remove(cfg.name)
-    lastPaneBatch.remove(cfg.name)
+    val st = new PaneState
     val ckpt = checkpoint(cfg)
     val storeDir = ckpt + "/acc-elements"
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
-    restoreTriggerState(cfg.name, triggerStateDir)
-    // the store read's partition discovery: past 32 leaf dirs Spark
-    // launches a distributed LISTING JOB per micro-batch, and the
-    // element store routinely holds (slices × open horizons) > 32
-    // dirs — but that count is bounded by the open-window horizon
-    // and the same listing already runs driver-side for compaction,
-    // so keep discovery on the driver. Scoped, not leaked: the prior
-    // session value is captured here and restored by stopAll, so a
-    // user-tuned threshold survives the exact-pane sink's lifetime.
-    scopeConf(df.sparkSession,
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
+    restoreTriggerState(st, triggerStateDir)
 
     def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
         batchId: Long): Unit = {
@@ -696,8 +594,7 @@ object StreamRunner {
       val spark = pane.sparkSession
       if (isMem) {
         val rows = pane.collect()
-        val counts = memPaneIdx.computeIfAbsent(cfg.name,
-          _ => scala.collection.mutable.Map.empty)
+        val counts = st.memPaneIdx
         val buf = paneStore.computeIfAbsent(cfg.name,
           _ => scala.collection.mutable.ListBuffer.empty)
         buf.synchronized {
@@ -781,8 +678,7 @@ object StreamRunner {
         }
         val pruned = windowEndCol(merged) match {
           case Some(e) =>
-            val f = frontiers.getOrDefault(cfg.name,
-              java.lang.Long.MIN_VALUE).longValue()
+            val f = st.frontier
             if (f == Long.MinValue) merged
             else merged.filter(
               e.cast("long") * 1000L + latenessMs >= f)
@@ -802,15 +698,14 @@ object StreamRunner {
         // object-store deployment would swap this for the
         // committer's equivalent.)
         val stageDir = new java.io.File(ckpt + s"/pane-stage/$batchId")
-        timed("pane-stage-write") {
-          withIdx.withColumn("__graft_role", lit("pane"))
-            .unionByName(
-              pruned.withColumn("__graft_role", lit("ords")),
-              allowMissingColumns = true)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("__graft_role")
-            .parquet(stageDir.toString) }
+        withIdx.withColumn("__graft_role", lit("pane"))
+          .unionByName(
+            pruned.withColumn("__graft_role", lit("ords")),
+            allowMissingColumns = true)
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "static")
+          .partitionBy("__graft_role")
+          .parquet(stageDir.toString)
         val dst = new java.io.File(sinkPath.get)
         dst.mkdirs()
         Option(dst.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -887,14 +782,28 @@ object StreamRunner {
       } finally if (!isMem) pane.unpersist()
     }
 
-    val q = recipe.preAgg.writeStream
+    // partition discovery stays on the driver: past 32 paths Spark
+    // launches a distributed LISTING JOB per micro-batch — for the
+    // element store read, which routinely holds (slices × open
+    // horizons) > 32 dirs, bounded by the open-window horizon (the
+    // same listing already runs driver-side for compaction), and for
+    // the file source whenever a micro-batch picks up > 32 new files
+    // (0.2-1.2 s per batch measured on a backlogged 4-core stream).
+    // The store is read through the query's session, cloned at
+    // start(); the source lists through the session that created it,
+    // so it is re-created on a private clone. Neither touches the
+    // caller's session once start() returns.
+    val listing =
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
+    val srcSess = SessionBridge.cloneSession(df.sparkSession)
+    srcSess.conf.set(listing._1, listing._2)
+    val w = SessionBridge.withSourcesOn(recipe.preAgg, srcSess)
+      .writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(delayMs))
       .option("checkpointLocation", ckpt + "/accumulating")
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val done = lastPaneBatch.get(cfg.name)
-        if ((done == null || batchId > done.longValue()) &&
-            hasInput(batch0)) {
+        if (batchId > st.lastBatch && hasInput(batch0)) {
           // the micro-batch is scanned several times per firing
           // (store write, touched re-aggregation, distinct-ends
           // collect, touched-keys projection) — one persist cuts
@@ -944,24 +853,22 @@ object StreamRunner {
               // (full-slice replacement); pin it on the writer so a
               // session-wide dynamic overwriteMode cannot leave a
               // failed attempt's stale __wend partitions in place.
-              timed("store-write") {
-                val slice = batch
-                  .withColumn("__wend", endOf(batch).cast("long"))
-                  .filter(col("__wend").isNotNull)
-                val observed = obsEnds.fold(slice)(o => slice.observe(
-                  o, org.apache.spark.sql.functions.collect_set(
-                    col("__wend")).as("__wends")))
-                observed.write.mode("overwrite")
-                  .option("partitionOverwriteMode", "static")
-                  .partitionBy("__wend")
-                  .parquet(storeDir + s"/__gbatch=$batchId")
-                // blocks only until the just-finished write job's
-                // listener fires; empty slices yield an empty set,
-                // matching the old path's empty collect
-                obsWends = obsEnds.map(_.get("__wends")
-                  .asInstanceOf[Seq[Any]]
-                  .map(_.asInstanceOf[Number].longValue).toArray)
-              }
+              val slice = batch
+                .withColumn("__wend", endOf(batch).cast("long"))
+                .filter(col("__wend").isNotNull)
+              val observed = obsEnds.fold(slice)(o => slice.observe(
+                o, org.apache.spark.sql.functions.collect_set(
+                  col("__wend")).as("__wends")))
+              observed.write.mode("overwrite")
+                .option("partitionOverwriteMode", "static")
+                .partitionBy("__wend")
+                .parquet(storeDir + s"/__gbatch=$batchId")
+              // blocks only until the just-finished write job's
+              // listener fires; empty slices yield an empty set,
+              // matching the old path's empty collect
+              obsWends = obsEnds.map(_.get("__wends")
+                .asInstanceOf[Seq[Any]]
+                .map(_.asInstanceOf[Number].longValue).toArray)
             case None => // global window: no horizon, no compaction
               batch.write.mode("overwrite")
                 .parquet(storeDir + s"/__gbatch=$batchId")
@@ -991,8 +898,7 @@ object StreamRunner {
                 reAgg(storedAll()).withColumn("__pane", lit("early")),
                 recipe.keys, batchId)
             case Some(_) =>
-              val fPrev = frontiers.getOrDefault(cfg.name,
-                java.lang.Long.MIN_VALUE).longValue()
+              val fPrev = st.frontier
               val tEnds = obsWends match {
                 // exact: horizon == the element's one window end.
                 // grid: an element with horizon h feeds exactly the
@@ -1007,16 +913,15 @@ object StreamRunner {
                     ws.flatMap(h => (0 until k).map(h - _ * period))
                       .distinct
                   }
-                case None => timed("tends-collect") {
+                case None =>
                   touched.select(windowEndCol(touched).get
                     .cast("long")).distinct().collect()
-                  .flatMap(r =>
-                    Option(r.get(0)).map(_.asInstanceOf[Long])) }
+                    .flatMap(r =>
+                      Option(r.get(0)).map(_.asInstanceOf[Long]))
               }
               val fNew = math.max(fPrev,
                 if (tEnds.isEmpty) fPrev else tEnds.max * 1000L)
-              val fired = firedOnTime.computeIfAbsent(cfg.name,
-                _ => java.util.concurrent.ConcurrentHashMap.newKeySet())
+              val fired = st.fired
               // late BEFORE closing registration: a window is late
               // only if its ON_TIME pane fired in a PRIOR batch
               val lateEnds = tEnds.filter(e => fired.contains(e))
@@ -1106,7 +1011,7 @@ object StreamRunner {
               val earlyEnds = tEnds.filter(e =>
                 e * 1000L >= fPrev && !closingEnds.contains(e))
               closingEnds.foreach(e => fired.add(e))
-              frontiers.put(cfg.name, java.lang.Long.valueOf(fNew))
+              st.frontier = fNew
               val touchedKeys = touched
                 .select(keyCols.map(col): _*).distinct()
               val early = retained
@@ -1132,8 +1037,7 @@ object StreamRunner {
               // same prior snapshot; a replay of this batch re-skips)
               val willFire = earlyEnds.nonEmpty || closingEnds.nonEmpty ||
                 (hasLate && lateEnds.nonEmpty)
-              if (willFire) timed("emit-total") {
-                emitWithIndex(pane, keyCols, batchId) }
+              if (willFire) emitWithIndex(pane, keyCols, batchId)
               // store compaction, element-level: each slice is
               // partitioned by its elements' retention horizons
               // (`__wend=<epochSec>`); once the frontier (plus
@@ -1147,18 +1051,15 @@ object StreamRunner {
               // drops wholly. Replay-safe: a replayed batch rewrites
               // its entire slice (static partition overwrite) before
               // compaction re-applies the frontier rule.
-              timed("compact-store") {
-                compactStore(storeDir, fNew, latenessMs) }
+              compactStore(storeDir, fNew, latenessMs)
           }
-          timed("trigger-state") {
-            persistTriggerState(cfg.name, triggerStateDir, batchId,
-              latenessMs) }
-          lastPaneBatch.put(cfg.name, java.lang.Long.valueOf(batchId))
+          persistTriggerState(st, triggerStateDir, batchId, latenessMs)
+          st.lastBatch = batchId
           ()
           } finally pinned.foreach(_.unpersist())
         }
       }
-      .start()
+    val q = graft.ops.ConfScope(df.sparkSession, listing)(w.start())
     register(q)
     q
   }
@@ -1170,7 +1071,6 @@ object StreamRunner {
   private def startAfterPane(cfg: ModuleCfg, df: DataFrame,
       trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery = {
     requirePaneSink(cfg)
-    paneStore.remove(cfg.name)
     val n = trig.int("elementCountAtLeast").getOrElse(1)
     val countField = trig.str("countField").getOrElse(
       df.columns.find(_ == "n").getOrElse(
@@ -1284,11 +1184,11 @@ object StreamRunner {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
     }.isDefined
 
-  /** Drain every active query (test/batch-catchup helper). A query
-    * that already died is surfaced here instead of silently filtered
-    * out by the isActive check. */
-  def drainAll(): Unit = {
-    allQueries.foreach { q =>
+  /** Drain `queries` — by default every registered one (test/batch-
+    * catchup helper). A query that already died is surfaced here
+    * instead of silently filtered out by the isActive check. */
+  def drainAll(queries: Seq[StreamingQuery] = allQueries): Unit = {
+    queries.foreach { q =>
       q.exception.foreach(e => throw e)
       if (q.isActive) q.processAllAvailable()
     }
@@ -1347,14 +1247,5 @@ object StreamRunner {
   def stopAll(): Unit = {
     activeQueries.foreach(_.stop())
     active.clear()
-    confRestores.synchronized {
-      // REVERSE order: with same-key scopes (idempotent re-scopes
-      // aside) a forward replay would end on a later restorer's
-      // captured prior — a scoped value — instead of the original
-      confRestores.reverseIterator.foreach(r =>
-        try r() catch { case _: Throwable => () })
-      confRestores.clear()
-      scopedValues.clear()
-    }
   }
 }

@@ -400,18 +400,8 @@ class JoinSpec extends AnyFunSuite {
          "leftWatermark":"10m","rightWatermark":"10m"}""", sl, sr))
     assert(e4.getMessage.contains("must be a timestamp"),
       e4.getMessage)
-    // stateShufflePartitions: per-JOB state-store partition count,
-    // scoped via StreamRunner (restored by stopAll), validated > 0
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    join(
-      """{"method":"interval","by":["u"],"leftOn":"ts",
-         "rightStart":"s","rightEnd":"e","maxIntervalSpan":"2h",
-         "leftWatermark":"10m","rightWatermark":"10m",
-         "stateShufflePartitions":7}""", sl, sr)
-    assert(spark.conf.get(key) == "7")
-    graft.streaming.StreamRunner.stopAll()
-    assert(spark.conf.get(key) == before)
+    // stateShufflePartitions is validated > 0 (its scoping is pinned
+    // through Pipeline.execute below)
     val e5 = intercept[IllegalArgumentException](join(
       """{"method":"interval","by":["u"],"leftOn":"ts",
          "rightStart":"s","rightEnd":"e","maxIntervalSpan":"2h",
@@ -419,6 +409,51 @@ class JoinSpec extends AnyFunSuite {
          "stateShufflePartitions":0}""", sl, sr))
     assert(e5.getMessage.contains("stateShufflePartitions"),
       e5.getMessage)
+  }
+
+  test("stateShufflePartitions: scoped to the run, restored even " +
+      "when the build fails") {
+    val key = "spark.sql.shuffle.partitions"
+    val dir = java.nio.file.Files.createTempDirectory("graft-jssp")
+      .toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    Seq((1L, 1L, t0)).toDF("event_id", "u", "ts")
+      .write.parquet(s"$dir/l")
+    Seq((9L, 1L, t0, new java.sql.Timestamp(t0.getTime + 3600000L)))
+      .toDF("wid", "u", "s", "e").write.parquet(s"$dir/r")
+    def config(rightStart: String) = s"""
+      |sources:
+      |  - {name: l, module: storage, parameters: {path: $dir/l, stream: true}}
+      |  - {name: r, module: storage, parameters: {path: $dir/r, stream: true}}
+      |transforms:
+      |  - name: jn
+      |    module: join
+      |    inputs: [l, r]
+      |    parameters: {method: interval, by: [u], leftOn: ts,
+      |      rightStart: $rightStart, rightEnd: e, maxIntervalSpan: 2h,
+      |      leftWatermark: 10m, rightWatermark: 10m,
+      |      stateShufflePartitions: 7}
+      |sinks:
+      |  - {name: jssp, module: memory, input: jn,
+      |     parameters: {outputMode: append, checkpointLocation: $dir/ckpt}}
+      |""".stripMargin
+    val conf = spark.conf.getAll
+    // the conf is scoped before the missing field fails the build
+    val e = intercept[IllegalArgumentException](
+      Pipeline.execute(spark, config("nosuch")))
+    assert(e.getMessage.contains("'nosuch' not found"), e.getMessage)
+    assert(spark.conf.getAll == conf)
+    // a run that starts its query: the query keeps the per-job count,
+    // the session gets its own back as soon as the run returns
+    try {
+      Pipeline.execute(spark, config("s"))
+      assert(spark.conf.getAll == conf)
+      graft.streaming.StreamRunner.drainAll()
+      assert(spark.table("jssp").count() == 1L)
+      val offsets = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/ckpt/offsets/0")))
+      assert(offsets.contains(s""""$key":"7""""), offsets)
+    } finally graft.streaming.StreamRunner.stopAll()
   }
 
   test("reserved columns, bad method, and missing params fail " +

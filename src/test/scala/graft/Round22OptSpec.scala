@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r22 optimization-round internals for the streaming
   * near-dedup paths: `stateShufflePartitions` (state stores sized to
-  * live-bucket volume, scoped per job and restored on stopAll) and
+  * live-bucket volume, scoped per run and restored when it returns) and
   * `widenCompute` (pre-state signature compute repartitioned to
   * cluster parallelism) must change ONLY the physical shape — the
   * drained candidate multiset stays identical to the un-knobbed run,

@@ -167,8 +167,6 @@ transforms:
       "again after a streaming run and a pagerank run") {
     import spark.implicits._
     val conf = spark.conf.getAll
-    graft.streaming.StreamRunner.scopeConf(spark,
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
     val dir = java.nio.file.Files.createTempDirectory("graft-srvconf")
     Seq((1L, 100L, "the quick brown fox jumps over the lazy dog"),
       (2L, 200L, "the quick brown fox jumps over the lazy dog!"))
@@ -187,12 +185,33 @@ transforms:
       |    strategy: {timestampField: ts, allowedLateness: 36000}
       |    parameters: {method: ngram, field: text, idField: doc_id,
       |      ngramSize: 5, threshold: 0.5, stateShufflePartitions: 2}
+      |  - name: cnt
+      |    module: aggregation
+      |    inputs: [d]
+      |    strategy:
+      |      mode: accumulating
+      |      exactPanes: true
+      |      timestampField: ts
+      |      window: {type: fixed, unit: hour, size: 1}
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger:
+      |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+      |    parameters:
+      |      groupFields: []
+      |      aggregations:
+      |        - input: d
+      |          fields:
+      |            - {name: n, op: count}
       |sinks:
       |  - name: srvconf
       |    module: memory
       |    input: dd
       |    parameters: {outputMode: append}
+      |  - {name: srvpanes, module: memory, input: cnt}
       |""".stripMargin)
+    // the exact panes scope the listing threshold, a key nobody set
+    assert(spark.conf.getAll == conf)
     graft.streaming.StreamRunner.drainAll()
     graft.streaming.StreamRunner.stopAll()
     assert(spark.conf.getAll == conf)
@@ -203,6 +222,38 @@ transforms:
         graft.config.Json.parse("""{"method": "pagerank"}"""),
         graft.config.Json.obj()), Map("e" -> edges))("g").collect()
     assert(spark.conf.getAll == conf)
+  }
+
+  test("a drain request drains only its own queries") {
+    import spark.implicits._
+    // a query on the server's own session that already failed: a
+    // request draining every registered query would rethrow its error
+    val boom: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      (_, _) => throw new IllegalStateException("boom")
+    val bad = spark.readStream.format("rate").load()
+      .writeStream.foreachBatch(boom).start()
+    graft.streaming.StreamRunner.register(bad)
+    try {
+      intercept[Exception](bad.awaitTermination(60000L))
+      assert(bad.exception.isDefined)
+      val dir = java.nio.file.Files.createTempDirectory("graft-srvdrain")
+      Seq((1L, "a"), (2L, "b")).toDF("id", "text")
+        .write.parquet(s"$dir/in")
+      val (code, body) = http("POST", "/run?drain=true", s"""
+        |sources:
+        |  - name: d
+        |    module: storage
+        |    parameters: {path: "$dir/in", stream: true}
+        |sinks:
+        |  - name: out
+        |    module: storage
+        |    input: d
+        |    parameters: {output: "$dir/out", format: parquet}
+        |""".stripMargin)
+      assert(code == 200, body)
+      // drained before the response: the request's rows are written
+      assert(spark.read.parquet(s"$dir/out").count() == 2L)
+    } finally graft.streaming.StreamRunner.stopAll()
   }
 
   test("a broken config returns 400 with the error, not a hang") {

@@ -58,25 +58,59 @@ class StreamGuardSpec extends AnyFunSuite {
     assert(out("g").isStreaming)
   }
 
-  test("scopeConf: conflicting per-job values fail loudly; stopAll " +
-      "restores the ORIGINAL value under same-key re-scopes") {
-    val key = "spark.graft.test.scopedconf"
-    spark.conf.set(key, "orig")
-    graft.streaming.StreamRunner.scopeConf(spark, key, "a")
-    // idempotent re-scope (a second module asking for the same
-    // value, e.g. join + dedup both setting stateShufflePartitions)
-    graft.streaming.StreamRunner.scopeConf(spark, key, "a")
-    assert(spark.conf.get(key) == "a")
-    // two modules asking for DIFFERENT values cannot both win —
-    // queries start after all builds, so the last write would
-    // silently apply to every checkpoint
-    val e = intercept[IllegalArgumentException](
-      graft.streaming.StreamRunner.scopeConf(spark, key, "b"))
-    assert(e.getMessage.contains("conflicting"), e.getMessage)
-    graft.streaming.StreamRunner.stopAll()
-    assert(spark.conf.get(key) == "orig",
-      "restore must return the pre-scope value, not a later " +
-        "restorer's captured intermediate")
-    spark.conf.unset(key)
+  test("per-run confs: conflicting values fail; a same-value " +
+      "re-scope restores") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val dir = java.nio.file.Files.createTempDirectory("graft-runconf")
+      .toString
+    Seq((1L, 100L, "x"), (2L, 200L, "y")).toDF("id", "secs", "text")
+      .selectExpr("id", "timestamp_seconds(secs) AS ts", "text")
+      .write.parquet(s"$dir/in")
+    // two streaming dedups, each sizing its state with the SAME key
+    def config(n1: Int, n2: Int): String = s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |${Seq(n1, n2).zipWithIndex.map { case (n, i) => s"""
+      |  - name: d$i
+      |    module: dedup
+      |    inputs: [ev]
+      |    strategy: {timestampField: ts, allowedLateness: 60}
+      |    parameters: {method: exact, field: text,
+      |      stateShufflePartitions: $n}""" }.mkString}
+      |sinks:
+      |  - {name: rc0, module: memory, input: d0,
+      |     parameters: {outputMode: append}}
+      |  - {name: rc1, module: memory, input: d1,
+      |     parameters: {outputMode: append,
+      |       checkpointLocation: $dir/ckpt1}}
+      |""".stripMargin
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try {
+      val conf = spark.conf.getAll
+      // two modules asking for DIFFERENT values cannot both win —
+      // queries start after all builds, so the last write would
+      // silently apply to every checkpoint
+      val e = intercept[IllegalArgumentException](
+        Pipeline.execute(spark, config(3, 7)))
+      assert(e.getMessage.contains("conflicting"), e.getMessage)
+      assert(spark.conf.getAll == conf)
+      // a second module asking for the same value (e.g. join + dedup
+      // both setting stateShufflePartitions) is a no-op re-scope; the
+      // run restores the pre-run value, not an intermediate one
+      Pipeline.execute(spark, config(3, 3))
+      assert(spark.conf.getAll == conf)
+      graft.streaming.StreamRunner.drainAll()
+      val offsets = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/ckpt1/offsets/0")))
+      assert(offsets.contains(s""""$key":"3""""), offsets)
+    } finally {
+      graft.streaming.StreamRunner.stopAll()
+      spark.conf.set(key, prior)
+    }
   }
 }

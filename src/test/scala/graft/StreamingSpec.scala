@@ -2028,4 +2028,136 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("watermark-advancing"), e.getMessage)
     StreamRunner.stopAll()
   }
+
+  /** Exact accumulating panes over 6h fixed windows into `sink`. */
+  private def exactPaneConfig(dir: String, sink: String,
+      sinkParams: String): String = s"""
+    |sources:
+    |  - name: ev
+    |    module: storage
+    |    parameters: {path: $dir/in, stream: true}
+    |transforms:
+    |  - name: agg
+    |    module: aggregation
+    |    inputs: [ev]
+    |    strategy:
+    |      mode: accumulating
+    |      exactPanes: true
+    |      timestampField: ts
+    |      window: {type: fixed, unit: hour, size: 6}
+    |      trigger:
+    |        type: afterWatermark
+    |        earlyFiringTrigger:
+    |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+    |    parameters:
+    |      groupFields: []
+    |      aggregations:
+    |        - input: ev
+    |          fields:
+    |            - {name: s, op: sum, field: value}
+    |sinks:
+    |  - name: $sink
+    |    module: ${if (sinkParams.contains("output")) "storage" else "memory"}
+    |    input: agg
+    |    parameters: $sinkParams
+    |""".stripMargin
+
+  test("exact panes and a sized join: the session conf is back at return") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-crr")
+      .toString
+    stageParquet(dir, "b1", Seq((1L, 3600L, 3.0), (2L, 3660L, 4.0)))
+    // the pane pipeline plus a stream-stream join sized to 3 state
+    // partitions, sharing one source (as the stream benchmark does)
+    val config = exactPaneConfig(dir, "crpanes", "{}").replace(
+      "sinks:", s"""|  - name: lft
+      |    module: sql
+      |    inputs: [ev]
+      |    parameters: {sql: "SELECT id, id % 2 AS u, ts FROM ev"}
+      |  - name: wins
+      |    module: sql
+      |    inputs: [ev]
+      |    parameters:
+      |      sql: "SELECT id AS wid, id % 2 AS u, ts AS s,
+      |        ts + INTERVAL 60 SECONDS AS e FROM ev"
+      |  - name: jn
+      |    module: join
+      |    inputs: [lft, wins]
+      |    parameters: {method: interval, by: [u], leftOn: ts,
+      |      rightStart: s, rightEnd: e, maxIntervalSpan: 60,
+      |      leftWatermark: 60, rightWatermark: 60,
+      |      stateShufflePartitions: 3}
+      |sinks:
+      |  - {name: crjoin, module: memory, input: jn,
+      |     parameters: {outputMode: append,
+      |       checkpointLocation: $dir/ckpt_join}}""".stripMargin)
+    val conf = spark.conf.getAll
+    try {
+      Pipeline.execute(spark, config)
+      // the join's state partitions and the pane store's listing
+      // threshold were both scoped — and both are gone already
+      assert(spark.conf.getAll == conf)
+      StreamRunner.drainAll()
+      assert(spark.table("crjoin").count() == 2L)
+      assert(StreamRunner.paneStore.get("crpanes").map(_._1).toList ==
+        List("early"))
+      // the join query captured its count when it started
+      val offsets = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/ckpt_join/offsets/0")))
+      assert(offsets.contains(
+        "\"spark.sql.shuffle.partitions\":\"3\""), offsets)
+    } finally StreamRunner.stopAll()
+  }
+
+  test("exact-pane pipelines whose sinks share a name keep apart") {
+    val base = java.nio.file.Files.createTempDirectory("graft-same")
+    // two event streams; b2 of each closes the window b1 opened
+    val batches = Map(
+      "a" -> Seq(Seq((1L, 3600L, 3.0)),
+        Seq((2L, 7200L, 4.0), (3L, 50400L, 9.0)),
+        Seq((4L, 54000L, 1.0))),
+      "b" -> Seq(Seq((1L, 1800L, 10.0)),
+        Seq((2L, 40000L, 20.0)),
+        Seq((3L, 90000L, 30.0), (4L, 41000L, 5.0))))
+    def pipeline(run: String, stream: String): (String, () => Unit) = {
+      val dir = base.resolve(s"$run-$stream").toString
+      stageParquet(dir, "b0", batches(stream).head)
+      (dir, () => Pipeline.execute(spark, exactPaneConfig(dir, "spane",
+        s"{output: $dir/out, format: parquet, " +
+          s"checkpointLocation: $dir/ckpt}")))
+    }
+    def panes(dir: String): Seq[(Long, String, Double, Long)] =
+      spark.read.parquet(s"$dir/out")
+        .select(col("window.start").cast("long"), col("__pane"),
+          col("s"), col("__pane_index"))
+        .as[(Long, String, Double, Long)].collect().toSeq
+        .sortBy(t => (t._1, t._4))
+    try {
+      val solo = Seq("a", "b").map { st =>
+        val (dir, start) = pipeline("solo", st)
+        start()
+        StreamRunner.drainAll()
+        batches(st).indices.tail.foreach { i =>
+          stageParquet(dir, s"b$i", batches(st)(i))
+          StreamRunner.drainAll()
+        }
+        StreamRunner.stopAll()
+        panes(dir)
+      }
+      // both queries run at once; their micro-batches alternate
+      val (dirA, startA) = pipeline("both", "a")
+      val (dirB, startB) = pipeline("both", "b")
+      startA()
+      StreamRunner.drainAll()
+      startB()
+      StreamRunner.drainAll()
+      (1 until 3).foreach { i =>
+        Seq("a" -> dirA, "b" -> dirB).foreach { case (st, dir) =>
+          stageParquet(dir, s"b$i", batches(st)(i))
+          StreamRunner.drainAll()
+        }
+      }
+      assert(solo.forall(_.exists(_._2 == "onTime")), solo)
+      assert(Seq(panes(dirA), panes(dirB)) == solo)
+    } finally StreamRunner.stopAll()
+  }
 }
