@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.graft.SessionBridge
 
 /** Per-module logging taps (reference `module/Logging.java` — named
   * log points on any module, logged per element as data flows).
@@ -12,24 +14,27 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * mapping is `Dataset.observe`: named metrics (row count, an
   * example-value sample) collected DURING execution with zero plan
   * interference — no extra action, no UDF in the predicate path, no
-  * pushdown loss — surfaced through a QueryExecutionListener at the
-  * configured level. The observed metrics of the last completed
-  * action are also kept in `observed` for tests and the Run CLI.
+  * pushdown loss — surfaced, at the configured level, when the action
+  * that ran them ends (the context's SQL-execution-end events, the
+  * ones a session's QueryExecutionListeners are fed from). The
+  * observed metrics of the last completed action are also kept in
+  * `observed` for tests and the Run CLI.
   *
   * Delivery ownership: a tap on a STREAMING frame carries a `|s`
   * marker in its metric name (set at `tap()` time, where
   * `df.isStreaming` is known). foreachBatch-drained streaming sinks
-  * fire BOTH the batch QueryExecutionListener (their inner action)
-  * and the streaming progress, on independent async buses in either
-  * order — so the streaming-progress leg owns `|s` metrics
-  * exclusively and the batch listener skips them. Each leg then
+  * fire BOTH the batch leg (their inner action) and the streaming
+  * progress, on independent async buses in either order — so the
+  * streaming-progress leg owns `|s` metrics exclusively and the batch
+  * leg skips them. Each leg then
   * emits unconditionally: one log line per batch action, one per
   * micro-batch, with no cross-bus value comparison (a value-based
   * gate would drop steady-state batches whose counts repeat, and
   * re-order across batch boundaries).
   *
   * Metrics NOT created by `tap()` (user-made `Dataset.observe`) are
-  * surfaced by both legs verbatim; a user observe on a
+  * surfaced verbatim by the batch leg and, in a session with a
+  * streaming tap, by the streaming leg too; a user observe on a
   * foreachBatch-drained stream may therefore log per batch on each
   * bus — the engine's own taps never do.
   */
@@ -58,10 +63,13 @@ object LoggingTaps {
   // weak keys: a strong set would pin every stopped SparkSession (and
   // its whole object graph) for the JVM lifetime in session-per-run
   // harnesses
-  private val registered =
+  private def weakSet[K]() =
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+        new java.util.WeakHashMap[K, java.lang.Boolean]()))
+  private val registered = weakSet[SparkSession]()
+  private val streamRegistered = weakSet[SparkSession]()
+  private val contexts = weakSet[SparkContext]()
 
   private def emit(name: String,
       row: org.apache.spark.sql.Row): Unit = {
@@ -85,24 +93,40 @@ object LoggingTaps {
     }
   }
 
-  def register(spark: SparkSession): Unit =
-    if (registered.add(spark)) {
-      spark.listenerManager.register(new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-            durationNs: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            // our streaming-tap metrics (seen here when a
-            // foreachBatch inner action executes the observed plan)
-            // belong to the streaming-progress leg below; everything
-            // else — batch taps and user observes — emits here
-            if (!streamTapNames.contains(name)) emit(name, row)
-          }
-        override def onFailure(funcName: String, qe: QueryExecution,
-            exception: Exception): Unit = ()
-      })
-      // streaming taps surface once per micro-batch through the
-      // streaming progress, which reports each observe exactly once
-      // per batch regardless of how the sink drains it
+  /** The batch leg: report the taps of every action `spark` runs. One
+    * listener per SparkContext serves all its registered sessions —
+    * a QueryExecutionListener per session would add a listener bus to
+    * the context for every `/run` session clone, which stays until
+    * the clone is garbage-collected. */
+  def register(spark: SparkSession): Unit = {
+    registered.add(spark)
+    val sc = spark.sparkContext
+    if (contexts.add(sc)) sc.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd =>
+          SessionBridge.succeededQuery(end)
+            .filter(qe => registered.contains(qe.sparkSession))
+            .foreach(_.observedMetrics.foreach { case (name, row) =>
+              // our streaming-tap metrics (seen here when a
+              // foreachBatch inner action executes the observed plan)
+              // belong to the streaming-progress leg below; everything
+              // else — batch taps and user observes — emits here
+              if (!streamTapNames.contains(name)) emit(name, row)
+            })
+        case _ =>
+      }
+    })
+  }
+
+  /** The streaming leg, added by the first tap on a streaming frame of
+    * `spark`: streaming taps surface once per micro-batch through the
+    * streaming progress, which reports each observe exactly once per
+    * batch regardless of how the sink drains it. Only then: the first
+    * `spark.streams` call creates the session's StreamingQueryManager,
+    * whose listener bus stays on the SparkContext for good — one per
+    * `/run` session clone if every tapping session made one. */
+  private def registerStreaming(spark: SparkSession): Unit =
+    if (streamRegistered.add(spark))
       spark.streams.addListener(
         new org.apache.spark.sql.streaming.StreamingQueryListener {
           import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -118,7 +142,6 @@ object LoggingTaps {
           override def onQueryTerminated(
               e: QueryTerminatedEvent): Unit = ()
         })
-    }
 
   /** Attach an observation tap to a module output. Metric name
     * encodes the level (and, for streaming frames, the `|s` delivery
@@ -137,7 +160,10 @@ object LoggingTaps {
     val tag = s"$module.$name".replace("|", "_")
     val mark = if (df.isStreaming) StreamMark else ""
     val metric = s"$tag|$lvl$mark"
-    if (df.isStreaming) streamTapNames.add(metric)
+    if (df.isStreaming) {
+      streamTapNames.add(metric)
+      registerStreaming(df.sparkSession)
+    }
     df.observe(metric, count(lit(1)).as("count"))
   }
 }

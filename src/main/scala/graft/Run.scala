@@ -17,6 +17,38 @@ import java.nio.file.{Files, Paths}
   * reference's per-environment overlay (`MPipelineOptions.context`).
   */
 object Run {
+  /** The confs a `graft.Run` or `graft.Server` session is built with,
+    * given the submitter's conf. A LOCAL run the submitter did not size
+    * gets one shuffle partition per core: the 200-partition default
+    * drowns local runs in tiny tasks, and AQE does not coalesce the
+    * streaming queries it plans. A submitted value wins, and cluster
+    * submissions keep the Spark default — the driver's core count says
+    * nothing about cluster parallelism. */
+  def sessionConfs(submitted: org.apache.spark.SparkConf)
+      : Seq[(String, String)] = {
+    val base = Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true")
+    if (!submitted.contains("spark.sql.shuffle.partitions") &&
+        submitted.get("spark.master", "").startsWith("local"))
+      base :+ ("spark.sql.shuffle.partitions" ->
+        Runtime.getRuntime.availableProcessors().toString)
+    else base
+  }
+
+  /** The entry points' session: [[sessionConfs]] over the submitted
+    * conf, logging at WARN. */
+  def session(appName: String): SparkSession = {
+    val spark = sessionConfs(new org.apache.spark.SparkConf())
+      .foldLeft(SparkSession.builder().appName(appName)) {
+        case (b, (k, v)) => b.config(k, v)
+      }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty,
       "usage: graft.Run <config path> [--args k=v] [--context ctx] [--drain]")
@@ -32,23 +64,7 @@ object Run {
       case a if a.startsWith("--context=") => a.stripPrefix("--context=")
     })
 
-    var builder = SparkSession.builder()
-      .appName(s"graft:${Paths.get(configPath).getFileName}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // size the shuffle to the machine for LOCAL runs when the
-    // submitter didn't: the 200-partition default drowns local runs
-    // in tiny tasks. Cluster submissions keep the Spark default —
-    // the driver's core count says nothing about cluster parallelism.
-    val submitted = new org.apache.spark.SparkConf()
-    if (!submitted.contains("spark.sql.shuffle.partitions") &&
-      submitted.get("spark.master", "").startsWith("local"))
-      builder = builder.config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(s"graft:${Paths.get(configPath).getFileName}")
 
     val configText = Files.readString(Paths.get(configPath))
     val collections = Pipeline.execute(spark, configText, args, context)

@@ -39,14 +39,7 @@ object Server {
 
   def main(argv: Array[String]): Unit = {
     val port = argv.headOption.map(_.toInt).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .appName("graft:server")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session("graft:server")
     val srv = start(spark, port)
     System.err.println(
       s"[graft] server listening on port ${srv.getAddress.getPort}")

@@ -7139,7 +7139,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
   - name: sel
     module: select
     inputs: [dd]
@@ -7187,7 +7187,7 @@ transforms:
     module: dedup
     inputs: [emb]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8}
   - name: sel
     module: select
     inputs: [dd]
@@ -7234,7 +7234,7 @@ transforms:
     module: dedup
     inputs: [emb]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8}
 sinks:
   - name: sk
     module: storage
@@ -7511,7 +7511,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8}
   - name: sel
     module: select
     inputs: [dd]
@@ -7560,7 +7560,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
 sinks:
   - name: sk
     module: storage
@@ -7618,7 +7618,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
 sinks:
   - name: sk
     module: storage
@@ -7715,7 +7715,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: winnow, field: text, idField: doc_id, threshold: 0.5, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: winnow, field: text, idField: doc_id, threshold: 0.5, hashAlgo: md5, stateShufflePartitions: 8}
   - name: sel
     module: select
     inputs: [dd]
@@ -7877,7 +7877,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8, widenCompute: true}
+    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8}
 sinks:
   - name: sk
     module: storage

@@ -132,6 +132,9 @@ object DedupTransform {
         graft.ops.CacheTracker.runConf(raw.sparkSession,
           "spark.sql.shuffle.partitions", n.toString)
       }
+    // read once: every signature, bucket and fingerprint below hashes
+    // the same way (md5 = the SQL-replayable audit mode)
+    val md5Mode = p.str("hashAlgo").contains("md5")
     if (raw.isStreaming && method == "exact") {
       val strategy = cfg.node("strategy").getOrElse(
         graft.config.Json.obj())
@@ -145,35 +148,22 @@ object DedupTransform {
         .drop("__fp")
       return TransformCommon.finishRouted(out, cfg)
     }
-    // streaming NEAR-dedup: minhash/simhash LSH with watermark-bounded
-    // bucket state — the 100 TB ingest shape (flag near-dups against
-    // everything seen within the horizon without re-scanning the
-    // corpus). Emits per-BAND candidate rows; see streamingLsh.
-    if (raw.isStreaming && (method == "minhash" || method == "simhash"))
-      return TransformCommon.finishRouted(
-        streamingLsh(raw, cfg, method, streamContract.get), cfg)
-    // streaming embedding near-dedup: hyperplane bucket owner state
-    // + cosine verify at arrival; see streamingEmbedding
-    if (raw.isStreaming && method == "embedding")
-      return TransformCommon.finishRouted(
-        streamingEmbedding(raw, cfg, streamContract.get), cfg)
-    // streaming ngram near-dedup: char-gram banding + exact Jaccard
-    // verify against the owner's text; see streamingNgram
-    if (raw.isStreaming && method == "ngram")
-      return TransformCommon.finishRouted(
-        streamingNgram(raw, cfg, streamContract.get), cfg)
-    // streaming winnow near-dedup: fingerprint-bucket owner state +
-    // fingerprint-set Jaccard verify at arrival; see streamingWinnow
-    if (raw.isStreaming && method == "winnow")
-      return TransformCommon.finishRouted(
-        streamingWinnow(raw, cfg, streamContract.get), cfg)
+    // streaming NEAR-dedup (minhash/simhash/ngram/winnow/embedding):
+    // watermark-bounded bucket-owner state — the 100 TB ingest shape
+    // (flag near-dups against everything seen within the horizon
+    // without re-scanning the corpus). Emits candidate rows; see
+    // streamingNearDedup.
+    if (streamContract.isDefined)
+      return TransformCommon.finishRouted(streamingNearDedup(raw, cfg,
+        method, streamContract.get, md5Mode), cfg)
     // (non-streamable methods on a stream threw in the pre-validation
     // match above, before any conf scoped)
     // cross-corpus mode: flag primary rows near-duplicating a
     // REFERENCE corpus (dedup a new crawl against the existing
     // training set) instead of self-dedup
     if (p.str("referenceInput").isDefined)
-      return crossCorpus(cfg, inputs, p.str("referenceInput").get, method)
+      return crossCorpus(cfg, inputs, p.str("referenceInput").get, method,
+        md5Mode)
 
     // signature/gram UDFs are arithmetic-dense per row: a small input
     // (one parquet split) would serialize them onto one task, so widen
@@ -217,49 +207,12 @@ object DedupTransform {
 
     val out = method match {
       case "exact" => exact(df, textField, idField)
-      case "minhash" =>
-        // default m=32, bands=8 keeps r=4 rows per band (the same
-        // per-band precision sim^4 as 64/16) at half the signature
-        // compute; detection prob for sim 0.9 is still 1-(1-0.9^4)^8
-        // ≈ 0.9998
-        val m = p.int("numPermutations").getOrElse(32)
-        val bands = p.int("bands").getOrElse(8)
-        val k = p.int("shingleSize").getOrElse(3)
-        val md5Mode = p.str("hashAlgo").contains("md5")
-        val sigUdf = if (md5Mode) minhashSigMd5Udf(k, m)
-          else minhashSigUdf(k, m)
-        // null-text docs get a null signature; without this filter the
-        // band expression maps them all to the same constant key
-        // (md5("") / hash(null, b)) and they'd be flagged duplicates
-        // of each other. Filter the CHEAP text column, not the
-        // signature: a filter on the UDF output gets pushed below the
-        // projection with the UDF inlined, running the signature pass
-        // TWICE per row (null sig ⇔ null text, so these agree)
-        val sig = df.filter(col(textField).isNotNull)
-          .select(col(idField).as("__id"),
-            sigUdf(col(textField)).as("__sig"))
-        lshDedup(df, idField, bandsFromSig(sig, m, bands, md5Mode),
+      case "minhash" | "simhash" =>
+        lshDedup(df, idField, bandRows(method, p, md5Mode,
+          textRows(df, textField, idField), Seq("__id")),
           transitive, maxIter)
-      case "simhash" =>
-        val bands = p.int("bands").getOrElse(4)
-        val md5Mode = p.str("hashAlgo").contains("md5")
-        val shUdf = if (md5Mode) simhashMd5Udf else simhashUdf
-        val bandFn: Column => Column =
-          if (md5Mode) simhashBandsMd5(_, bands) else simhashBands(_, bands)
-        // see minhash note: null simhash must not reach the band
-        // keys — and the filter sits on the cheap text column so the
-        // simhash UDF is not inlined into a pushed-down null check
-        val sig = df.filter(col(textField).isNotNull)
-          .select(col(idField).as("__id"),
-            shUdf(col(textField)).as("__sh"))
-        lshDedup(df, idField, sig.select(col("__id"),
-          posexplode(bandFn(col("__sh")))
-            .as(Seq("__band_idx", "__band_hash"))), transitive, maxIter)
       case "ngram" =>
-        val n = p.int("ngramSize").getOrElse(5)
-        val threshold = p.dbl("threshold").getOrElse(0.8)
-        ngramDedup(df, textField, idField, n, threshold,
-          md5Mode = p.str("hashAlgo").contains("md5"),
+        ngramDedup(df, textField, idField, p, md5Mode,
           transitive = transitive, maxIter = maxIter)
       case "winnow" =>
         if (p.str("action").contains("index")) {
@@ -279,7 +232,7 @@ object DedupTransform {
           val out = winnowFps(slim,
             p.int("ngramSize").getOrElse(4),
             p.int("window").getOrElse(8),
-            p.str("hashAlgo").contains("md5"),
+            md5Mode,
             p.str("seed").getOrElse("0"))
             .select(col("__id").as(idField),
               explode_outer(col("__fps")).as(fpField))
@@ -291,17 +244,13 @@ object DedupTransform {
           w = p.int("window").getOrElse(8),
           threshold = p.dbl("threshold").getOrElse(0.5),
           maxBucket = p.int("maxBucket").getOrElse(64),
-          md5Mode = p.str("hashAlgo").contains("md5"),
+          md5Mode = md5Mode,
           seed = p.str("seed").getOrElse("0"),
           transitive = transitive, maxIter = maxIter)
       case "embedding" =>
-        val embField = p.str("field").getOrElse("embedding")
-        val dim = p.int("dim").getOrElse(64)
-        val planes = p.int("planes").getOrElse(12)
-        val threshold = p.dbl("threshold").getOrElse(0.95)
-        embeddingDedup(df, embField, idField, dim, planes, threshold,
-          md5Mode = p.str("hashAlgo").contains("md5"),
-          transitive = transitive, maxIter = maxIter)
+        embeddingDedup(df, p.str("field").getOrElse("embedding"),
+          idField, hyperplane(p, md5Mode),
+          p.dbl("threshold").getOrElse(0.95), transitive, maxIter)
       case "semdedup" =>
         val embField = p.str("field").getOrElse("embedding")
         val threshold = p.dbl("threshold").getOrElse(0.9)
@@ -411,15 +360,11 @@ object DedupTransform {
                 // lexicographic-min tripwire: numeric ids surfaced
                 // as strings order "10" < "9", silently electing the
                 // wrong canonical owner. A bounded probe (100 ids —
-                // a heuristic, not a scan) that finds ONLY numeric
-                // strings almost certainly means the user forgot
-                // idType; warn loudly with the fix named. The probe
-                // is an eager build-time job — `idProbe: false`
-                // skips it for genuinely-string id corpora whose
-                // ids happen to look numeric (or when build-time
-                // jobs matter)
-                if (p.bool("idProbe").getOrElse(true) &&
-                    log.isWarnEnabled && allNumericProbe(df, idField))
+                // a heuristic, not a scan; an eager build-time job)
+                // that finds ONLY numeric strings almost certainly
+                // means the user forgot idType; warn loudly with the
+                // fix named
+                if (log.isWarnEnabled && allNumericProbe(df, idField))
                   log.warn(s"dedup ${cfg.name}: verdicts ids all " +
                     "look numeric but no idType is set — min over " +
                     "STRING ids is lexicographic ('10' < '9'), " +
@@ -428,12 +373,8 @@ object DedupTransform {
                     "corpusInput to restore numeric ordering")
                 identity
             }
-            val pairs = df.select(cast(col(idField)).as("__id"),
-              cast(col(dupField)).as("__rep_id"))
-            val v =
-              if (transitive) componentMin(pairs.distinct(), maxIter)
-              else pairs.groupBy("__id")
-                .agg(min("__rep_id").as("__dup_of"))
+            val v = verdictsOf(df.select(cast(col(idField)).as("__id"),
+              cast(col(dupField)).as("__rep_id")), transitive, maxIter)
             return TransformCommon.finishRouted(
               v.select(col("__id").as(idField), col("__dup_of")), cfg)
           case Some(cn) =>
@@ -456,15 +397,9 @@ object DedupTransform {
             val idType = corpus.schema(cid).dataType
             val cast = verdictCast(cfg.name, idType,
               idType.simpleString)
-            val pairs = df.select(
+            joinVerdicts(corpus, cid, verdictsOf(df.select(
               cast(col(idField)).as("__id"),
-              cast(col(dupField)).as("__rep_id"))
-            val v =
-              if (transitive) componentMin(pairs.distinct(), maxIter)
-              else pairs.groupBy("__id")
-                .agg(min("__rep_id").as("__dup_of"))
-            corpus.join(v, corpus(cid) === v("__id"), "left")
-              .drop("__id")
+              cast(col(dupField)).as("__rep_id")), transitive, maxIter))
         }
       case other =>
         throw new IllegalArgumentException(s"dedup method: $other")
@@ -500,7 +435,7 @@ object DedupTransform {
     * so there is no pair graph to close over. */
   private def crossCorpus(cfg: ModuleCfg,
       inputs: Map[String, DataFrame], refName: String,
-      method: String): Map[String, DataFrame] = {
+      method: String, md5Mode: Boolean): Map[String, DataFrame] = {
     import graft.config.Json._
     val p = cfg.params
     require(inputs.contains(refName),
@@ -523,40 +458,14 @@ object DedupTransform {
     val idField = p.str("idField").getOrElse(praw.columns.head)
     val refTextField = p.str("referenceField").getOrElse(textField)
     val refIdField = p.str("referenceIdField").getOrElse(idField)
-    val md5Mode = p.str("hashAlgo").contains("md5")
     // see build(): widen per-row signature work; exact's one
     // fingerprint per row is cheaper than the exchange
     val primary = if (method == "exact") praw
       else TransformCommon.widen(praw)
     val ref = if (method == "exact") rraw else TransformCommon.widen(rraw)
 
-    def minhashBands(df: DataFrame, tf: String, id: String) = {
-      val m = p.int("numPermutations").getOrElse(32)
-      val bands = p.int("bands").getOrElse(8)
-      val k = p.int("shingleSize").getOrElse(3)
-      val sigUdf = if (md5Mode) minhashSigMd5Udf(k, m)
-        else minhashSigUdf(k, m)
-      // null text: never a candidate — filtered on the cheap column
-      // so the signature UDF is not inlined into a pushed null check
-      val sig = df.filter(col(tf).isNotNull)
-        .select(col(id).as("__id"), sigUdf(col(tf)).as("__sig"))
-      bandsFromSig(sig, m, bands, md5Mode)
-    }
-    def simhashBands_(df: DataFrame, tf: String, id: String) = {
-      val bands = p.int("bands").getOrElse(4)
-      val shUdf = if (md5Mode) simhashMd5Udf else simhashUdf
-      val bandFn: Column => Column =
-        if (md5Mode) simhashBandsMd5(_, bands) else simhashBands(_, bands)
-      df.filter(col(tf).isNotNull)
-        .select(col(id).as("__id"), shUdf(col(tf)).as("__sh"))
-        .select(col("__id"), posexplode(bandFn(col("__sh")))
-          .as(Seq("__band_idx", "__band_hash")))
-    }
-    def bucketJoinMin(pBands: DataFrame, rBands: DataFrame) =
-      pBands.join(
-        rBands.withColumnRenamed("__id", "__rid"),
-        Seq("__band_idx", "__band_hash"))
-        .groupBy("__id").agg(min("__rid").as("__dup_of"))
+    def bands(df: DataFrame, tf: String, id: String) =
+      bandRows(method, p, md5Mode, textRows(df, tf, id), Seq("__id"))
 
     val dupMap: DataFrame = method match {
       case "exact" =>
@@ -569,26 +478,22 @@ object DedupTransform {
         primary.select(col(idField).as("__id"),
           fingerprint(col(textField)).as("__fp"))
           .join(refMin, "__fp").select("__id", "__dup_of")
-      case "minhash" =>
-        bucketJoinMin(minhashBands(primary, textField, idField),
-          minhashBands(ref, refTextField, refIdField))
-      case "simhash" =>
-        bucketJoinMin(simhashBands_(primary, textField, idField),
-          simhashBands_(ref, refTextField, refIdField))
+      case "minhash" | "simhash" =>
+        bands(primary, textField, idField).join(
+          bands(ref, refTextField, refIdField)
+            .withColumnRenamed("__id", "__rid"),
+          Seq("__band_idx", "__band_hash"))
+          .groupBy("__id").agg(min("__rid").as("__dup_of"))
       case "embedding" =>
-        val dim = p.int("dim").getOrElse(64)
-        val planes = p.int("planes").getOrElse(12)
         val threshold = p.dbl("threshold").getOrElse(0.95)
-        def buckets(df: DataFrame, ef: String, id: String) = {
-          val b = if (md5Mode) hyperplaneBucketMd5(col("__e"), dim, planes)
-            else hyperplaneBucket(col("__e"), dim, planes, seed = 42L)
+        val bucket = hyperplane(p, md5Mode)
+        def buckets(df: DataFrame, ef: String, id: String) =
           // null emb: no bucket — filtered on the cheap embedding
           // column (null bucket ⇔ null emb) so the projection UDF is
           // not inlined into a pushed null check
           df.filter(col(ef).isNotNull)
             .select(col(id).as("__id"), col(ef).as("__e"))
-            .withColumn("__bucket", b)
-        }
+            .withColumn("__bucket", bucket(col("__e")))
         val ef = p.str("field").getOrElse("embedding")
         val pb = buckets(primary, ef, idField)
         val rb = buckets(ref, p.str("referenceField").getOrElse(ef),
@@ -729,9 +634,7 @@ object DedupTransform {
         "dedup referenceInput mode supports methods " +
           s"exact/minhash/simhash/embedding/winnow, got '$other'")
     }
-    val out = primary
-      .join(dupMap, col(idField) === dupMap("__id"), "left")
-      .drop("__id")
+    val out = joinVerdicts(primary, idField, dupMap)
     val kept = p.str("keep") match {
       case Some("canonical") | Some("first") =>
         out.filter(col("__dup_of").isNull).drop("__dup_of")
@@ -755,156 +658,280 @@ object DedupTransform {
       .drop("__fp", "__min_id")
   }
 
-  /** (id, sig) → exploded (id, band_idx, band_hash). sig is a real
-    * attribute here, so the band lambda only touches an attr (no
-    * recompute hazard). Signatures themselves come from the one-pass
-    * tight-loop UDFs in TextFunctions (`minhashSigUdf`/`simhashUdf`):
-    * doc → signature with zero shuffle, vs the earlier explode →
-    * groupBy form that shuffled one (id, hash) row per shingle and
-    * compiled a 32-column min-aggregate class per plan. */
-  def bandsFromSig(sig: DataFrame, m: Int, bands: Int,
-      md5Mode: Boolean = false): DataFrame =
-    sig.select(col("__id"),
-      posexplode(if (md5Mode) lshBandsMd5(col("__sig"), m, bands)
-        else lshBands(col("__sig"), m, bands))
-        .as(Seq("__band_idx", "__band_hash")))
+  /** A text method's signature input: (`__id`, `__t`) with null text
+    * dropped. A null text gets a null signature, and the band
+    * expression maps every null signature to the same constant key
+    * (md5("") / hash(null, b)), which would flag them all duplicates
+    * of each other. The filter sits on the CHEAP text column, not the
+    * signature: a filter on the UDF output gets pushed below the
+    * projection with the UDF inlined, running the signature pass
+    * TWICE per row (null sig ⇔ null text, so these agree). */
+  private def textRows(df: DataFrame, textField: String,
+      idField: String): DataFrame =
+    df.filter(col(textField).isNotNull)
+      .select(col(idField).as("__id"), col(textField).as("__t"))
 
-  /** Streaming LSH near-dedup: minhash/simhash band buckets with
-    * watermark-bounded first-owner state. Reference batch near-dedup
-    * semantics adapted to an unbounded ingest (the reference has no
-    * streaming analogue; this is the 100 TB crawl-intake shape —
-    * flag arrivals near-duplicating anything seen within the
-    * horizon without ever re-scanning the corpus).
+  /** Band rows of the minhash / simhash / ngram signature — the one
+    * definition self-dedup, referenceInput and streaming share: `in`'s
+    * `keep` columns plus (`__band_idx`, `__band_hash`) per band of the
+    * signature of its `__t` text.
     *
-    * Mechanics: each doc's signature explodes to `bands` narrow band
-    * rows (id + band key — the text never shuffles); rows group by
-    * band bucket into `flatMapGroupsWithState`, whose per-bucket
-    * state is ONE (owner id, owner event-time) pair — the bucket's
-    * first-seen doc, first by event time then id within a
-    * micro-batch (the documented §7.4.2 in-batch ordering
-    * approximation). Every later member arriving while the bucket
-    * is live emits a per-BAND candidate row
-    * (`idField`, `__band_idx`, `__dup_of` = owner id); the doc-level
-    * verdict is the min over a doc's candidate rows at read time
-    * (Spark cannot chain a second stateful aggregate after
-    * flatMapGroupsWithState in append mode), matching batch LSH's
-    * min-over-buckets.
+    *  - `minhash`: word-shingle MinHash. Default m=32, bands=8 keeps
+    *    r=4 rows per band (the same per-band precision sim^4 as 64/16)
+    *    at half the signature compute; detection prob for sim 0.9 is
+    *    still 1-(1-0.9^4)^8 ≈ 0.9998.
+    *  - `simhash`: 64-bit SimHash cut into Hamming-LSH bands.
+    *  - `ngram`: char-n-gram MinHash at a fixed m=32, bands=8: r=4
+    *    gives ~99% recall at sim 0.8 while keeping the false-candidate
+    *    rate ~50x below r=2 banding (r=2 at sf0.1 produced 64k
+    *    candidate pairs from 5k docs and verification dominated).
     *
-    * State lifetime: a bucket times out once the watermark passes
-    * its NEWEST member's event time — the sliding-horizon semantic
-    * (state per live bucket is one id+timestamp; total state is
-    * bounded by distinct band keys within `allowedLateness` × rate,
-    * never by stream lifetime). A re-occurrence after the horizon
-    * legitimately becomes the new owner, exactly like streaming
-    * exact dedup's re-emission rule.
-    *
-    * Ids surface as strings (one fixed state/output schema for any
-    * id type); downstream casts restore the original type. */
-  /** `widenCompute: true` — pre-state compute widening for the
-    * streaming near-dedup paths: the per-row signature/fingerprint
-    * program runs in the stage BEFORE the state shuffle, whose
-    * parallelism is the SOURCE's partitioning (a file stream staging
-    * a handful of files per batch = a handful of tasks, regardless
-    * of cores or shuffle partitions). Repartitioning the watermarked
-    * batch to cluster parallelism decouples compute width from
-    * `stateShufflePartitions`: state stores sized to live-bucket
-    * volume, signature compute sized to cores (r22 matrix on q183:
-    * state 8 alone 4.1 s, +widen 3.2 s, baseline 5.5 s at 32/32).
-    * Opt-in: on a wide ingest source the extra round-robin exchange
-    * of raw text buys nothing — the batch-side stats-probed widen
-    * has no streaming analogue, so the trade is declared per job. */
-  private def widenStreamCompute(df: DataFrame,
-      p: com.fasterxml.jackson.databind.JsonNode): DataFrame =
-    if (p.bool("widenCompute").getOrElse(false))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
+    * Signatures come from the one-pass tight-loop UDFs in
+    * TextFunctions (doc → signature with zero shuffle), and are a real
+    * attribute by the time the band lambda reads them, so the lambda
+    * never recomputes one. */
+  private def bandRows(method: String,
+      p: com.fasterxml.jackson.databind.JsonNode, md5Mode: Boolean,
+      in: DataFrame, keep: Seq[String]): DataFrame = {
+    def minhash(k: Int, m: Int, bands: Int, charGrams: Boolean) = (
+      (if (md5Mode) minhashSigMd5Udf(k, m, charGrams)
+        else minhashSigUdf(k, m, charGrams))(col("__t")),
+      (sig: Column) =>
+        if (md5Mode) lshBandsMd5(sig, m, bands) else lshBands(sig, m, bands))
+    val (sig, bandsOf) = method match {
+      case "minhash" => minhash(p.int("shingleSize").getOrElse(3),
+        p.int("numPermutations").getOrElse(32),
+        p.int("bands").getOrElse(8), charGrams = false)
+      case "ngram" =>
+        minhash(p.int("ngramSize").getOrElse(5), 32, 8, charGrams = true)
+      case _ => // simhash
+        val bands = p.int("bands").getOrElse(4)
+        ((if (md5Mode) simhashMd5Udf else simhashUdf)(col("__t")),
+          (sh: Column) => if (md5Mode) simhashBandsMd5(sh, bands)
+            else simhashBands(sh, bands))
+    }
+    val kept = keep.map(col)
+    in.select(kept :+ sig.as("__sig"): _*)
+      .select(kept :+ posexplode(bandsOf(col("__sig")))
+        .as(Seq("__band_idx", "__band_hash")): _*)
+  }
 
-  private def streamingLsh(raw: DataFrame, cfg: ModuleCfg,
+  /** The hyperplane bucket of an embedding column (`dim`, `planes`) —
+    * the one definition self-dedup, referenceInput and streaming
+    * share. */
+  private def hyperplane(p: com.fasterxml.jackson.databind.JsonNode,
+      md5Mode: Boolean): Column => Column = {
+    val dim = p.int("dim").getOrElse(64)
+    val planes = p.int("planes").getOrElse(12)
+    e => if (md5Mode) hyperplaneBucketMd5(e, dim, planes)
+      else hyperplaneBucket(e, dim, planes, seed = 42L)
+  }
+
+  /** Streaming near-dedup for minhash, simhash, ngram, winnow and
+    * embedding: the batch near-dedup semantics adapted to an unbounded
+    * ingest (the reference has no streaming analogue; this is the
+    * 100 TB crawl-intake shape — flag arrivals near-duplicating
+    * anything seen within the horizon without ever re-scanning the
+    * corpus). Each method only maps a doc to its bucket rows and,
+    * optionally, a verify; [[bucketOwners]] is the one state machine.
+    *
+    *  - minhash / simhash: one row per band ([[bandRows]] — the text
+    *    never shuffles), no verify: (`idField`, `__band_idx`,
+    *    `__dup_of`).
+    *  - ngram: the char-gram banding plus an EXACT Jaccard verify of
+    *    distinct code-point n-gram sets of the lowercased text — the
+    *    batch verify arithmetic — against the owner's text riding in
+    *    state: (`idField`, `__band_idx`, `__dup_of`, `__jaccard`).
+    *  - winnow: every fingerprint ([[winnowFps]], the batch Column
+    *    program, so both modes agree bit-identically on what a
+    *    fingerprint is) is a bucket, verified by Jaccard over the
+    *    distinct fingerprint sets: (`idField`, `__fp`, `__dup_of`,
+    *    `__jaccard`).
+    *  - embedding: one hyperplane bucket per vector, cosine verify
+    *    against the owner's embedding with the batch verify's
+    *    index-ordered double loop, so thresholds agree bit-identically:
+    *    (`idField`, `__dup_of`, `__cosine`).
+    *
+    * The doc-level verdict is the min over a doc's candidate rows at
+    * read time (dedup `method: verdicts`; Spark cannot chain a second
+    * stateful aggregate after flatMapGroupsWithState in append mode),
+    * matching batch LSH's min-over-buckets. A sub-threshold collision
+    * emits nothing and never replaces the owner (min-rep semantics —
+    * the batch paths also verify each member against the bucket
+    * minimum only), so drained over time-ordered arrivals with the
+    * horizon covering the run, the candidates equal the batch
+    * verified pairs (md5 mode replays in SQL — the q179 and q127
+    * oracles).
+    *
+    * Bucket state carries what the verify needs of the owner: nothing
+    * (LSH), its text (ngram), its fingerprint set (winnow) or its
+    * embedding. Two caps bound it for long docs — each applies to BOTH
+    * sides of the verify while banding still sees the whole doc, a
+    * documented precision trade (default off = exact batch parity):
+    * `maxVerifyChars` clips ngram text (100 KB docs × 8 bands would
+    * hold 8× the doc text in state) and `maxVerifyFps` keeps winnow's
+    * first N fingerprints, a positional document prefix (a doc with F
+    * fingerprints owns up to F buckets, each storing — and each
+    * exploded row shipping — its full set: O(F²) strings uncapped).
+    * Gram sets are recomputed at verify time: text is ~n× smaller
+    * than its gram set.
+    *
+    * Ids surface as strings (one fixed state/output schema for any id
+    * type); downstream casts restore the original type. */
+  private def streamingNearDedup(raw: DataFrame, cfg: ModuleCfg,
       method: String,
-      contract: (com.fasterxml.jackson.databind.JsonNode, String))
-      : DataFrame = {
+      contract: (com.fasterxml.jackson.databind.JsonNode, String),
+      md5Mode: Boolean): DataFrame = {
+    val p = cfg.params
+    val (strategy, ts) = contract // validated once in build()
+    val field = p.str("field")
+      .getOrElse(if (method == "embedding") "embedding" else "text")
+    val idField = p.str("idField").getOrElse(raw.columns.head)
+    // (`__id`, `__ts`, `__t` = the text or embedding); the watermark
+    // tag travels with the aliased event-time attribute — NOT re-cast:
+    // applyWatermark already guarantees TimestampType, and a
+    // Cast-wrapped alias drops the watermark metadata the event-time
+    // timeout requires
+    val docs = graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
+      .filter(col(field).isNotNull) // never a candidate, as in batch
+      // null event time: skipped — withWatermark does NOT drop null-ts
+      // rows, and the horizon arithmetic (getTimestamp.getTime) has no
+      // meaningful ordering for them; an unguarded null would NPE
+      // inside flatMapGroupsWithState and kill the query
+      .filter(col(ts).isNotNull)
+      // the per-row signature/fingerprint program runs in the stage
+      // BEFORE the state shuffle, whose parallelism is the SOURCE's
+      // partitioning (a file stream staging a handful of files per
+      // batch = a handful of tasks, regardless of cores or shuffle
+      // partitions). Widening the watermarked batch to cluster
+      // parallelism decouples compute width from
+      // `stateShufflePartitions`: state stores sized to live-bucket
+      // volume, signature compute sized to cores (r22 matrix on q183:
+      // state 8 alone 4.1 s, +widen 3.2 s, baseline 5.5 s at 32/32)
+      .repartition(raw.sparkSession.sparkContext.defaultParallelism)
+      .select(col(idField).cast(StringType).as("__id"), col(ts).as("__ts"),
+        col(field).as("__t"))
+    val id = StructField(idField, StringType)
+    val dupOf = StructField("__dup_of", StringType)
+    val band = StructField("__band_idx", IntegerType)
+    val jaccardF = StructField("__jaccard", DoubleType)
+    // band rows keyed by (band idx, band hash), \u0001-separated: no
+    // hash rendering (md5 hex / decimal) contains it, and an
+    // unseparated idx=1,hash="23" would collide with idx=12,hash="3"
+    def banded(keep: Seq[String]) =
+      bandRows(method, p, md5Mode, docs, Seq("__id", "__ts") ++ keep)
+        .select(Seq(concat_ws("\u0001", col("__band_idx").cast(StringType),
+            col("__band_hash").cast(StringType)).as("__key"),
+          col("__id"), col("__ts"),
+          col("__band_idx").cast(IntegerType).as("__tag")) ++
+          keep.map(col): _*)
+    method match {
+      case "minhash" | "simhash" =>
+        bucketOwners[Null, Null](banded(Nil),
+          StructType(Seq(id, band, dupOf)), _ => null, identity, None, 0.0)
+      case "ngram" =>
+        val n = p.int("ngramSize").getOrElse(5)
+        val cap = p.int("maxVerifyChars").getOrElse(0)
+        require(cap >= 0,
+          s"dedup ${cfg.name}: maxVerifyChars must be >= 0, got $cap")
+        bucketOwners[String, Set[String]](banded(Seq("__t")),
+          StructType(Seq(id, band, dupOf, jaccardF)),
+          r => {
+            val t = r.getString(4)
+            if (cap > 0 && t.length > cap) t.substring(0, cap) else t
+          },
+          t => codePointGrams(t.toLowerCase(java.util.Locale.ROOT), n).toSet,
+          Some(jaccard), p.dbl("threshold").getOrElse(0.8))
+      case "winnow" =>
+        val cap = p.int("maxVerifyFps").getOrElse(0)
+        require(cap >= 0,
+          s"dedup ${cfg.name}: maxVerifyFps must be >= 0, got $cap")
+        val fps = winnowFps(docs, p.int("ngramSize").getOrElse(4),
+            p.int("window").getOrElse(8), md5Mode,
+            p.str("seed").getOrElse("0"), keep = Seq("__ts"))
+          // one stringified fingerprint domain for key AND state: md5
+          // mode is already hex strings; xxhash64 longs render decimal.
+          // Only identity matters to the key and the set-Jaccard, and
+          // both renderings are injective
+          .withColumn("__fall", col("__fps").cast(ArrayType(StringType)))
+          // explode_outer + post-filter: see winnowDedup
+          .select(col("__id"), col("__ts"),
+            (if (cap > 0) slice(col("__fall"), 1, cap) else col("__fall"))
+              .as("__fset"),
+            explode_outer(col("__fall")).as("__fp"))
+          .filter(col("__fp").isNotNull)
+        bucketOwners[Seq[String], Set[String]](
+          fps.select(col("__fp").as("__key"), col("__id"), col("__ts"),
+            col("__fp").as("__tag"), col("__fset")),
+          StructType(Seq(id, StructField("__fp", StringType), dupOf,
+            jaccardF)),
+          _.getSeq[String](4), _.toSet, Some(jaccard),
+          p.dbl("threshold").getOrElse(0.5))
+      case _ => // embedding
+        val bucket = hyperplane(p, md5Mode)
+        // cast to array<float> explicitly: the batch path accepts an
+        // array<double> embedding through ImplicitCastInputTypes on the
+        // bucket/cosine expressions, but the typed state read
+        // (getSeq[Float]) would ClassCastException — the same pipeline
+        // must accept the same column types batch or streamed
+        val emb = col("__t").cast(ArrayType(FloatType))
+        bucketOwners[Array[Float], Array[Float]](
+          docs.select(bucket(emb).cast(StringType).as("__key"),
+            col("__id"), col("__ts"), emb.as("__emb")),
+          StructType(Seq(id, dupOf, StructField("__cosine", DoubleType))),
+          _.getSeq[Float](3).toArray, identity, Some(cosineSim),
+          p.dbl("threshold").getOrElse(0.95))
+    }
+  }
+
+  /** The bucket-owner state machine under every streaming near-dedup
+    * method. `rows` = (`__key`, `__id`, `__ts`, `__tag`?, payload?):
+    * one row per (doc, bucket); `__tag`, when present, is copied into
+    * the candidate row after the id.
+    *
+    * Per bucket, state = (owner id, newest-member event time, owner
+    * `payload`). The owner is the bucket's first-seen doc, first by
+    * event time then id within a micro-batch (the documented §7.4.2
+    * in-batch ordering approximation). Each later member emits one
+    * candidate row (id, tag?, owner id, score?) — with a `score`, only
+    * at or above `threshold`, computed on `prepare`d payloads (the
+    * owner's once per batch, not once per arrival).
+    *
+    * State lifetime: a bucket times out once the watermark passes its
+    * NEWEST member's event time — the sliding-horizon semantic (total
+    * state is bounded by live buckets within `allowedLateness` × rate,
+    * never by stream lifetime). A re-occurrence after the horizon
+    * legitimately becomes the new owner, exactly like streaming exact
+    * dedup's re-emission rule. */
+  private def bucketOwners[P, V](rows: DataFrame, out: StructType,
+      payload: org.apache.spark.sql.Row => P, prepare: P => V,
+      score: Option[(V, V) => Double], threshold: Double): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val p = cfg.params
-    val (strategy, ts) = contract // validated once in build()
-    val textField = p.str("field").getOrElse("text")
-    val idField = p.str("idField").getOrElse(raw.columns.head)
-    val md5Mode = p.str("hashAlgo").contains("md5")
-    val wm = widenStreamCompute(
-      graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
-        .filter(col(textField).isNotNull) // null text: never a candidate
-        // null event time: skipped — withWatermark does NOT drop
-        // null-ts rows, and the stateful horizon arithmetic below
-        // (getTimestamp.getTime) has no meaningful ordering for them;
-        // an unguarded null would NPE inside flatMapGroupsWithState
-        // and kill the query
-        .filter(col(ts).isNotNull), p)
-    // band rows (__id, __ts, __band_idx, __band_hash) — the watermark
-    // tag travels with the aliased event-time attribute
-    val bandRows: DataFrame = method match {
-      case "minhash" =>
-        val m = p.int("numPermutations").getOrElse(32)
-        val bands = p.int("bands").getOrElse(8)
-        val k = p.int("shingleSize").getOrElse(3)
-        val sigUdf = if (md5Mode) minhashSigMd5Udf(k, m)
-          else minhashSigUdf(k, m)
-        wm.select(col(idField).cast(StringType).as("__id"),
-            col(ts).as("__ts"), sigUdf(col(textField)).as("__sig"))
-          .select(col("__id"), col("__ts"),
-            posexplode(if (md5Mode) lshBandsMd5(col("__sig"), m, bands)
-              else lshBands(col("__sig"), m, bands))
-              .as(Seq("__band_idx", "__band_hash")))
-      case _ => // simhash (dispatch admits only minhash | simhash)
-        val bands = p.int("bands").getOrElse(4)
-        val shUdf = if (md5Mode) simhashMd5Udf else simhashUdf
-        val bandFn: Column => Column =
-          if (md5Mode) simhashBandsMd5(_, bands) else simhashBands(_, bands)
-        wm.select(col(idField).cast(StringType).as("__id"),
-            col(ts).as("__ts"), shUdf(col(textField)).as("__sh"))
-          .select(col("__id"), col("__ts"),
-            posexplode(bandFn(col("__sh")))
-              .as(Seq("__band_idx", "__band_hash")))
-    }
-    // slim fixed-schema frame for the typed stateful map: the group
-    // key encodes (band_idx, band_hash), \\u0001-separated: no hash
-    // rendering (md5 hex / decimal / idx_val) contains it, and an
-    // unseparated idx=1,hash="23" would collide with idx=12,hash="3"
-    val slim = bandRows.select(
-      concat_ws("\u0001", col("__band_idx").cast(StringType),
-        col("__band_hash").cast(StringType)).as("__key"),
-      col("__id"),
-      // NOT re-cast: applyWatermark already guarantees TimestampType,
-      // and a Cast-wrapped alias drops the watermark metadata the
-      // event-time timeout requires
-      col("__ts"),
-      col("__band_idx").cast(IntegerType).as("__band_idx"))
-    val outSchema = StructType(Seq(
-      StructField(idField, StringType),
-      StructField("__band_idx", IntegerType),
-      StructField("__dup_of", StringType)))
+    val tagged = rows.columns.contains("__tag")
     implicit val outEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val stateEnc = Encoders.kryo[(String, Long)]
-    slim.groupByKey(_.getString(0))(Encoders.STRING)
-      .flatMapGroupsWithState[(String, Long), Row](
+      ExpressionEncoder(RowEncoder.encoderFor(out))
+    implicit val stateEnc = Encoders.kryo[(String, Long, P)]
+    rows.groupByKey(_.getString(0))(Encoders.STRING)
+      .flatMapGroupsWithState[(String, Long, P), Row](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, rows, state: GroupState[(String, Long)]) =>
+        (_, members, state: GroupState[(String, Long, P)]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             // first-seen = (event time, id) order within the batch;
             // string id order only breaks exact-timestamp ties
-            val sorted = rows.toSeq.sortBy(r =>
+            val sorted = members.toSeq.sortBy(r =>
               (r.getTimestamp(2).getTime, r.getString(1)))
-            // state = (owner id, newest-member event time): the
-            // horizon must track the bucket's NEWEST member across
+            // the horizon must track the bucket's NEWEST member across
             // batches — seeding it from the owner's own arrival time
             // would let a later in-horizon LATE member rewind the
             // timeout below an earlier member's time and expire the
             // bucket inside its documented horizon
             var owner = state.getOption
             var maxTs = owner.map(_._2).getOrElse(Long.MinValue)
-            val out = Seq.newBuilder[Row]
+            var ownerPrepared: Option[V] = None
+            val emit = Seq.newBuilder[Row]
             // a doc duplicated WITHIN one micro-batch emits one
             // candidate row, not one per arrival; a re-arrival in a
             // LATER batch inside the horizon still re-emits (the
@@ -917,285 +944,52 @@ object DedupTransform {
               val t = r.getTimestamp(2).getTime
               if (t > maxTs) maxTs = t
               owner match {
-                case None => owner = Some((id, t))
-                case Some((oid, _)) if oid != id =>
-                  if (emitted.add(id)) out += Row(id, r.getInt(3), oid)
+                case None => owner = Some((id, t, payload(r)))
+                case Some((oid, _, op)) if oid != id =>
+                  val s = score.map { f =>
+                    if (ownerPrepared.isEmpty)
+                      ownerPrepared = Some(prepare(op))
+                    f(prepare(payload(r)), ownerPrepared.get)
+                  }
+                  if (s.forall(_ >= threshold) && emitted.add(id))
+                    emit += Row.fromSeq(
+                      (id +: (if (tagged) Seq(r.get(3)) else Nil)) ++
+                        (oid +: s.toSeq))
                 case _ => () // the owner doc re-arriving: not a dup
               }
             }
-            state.update((owner.get._1, maxTs))
+            state.update((owner.get._1, maxTs, owner.get._3))
             // expire once the watermark passes the newest member
             // (+1ms guard: Spark rejects a timeout at-or-before the
             // current watermark)
             state.setTimeoutTimestamp(
               math.max(maxTs, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
+            emit.result().iterator
           }
       }.toDF()
   }
 
-  /** Streaming ngram near-dedup: `streamingLsh`'s char-gram minhash
-    * banding with an EXACT Jaccard verify at arrival — the owner's
-    * TEXT rides in the bucket state and each within-horizon member
-    * compares its distinct char-n-gram set against the owner's
-    * (identical arithmetic to the batch verify: |a∩b|/(|a|+|b|−|a∩b|)
-    * over code-point grams of the lowercased text). Emits one
-    * verified candidate row (`idField`, `__band_idx`, `__dup_of`,
-    * `__jaccard`) per colliding band at or above `threshold`;
-    * sub-threshold same-bucket arrivals pass silently and never
-    * replace the owner (min-rep semantics, matching embedding's
-    * streaming path and the batch bucket-minimum verify).
-    *
-    * State per live bucket is (owner id, newest-member time, owner
-    * text); gram sets are recomputed at verify time — text is ~n×
-    * smaller than its gram set, and a doc verifies only against the
-    * buckets it collides with (CPU per arrival is bands × one gram
-    * pass, documented trade for bounded state). */
-  private def streamingNgram(raw: DataFrame, cfg: ModuleCfg,
-      contract: (com.fasterxml.jackson.databind.JsonNode, String))
-      : DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val p = cfg.params
-    val (strategy, ts) = contract // validated once in build()
-    val textField = p.str("field").getOrElse("text")
-    val idField = p.str("idField").getOrElse(raw.columns.head)
-    val md5Mode = p.str("hashAlgo").contains("md5")
-    val n = p.int("ngramSize").getOrElse(5)
-    val threshold = p.dbl("threshold").getOrElse(0.8)
-    // m/bands fixed like batch ngramDedup (r=4 per-band precision)
-    val m = 32; val bands = 8
-    // maxVerifyChars caps the owner-text bytes riding in bucket
-    // state (finding: 100 KB docs × 8 bands would hold 8× the doc
-    // text in state): when set, BOTH sides of the exact-Jaccard
-    // verify truncate to the first N chars — a documented precision
-    // trade (gram sets of long docs that differ only past the cap
-    // verify as equal). Default off: full-text verify, exact batch
-    // parity. Banding is unaffected (signatures always hash the
-    // full text), so the cap changes only which collisions verify.
-    val verifyCap = p.int("maxVerifyChars").getOrElse(0)
-    require(verifyCap >= 0,
-      s"dedup ${cfg.name}: maxVerifyChars must be >= 0, got $verifyCap")
-    val wm = widenStreamCompute(
-      graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
-        .filter(col(textField).isNotNull)
-        // null event time: see streamingLsh — withWatermark does not
-        // drop null-ts rows and the horizon arithmetic would NPE
-        .filter(col(ts).isNotNull), p)
-    val sigUdf = if (md5Mode) minhashSigMd5Udf(n, m, charGrams = true)
-      else minhashSigUdf(n, m, charGrams = true)
-    val slim = wm
-      .select(col(idField).cast(StringType).as("__id"),
-        col(ts).as("__ts"), col(textField).as("__t"),
-        sigUdf(col(textField)).as("__sig"))
-      .select(col("__id"), col("__ts"), col("__t"),
-        posexplode(if (md5Mode) lshBandsMd5(col("__sig"), m, bands)
-          else lshBands(col("__sig"), m, bands))
-          .as(Seq("__band_idx", "__band_hash")))
-      .select(
-        // \\u0001-separated like streamingLsh: an unseparated
-        // idx=1,hash="23" would collide with idx=12,hash="3"
-        concat_ws("\u0001", col("__band_idx").cast(StringType),
-          col("__band_hash").cast(StringType)).as("__key"),
-        col("__id"), col("__ts"), col("__t"),
-        col("__band_idx").cast(IntegerType).as("__band_idx"))
-    val outSchema = StructType(Seq(
-      StructField(idField, StringType),
-      StructField("__band_idx", IntegerType),
-      StructField("__dup_of", StringType),
-      StructField("__jaccard", DoubleType)))
-    implicit val outEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val stateEnc = Encoders.kryo[(String, Long, String)]
-    def clip(s: String): String =
-      if (verifyCap > 0 && s.length > verifyCap)
-        s.substring(0, verifyCap) else s
-    def grams(s: String): Set[String] =
-      graft.functions.TextFunctions.codePointGrams(
-        clip(s).toLowerCase(java.util.Locale.ROOT), n).toSet
-    slim.groupByKey(_.getString(0))(Encoders.STRING)
-      .flatMapGroupsWithState[(String, Long, String), Row](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, rows, state: GroupState[(String, Long, String)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.getTimestamp(2).getTime, r.getString(1)))
-            // state carries the bucket's NEWEST member time — see
-            // streamingLsh's no-rewind note
-            var owner = state.getOption
-            var maxTs = owner.map(_._2).getOrElse(Long.MinValue)
-            // owner grams computed once per (batch, owner), not per
-            // arrival — recomputed only when the owner changes
-            var ownerGrams: Set[String] = null
-            val out = Seq.newBuilder[Row]
-            // one emission per doc per micro-batch — see
-            // streamingLsh's multiset note
-            val emitted = scala.collection.mutable.HashSet[String]()
-            sorted.foreach { r =>
-              val id = r.getString(1)
-              val t = r.getTimestamp(2).getTime
-              if (t > maxTs) maxTs = t
-              owner match {
-                case None =>
-                  // owner text stored CLIPPED: the cap bounds state
-                  // bytes, not just verify CPU
-                  owner = Some((id, t, clip(r.getString(3))))
-                  ownerGrams = null
-                case Some((oid, _, otext)) if oid != id =>
-                  if (ownerGrams == null) ownerGrams = grams(otext)
-                  val g = grams(r.getString(3))
-                  val inter = g.count(ownerGrams.contains)
-                  val j = inter.toDouble /
-                    (g.size + ownerGrams.size - inter)
-                  if (j >= threshold && emitted.add(id))
-                    out += Row(id, r.getInt(4), oid, j)
-                case _ => () // the owner doc re-arriving
-              }
-            }
-            state.update((owner.get._1, maxTs, owner.get._3))
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
-          }
-      }.toDF()
+  /** Jaccard of two distinct sets — the batch verify arithmetic,
+    * |a∩b|/(|a|+|b|−|a∩b|). */
+  private def jaccard(a: Set[String], b: Set[String]): Double = {
+    val inter = a.count(b.contains)
+    inter.toDouble / (a.size + b.size - inter)
   }
 
-  /** Streaming winnow near-dedup: the fingerprint-bucket form of
-    * [[streamingNgram]]. Each arrival's winnow fingerprints come
-    * from the SAME Column program as the batch path ([[winnowFps]] —
-    * token k-gram hashes, per-window minimum, distinct), so the two
-    * modes agree bit-identically on what a fingerprint is. Each
-    * fingerprint is a bucket key; the first-seen doc owns a bucket,
-    * and a later within-horizon member verifies its FULL fingerprint
-    * set against the owner's at arrival (Jaccard over distinct
-    * fingerprint sets — the batch verify arithmetic). A verified
-    * collision emits one candidate row (`idField`, `__fp`,
-    * `__dup_of`, `__jaccard`) per colliding fingerprint at/above
-    * `threshold`; sub-threshold collisions pass silently and never
-    * replace the owner (min-rep semantics, shared with every
-    * streaming near-dedup mode here).
-    *
-    * State per live bucket is (owner id, newest-member event time,
-    * owner fingerprint set). NOTE the quadratic shape: a doc with F
-    * fingerprints owns up to F buckets and each stores its FULL
-    * F-element set (and each exploded band row ships it), so an
-    * uncapped long document costs O(F²) strings across its buckets —
-    * the winnow analogue of ngram carrying the owner TEXT per band.
-    * `maxVerifyFps` bounds it exactly like ngram's maxVerifyChars:
-    * when set, BOTH sides of the verify truncate to the first N
-    * fingerprints (a positional document prefix — banding is
-    * unaffected, every fingerprint still keys a bucket, so the cap
-    * changes only which collisions verify). Documented precision
-    * trade; default off = exact batch parity. The horizon bound is
-    * ngram's: a bucket expires once the watermark passes its newest
-    * member. Over time-ordered arrivals with the horizon covering
-    * the run, the drained candidates equal the batch winnow pairs
-    * verified against each bucket's minimum member (md5 mode
-    * replays in SQL — the batch q127 fingerprint chain). */
-  private def streamingWinnow(raw: DataFrame, cfg: ModuleCfg,
-      contract: (com.fasterxml.jackson.databind.JsonNode, String))
-      : DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val p = cfg.params
-    val (strategy, ts) = contract // validated once in build()
-    val textField = p.str("field").getOrElse("text")
-    val idField = p.str("idField").getOrElse(raw.columns.head)
-    val md5Mode = p.str("hashAlgo").contains("md5")
-    val k = p.int("ngramSize").getOrElse(4)
-    val w = p.int("window").getOrElse(8)
-    val threshold = p.dbl("threshold").getOrElse(0.5)
-    val seed = p.str("seed").getOrElse("0")
-    // maxVerifyFps: see the scaladoc — caps the fingerprint set
-    // riding in bucket state AND shipped per band row (the O(F²)
-    // bound); banding always uses the full set
-    val verifyCap = p.int("maxVerifyFps").getOrElse(0)
-    require(verifyCap >= 0,
-      s"dedup ${cfg.name}: maxVerifyFps must be >= 0, got $verifyCap")
-    val wm = widenStreamCompute(
-      graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
-        .filter(col(textField).isNotNull)
-        // null event time: see streamingLsh — withWatermark does not
-        // drop null-ts rows and the horizon arithmetic would NPE
-        .filter(col(ts).isNotNull), p)
-    val withFps = winnowFps(
-      wm.select(col(idField).cast(StringType).as("__id"),
-        col(ts).as("__ts"), col(textField).as("__t")),
-      k, w, md5Mode, seed, keep = Seq("__ts"))
-      // one stringified fingerprint domain for key AND state: md5
-      // mode is already hex strings; xxhash64 longs render decimal.
-      // Only identity matters to the key and the set-Jaccard, and
-      // both renderings are injective
-      .withColumn("__fall", col("__fps").cast(ArrayType(StringType)))
-      .withColumn("__fset",
-        if (verifyCap > 0) slice(col("__fall"), 1, verifyCap)
-        else col("__fall"))
-    val slim = withFps
-      .select(col("__id"), col("__ts"), col("__fset"),
-        explode_outer(col("__fall")).as("__fp"))
-      .filter(col("__fp").isNotNull)
-    val outSchema = StructType(Seq(
-      StructField(idField, StringType),
-      StructField("__fp", StringType),
-      StructField("__dup_of", StringType),
-      StructField("__jaccard", DoubleType)))
-    implicit val outEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val stateEnc = Encoders.kryo[(String, Long, Seq[String])]
-    slim.groupByKey(_.getString(3))(Encoders.STRING)
-      .flatMapGroupsWithState[(String, Long, Seq[String]), Row](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, rows, state: GroupState[(String, Long, Seq[String])]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.getTimestamp(1).getTime, r.getString(0)))
-            // state carries the bucket's NEWEST member time — see
-            // streamingLsh's no-rewind note
-            var owner = state.getOption
-            var maxTs = owner.map(_._2).getOrElse(Long.MinValue)
-            var ownerSet: Set[String] =
-              owner.map(_._3.toSet).orNull
-            val out = Seq.newBuilder[Row]
-            // one emission per doc per micro-batch — see
-            // streamingLsh's multiset note
-            val emitted = scala.collection.mutable.HashSet[String]()
-            sorted.foreach { r =>
-              val id = r.getString(0)
-              val t = r.getTimestamp(1).getTime
-              if (t > maxTs) maxTs = t
-              owner match {
-                case None =>
-                  val fset = r.getSeq[String](2)
-                  owner = Some((id, t, fset))
-                  ownerSet = fset.toSet
-                case Some((oid, _, _)) if oid != id =>
-                  val g = r.getSeq[String](2).toSet
-                  val inter = g.count(ownerSet.contains)
-                  val j = inter.toDouble /
-                    (g.size + ownerSet.size - inter)
-                  if (j >= threshold && emitted.add(id))
-                    out += Row(id, key, oid, j)
-                case _ => () // the owner doc re-arriving
-              }
-            }
-            state.update((owner.get._1, maxTs, owner.get._3))
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
-          }
-      }.toDF()
+  /** Index-ordered double cosine — the SAME loop as the batch
+    * verify's `cosine` expression and the SQL replay's
+    * sum-of-products arithmetic (no epsilon), so a threshold compare
+    * agrees bit-identically across all three. */
+  private def cosineSim(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** verdicts id cast with a parse tripwire: the engine's lenient
-    * (non-ANSI) cast nulls out an unparseable id, which would
-    * silently drop that doc's verdict or group it under a null key
-    * — on a billion drained rows an invisible corruption. A value
-    * that nulls under the cast while non-null raises with the
-    * offending value named. */
   /** Bounded all-numeric heuristic for the verdicts lexicographic-min
     * warning: 100 ids, not a scan — a false negative just skips the
     * warning, and a genuinely-string corpus rarely has a 100-id
@@ -1207,6 +1001,12 @@ object DedupTransform {
     probe.nonEmpty && probe.forall(_.getString(0).matches("-?\\d+"))
   }
 
+  /** verdicts id cast with a parse tripwire: the engine's lenient
+    * (non-ANSI) cast nulls out an unparseable id, which would
+    * silently drop that doc's verdict or group it under a null key
+    * — on a billion drained rows an invisible corruption. A value
+    * that nulls under the cast while non-null raises with the
+    * offending value named. */
   private def verdictCast(name: String,
       dt: org.apache.spark.sql.types.DataType,
       tName: String): Column => Column =
@@ -1247,118 +1047,6 @@ object DedupTransform {
     (strategy, ts)
   }
 
-  /** Streaming embedding near-dedup: the hyperplane-LSH bucket form
-    * of `streamingLsh` with a cosine verify at arrival. One bucket
-    * per vector; the per-bucket state is the first-seen owner's
-    * (id, event time, EMBEDDING) — the embedding must ride in state
-    * because verification happens when the later member arrives.
-    * An arrival cosine-matching its bucket's owner at or above
-    * `threshold` emits one candidate row (`idField`, `__dup_of`,
-    * `__cosine`); a same-bucket arrival BELOW the threshold emits
-    * nothing and does not replace the owner (min-rep semantics —
-    * identical to the batch path, which also verifies every member
-    * against the bucket MINIMUM only). Bucket state expires once the
-    * watermark passes the bucket's newest member, so state is
-    * bounded by live buckets × (id + d floats) within the horizon.
-    *
-    * Drained over time-ordered arrivals with the horizon covering
-    * the run, the candidates equal the batch embedding path's
-    * verified pairs (md5 plane mode replays in SQL — the q179
-    * oracle). Cosine here is the same index-ordered double loop as
-    * the batch verify, so thresholds agree bit-identically. */
-  private def streamingEmbedding(raw: DataFrame, cfg: ModuleCfg,
-      contract: (com.fasterxml.jackson.databind.JsonNode, String))
-      : DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val p = cfg.params
-    val (strategy, ts) = contract // validated once in build()
-    val embField = p.str("field").getOrElse("embedding")
-    val idField = p.str("idField").getOrElse(raw.columns.head)
-    val md5Mode = p.str("hashAlgo").contains("md5")
-    val dim = p.int("dim").getOrElse(64)
-    val planes = p.int("planes").getOrElse(12)
-    val threshold = p.dbl("threshold").getOrElse(0.95)
-    // null embeddings never bucket (same rule as batch)
-    val wm = widenStreamCompute(
-      graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
-        .filter(col(embField).isNotNull)
-        // null event time: see streamingLsh — withWatermark does not
-        // drop null-ts rows and the horizon arithmetic would NPE
-        .filter(col(ts).isNotNull), p)
-    val bucketCol =
-      if (md5Mode) hyperplaneBucketMd5(col("__emb"), dim, planes)
-      else hyperplaneBucket(col("__emb"), dim, planes, seed = 42L)
-    // cast to array<float> explicitly: the batch path accepts an
-    // array<double> embedding through ImplicitCastInputTypes on the
-    // bucket/cosine expressions, but the typed state read below
-    // (getSeq[Float]) would ClassCastException — the same pipeline
-    // must accept the same column types batch or streamed
-    val slim = wm.select(col(idField).cast(StringType).as("__id"),
-        col(ts).as("__ts"),
-        col(embField).cast(ArrayType(FloatType)).as("__emb"))
-      .withColumn("__key", bucketCol.cast(StringType))
-      .select("__key", "__id", "__ts", "__emb")
-    val outSchema = StructType(Seq(
-      StructField(idField, StringType),
-      StructField("__dup_of", StringType),
-      StructField("__cosine", DoubleType)))
-    implicit val outEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val stateEnc = Encoders.kryo[(String, Long, Array[Float])]
-    slim.groupByKey(_.getString(0))(Encoders.STRING)
-      .flatMapGroupsWithState[(String, Long, Array[Float]), Row](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, rows, state: GroupState[(String, Long, Array[Float])]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r =>
-              (r.getTimestamp(2).getTime, r.getString(1)))
-            // state carries the bucket's NEWEST member time, not the
-            // owner's arrival — see streamingLsh's no-rewind note
-            var owner = state.getOption
-            var maxTs = owner.map(_._2).getOrElse(Long.MinValue)
-            val out = Seq.newBuilder[Row]
-            // one emission per doc per micro-batch — see
-            // streamingLsh's multiset note
-            val emitted = scala.collection.mutable.HashSet[String]()
-            sorted.foreach { r =>
-              val id = r.getString(1)
-              val t = r.getTimestamp(2).getTime
-              if (t > maxTs) maxTs = t
-              owner match {
-                case None =>
-                  owner = Some((id, t, r.getSeq[Float](3).toArray))
-                case Some((oid, _, oemb)) if oid != id =>
-                  val c = cosineSim(r.getSeq[Float](3), oemb)
-                  if (c >= threshold && emitted.add(id))
-                    out += Row(id, oid, c)
-                case _ => () // the owner vector re-arriving
-              }
-            }
-            state.update((owner.get._1, maxTs, owner.get._3))
-            state.setTimeoutTimestamp(
-              math.max(maxTs, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
-          }
-      }.toDF()
-  }
-
-  /** Index-ordered double cosine — the SAME loop as the batch
-    * verify's `cosine` expression and the SQL replay's
-    * sum-of-products arithmetic (no epsilon), so a threshold compare
-    * agrees bit-identically across all three. */
-  private def cosineSim(a: Seq[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /** Flag docs sharing any band bucket with a smaller id.
     * `bandRows` = (__id, __band_idx, __band_hash).
     *
@@ -1373,42 +1061,25 @@ object DedupTransform {
       bandRows: DataFrame, transitive: Boolean = false,
       maxIter: Int = 50): DataFrame = {
     val bucketPairs = bandRows
-      .withColumn("__bucket_min", min("__id").over(
+      .withColumn("__rep_id", min("__id").over(
         Window.partitionBy("__band_idx", "__band_hash")))
-      .filter(col("__id") > col("__bucket_min"))
-    val dupMap =
-      if (transitive)
-        componentMin(bucketPairs
-          .select(col("__id"), col("__bucket_min").as("__rep_id"))
-          .distinct(), maxIter)
-      else bucketPairs
-        .groupBy(col("__id"))
-        .agg(min("__bucket_min").as("__dup_of"))
-    df.join(dupMap, col(idField) === dupMap("__id"), "left")
-      .drop("__id")
+      .filter(col("__id") > col("__rep_id"))
+      .select("__id", "__rep_id")
+    joinVerdicts(df, idField, verdictsOf(bucketPairs, transitive, maxIter))
   }
 
   /** n-gram Jaccard dedup: char-n-gram minhash candidates verified by
     * exact Jaccard within buckets (verification join touches only
     * candidate pairs, never the full corpus cross-product). */
   private def ngramDedup(df: DataFrame, textField: String, idField: String,
-      n: Int, threshold: Double, md5Mode: Boolean = false,
-      transitive: Boolean = false, maxIter: Int = 50): DataFrame = {
-    // r = m/bands = 4 hash rows per band: collision prob per band is
-    // sim^4, so 8 bands give ~99% recall at sim 0.8 while keeping the
-    // false-candidate rate ~50x below r=2 banding (r=2 at sf0.1
-    // produced 64k candidate pairs from 5k docs and verification
-    // dominated the runtime)
-    val m = 32; val bands = 8
+      p: com.fasterxml.jackson.databind.JsonNode, md5Mode: Boolean,
+      transitive: Boolean, maxIter: Int): DataFrame = {
+    val n = p.int("ngramSize").getOrElse(5)
+    val threshold = p.dbl("threshold").getOrElse(0.8)
     val slim = df.select(col(idField).as("__id"),
       col(textField).as("__t"))
-    val sigUdf = if (md5Mode) minhashSigMd5Udf(n, m, charGrams = true)
-      else minhashSigUdf(n, m, charGrams = true)
-    // null text: never a candidate — cheap-column filter so the
-    // signature UDF is not inlined into a pushed null check
-    val sig = slim.filter(col("__t").isNotNull)
-      .select(col("__id"), sigUdf(col("__t")).as("__sig"))
-    val bandRows = bandsFromSig(sig, m, bands, md5Mode)
+    val bands = bandRows("ngram", p, md5Mode,
+      textRows(df, textField, idField), Seq("__id"))
     // Bucket representative via a window over the band bucket (not
     // groupBy + join back) so the signature pipeline is computed once
     // — see lshDedup. Persisted: candidates feed three subtrees (the
@@ -1421,7 +1092,7 @@ object DedupTransform {
     // ~|doc|-element array) Jaccard verify up to 8× per pair —
     // measured 3× the verify stage time at sf0.1 — while the distinct
     // itself shuffles only 16 bytes/pair.
-    val candidates = bandRows
+    val candidates = bands
       .withColumn("__rep_id", min("__id").over(
         Window.partitionBy("__band_idx", "__band_hash")))
       .filter(col("__id") > col("__rep_id"))
@@ -1462,14 +1133,9 @@ object DedupTransform {
       // single-set-build jaccard applies (skips the union's second
       // hash set per pair — the verify filter's dominant cost)
       .filter(jaccardDistinct(col("__g"), col("__g_rep")) >= threshold)
-    val verified =
-      if (transitive)
-        componentMin(verifiedPairs.select("__id", "__rep_id"), maxIter)
-      else verifiedPairs
-        .groupBy(col("__id"))
-        .agg(min("__rep_id").as("__dup_of"))
-    df.join(verified, col(idField) === verified("__id"), "left")
-      .drop("__id")
+      .select("__id", "__rep_id")
+    joinVerdicts(df, idField,
+      verdictsOf(verifiedPairs, transitive, maxIter))
   }
 
   /** Winnowing fingerprint dedup (Schleimer, Wilkerson & Aiken,
@@ -1594,14 +1260,9 @@ object DedupTransform {
       // fingerprint arrays are array_distinct'd → the length-only
       // union size applies (see jaccardDistinct)
       .filter(jaccardDistinct(col("__f"), col("__f_rep")) >= threshold)
-    val verified =
-      if (transitive)
-        componentMin(verifiedPairs.select("__id", "__rep_id"), maxIter)
-      else verifiedPairs
-        .groupBy(col("__id"))
-        .agg(min("__rep_id").as("__dup_of"))
-    df.join(verified, col(idField) === verified("__id"), "left")
-      .drop("__id")
+      .select("__id", "__rep_id")
+    joinVerdicts(df, idField,
+      verdictsOf(verifiedPairs, transitive, maxIter))
   }
 
   /** The winnow fingerprint program over a slim (`__id`, `__t`)
@@ -2110,19 +1771,12 @@ object DedupTransform {
     val verifiedPairs = withRep
       .filter(col("__id") =!= col("__rep.__id"))
       .filter(cosine(col("__emb"), col("__rep.__emb")) >= threshold)
-    val dupMap =
-      if (transitive)
-        componentMin(verifiedPairs
-          .select(col("__id"), col("__rep.__id").as("__rep_id"))
-          .distinct(), maxIter)
-      else verifiedPairs
-        .select(col("__id"), col("__rep.__id").as("__dup_of"))
-        // one rep per cell and one cell per doc → __id is already
-        // unique; distinct only guards the degenerate all-identical
-        // case and shuffles two longs per flagged doc
-        .distinct()
-    df.join(dupMap, col(idField) === dupMap("__id"), "left")
-      .drop("__id")
+      .select(col("__id"), col("__rep.__id").as("__rep_id"))
+    // one rep per cell and one cell per doc → __id is already unique:
+    // the pairs ARE the verdicts (distinct only guards the degenerate
+    // all-identical case and shuffles two longs per flagged doc)
+    joinVerdicts(df, idField,
+      verdictsOf(verifiedPairs, transitive, maxIter, oneRepPerDoc = true))
   }
 
   /** Cosine of a vector to its assigned cell's centroid — the same
@@ -2144,12 +1798,8 @@ object DedupTransform {
 
   /** Embedding cosine near-dup via hyperplane LSH buckets. */
   private def embeddingDedup(df: DataFrame, embField: String,
-      idField: String, dim: Int, planes: Int,
-      threshold: Double, md5Mode: Boolean = false,
-      transitive: Boolean = false, maxIter: Int = 50): DataFrame = {
-    val bucketCol =
-      if (md5Mode) hyperplaneBucketMd5(col("__emb"), dim, planes)
-      else hyperplaneBucket(col("__emb"), dim, planes, seed = 42L)
+      idField: String, bucket: Column => Column, threshold: Double,
+      transitive: Boolean, maxIter: Int): DataFrame = {
     val slim = df.select(col(idField).as("__id"),
       col(embField).as("__emb"))
       // null embeddings share the null bucket — exclude them rather
@@ -2157,7 +1807,7 @@ object DedupTransform {
       // on the cheap embedding column (null bucket ⇔ null emb) so
       // the projection UDF is not inlined into a pushed null check
       .filter(col("__emb").isNotNull)
-      .withColumn("__bucket", bucketCol)
+      .withColumn("__bucket", bucket(col("__emb")))
     // per-bucket representative via a window (not groupBy + join
     // back): the join form runs the hyperplane-projection UDF over
     // the corpus twice. One shuffle on the bucket key; bucket
@@ -2167,15 +1817,28 @@ object DedupTransform {
         col("__id")).over(Window.partitionBy("__bucket")))
       .filter(col("__id") > col("__rep.__id"))
       .filter(cosine(col("__emb"), col("__rep.__emb")) >= threshold)
-    val dupMap =
-      if (transitive)
-        componentMin(verifiedPairs
-          .select(col("__id"), col("__rep.__id").as("__rep_id"))
-          .distinct(), maxIter)
-      else verifiedPairs
-        .groupBy(col("__id"))
-        .agg(min(col("__rep.__id")).as("__dup_of"))
-    df.join(dupMap, col(idField) === dupMap("__id"), "left")
-      .drop("__id")
+      .select(col("__id"), col("__rep.__id").as("__rep_id"))
+    joinVerdicts(df, idField, verdictsOf(verifiedPairs, transitive, maxIter))
   }
+
+  /** Doc-level verdicts (`__id`, `__dup_of`) from candidate or
+    * verified pairs (`__id`, `__rep_id`) — the one reduce every
+    * pair-producing method shares. `transitive`: the connected-component
+    * minimum ([[componentMin]]; chains A~B, B~C collapse to one
+    * cluster even when A and C never paired). Otherwise each doc's
+    * smallest partner — or, when the pairs already hold one partner
+    * per doc (`oneRepPerDoc`), the distinct pairs themselves. */
+  private def verdictsOf(pairs: DataFrame, transitive: Boolean,
+      maxIter: Int, oneRepPerDoc: Boolean = false): DataFrame =
+    if (transitive) componentMin(pairs.distinct(), maxIter)
+    else if (oneRepPerDoc)
+      pairs.distinct().withColumnRenamed("__rep_id", "__dup_of")
+    else pairs.groupBy("__id").agg(min("__rep_id").as("__dup_of"))
+
+  /** `df` with its verdict column: `__dup_of` left-joined on the id —
+    * null for canonical docs. */
+  private def joinVerdicts(df: DataFrame, idField: String,
+      verdicts: DataFrame): DataFrame =
+    df.join(verdicts, col(idField) === verdicts("__id"), "left")
+      .drop("__id")
 }

@@ -258,7 +258,7 @@ object ProfileTransform {
         s"profile ${cfg.name}: streaming drift needs " +
           "strategy.timestampField to anchor its windows"))
     // NOT knob-ed like the streaming dedup paths (r22 measured
-    // decline): a stateShufflePartitions+widenCompute pair mirroring
+    // decline): sized state stores plus a pre-state widen mirroring
     // the dedup gates moved the drift gates nothing (paired min-of-3
     // 5.85/5.89 → 5.70/6.13 s) — the monitor's per-window state is a
     // fixed vector of longs over a handful of windows, so its drain

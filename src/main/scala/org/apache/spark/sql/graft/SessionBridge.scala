@@ -3,7 +3,9 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset,
   SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** `cloneSession()` is `private[sql]` but bytecode-public in the
   * bundled Spark: a clone shares the SparkContext, cache manager and
@@ -24,4 +26,13 @@ object SessionBridge {
         case r: StreamingRelation =>
           r.copy(dataSource = r.dataSource.copy(sparkSession = sess))
       })
+
+  /** The query of a finished SQL action that succeeded — what the
+    * session's QueryExecutionListeners would get, read off the
+    * context's listener bus instead of a listener bus per session. */
+  def succeededQuery(e: SparkListenerSQLExecutionEnd)
+      : Option[QueryExecution] =
+    if (e.executionName.isDefined && e.executionFailure.isEmpty)
+      Option(e.qe)
+    else None
 }

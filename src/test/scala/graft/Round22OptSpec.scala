@@ -6,11 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r22 optimization-round internals for the streaming
   * near-dedup paths: `stateShufflePartitions` (state stores sized to
-  * live-bucket volume, scoped per run and restored when it returns) and
-  * `widenCompute` (pre-state signature compute repartitioned to
-  * cluster parallelism) must change ONLY the physical shape — the
-  * drained candidate multiset stays identical to the un-knobbed run,
-  * and the session's shuffle-partition conf is restored afterwards. */
+  * live-bucket volume, scoped per run and restored when it returns)
+  * must change ONLY the physical shape — the drained candidate
+  * multiset stays identical to the un-knobbed run, and the session's
+  * shuffle-partition conf is restored afterwards. */
 class Round22OptSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -67,15 +66,15 @@ class Round22OptSpec extends AnyFunSuite {
       .map(p => (p._1.toLong, p._2.toLong)).distinct.sorted
   }
 
-  test("stateShufflePartitions + widenCompute change shape, not " +
-      "values; the scoped conf restores on stopAll") {
+  test("stateShufflePartitions changes shape, not values; the " +
+      "scoped conf restores") {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     val plain = runNgram("")
     assert(plain.nonEmpty, "fixture must produce candidates")
-    val knobbed = runNgram(", stateShufflePartitions: 2, widenCompute: true")
+    val knobbed = runNgram(", stateShufflePartitions: 2")
     assert(knobbed == plain,
-      s"knobs must not change the candidate set: $knobbed vs $plain")
+      s"the knob must not change the candidate set: $knobbed vs $plain")
     assert(spark.conf.get(key) == prior,
       "scoped shuffle-partition conf must restore after stopAll")
   }

@@ -262,4 +262,68 @@ transforms:
     assert(code == 400, body)
     assert(body.contains("error"))
   }
+
+  test("batch runs with loggings leave the SparkContext's listeners " +
+      "as they found them and still report each run's counts") {
+    def cfgFor(k: Int) = s"""
+sources:
+  - name: srv_ln
+    module: storage
+    parameters: {path: "$nations"}
+transforms:
+  - name: srv_lsel
+    module: filter
+    inputs: [srv_ln]
+    loggings: [{name: srv_lsel, level: info}]
+    parameters:
+      filters: [{key: n_regionkey, op: "<=", value: $k}]
+"""
+    // a request's session clone also owns a QueryExecutionListener
+    // bus, which the ContextCleaner removes once the clone is
+    // collected: collect, then count until the count stops falling
+    def listeners(): Int = {
+      System.gc()
+      Thread.sleep(200)
+      org.apache.spark.graft.ListenerProbe.count(spark.sparkContext)
+    }
+    // the first tapping run in a context adds the taps' one listener
+    assert(http("POST", "/run?counts=true", cfgFor(4))._1 == 200)
+    val before = Iterator.continually(listeners()).sliding(2)
+      .take(25).find(w => w(0) == w(1)).map(_.head)
+      .getOrElse(listeners())
+    (0 until 3).foreach { k =>
+      graft.LoggingTaps.observed.remove("srv_lsel.srv_lsel|info")
+      val (code, body) = http("POST", "/run?counts=true", cfgFor(k))
+      assert(code == 200, body)
+      val eventually = (1 to 50).exists { _ =>
+        val m = graft.LoggingTaps.observed.get("srv_lsel.srv_lsel|info")
+        if (m == null) { Thread.sleep(100); false }
+        else { assert(m("count") == 5L * (k + 1)); true }
+      }
+      assert(eventually, s"request $k: the tap's count never arrived")
+    }
+    // (below `before` would only mean unrelated garbage was collected)
+    val after = Iterator.continually(listeners()).take(25)
+      .find(_ <= before).getOrElse(listeners())
+    assert(after <= before,
+      s"the requests left ${after - before} listeners on the SparkContext")
+  }
+
+  test("Run and Server sessions size local shuffles to the machine " +
+      "unless the submitter did") {
+    val cores = Runtime.getRuntime.availableProcessors().toString
+    def confs(kv: (String, String)*) = Run.sessionConfs(
+      kv.foldLeft(new org.apache.spark.SparkConf(false)) {
+        case (c, (k, v)) => c.set(k, v)
+      }).toMap
+    val key = "spark.sql.shuffle.partitions"
+    val local = confs("spark.master" -> "local[2]")
+    assert(local.get(key).contains(cores))
+    assert(local("spark.sql.ansi.enabled") == "false")
+    assert(local("spark.sql.session.timeZone") == "UTC")
+    // a submitted value wins: the list leaves it alone
+    assert(confs("spark.master" -> "local[2]", key -> "7").get(key).isEmpty)
+    // cluster submissions keep the Spark default
+    assert(confs("spark.master" -> "yarn").get(key).isEmpty)
+  }
 }

@@ -834,4 +834,180 @@ class StreamingDedupSpec extends AnyFunSuite {
     // both sides): jaccard 1.0 — the documented precision trade
     assert(run(", maxVerifyFps: 5", "wcap2") == Seq(("2", "1")))
   }
+
+  /** One 3-batch fixture for the table-driven engine test: id 3 is a
+    * near-dup of owner 1 in the same batch; batch 2 brings an exact
+    * dup of 1, a near-dup of B, a sub-threshold variant of A and a
+    * far-future doc (id 6) that moves the watermark past every
+    * batch-1 bucket; in batch 3 A re-occurs past the horizon (id 8
+    * owns anew), id 9 arrives twice, C's near-dup meets live owner 6,
+    * and null text / null embedding rows never bucket. */
+  private val engineFixture: Seq[Seq[(Long, Long, Option[String],
+      Option[Seq[Float]])]] = {
+    val a = "the quick brown fox jumps over the lazy dog and then " +
+      "runs far away into the quiet green forest tonight"
+    val a1 = a.replace("tonight", "today")
+    val a2 = "the quick brown fox jumps over a sleeping cat and then " +
+      "walks back home through the busy grey city"
+    val b = "completely different content about distributed stream " +
+      "processing engines and their state management story"
+    val b1 = b.replace("story", "history")
+    val c = "an entirely unrelated recipe for sourdough bread with rye " +
+      "flour slow fermentation and a cast iron bake"
+    val c1 = c.replace("cast iron", "clay pot")
+    def v(xs: Float*): Option[Seq[Float]] = Some(xs)
+    Seq(
+      Seq((1L, 100L, Some(a), v(1f, 0f, 0f, 0f)),
+        (2L, 200L, Some(b), v(0f, 1f, 0f, 0f)),
+        (3L, 150L, Some(a1), v(0.99f, 0.05f, 0f, 0f))),
+      Seq((4L, 400L, Some(a), v(1f, 0f, 0f, 0f)),
+        (5L, 500L, Some(b1), v(0.05f, 0.99f, 0f, 0f)),
+        (6L, 8000L, Some(c), v(0f, 0f, 1f, 0f)),
+        (7L, 450L, Some(a2), v(0.7f, 0.7f, 0f, 0f))),
+      Seq((8L, 8100L, Some(a), v(1f, 0f, 0f, 0f)),
+        (9L, 8200L, Some(a), v(1f, 0f, 0f, 0f)),
+        (9L, 8250L, Some(a), v(1f, 0f, 0f, 0f)),
+        (10L, 8050L, Some(c1), v(0f, 0.05f, 0.99f, 0f)),
+        (11L, 8300L, None, None)))
+  }
+
+  /** Drained candidate multisets of the five streaming near-dedup
+    * methods under both hash modes over `engineFixture` — golden rows:
+    * any difference is a behaviour change of the streaming engine.
+    * Rows are the sink's columns joined by ',', sorted; ';' separates
+    * rows. */
+  private val engineGolden: Map[String, String] = Map(
+    "embedding_md5" -> (
+      "10,6,0.9987270546400474;3,1,0.9987270546400474;4,1,1.0" +
+      ";5,2,0.9987270546400474;9,8,1.0"),
+    "embedding_xxhash64" -> (
+      "10,6,0.9987270546400474;3,1,0.9987270546400474;4,1,1.0" +
+      ";9,8,1.0"),
+    "minhash_md5" -> (
+      "10,0,6;3,1,1;3,2,1;3,5,1;3,6,1;4,0,1;4,1,1;4,2,1;4,3,1" +
+      ";4,4,1;4,5,1;4,6,1;4,7,1;5,0,2;5,3,2;5,4,2;5,5,2;5,7,2" +
+      ";9,0,8;9,1,8;9,2,8;9,3,8;9,4,8;9,5,8;9,6,8;9,7,8"),
+    "minhash_xxhash64" -> (
+      "3,0,1;3,1,1;3,2,1;3,4,1;3,7,1;4,0,1;4,1,1;4,2,1;4,3,1" +
+      ";4,4,1;4,5,1;4,6,1;4,7,1;5,0,2;5,4,2;5,5,2;5,7,2;9,0,8" +
+      ";9,1,8;9,2,8;9,3,8;9,4,8;9,5,8;9,6,8;9,7,8"),
+    "ngram_md5" -> (
+      "10,0,6,0.7889908256880734;10,2,6,0.7889908256880734" +
+      ";10,3,6,0.7889908256880734;10,5,6,0.7889908256880734" +
+      ";10,7,6,0.7889908256880734;3,0,1,0.9175257731958762" +
+      ";3,1,1,0.9175257731958762;3,2,1,0.9175257731958762" +
+      ";3,3,1,0.9175257731958762;3,7,1,0.9175257731958762" +
+      ";4,0,1,1.0;4,1,1,1.0;4,2,1,1.0;4,3,1,1.0;4,4,1,1.0" +
+      ";4,5,1,1.0;4,6,1,1.0;4,7,1,1.0;5,0,2,0.9065420560747663" +
+      ";5,1,2,0.9065420560747663;5,2,2,0.9065420560747663" +
+      ";5,4,2,0.9065420560747663;5,6,2,0.9065420560747663" +
+      ";9,0,8,1.0;9,1,8,1.0;9,2,8,1.0;9,3,8,1.0;9,4,8,1.0" +
+      ";9,5,8,1.0;9,6,8,1.0;9,7,8,1.0"),
+    "ngram_xxhash64" -> (
+      "10,1,6,0.7889908256880734;10,4,6,0.7889908256880734" +
+      ";10,6,6,0.7889908256880734;3,1,1,0.9175257731958762" +
+      ";3,2,1,0.9175257731958762;3,3,1,0.9175257731958762" +
+      ";3,4,1,0.9175257731958762;3,6,1,0.9175257731958762" +
+      ";3,7,1,0.9175257731958762;4,0,1,1.0;4,1,1,1.0;4,2,1,1.0" +
+      ";4,3,1,1.0;4,4,1,1.0;4,5,1,1.0;4,6,1,1.0;4,7,1,1.0" +
+      ";5,2,2,0.9065420560747663;5,3,2,0.9065420560747663" +
+      ";5,4,2,0.9065420560747663;5,5,2,0.9065420560747663" +
+      ";5,6,2,0.9065420560747663;5,7,2,0.9065420560747663" +
+      ";9,0,8,1.0;9,1,8,1.0;9,2,8,1.0;9,3,8,1.0;9,4,8,1.0" +
+      ";9,5,8,1.0;9,6,8,1.0;9,7,8,1.0"),
+    "simhash_md5" -> (
+      "3,0,1;4,0,1;4,1,1;4,2,1;4,3,1;9,0,8;9,1,8;9,2,8;9,3,8"),
+    "simhash_xxhash64" -> (
+      "3,0,1;4,0,1;4,1,1;4,2,1;4,3,1;9,0,8;9,1,8;9,2,8;9,3,8"),
+    "winnow_md5" -> (
+      "10,0f66b8e2,6,0.6666666666666666" +
+      ";10,0faaa47f,6,0.6666666666666666" +
+      ";10,40a199ea,6,0.6666666666666666" +
+      ";10,84d9e98d,6,0.6666666666666666;3,2e5d58d5,1,1.0" +
+      ";3,41c089ec,1,1.0;3,45439b5a,1,1.0;3,45df137c,1,1.0" +
+      ";3,753d490a,1,1.0;4,2e5d58d5,1,1.0;4,41c089ec,1,1.0" +
+      ";4,45439b5a,1,1.0;4,45df137c,1,1.0;4,753d490a,1,1.0" +
+      ";5,1a7a0abd,2,0.6;5,2e76ac27,2,0.6;5,3bd363b4,2,0.6" +
+      ";9,2e5d58d5,8,1.0;9,41c089ec,8,1.0;9,45439b5a,8,1.0" +
+      ";9,45df137c,8,1.0;9,753d490a,8,1.0"),
+    "winnow_xxhash64" -> (
+      "10,-1226186625685236279,6,0.75" +
+      ";10,-3871237639963564998,6,0.75" +
+      ";10,-4399478097178098477,6,0.75" +
+      ";10,-4420823836423628070,6,0.75" +
+      ";10,-5922512754438595096,6,0.75" +
+      ";10,4475796305680597077,6,0.75" +
+      ";3,-1769905632180133675,1,1.0;3,-4729821196639028678,1,1.0" +
+      ";3,-6979029026126134888,1,1.0;3,-8228492273464069425,1,1.0" +
+      ";3,-9196216685996982851,1,1.0;3,34278719750526277,1,1.0" +
+      ";3,3873391075102283444,1,1.0;4,-1769905632180133675,1,1.0" +
+      ";4,-4729821196639028678,1,1.0;4,-6979029026126134888,1,1.0" +
+      ";4,-8228492273464069425,1,1.0;4,-9196216685996982851,1,1.0" +
+      ";4,34278719750526277,1,1.0;4,3873391075102283444,1,1.0" +
+      ";5,-5282835671252027420,2,1.0;5,-6422440620193771762,2,1.0" +
+      ";5,-8734186056861840037,2,1.0;9,-1769905632180133675,8,1.0" +
+      ";9,-4729821196639028678,8,1.0;9,-6979029026126134888,8,1.0" +
+      ";9,-8228492273464069425,8,1.0;9,-9196216685996982851,8,1.0" +
+      ";9,34278719750526277,8,1.0;9,3873391075102283444,8,1.0"))
+
+  test("one bucket-owner engine: every streaming near-dedup method " +
+      "under both hash modes drains its pinned candidate multiset") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sengine")
+      .toString
+    def stageAll(file: String, rows: Seq[(Long, Long, Option[String],
+        Option[Seq[Float]])]): Unit = {
+      val tmp = s"$dir/tmp-$file"
+      rows.toDF("id", "secs", "text", "embedding")
+        .select($"id", timestamp_seconds($"secs").as("ts"), $"text",
+          $"embedding")
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val inDir = new java.io.File(s"$dir/in"); inDir.mkdirs()
+      java.nio.file.Files.move(part.toPath,
+        new java.io.File(inDir, s"$file.parquet").toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val methods = Seq(
+      "minhash" -> "field: text",
+      "simhash" -> "field: text",
+      "ngram" -> "field: text, threshold: 0.7",
+      "winnow" -> "field: text, ngramSize: 3, window: 4",
+      "embedding" -> "field: embedding, dim: 4, planes: 2, threshold: 0.9")
+    val cases = for ((m, params) <- methods;
+      (algo, algoParam) <- Seq("md5" -> ", hashAlgo: md5",
+        "xxhash64" -> "")) yield (s"${m}_$algo", m, params + algoParam)
+    stageAll("b1", engineFixture(0))
+    Pipeline.execute(spark, s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |""".stripMargin + cases.map { case (name, m, params) => s"""
+      |  - name: dd_$name
+      |    module: dedup
+      |    inputs: [ev]
+      |    strategy: {timestampField: ts, allowedLateness: 3600}
+      |    parameters: {method: $m, idField: id, $params}
+      |""".stripMargin }.mkString + "sinks:\n" +
+      cases.map { case (name, _, _) => s"""
+      |  - name: seng_$name
+      |    module: memory
+      |    input: dd_$name
+      |    parameters: {outputMode: append}
+      |""".stripMargin }.mkString)
+    try {
+      StreamRunner.drainAll()
+      stageAll("b2", engineFixture(1))
+      StreamRunner.drainAll()
+      stageAll("b3", engineFixture(2))
+      StreamRunner.drainAll()
+      cases.foreach { case (name, _, _) =>
+        val got = spark.table(s"seng_$name").collect()
+          .map(_.toSeq.mkString(",")).sorted.mkString(";")
+        assert(got == engineGolden(name), name)
+      }
+    } finally StreamRunner.stopAll()
+  }
 }
