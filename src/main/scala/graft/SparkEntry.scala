@@ -5822,9 +5822,10 @@ transforms:
 """),
 
     // storage avro CONTAINER FILES (not the q54 binary-column codec):
-    // distributed AvroKeyOutputFormat write, block-splittable
-    // AvroKeyInputFormat read — the roundtrip is lossless so the
-    // oracle is the identity projection on the source table
+    // staged one-file-per-partition write (AvroFilesDynamic's commit
+    // protocol), block-splittable AvroKeyInputFormat read — the
+    // roundtrip is lossless so the oracle is the identity projection
+    // on the source table
     "q57_avro_files" -> ((s: SparkSession, dir: String) => {
       val tmp = graft.ops.FsUtil.scratchDir("graft_q57_avro_")
         .toString

@@ -188,45 +188,21 @@ object ProfileTransform {
     * the usual reading is psi < 0.1 stable, 0.1–0.25 moderate,
     * > 0.25 shifted.
     *
-    * Scale shape: two aggregation passes per frame (moments+edges,
-    * then the bucket histogram — the histogram needs the baseline
-    * edges first), each ONE narrow pass with fixed-size state
-    * (B conditional sums per column); the four stat rows collect
-    * driver-side (bounded: B longs per numeric column) and the psi
-    * fold runs on the driver. Nothing row-shaped ever shuffles. */
+    * Scale shape: the baseline runs two aggregation passes
+    * (moments+edges, then the bucket histogram — the histogram needs
+    * the baseline edges first) whose rows collect driver-side
+    * (bounded: B longs per numeric column); the current side is ONE
+    * lazy narrow aggregate with fixed-size state (moments plus B
+    * conditional sums per column) projected through the streaming
+    * monitor's Column program ([[driftRows]]). Nothing row-shaped
+    * ever shuffles. */
   private def drift(spark: SparkSession, cfg: ModuleCfg,
       inputs: Map[String, DataFrame], cur: DataFrame)
       : Map[String, DataFrame] = {
     val prep = driftPrep(cfg, inputs, cur)
-    import prep._
-    // pass 1 / pass 2 over the bounded current frame (the baseline
-    // rows were computed inside driftPrep)
-    val cRow = cur.agg(momentAggs.head, momentAggs.tail: _*).head()
-    val cHist =
-      if (histAggs.isEmpty) None
-      else Some(cur.agg(histAggs.head, histAggs.tail: _*).head())
-    val nB = bRow.getAs[Long]("__n")
-    val nC = cRow.getAs[Long]("__n")
-    val rows = cols.map { c =>
-      val nulB = bRow.getAs[Long](s"__nulls_$c")
-      val nulC = cRow.getAs[Long](s"__nulls_$c")
-      val fracDelta: java.lang.Double =
-        if (nB == 0 || nC == 0) null
-        else java.lang.Double.valueOf(
-          nulC.toDouble / nC - nulB.toDouble / nB)
-      val isNum = numCols.contains(c)
-      val meanB = if (isNum) optD(bRow, s"__mean_$c") else None
-      val meanC = if (isNum) optD(cRow, s"__mean_$c") else None
-      Row(c, nB, nC, nulB, nulC, fracDelta,
-        meanB.map(java.lang.Double.valueOf).orNull,
-        meanC.map(java.lang.Double.valueOf).orNull,
-        (for (a <- meanB; b <- meanC)
-          yield java.lang.Double.valueOf(b - a)).orNull,
-        psiOf(counts(bHist, c), counts(cHist, c)))
-    }
-    val out = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), driftSchema)
-    TransformCommon.finishRouted(out, cfg)
+    val aggCols = prep.momentAggs ++ prep.histAggs
+    TransformCommon.finishRouted(
+      driftRows(prep, cur.agg(aggCols.head, aggCols.tail: _*), Nil), cfg)
   }
 
   /** STREAMING drift monitor: the drift read with the CURRENT side
@@ -277,6 +253,25 @@ object ProfileTransform {
     val agged = gw.post(
       wm.groupBy(gw.column.as("window"))
         .agg(aggCols.head, aggCols.tail: _*))
+    val out = driftRows(prep,
+      agged.select(col("window.start").as("window_start"),
+        col("window.end").as("window_end"), col("*")),
+      Seq("window_start", "window_end"))
+    TransformCommon.finishRouted(out, cfg)
+  }
+
+  /** The drift rows of each row of `agged` — the current side's
+    * moment and histogram aggregates ([[DriftPrep]]) — one per
+    * profiled column in [[driftSchema]] shape, after the `lead`
+    * columns carried through. The PSI fold is a Column program:
+    * q_i from the emitted counts, p_i the baseline's proportions baked
+    * in as literals, Laplace-smoothed; null when the baseline or the
+    * current side has no in-support rows for the column. Shared by
+    * the batch drift read (one global aggregate row) and the
+    * streaming monitor (one row per window). */
+  private def driftRows(prep: DriftPrep, agged: DataFrame,
+      lead: Seq[String]): DataFrame = {
+    import prep._
     val nB = bRow.getAs[Long]("__n")
     // baseline literal proportions per column (empty → psi null:
     // all-null baseline column or zero-row baseline)
@@ -292,7 +287,8 @@ object ProfileTransform {
       val isNum = numCols.contains(c)
       val meanB = if (isNum) optD(bRow, s"__mean_$c") else None
       val nCur = col("__n")
-      val nullsCur = col(s"__nulls_$c")
+      // an empty frame's global aggregate sums to null
+      val nullsCur = coalesce(col(s"__nulls_$c"), lit(0L))
       val nullFracDelta =
         if (nB == 0) nullD
         else when(nCur > 0, nullsCur.cast(DoubleType) / nCur
@@ -300,10 +296,6 @@ object ProfileTransform {
       val meanCur = if (isNum) col(s"__mean_$c") else nullD
       val meanDelta = meanB.map(mb => meanCur - lit(mb)).getOrElse(nullD)
       val ps = baseP(c)
-      // the driver psi fold as a Column program: q_i from the
-      // window's emitted counts, p_i baked in as literals — same
-      // Laplace smoothing, same log terms, null when the window has
-      // no in-support rows for the column
       val psiExpr =
         if (ps.isEmpty) nullD
         else {
@@ -325,13 +317,10 @@ object ProfileTransform {
         meanCur.as("mean_cur"), meanDelta.as("mean_delta"),
         psiExpr.as("psi"))
     }
-    val out = agged.select(
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        explode(array(structs: _*)).as("__d"))
-      .select(Seq(col("window_start"), col("window_end")) ++
+    agged.select(lead.map(col) :+
+        explode(array(structs: _*)).as("__d"): _*)
+      .select(lead.map(col) ++
         driftSchema.fieldNames.map(f => col(s"__d.$f")): _*)
-    TransformCommon.finishRouted(out, cfg)
   }
 
   private val driftSchema = StructType(Seq(
@@ -351,35 +340,14 @@ object ProfileTransform {
     if (r.isNullAt(i)) None else Some(r.getDouble(i))
   }
 
-  /** Laplace-smoothed PSI of two histograms (driver fold — the batch
-    * read's path; the streaming monitor compiles the same formula to
-    * a Column program in driftStream). */
-  private def psiOf(cb: Seq[Long], cc: Seq[Long]): java.lang.Double = {
-    val nb = cb.sum.toDouble
-    val nc = cc.sum.toDouble
-    if (cb.isEmpty || nb == 0 || nc == 0) null
-    else {
-      val b = cb.length
-      var s = 0.0
-      var i = 0
-      while (i < b) {
-        val pi = (cb(i) + 0.5) / (nb + 0.5 * b)
-        val qi = (cc(i) + 0.5) / (nc + 0.5 * b)
-        s += (qi - pi) * math.log(qi / pi)
-        i += 1
-      }
-      java.lang.Double.valueOf(s)
-    }
-  }
-
   /** Baseline-side preparation shared by the batch drift read and
     * the streaming drift monitor: input validation, bucket design
     * (baseline equi-width edges / KLL quantile edges / categorical
     * top-K), the baseline moments+histogram ROWS (computed here —
     * the baseline is always bounded), and the CURRENT side's
-    * aggregate EXPRESSIONS, which the batch read runs as two plain
-    * aggregates and the streaming monitor folds into one windowed
-    * streaming aggregate. */
+    * aggregate EXPRESSIONS, which the batch read runs as one global
+    * aggregate and the streaming monitor as one windowed streaming
+    * aggregate. */
   private final case class DriftPrep(
       cols: Seq[String], numCols: Seq[String],
       catsOf: Map[String, Seq[String]], buckets: Int,

@@ -98,9 +98,10 @@ object StorageSink {
     }
     if (format == "avro") {
       // container files via avro-core/avro-mapred (no spark-avro jar
-      // in this image) — see ops/AvroFiles. Destination parity with
+      // in this image) — every case commits through
+      // AvroFilesDynamic.writeDynamic. Destination parity with
       // csv/json/parquet (StorageSink.java:222-303): template paths
-      // and partitionFields both route through writeDynamic; append
+      // and partitionFields render per-record destinations; append
       // mode writes uniquely-named files next to prior runs.
       // case-insensitive like Spark's DataFrameWriter.mode (which
       // lowercases with Locale.ROOT — default-locale lowercasing
@@ -116,30 +117,22 @@ object StorageSink {
       val codec = p.str("compression").orElse(p.str("codec"))
       val partitionFields = p.strArr("partitionFields") ++
         p.strArr("dynamicSplitFields")
-      if (TemplateCompiler.referencedFields(path).nonEmpty) {
-        val (base, rel) = splitTemplatePath(path)
-        graft.ops.AvroFiles.writeDynamic(df, base,
-          TemplateCompiler.compile(rel, df.schema), codec,
-          overwrite = mode != "append")
-      } else if (partitionFields.nonEmpty) {
-        // hive-style key=value subdirs; values %-escaped like Spark's
-        // partitionBy ('+' shielding handled on the csv read path).
-        // Partition fields stay IN the records (avro is row-major;
-        // readers get full rows without path reconstruction).
-        val dest = concat_ws("/", partitionFields.map(f =>
-          concat(lit(f + "="), coalesce(
-            url_encode(col(f).cast(StringType)),
-            lit("__HIVE_DEFAULT_PARTITION__")))): _*)
-        graft.ops.AvroFiles.writeDynamic(df, path, dest, codec,
-          overwrite = mode != "append")
-      } else if (mode == "append")
-        // constant destination: colocate=false keeps the input
-        // partitioning (a repartition on a constant would collapse
-        // the whole write into one task)
-        graft.ops.AvroFiles.writeDynamic(df, path, lit(""), codec,
-          overwrite = false, colocate = false)
-      else
-        graft.ops.AvroFiles.write(df, path, codec, overwrite = true)
+      val (base, dest) =
+        if (TemplateCompiler.referencedFields(path).nonEmpty) {
+          val (b, rel) = splitTemplatePath(path)
+          (b, Some(TemplateCompiler.compile(rel, df.schema)))
+        } else if (partitionFields.nonEmpty)
+          // hive-style key=value subdirs; values %-escaped like Spark's
+          // partitionBy ('+' shielding handled on the csv read path).
+          // Partition fields stay IN the records (avro is row-major;
+          // readers get full rows without path reconstruction).
+          (path, Some(concat_ws("/", partitionFields.map(f =>
+            concat(lit(f + "="), coalesce(
+              url_encode(col(f).cast(StringType)),
+              lit("__HIVE_DEFAULT_PARTITION__")))): _*)))
+        else (path, None)
+      graft.ops.AvroFilesDynamic.writeDynamic(df, base, dest, codec,
+        overwrite = mode != "append")
       return
     }
     def configure(w: org.apache.spark.sql.DataFrameWriter[

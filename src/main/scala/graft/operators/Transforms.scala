@@ -596,10 +596,8 @@ object AggregationTransform {
         keys = groupFields, windowEndOf = windowEndOf,
         elementEndOf = strategyNode.flatMap(
           graft.streaming.Strategy.elementRetainEnd),
-        elementEndExact = strategyNode.exists(
-          graft.streaming.Strategy.elementEndIsWindowEnd),
         elementGrid = strategyNode.flatMap(
-          graft.streaming.Strategy.slidingEndGrid))
+          graft.streaming.Strategy.endGrid))
     }
     result
   }

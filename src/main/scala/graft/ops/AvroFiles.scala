@@ -4,11 +4,11 @@ import org.apache.avro.{Schema => ASchema}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.mapred.AvroKey
-import org.apache.avro.mapreduce.{AvroKeyInputFormat, AvroKeyOutputFormat}
+import org.apache.avro.mapreduce.AvroKeyInputFormat
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.NullWritable
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.StructType
   * Hadoop input format splits files on Avro sync-marker blocks, so a
   * multi-GB file fans out across tasks exactly like any other Hadoop
   * splittable format — reads scale with input size, not file count.
-  * Writes go through the matching output format: one container file
-  * per partition, standard `avro.output.codec` compression.
+  * Writes go through [[AvroFilesDynamic]], the one avro commit
+  * protocol (sibling staging, old data deleted only after the job
+  * succeeded), for constant and per-record destinations alike.
   *
   * Caveats vs spark-avro (documented in README deviations): no
   * filter pushdown (Avro is row-major; spark-avro gains little there
@@ -60,48 +61,6 @@ object AvroFiles {
     }
     df
   }
-
-  /** Distributed container-file write: one file per partition via the
-    * Hadoop output format. `codec`: null/deflate/snappy/bzip2/xz. */
-  def write(df: DataFrame, path: String, codec: Option[String],
-      overwrite: Boolean): Unit = {
-    val st = df.schema
-    val avroSchema = AvroCodec.toAvroSchema(st)
-    val json = avroSchema.toString
-    val sc = df.sparkSession.sparkContext
-    val hconf = new Configuration(sc.hadoopConfiguration)
-    hconf.set("avro.schema.output.key", json)
-    codec.filterNot(c => c == "none" || c == "null").foreach { c =>
-      // AvroKeyOutputFormat consults avro.output.codec only when the
-      // generic FileOutputFormat compress switch is on (default off)
-      // — without this the codec request is silently ignored and
-      // files come out uncompressed
-      hconf.setBoolean("mapreduce.output.fileoutputformat.compress", true)
-      hconf.set("avro.output.codec", c)
-    }
-    val target = new Path(path)
-    if (overwrite) {
-      val fs = target.getFileSystem(sc.hadoopConfiguration)
-      if (fs.exists(target)) fs.delete(target, true)
-    }
-    val pairs = df.rdd.mapPartitions { it =>
-      val s = new ASchema.Parser().parse(json)
-      it.map(row => (new AvroKey[GenericRecord](
-        AvroCodec.rowToRecord(row, st, s)), NullWritable.get()))
-    }
-    pairs.saveAsNewAPIHadoopFile(path, classOf[AvroKey[GenericRecord]],
-      classOf[NullWritable], classOf[AvroKeyOutputFormat[GenericRecord]],
-      hconf)
-  }
-
-  /** Dynamic-destination container-file write — see
-    * [[AvroFilesDynamic]] for the commit protocol (sibling staging,
-    * attempt-unique files, last-attempt-wins checked renames). */
-  def writeDynamic(df: DataFrame, base: String,
-      destCol: org.apache.spark.sql.Column, codec: Option[String],
-      overwrite: Boolean, colocate: Boolean = true): Unit =
-    AvroFilesDynamic.writeDynamic(df, base, destCol, codec, overwrite,
-      colocate)
 
   /** Writer schema of the first non-empty data file under `paths`
     * (literal file, directory, or glob). */

@@ -4,12 +4,12 @@ import org.apache.avro.{Schema => ASchema}
 import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.functions.{col, lit, struct}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Dynamic-destination avro container-file write (storage sink
-  * partitionFields / template destinations, reference
-  * `sink/StorageSink.java:222-303`).
+/** Avro container-file write — the storage sink's one avro path, for
+  * plain outputs and for partitionFields / template destinations
+  * (reference `sink/StorageSink.java:152-165,222-303`).
   *
   * Commit protocol, in order:
   *  1. tasks write attempt-unique files into a run-scoped SIBLING
@@ -30,16 +30,20 @@ import org.apache.spark.util.SerializableConfiguration
   *     the only copy, and the error names the dir); cleanup failures
   *     never mask the job's own error.
   *
-  * `colocate` adds the one shuffle that places each destination in a
-  * single task (one file per destination); pass `colocate = false`
-  * for a constant destination (plain append), where that shuffle
-  * would collapse the write into one task. Unlike parquet
-  * `partitionBy`, partition fields stay IN the records. Executor-side
+  * `dest` renders each record's destination under `base`; it adds
+  * the one shuffle that places each destination in a single task
+  * (one file per destination). Without `dest` every record goes to
+  * `base` itself: the write keeps the input partitioning — that
+  * shuffle would collapse it into one task — and writes one container
+  * file per partition, rows or not, as Hadoop's avro output format
+  * does, so a zero-row frame with partitions reads back as an empty
+  * frame with its schema. Unlike parquet `partitionBy`, partition
+  * fields stay IN the records. Executor-side
   * filesystem access uses the session's Hadoop configuration
   * (credentials/endpoints), broadcast per job.
   *
   * Driver-side commit work is one rename per final file — with
-  * `colocate` that is one per destination (plus retried attempts'
+  * `dest` that is one per destination (plus retried attempts'
   * discards), the same order as the csv/json/parquet template path's
   * per-destination rename loop and of Spark's own v1 file committer;
   * destinations ≪ rows by construction, so the loop stays bounded at
@@ -47,8 +51,8 @@ import org.apache.spark.util.SerializableConfiguration
 object AvroFilesDynamic {
 
   def writeDynamic(df: DataFrame, base: String,
-      destCol: org.apache.spark.sql.Column, codec: Option[String],
-      overwrite: Boolean, colocate: Boolean = true): Unit = {
+      dest: Option[org.apache.spark.sql.Column], codec: Option[String],
+      overwrite: Boolean): Unit = {
     val payload = df.schema
     val json = AvroCodec.toAvroSchema(payload).toString
     val codecName = codec.filterNot(c => c == "none" || c == "null")
@@ -85,12 +89,14 @@ object AvroFilesDynamic {
     val markerStr = marker.toString
     val bconf = new SerializableConfiguration(hconf)
     var stagedDf = df
-      .select(destCol.cast(org.apache.spark.sql.types.StringType)
-          .as("__dest"),
+      .select(dest.getOrElse(lit(""))
+          .cast(org.apache.spark.sql.types.StringType).as("__dest"),
         struct(payload.fieldNames.toSeq.map(col): _*).as("__row"))
-    if (colocate) stagedDf = stagedDf.repartition(col("__dest"))
+    // a plain Boolean: the task closure must not capture the Column
+    val toBase = dest.isEmpty
+    if (!toBase) stagedDf = stagedDf.repartition(col("__dest"))
 
-    def writeTask(it: Iterator[Row]): Unit = if (it.hasNext) {
+    def writeTask(it: Iterator[Row]): Unit = if (it.hasNext || toBase) {
       val s = new ASchema.Parser().parse(json)
       val conf = bconf.value
       // dest -> (writer, in-progress path, committed path)
@@ -107,37 +113,41 @@ object AvroFilesDynamic {
       // per task, not per destination
       var markerChecked = false
       var failed: Throwable = null
+      def writerFor(d: String) =
+        writers.getOrElseUpdate(d, {
+          val dir = if (d.isEmpty) new Path(stagingStr)
+            else new Path(stagingStr, d)
+          val done = new Path(dir,
+            f"part-$pid%05d-a$attempt-$run.avro")
+          val tmp = done.suffix(".inprogress")
+          val fs = tmp.getFileSystem(conf)
+          // once the driver finalized the run the marker is gone —
+          // creating a file now would resurrect the staging dir
+          // nothing will ever clean up
+          if (!markerChecked) {
+            if (!fs.exists(new Path(markerStr)))
+              throw new java.io.IOException(
+                "avro write: stale task attempt — run already " +
+                  s"finalized (missing $markerStr)")
+            markerChecked = true
+          }
+          val dfw = new org.apache.avro.file.DataFileWriter[
+            GenericRecord](
+            new org.apache.avro.generic.GenericDatumWriter[
+              GenericRecord](s))
+          codecName.foreach(c => dfw.setCodec(
+            org.apache.avro.file.CodecFactory.fromString(c)))
+          dfw.create(s, fs.create(tmp, true))
+          (dfw, tmp, done)
+        })._1
       try {
         it.foreach { r =>
-          val dest = Option(r.getString(0)).getOrElse("")
-          val (w, _, _) = writers.getOrElseUpdate(dest, {
-            val dir = if (dest.isEmpty) new Path(stagingStr)
-              else new Path(stagingStr, dest)
-            val done = new Path(dir,
-              f"part-$pid%05d-a$attempt-$run.avro")
-            val tmp = done.suffix(".inprogress")
-            val fs = tmp.getFileSystem(conf)
-            // once the driver finalized the run the marker is gone —
-            // creating a file now would resurrect the staging dir
-            // nothing will ever clean up
-            if (!markerChecked) {
-              if (!fs.exists(new Path(markerStr)))
-                throw new java.io.IOException(
-                  "avro write: stale task attempt — run already " +
-                    s"finalized (missing $markerStr)")
-              markerChecked = true
-            }
-            val dfw = new org.apache.avro.file.DataFileWriter[
-              GenericRecord](
-              new org.apache.avro.generic.GenericDatumWriter[
-                GenericRecord](s))
-            codecName.foreach(c => dfw.setCodec(
-              org.apache.avro.file.CodecFactory.fromString(c)))
-            dfw.create(s, fs.create(tmp, true))
-            (dfw, tmp, done)
-          })
-          w.append(AvroCodec.rowToRecord(r.getStruct(1), payload, s))
+          writerFor(Option(r.getString(0)).getOrElse(""))
+            .append(AvroCodec.rowToRecord(r.getStruct(1), payload, s))
         }
+        // no destination column: this partition's file exists even
+        // when it has no rows
+        if (toBase) writerFor("")
       } catch { case t: Throwable => failed = t; throw t }
       finally {
         // close() flushes each writer's final buffered block — a

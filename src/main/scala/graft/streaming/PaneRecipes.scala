@@ -34,26 +34,22 @@ private[graft] object PaneRecipes {
     * every shape — simple, anchored, N-unit, week-offset), computed
     * HERE from the aggregation's OWN strategy node: the pane engines
     * must not re-derive it from the sink's strategy, which wins the
-    * trigger/mode precedence but need not declare the window. */
-  /** `elementEndOf` = per-element retention horizon over a PRE-AGG
+    * trigger/mode precedence but need not declare the window.
+    * `elementEndOf` = per-element retention horizon over a PRE-AGG
     * batch (epoch-second upper bound on the latest window end the
     * element can feed, [[Strategy.elementRetainEnd]]) — the
     * accumulating exact-pane engine partitions its element store by
-    * it so expired elements drop by path. */
+    * it so expired elements drop by path. `elementGrid` = the
+    * horizon's window-end grid (period, k), [[Strategy.endGrid]]:
+    * the element's end set is {horizon − j·period, 0 ≤ j < k}, so the
+    * engine derives fired-window candidates and their contributing
+    * horizon partitions arithmetically. */
   final case class Recipe(preAgg: DataFrame, reAgg: DataFrame => DataFrame,
       keys: Seq[String],
       windowEndOf: Option[org.apache.spark.sql.Column =>
         org.apache.spark.sql.Column] = None,
       elementEndOf: Option[DataFrame =>
         org.apache.spark.sql.Column] = None,
-      /** horizon == the element's single exact window end
-        * (fixed/calendar) — lets the accumulating engine prune its
-        * store read to the windows firing in a batch */
-      elementEndExact: Boolean = false,
-      /** sliding (size = k·period): (period, k) — the element's end
-        * set is {horizon − j·period, 0 ≤ j < k}, so the engine can
-        * derive fired-window candidates and the contributing horizon
-        * partitions arithmetically ([[Strategy.slidingEndGrid]]) */
       elementGrid: Option[(Long, Int)] = None)
 
   private val recipes = new java.util.IdentityHashMap[LogicalPlan, Recipe]
@@ -64,13 +60,12 @@ private[graft] object PaneRecipes {
         org.apache.spark.sql.Column] = None,
       elementEndOf: Option[DataFrame =>
         org.apache.spark.sql.Column] = None,
-      elementEndExact: Boolean = false,
       elementGrid: Option[(Long, Int)] = None): Unit =
     recipes.synchronized {
       if (recipes.size > 64) recipes.clear()
       recipes.put(out.queryExecution.logical,
         Recipe(preAgg, reAgg, keys, windowEndOf, elementEndOf,
-          elementEndExact, elementGrid))
+          elementGrid))
     }
 
   def lookup(df: DataFrame): Option[Recipe] =

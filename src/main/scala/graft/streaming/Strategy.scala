@@ -364,16 +364,20 @@ object Strategy {
     * `t + size` would mint one tiny partition per element): for
     * fixed/sliding it is the exact end of the LATEST window
     * containing t (`off + floor((t-off)/period)·period + size`, the
-    * window grid's own granularity), for calendar the bucket end.
-    * None for global windows (a global cumulative pane needs all
-    * history by definition); sessions never reach the exact-pane
-    * engine (it rejects them loudly). */
+    * window grid's own granularity; a fixed window's period is its
+    * size — [[windowGroup]] ignores a `period` key on it, so this
+    * must too), for calendar the bucket end. None for global windows
+    * (a global cumulative pane needs all history by definition);
+    * sessions never reach the exact-pane engine (it rejects them
+    * loudly). */
   def elementRetainEnd(strategy: JsonNode): Option[DataFrame => Column] = {
     val w = strategy("window").getOrElse(strategy)
     w.str("type").getOrElse("global") match {
-      case "fixed" | "sliding" =>
+      case wt @ ("fixed" | "sliding") =>
         seconds(w, "size").filter(_ > 0).map { size =>
-          val period = seconds(w, "period").filter(_ > 0).getOrElse(size)
+          val period =
+            if (wt == "fixed") size
+            else seconds(w, "period").filter(_ > 0).getOrElse(size)
           val off = seconds(w, "offset").getOrElse(0L)
           df => eventTimeCol(df, strategy) match {
             case Some(t) =>
@@ -394,43 +398,32 @@ object Strategy {
     }
   }
 
-  /** Whether [[elementRetainEnd]]'s horizon IS the element's exact
-    * (single) window end — true for fixed and calendar windows,
-    * where every element feeds exactly one window and the horizon
-    * equals its end, so the pane engine may PRUNE its store read to
-    * the windows firing in a batch. False for sliding (an element
-    * feeds several windows; the horizon is only the latest) and
-    * everything else. */
-  def elementEndIsWindowEnd(strategy: JsonNode): Boolean = {
+  /** Window-end grid of [[elementRetainEnd]]'s horizon as
+    * (periodSeconds, k): an element with horizon h feeds exactly the
+    * k window ends {h − j·period : 0 ≤ j < k} (a half-open interval
+    * of length k·period holds exactly k grid points, the largest
+    * being h). Fixed windows and calendar buckets give k = 1 — the
+    * horizon IS the element's one window end, and the period is
+    * never read; sliding windows with size = k·period give
+    * (period, k). The pane engine derives closing candidates from the
+    * store's horizon partitions with it and prunes its
+    * re-aggregation to the fired ends' contributing partitions. None
+    * for global and session windows, and for sliding windows whose
+    * size is not a period multiple (the end-set size then varies per
+    * element and an arithmetic candidate could name a window no
+    * element feeds — the engine keeps the full-read path). */
+  def endGrid(strategy: JsonNode): Option[(Long, Int)] = {
     val w = strategy("window").getOrElse(strategy)
     w.str("type").getOrElse("global") match {
-      case "fixed" =>
-        seconds(w, "period").filter(_ > 0)
-          .forall(p => seconds(w, "size").contains(p))
-      case "calendar" => true
-      case _ => false
+      case "fixed" => seconds(w, "size").filter(_ > 0).map(s => (s, 1))
+      case "calendar" => Some((0L, 1))
+      case "sliding" => for {
+          size <- seconds(w, "size").filter(_ > 0)
+          period <- seconds(w, "period").filter(_ > 0)
+          if size % period == 0
+        } yield (period, (size / period).toInt)
+      case _ => None
     }
-  }
-
-  /** Sliding-window end grid, when the retention horizon is NOT the
-    * element's only window end but the end SET is arithmetically
-    * derivable from it: for `sliding` with size = k·period, an
-    * element with horizon h feeds exactly the ends
-    * {h − j·period : 0 ≤ j < k} (contiguous on the period grid, all
-    * containing the element). Returns (periodSeconds, k) — the pane
-    * engine uses it to prune its store re-aggregation to the fired
-    * ends' contributing horizon partitions. None when size is not a
-    * period multiple (the end-set size then varies per element and
-    * an arithmetic candidate could name a window no element feeds —
-    * the engine keeps the full-read path). */
-  def slidingEndGrid(strategy: JsonNode): Option[(Long, Int)] = {
-    val w = strategy("window").getOrElse(strategy)
-    if (!w.str("type").contains("sliding")) None
-    else for {
-      size <- seconds(w, "size").filter(_ > 0)
-      period <- seconds(w, "period").filter(_ > 0)
-      if size % period == 0
-    } yield (period, (size / period).toInt)
   }
 
   /** UTC instant of the END of `ts`'s local calendar bucket:

@@ -174,23 +174,18 @@ object StreamRunner {
     *  - `fired`: windows (by end, epoch seconds) whose ON_TIME pane
     *    already fired — drives the early/onTime/late split. Bounded
     *    by the windows a run observes (coarse), not by keys.
-    *  - `memPaneIdx`: per-key+window pane ordinal for exact
-    *    accumulating panes on MEMORY/debug sinks (test surface — the
-    *    pane buffer is driver-side anyway). File sinks derive the
-    *    ordinal from their own prior output instead, keeping the
-    *    driver key-free.
-    *  - `lastBatch`: highest batchId already applied by an exact-pane
-    *    query — a same-process micro-batch retry re-enters
+    *  - `lastBatch`: highest batchId already applied by a recipe-
+    *    engine query — a same-process micro-batch retry re-enters
     *    foreachBatch with the same id and must be a no-op (the
     *    element store, this state, and the sink were all already
     *    updated). Cross-restart replay safety comes from the on-disk
-    *    layout instead: the store is batch-stamped (`__gbatch=<id>`
-    *    overwritten on replay) and file-sink panes publish as
-    *    `b<id>-*` files that a replay deletes before re-publishing. */
+    *    layout instead: the store and the pane-ordinals snapshot are
+    *    batch-stamped (`__gbatch=<id>`, `__obatch=<id>`, overwritten
+    *    on replay) and file-sink panes publish as `b<id>-*` files
+    *    that a replay deletes before re-publishing. */
   private final class PaneState {
     var frontier: Long = Long.MinValue
     val fired = scala.collection.mutable.Set[Long]()
-    val memPaneIdx = scala.collection.mutable.Map[Seq[Any], Long]()
     var lastBatch: Long = -1L
   }
 
@@ -309,69 +304,119 @@ object StreamRunner {
   private def startDiscardingEarly(cfg: ModuleCfg, df: DataFrame,
       trig: com.fasterxml.jackson.databind.JsonNode,
       strategy: com.fasterxml.jackson.databind.JsonNode)
+      : StreamingQuery =
+    startRecipeEngine(cfg, df, trig, strategy,
+      "accumulation mode 'discarding' with early firings requires " +
+        "the pane sink to read a single-input aggregation module's " +
+        "output directly (per-pane re-aggregation needs the " +
+        "pre-aggregation stream) — move intervening transforms or " +
+        "logging taps upstream of the aggregation, drop the " +
+        "post-aggregation limit, or use 'accumulating'",
+      "discarding") { rq =>
+      import rq._
+      val reAgg = paneReAgg(cfg, recipe)
+      (batch, id) => {
+        val agged = reAgg(batch)
+        windowEndCol(agged) match {
+          case None => // global window: every firing is early
+            paneWriter(cfg, "early")(agged, id)
+          case Some(end) =>
+            val endSec = end.cast("long")
+            val fPrev = st.frontier
+            // Beam expired-window drop: a pane row for a window
+            // whose end + allowedLateness the frontier already
+            // passed contains only beyond-lateness elements —
+            // dropping the row drops exactly those elements (each
+            // pane aggregates one window of this batch only)
+            val pane =
+              if (fPrev == java.lang.Long.MIN_VALUE) agged
+              else agged.filter(
+                endSec * 1000L + latenessMs >= fPrev)
+            // the handful of distinct window ends in one batch —
+            // bounded by windows, never by keys or rows
+            val ends = pane.select(endSec).distinct().collect()
+              .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+            if (ends.nonEmpty)
+              st.frontier = math.max(st.frontier, ends.max * 1000L)
+            val tagOf = ends.map { e =>
+              e -> (if (e * 1000L >= fPrev) "early"
+              else if (st.fired.add(e)) "onTime"
+              else "late")
+            }.toMap
+            val tagExpr = tagOf.foldLeft(lit("early")) {
+              case (acc, (e, t)) => when(endSec === e, t).otherwise(acc)
+            }
+            paneWriter(cfg, "early", tagOf = _ => tagExpr,
+              post = b =>
+                if (hasLate) b
+                else b.filter(col("__pane") =!= "late"))(pane, id)
+        }
+      }
+    }
+
+  /** What a recipe engine's batch body works with: the aggregation's
+    * pane recipe, the query's trigger state, whether late panes are
+    * emitted, allowedLateness in millis and the sink's checkpoint. */
+  private final case class RecipeQuery(recipe: PaneRecipes.Recipe,
+      st: PaneState, hasLate: Boolean, latenessMs: Long, ckpt: String)
+
+  /** The one shell both recipe engines (discarding and exact
+    * accumulating) start through: look up the aggregation's pane
+    * recipe (`noRecipe` is the engine's own error), restore the
+    * query's trigger state from the checkpoint, and run ONE
+    * ProcessingTime foreachBatch query of the early-firing delay over
+    * the pre-aggregation stream, checkpointed under `ckpt/<name>`.
+    * `engine` does its per-query setup and returns the batch body;
+    * the shell skips batches without input and batch ids already
+    * applied (a same-process retry re-enters with the same id), and
+    * persists the trigger state after each applied batch.
+    *
+    * Partition discovery stays on the driver: past 32 paths Spark
+    * launches a distributed LISTING JOB per micro-batch — for the
+    * exact engine's element store read, which routinely holds
+    * (slices × open horizons) > 32 dirs, bounded by the open-window
+    * horizon (the same listing already runs driver-side for
+    * compaction), and for the file source whenever a micro-batch
+    * picks up > 32 new files (0.2-1.2 s per batch measured on a
+    * backlogged 4-core stream). The store is read through the
+    * query's session, cloned at start(); the source lists through the
+    * session that created it, so it is re-created on a private clone.
+    * Neither touches the caller's session once start() returns. */
+  private def startRecipeEngine(cfg: ModuleCfg, df: DataFrame,
+      trig: com.fasterxml.jackson.databind.JsonNode,
+      strategy: com.fasterxml.jackson.databind.JsonNode,
+      noRecipe: String, name: String)(
+      engine: RecipeQuery => (DataFrame, Long) => Unit)
       : StreamingQuery = {
     requirePaneSink(cfg)
     val recipe = PaneRecipes.lookup(df).getOrElse(
-      throw new IllegalArgumentException(
-        "accumulation mode 'discarding' with early firings requires " +
-          "the pane sink to read a single-input aggregation module's " +
-          "output directly (per-pane re-aggregation needs the " +
-          "pre-aggregation stream) — move intervening transforms or " +
-          "logging taps upstream of the aggregation, drop the " +
-          "post-aggregation limit, or use 'accumulating'"))
-    val delayMs = delayMillis(trig("earlyFiringTrigger").get)
-    val hasLate = trig("lateFiringTrigger").isDefined
-    val latenessMs = Strategy.allowedLatenessSeconds(strategy)
-      .getOrElse(0L) * 1000L
+      throw new IllegalArgumentException(noRecipe))
     val st = new PaneState
     val ckpt = checkpoint(cfg)
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
     restoreTriggerState(st, triggerStateDir)
-    val q = recipe.preAgg.writeStream
+    val rq = RecipeQuery(recipe, st, trig("lateFiringTrigger").isDefined,
+      Strategy.allowedLatenessSeconds(strategy).getOrElse(0L) * 1000L,
+      ckpt)
+    val body = engine(rq)
+    val listing =
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
+    val srcSess = SessionBridge.cloneSession(df.sparkSession)
+    srcSess.conf.set(listing._1, listing._2)
+    val w = SessionBridge.withSourcesOn(recipe.preAgg, srcSess)
+      .writeStream
       .outputMode("append")
-      .trigger(Trigger.ProcessingTime(delayMs))
-      .option("checkpointLocation", ckpt + "/discarding")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (hasInput(batch)) {
-          val agged = paneReAgg(cfg, recipe)(batch)
-          windowEndCol(agged) match {
-            case None => // global window: every firing is early
-              paneWriter(cfg, "early")(agged, id)
-            case Some(end) =>
-              val endSec = end.cast("long")
-              val fPrev = st.frontier
-              // Beam expired-window drop: a pane row for a window
-              // whose end + allowedLateness the frontier already
-              // passed contains only beyond-lateness elements —
-              // dropping the row drops exactly those elements (each
-              // pane aggregates one window of this batch only)
-              val pane =
-                if (fPrev == java.lang.Long.MIN_VALUE) agged
-                else agged.filter(
-                  endSec * 1000L + latenessMs >= fPrev)
-              // the handful of distinct window ends in one batch —
-              // bounded by windows, never by keys or rows
-              val ends = pane.select(endSec).distinct().collect()
-                .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-              if (ends.nonEmpty)
-                st.frontier = math.max(st.frontier, ends.max * 1000L)
-              val tagOf = ends.map { e =>
-                e -> (if (e * 1000L >= fPrev) "early"
-                else if (st.fired.add(e)) "onTime"
-                else "late")
-              }.toMap
-              val tagExpr = tagOf.foldLeft(lit("early")) {
-                case (acc, (e, t)) => when(endSec === e, t).otherwise(acc)
-              }
-              paneWriter(cfg, "early", tagOf = _ => tagExpr,
-                post = b =>
-                  if (hasLate) b
-                  else b.filter(col("__pane") =!= "late"))(pane, id)
-          }
-          persistTriggerState(st, triggerStateDir, id, latenessMs)
+      .trigger(Trigger.ProcessingTime(
+        delayMillis(trig("earlyFiringTrigger").get)))
+      .option("checkpointLocation", s"$ckpt/$name")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (batchId > st.lastBatch && hasInput(batch)) {
+          body(batch, batchId)
+          persistTriggerState(st, triggerStateDir, batchId, rq.latenessMs)
+          st.lastBatch = batchId
         }
       }
-      .start()
+    val q = graft.ops.ConfScope(df.sparkSession, listing)(w.start())
     register(q)
     q
   }
@@ -426,9 +471,12 @@ object StreamRunner {
       new java.io.File(dir, s"__tbatch=$id.json").delete())
   }
 
+  /** A directory's entries; none when it does not exist. */
+  private def ls(d: java.io.File): Array[java.io.File] =
+    Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+
   private def triggerSnapIds(dir: java.io.File): Seq[Long] =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-      .map(_.getName)
+    ls(dir).toSeq.map(_.getName)
       .filter(n => n.startsWith("__tbatch=") && n.endsWith(".json"))
       .map(_.stripPrefix("__tbatch=").stripSuffix(".json").toLong)
 
@@ -447,20 +495,17 @@ object StreamRunner {
     }
 
   /** Distinct retention horizons present in the element store's
-    * partition paths — for fixed/calendar windows these ARE the
-    * window ends on disk, so the accumulating engine derives its
+    * partition paths — through the window-end grid they name every
+    * window end on disk, so the accumulating engine derives its
     * closing-candidate set from this listing instead of a full
     * re-aggregation. */
-  private def wendValuesOnDisk(storeDir: String): Seq[Long] = {
-    def ls(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+  private def wendValuesOnDisk(storeDir: String): Seq[Long] =
     ls(new java.io.File(storeDir))
       .filter(_.getName.startsWith("__gbatch="))
       .flatMap(g => ls(g).map(_.getName)
         .filter(_.startsWith("__wend="))
         .flatMap(_.stripPrefix("__wend=").toLongOption))
       .distinct.toSeq
-  }
 
   /** Frontier-driven element-store compaction: delete every
     * `__wend=E` partition (under any `__gbatch=` slice) whose
@@ -470,9 +515,7 @@ object StreamRunner {
     * null-horizon `__HIVE_DEFAULT_PARTITION__`) are kept — safety
     * over space. */
   private def compactStore(storeDir: String, frontierMs: Long,
-      latenessMs: Long): Unit = {
-    def ls(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+      latenessMs: Long): Unit =
     ls(new java.io.File(storeDir))
       .filter(_.getName.startsWith("__gbatch=")).foreach { g =>
         var hadWend = false
@@ -493,7 +536,6 @@ object StreamRunner {
           g.delete()
         }
       }
-  }
 
   /** Beam ACCUMULATING accumulation with early firings — exact, not
     * approximated, opt-in via `strategy.exactPanes: true` (the
@@ -523,12 +565,13 @@ object StreamRunner {
     *    `lateFiringTrigger` is declared, like Beam); timing keys on
     *    the same frontier as the discarding engine.
     *  - `__pane_index` = the ordinal of this firing for its
-    *    key+window (0-based): file sinks roll a compact per-key
-    *    ordinals snapshot under the checkpoint (batch-stamped,
+    *    key+window (0-based), numbered for EVERY sink from one compact
+    *    per-key ordinals snapshot under the checkpoint (batch-stamped,
     *    retention-pruned — NOT a rescan of the sink's pane history,
-    *    which would grow with every firing ever made), memory sinks
-    *    count in the pane buffer's driver map. File sinks must be
-    *    parquet.
+    *    which would grow with every firing ever made). The numbered
+    *    panes are staged as parquet; a file sink (parquet only) moves
+    *    the staged parts into its directory, a memory/debug sink
+    *    buffers the staged rows.
     *
     * Replay safety: the element store, sink files, and ordinals
     * snapshot are all batch-stamped, so micro-batch retries and
@@ -543,7 +586,6 @@ object StreamRunner {
       trig: com.fasterxml.jackson.databind.JsonNode,
       strategy: com.fasterxml.jackson.databind.JsonNode)
       : StreamingQuery = {
-    requirePaneSink(cfg)
     // the exact-pane trigger bookkeeping (fired windows, frontier,
     // per-window ordinals) is keyed on a window's END, which for
     // fixed/sliced-sliding windows is immutable. A session window's
@@ -558,59 +600,39 @@ object StreamRunner {
           "arrive and sessions merge, so end-keyed pane bookkeeping " +
           "would re-fire closed panes) — drop exactPanes to use the " +
           "stateful session aggregation, or use fixed/sliding windows"))
-    val recipe = PaneRecipes.lookup(df).getOrElse(
-      throw new IllegalArgumentException(
-        "exactPanes accumulating requires the pane sink to read a " +
-          "single-input aggregation module's output directly " +
-          "(per-pane re-aggregation needs the pre-aggregation " +
-          "stream) — move intervening transforms upstream of the " +
-          "aggregation or drop exactPanes"))
-    val isMem = cfg.module == "debug" || cfg.module == "memory"
-    val fmt = cfg.params.str("format").getOrElse("parquet")
-    if (!isMem) require(fmt == "parquet",
-      s"exactPanes file sinks must be parquet (got $fmt): the pane " +
-        "ordinal is derived by reading the sink's own prior output")
-    val sinkPath = if (isMem) None
-      else Some(cfg.params.str("output").orElse(cfg.params.str("path"))
-        .getOrElse(throw new IllegalArgumentException(
-          s"${cfg.name}: storage pane sink requires output/path")))
-    val delayMs = delayMillis(trig("earlyFiringTrigger").get)
-    val hasLate = trig("lateFiringTrigger").isDefined
-    val latenessMs = Strategy.allowedLatenessSeconds(strategy)
-      .getOrElse(0L) * 1000L
-    val st = new PaneState
-    val ckpt = checkpoint(cfg)
-    val storeDir = ckpt + "/acc-elements"
-    val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
-    restoreTriggerState(st, triggerStateDir)
+    startRecipeEngine(cfg, df, trig, strategy,
+      "exactPanes accumulating requires the pane sink to read a " +
+        "single-input aggregation module's output directly " +
+        "(per-pane re-aggregation needs the pre-aggregation " +
+        "stream) — move intervening transforms upstream of the " +
+        "aggregation or drop exactPanes",
+      "accumulating") { rq =>
+      import rq._
+      val fmt = cfg.params.str("format").getOrElse("parquet")
+      require(fmt == "parquet",
+        s"exactPanes file sinks must be parquet (got $fmt): pane " +
+          "parts are staged as parquet and moved into the sink")
+      // None: a memory/debug sink, which buffers the numbered rows
+      val sinkDir = cfg.module match {
+        case "debug" | "memory" => None
+        case _ => Some(new java.io.File(
+          cfg.params.str("output").orElse(cfg.params.str("path"))
+            .getOrElse(throw new IllegalArgumentException(
+              s"${cfg.name}: storage pane sink requires output/path"))))
+      }
+      val storeDir = ckpt + "/acc-elements"
+      val reAgg = paneReAgg(cfg, recipe)
+      def partsIn(d: java.io.File): Array[java.io.File] =
+        ls(d).filter(_.getName.endsWith(".parquet"))
 
-    def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
-        batchId: Long): Unit = {
-      // the pane frame re-aggregates the element store; it feeds
-      // both the sink publish and the ordinals delta, so pin it —
-      // otherwise each action re-reads and re-aggregates the store
-      val pane = if (isMem) pane0 else pane0.persist()
-      try {
-      val spark = pane.sparkSession
-      if (isMem) {
-        val rows = pane.collect()
-        val counts = st.memPaneIdx
-        val buf = paneStore.computeIfAbsent(cfg.name,
-          _ => scala.collection.mutable.ListBuffer.empty)
-        buf.synchronized {
-          rows.foreach { r =>
-            val kt = keyCols.map(k => r.getAs[Any](k))
-            val idx = counts.getOrElse(kt, 0L)
-            counts(kt) = idx + 1
-            val schema = r.schema.add("__pane_index",
-              org.apache.spark.sql.types.LongType)
-            val withIdx: Row =
-              new org.apache.spark.sql.catalyst.expressions
-                .GenericRowWithSchema(r.toSeq.toArray :+ idx, schema)
-            buf += ((r.getAs[String]("__pane"), withIdx))
-          }
-        }
-      } else {
+      def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
+          batchId: Long): Unit = {
+        // the pane frame re-aggregates the element store; it feeds
+        // both the staged publish and the ordinals delta, so pin it —
+        // otherwise each action re-reads and re-aggregates the store
+        val pane = pane0.persist()
+        try {
+        val spark = pane.sparkSession
         // Pane ordinals come from a compact per-key+window snapshot
         // (`pane-ordinals/__obatch=<id>`, one row per key that has
         // ever fired, retention-pruned), NOT from re-reading the
@@ -619,10 +641,9 @@ object StreamRunner {
         // snapshot is bounded by open-horizon keys. Batch-stamped
         // like the element store: a replay re-reads the same prior
         // snapshot and overwrites its own, so ordinals survive
-        // retries exactly.
+        // retries and restarts exactly.
         val ordsDir = new java.io.File(ckpt + "/pane-ordinals")
-        def snapIds: Seq[Long] = Option(ordsDir.listFiles())
-          .getOrElse(Array.empty[java.io.File]).toSeq
+        def snapIds: Seq[Long] = ls(ordsDir).toSeq
           .map(_.getName).filter(_.startsWith("__obatch="))
           .map(_.stripPrefix("__obatch=").toLong)
         val priorId = snapIds.filter(_ < batchId).sorted.lastOption
@@ -633,7 +654,7 @@ object StreamRunner {
         // the Long ordinal): parquet ignores the file's extra
         // columns, and passing the schema skips the per-firing
         // footer-inference job this read otherwise schedules (the
-        // same trick as the element store's storeSchema above)
+        // same trick as the element store's storeSchema below)
         val prior = priorId.map { id =>
           val ordsSchema = org.apache.spark.sql.types.StructType(
             keyCols.map(k => pane.schema(k)) :+
@@ -685,18 +706,16 @@ object StreamRunner {
           case None => merged
         }
         // ONE write job and one stage → rename cycle for BOTH the
-        // pane publish and the next ordinals snapshot: the two
+        // numbered panes and the next ordinals snapshot: the two
         // frames union under a role partition column (the ordinal
         // rows null-pad the non-key columns), so the batch pays one
         // job-schedule + commit instead of two. Idempotent publish:
-        // stage under the checkpoint, then move each pane part file
-        // into the sink under a batch-stamped name (deleting any
-        // `b<id>-*` leftovers from a failed prior attempt first) and
-        // the ordinal partition to `__obatch=<id>` — a replay of
-        // this batch re-publishes the identical set instead of
-        // appending a duplicate. (Local-FS rename protocol; an
-        // object-store deployment would swap this for the
-        // committer's equivalent.)
+        // stage under the checkpoint, then hand the pane partition to
+        // the sink and move the ordinal partition to `__obatch=<id>`
+        // — a replay of this batch re-publishes the identical set
+        // instead of appending a duplicate. (Local-FS rename
+        // protocol; an object-store deployment would swap this for
+        // the committer's equivalent.)
         val stageDir = new java.io.File(ckpt + s"/pane-stage/$batchId")
         withIdx.withColumn("__graft_role", lit("pane"))
           .unionByName(
@@ -706,50 +725,46 @@ object StreamRunner {
           .option("partitionOverwriteMode", "static")
           .partitionBy("__graft_role")
           .parquet(stageDir.toString)
-        val dst = new java.io.File(sinkPath.get)
-        dst.mkdirs()
-        Option(dst.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.startsWith(s"b$batchId-"))
-          .foreach(_.delete())
         val paneStage = new java.io.File(stageDir, "__graft_role=pane")
-        val paneParts = Option(paneStage.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .filter(_.getName.endsWith(".parquet"))
-        paneParts.foreach { f =>
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(dst, s"b$batchId-${f.getName}").toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        // the schema marker is needed at most ONCE per sink: any
-        // parquet file already in dst (a real pane part or an
-        // earlier firing's marker) carries the schema, so later
-        // empty firings skip the extra write job + commit cycle
-        // (the per-firing version partially refunded the merged-
-        // write savings on sinks with frequent empty panes). A
-        // replay that just deleted its own b<id>-* marker sees an
-        // empty dst again and rewrites — idempotence holds.
-        val dstHasSchema = Option(dst.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .exists(_.getName.endsWith(".parquet"))
-        if (paneParts.isEmpty && !dstHasSchema) {
-          // a firing whose pane frame is EMPTY writes no
-          // __graft_role=pane partition — mirror the ordinals
-          // fallback with a schema-bearing (empty) file so a sink
-          // whose firings were all empty still reads as an empty
-          // frame instead of failing schema inference. limit(0):
-          // the optimizer collapses it to an empty LocalRelation,
-          // so the schema file writes WITHOUT re-executing the
-          // pane subtree (paneParts.isEmpty already proved 0 rows)
-          val emptyDir = new java.io.File(stageDir, "pane-empty")
-          withIdx.limit(0).write.mode("overwrite")
-            .parquet(emptyDir.toString)
-          Option(emptyDir.listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(_.getName.endsWith(".parquet"))
-            .foreach { f =>
-              java.nio.file.Files.move(f.toPath,
-                new java.io.File(dst, s"b$batchId-${f.getName}").toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val paneParts = partsIn(paneStage)
+        sinkDir match {
+          case None =>
+            bufferPanes(cfg.name,
+              if (paneParts.isEmpty) Array.empty[Row]
+              else spark.read.schema(withIdx.schema)
+                .parquet(paneStage.toString).collect())
+          case Some(dst) =>
+            // each pane part moves into the sink under a
+            // batch-stamped name, after deleting any `b<id>-*`
+            // leftovers from a failed prior attempt
+            dst.mkdirs()
+            ls(dst).filter(_.getName.startsWith(s"b$batchId-"))
+              .foreach(_.delete())
+            def moveIn(parts: Array[java.io.File]): Unit =
+              parts.foreach { f =>
+                java.nio.file.Files.move(f.toPath,
+                  new java.io.File(dst, s"b$batchId-${f.getName}").toPath,
+                  java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+              }
+            moveIn(paneParts)
+            // the schema marker is needed at most ONCE per sink: any
+            // parquet file already in dst (a real pane part or an
+            // earlier firing's marker) carries the schema, so later
+            // empty firings skip the extra write job + commit cycle.
+            // A replay that just deleted its own b<id>-* marker sees
+            // an empty dst again and rewrites — idempotence holds.
+            if (paneParts.isEmpty && partsIn(dst).isEmpty) {
+              // a firing whose pane frame is EMPTY writes no
+              // __graft_role=pane partition — write a schema-bearing
+              // (empty) file so a sink whose firings were all empty
+              // still reads as an empty frame instead of failing
+              // schema inference. limit(0): the optimizer collapses it
+              // to an empty LocalRelation, so the schema file writes
+              // WITHOUT re-executing the pane subtree
+              val emptyDir = new java.io.File(stageDir, "pane-empty")
+              withIdx.limit(0).write.mode("overwrite")
+                .parquet(emptyDir.toString)
+              moveIn(partsIn(emptyDir))
             }
         }
         def rmRec(f: java.io.File): Unit =
@@ -778,290 +793,235 @@ object StreamRunner {
         // flat delete skips — the dir would then leak forever
         snapIds.filter(id => id != batchId && priorId.forall(_ != id))
           .foreach(id => rmRec(new java.io.File(s"$ordsDir/__obatch=$id")))
+        } finally pane.unpersist()
       }
-      } finally if (!isMem) pane.unpersist()
-    }
 
-    // partition discovery stays on the driver: past 32 paths Spark
-    // launches a distributed LISTING JOB per micro-batch — for the
-    // element store read, which routinely holds (slices × open
-    // horizons) > 32 dirs, bounded by the open-window horizon (the
-    // same listing already runs driver-side for compaction), and for
-    // the file source whenever a micro-batch picks up > 32 new files
-    // (0.2-1.2 s per batch measured on a backlogged 4-core stream).
-    // The store is read through the query's session, cloned at
-    // start(); the source lists through the session that created it,
-    // so it is re-created on a private clone. Neither touches the
-    // caller's session once start() returns.
-    val listing =
-      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
-    val srcSess = SessionBridge.cloneSession(df.sparkSession)
-    srcSess.conf.set(listing._1, listing._2)
-    val w = SessionBridge.withSourcesOn(recipe.preAgg, srcSess)
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(delayMs))
-      .option("checkpointLocation", ckpt + "/accumulating")
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (batchId > st.lastBatch && hasInput(batch0)) {
-          // the micro-batch is scanned several times per firing
-          // (store write, touched re-aggregation, distinct-ends
-          // collect, touched-keys projection) — one persist cuts
-          // that to a single source read
-          val batch = batch0.persist()
-          val pinned = scala.collection.mutable.ListBuffer[DataFrame](batch)
-          try {
-          val spark = batch.sparkSession
-          // batch-stamped store slice: a replayed batch OVERWRITES
-          // its own slice instead of appending a duplicate, keeping
-          // every later cumulative pane exact across retries/restarts.
-          // Sub-partitioned by each ELEMENT's retention horizon
-          // (__wend = upper bound on the latest window end the
-          // element can feed, Strategy.elementRetainEnd) so frontier
-          // compaction drops expired elements by path even when one
-          // slice mixes near and far window ends — per-batch cost
-          // tracks the open-window volume, not stream lifetime.
-          // touched-window ends ride the store-write job as an
-          // Observation (r22, guide §1.4/§5 — one job instead of
-          // two per firing): when the horizon IS the window end
-          // (exact: fixed/calendar) or determines every candidate
-          // end arithmetically (grid: sliding with size = k·period,
-          // the same no-phantom-windows argument the closing-
-          // candidate derivation below relies on), the separate
-          // distinct+collect job over the re-aggregated batch
-          // (measured 0.6 s/firing at sf0.1) is redundant.
-          val obsEnds =
-            if (recipe.elementEndExact || recipe.elementGrid.isDefined)
-              Some(new org.apache.spark.sql.Observation())
-            else None
-          var obsWends: Option[Array[Long]] = None
-          recipe.elementEndOf match {
-            case Some(endOf) =>
-              // task-parallel partitioned write: up to (tasks ×
-              // open horizons) files per batch, all short-lived
-              // (compaction deletes whole partitions). A keyed
-              // repartition(__wend) would cut that to one file per
-              // horizon but funnels EVERY element of a window
-              // through one task — a hot-partition at scale — so
-              // parallelism wins here (measured r22: horizon-
-              // clustering the slice did not move store-write time
-              // at sf0.1 either). Null-horizon rows (null event
-              // time — can never feed a window in either read path)
-              // are dropped here, or they'd accumulate forever in a
-              // __HIVE_DEFAULT_PARTITION__ compaction never touches.
-              // Replay correctness needs STATIC partition overwrite
-              // (full-slice replacement); pin it on the writer so a
-              // session-wide dynamic overwriteMode cannot leave a
-              // failed attempt's stale __wend partitions in place.
-              val slice = batch
-                .withColumn("__wend", endOf(batch).cast("long"))
-                .filter(col("__wend").isNotNull)
-              val observed = obsEnds.fold(slice)(o => slice.observe(
-                o, org.apache.spark.sql.functions.collect_set(
-                  col("__wend")).as("__wends")))
-              observed.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("__wend")
-                .parquet(storeDir + s"/__gbatch=$batchId")
-              // blocks only until the just-finished write job's
-              // listener fires; empty slices yield an empty set,
-              // matching the old path's empty collect
-              obsWends = obsEnds.map(_.get("__wends")
-                .asInstanceOf[Seq[Any]]
-                .map(_.asInstanceOf[Number].longValue).toArray)
-            case None => // global window: no horizon, no compaction
-              batch.write.mode("overwrite")
-                .parquet(storeDir + s"/__gbatch=$batchId")
-          }
-          val reAgg = paneReAgg(cfg, recipe)
-          val touched = reAgg(batch).persist()
-          pinned += touched
-          // the store's schema is statically known (batch columns +
-          // the partition dirs) — passing it skips the per-batch
-          // footer-sampling job parquet schema inference runs over
-          // an ever-changing directory set
-          val storeSchema = recipe.elementEndOf match {
-            case Some(_) => batch.schema
-              .add("__wend", org.apache.spark.sql.types.LongType)
-              .add("__gbatch", org.apache.spark.sql.types.LongType)
-            case None => batch.schema
-              .add("__gbatch", org.apache.spark.sql.types.LongType)
-          }
-          def readStore(): DataFrame =
-            spark.read.schema(storeSchema).parquet(storeDir)
-          def storedAll(): DataFrame = readStore()
-            .drop("__gbatch", "__wend")
-          windowEndCol(touched) match {
-            case None =>
-              // global window: every firing is a cumulative early pane
-              emitWithIndex(
-                reAgg(storedAll()).withColumn("__pane", lit("early")),
-                recipe.keys, batchId)
-            case Some(_) =>
-              val fPrev = st.frontier
-              val tEnds = obsWends match {
-                // exact: horizon == the element's one window end.
-                // grid: an element with horizon h feeds exactly the
-                // k ends {h − j·period, 0 ≤ j < k} (a half-open
-                // interval of length k·period holds exactly k grid
-                // points, the largest being h) — the union over
-                // observed horizons IS the touched-end set.
-                case Some(ws) =>
-                  if (recipe.elementEndExact) ws
-                  else {
-                    val (period, k) = recipe.elementGrid.get
-                    ws.flatMap(h => (0 until k).map(h - _ * period))
-                      .distinct
-                  }
-                case None =>
-                  touched.select(windowEndCol(touched).get
-                    .cast("long")).distinct().collect()
+      (batch0, batchId) => {
+        // the micro-batch is scanned several times per firing
+        // (store write, touched re-aggregation, distinct-ends
+        // collect, touched-keys projection) — one persist cuts
+        // that to a single source read
+        val batch = batch0.persist()
+        val pinned = scala.collection.mutable.ListBuffer[DataFrame](batch)
+        try {
+        val spark = batch.sparkSession
+        // batch-stamped store slice: a replayed batch OVERWRITES
+        // its own slice instead of appending a duplicate, keeping
+        // every later cumulative pane exact across retries/restarts.
+        // Sub-partitioned by each ELEMENT's retention horizon
+        // (__wend = upper bound on the latest window end the
+        // element can feed, Strategy.elementRetainEnd) so frontier
+        // compaction drops expired elements by path even when one
+        // slice mixes near and far window ends — per-batch cost
+        // tracks the open-window volume, not stream lifetime.
+        // touched-window ends ride the store-write job as an
+        // Observation (one job instead of two per firing): when
+        // the horizons form an end grid
+        // (Strategy.endGrid — fixed/calendar with k = 1, sliding
+        // with size = k·period), every touched end follows
+        // arithmetically from the observed horizons, and the
+        // separate distinct+collect job over the re-aggregated batch
+        // (measured 0.6 s/firing at sf0.1) is redundant.
+        val obsEnds =
+          recipe.elementGrid.map(_ => new org.apache.spark.sql.Observation())
+        var obsWends: Option[Array[Long]] = None
+        recipe.elementEndOf match {
+          case Some(endOf) =>
+            // task-parallel partitioned write: up to (tasks ×
+            // open horizons) files per batch, all short-lived
+            // (compaction deletes whole partitions). A keyed
+            // repartition(__wend) would cut that to one file per
+            // horizon but funnels EVERY element of a window
+            // through one task — a hot-partition at scale — so
+            // parallelism wins here (measured: horizon-clustering
+            // the slice did not move store-write time at sf0.1
+            // either). Null-horizon rows (null event
+            // time — can never feed a window in either read path)
+            // are dropped here, or they'd accumulate forever in a
+            // __HIVE_DEFAULT_PARTITION__ compaction never touches.
+            // Replay correctness needs STATIC partition overwrite
+            // (full-slice replacement); pin it on the writer so a
+            // session-wide dynamic overwriteMode cannot leave a
+            // failed attempt's stale __wend partitions in place.
+            val slice = batch
+              .withColumn("__wend", endOf(batch).cast("long"))
+              .filter(col("__wend").isNotNull)
+            val observed = obsEnds.fold(slice)(o => slice.observe(
+              o, org.apache.spark.sql.functions.collect_set(
+                col("__wend")).as("__wends")))
+            observed.write.mode("overwrite")
+              .option("partitionOverwriteMode", "static")
+              .partitionBy("__wend")
+              .parquet(storeDir + s"/__gbatch=$batchId")
+            // blocks only until the just-finished write job's
+            // listener fires; empty slices yield an empty set,
+            // matching the old path's empty collect
+            obsWends = obsEnds.map(_.get("__wends")
+              .asInstanceOf[Seq[Any]]
+              .map(_.asInstanceOf[Number].longValue).toArray)
+          case None => // global window: no horizon, no compaction
+            batch.write.mode("overwrite")
+              .parquet(storeDir + s"/__gbatch=$batchId")
+        }
+        val touched = reAgg(batch).persist()
+        pinned += touched
+        // the store's schema is statically known (batch columns +
+        // the partition dirs) — passing it skips the per-batch
+        // footer-sampling job parquet schema inference runs over
+        // an ever-changing directory set
+        val storeSchema = recipe.elementEndOf match {
+          case Some(_) => batch.schema
+            .add("__wend", org.apache.spark.sql.types.LongType)
+            .add("__gbatch", org.apache.spark.sql.types.LongType)
+          case None => batch.schema
+            .add("__gbatch", org.apache.spark.sql.types.LongType)
+        }
+        def readStore(): DataFrame =
+          spark.read.schema(storeSchema).parquet(storeDir)
+        def storedAll(): DataFrame = readStore()
+          .drop("__gbatch", "__wend")
+        windowEndCol(touched) match {
+          case None =>
+            // global window: every firing is a cumulative early pane
+            emitWithIndex(
+              reAgg(storedAll()).withColumn("__pane", lit("early")),
+              recipe.keys, batchId)
+          case Some(_) =>
+            val fPrev = st.frontier
+            // Beam expired-window rule: an end the frontier passed by
+            // more than allowedLateness never fires again
+            def live(endSec: Long): Boolean =
+              fPrev == java.lang.Long.MIN_VALUE ||
+                endSec * 1000L + latenessMs >= fPrev
+            // an element with horizon h feeds exactly the k ends
+            // {h − j·period, 0 ≤ j < k} (Strategy.endGrid) — the
+            // union over observed horizons IS the touched-end set
+            def gridEnds(h: Long): Seq[Long] = {
+              val (period, k) = recipe.elementGrid.get
+              (0 until k).map(h - _ * period)
+            }
+            val tEnds = obsWends match {
+              case Some(ws) => ws.toSeq.flatMap(gridEnds).distinct
+              case None =>
+                touched.select(windowEndCol(touched).get
+                  .cast("long")).distinct().collect().toSeq
+                  .flatMap(r =>
+                    Option(r.get(0)).map(_.asInstanceOf[Long]))
+            }
+            val fNew = math.max(fPrev,
+              if (tEnds.isEmpty) fPrev else tEnds.max * 1000L)
+            val fired = st.fired
+            // late BEFORE closing registration: a window is late
+            // only if its ON_TIME pane fired in a PRIOR batch
+            val lateEnds = tEnds.filter(e => fired.contains(e))
+            // frontier crossing closes windows: ON_TIME pane for
+            // ALL keys of each newly closed window (fires without
+            // new elements, like Beam's watermark-close pane).
+            val (aggedAll, closingEnds) = recipe.elementGrid match {
+              case Some((period, k)) =>
+                // the horizon partitions on disk determine EVERY
+                // candidate window end through the grid (each
+                // contains the partition's elements, so no phantom
+                // windows), and conversely the elements feeding a
+                // fired end e live exactly in horizons
+                // {e + j·period, 0 ≤ j < k}. Closing candidates come
+                // from the store's partition LISTING, and the
+                // re-aggregation reads only the fired ends'
+                // contributing partitions — per-firing cost tracks
+                // the FIRED volume, not the open horizon. An end can
+                // be expired while a later horizon holding its
+                // elements still lives, so the retention rule applies
+                // to candidates too.
+                val horizons = wendValuesOnDisk(storeDir)
+                val closing = horizons.flatMap(gridEnds).distinct
+                  .filter(e => live(e) && e * 1000L < fNew &&
+                    !fired.contains(e))
+                val needed = (tEnds ++ closing).distinct
+                  .flatMap(e => (0 until k).map(e + _ * period))
+                  .distinct.filter(horizons.toSet)
+                val raw = readStore()
+                val pruned =
+                  if (needed.isEmpty) raw.where(lit(false))
+                  else raw.where(col("__wend").isin(needed: _*))
+                (reAgg(pruned.drop("__gbatch", "__wend")), closing)
+              case None =>
+                // sliding windows whose size is not a period
+                // multiple: no grid, so re-aggregate the whole store
+                // and read the candidates off the result
+                val a = reAgg(storedAll())
+                val aEnd = windowEndCol(a).get.cast("long")
+                val retEnds =
+                  (if (fPrev == java.lang.Long.MIN_VALUE) a
+                  else a.filter(aEnd * 1000L + latenessMs >= fPrev))
+                    .select(aEnd).distinct().collect().toSeq
                     .flatMap(r =>
                       Option(r.get(0)).map(_.asInstanceOf[Long]))
-              }
-              val fNew = math.max(fPrev,
-                if (tEnds.isEmpty) fPrev else tEnds.max * 1000L)
-              val fired = st.fired
-              // late BEFORE closing registration: a window is late
-              // only if its ON_TIME pane fired in a PRIOR batch
-              val lateEnds = tEnds.filter(e => fired.contains(e))
-              // frontier crossing closes windows: ON_TIME pane for
-              // ALL keys of each newly closed window (fires without
-              // new elements, like Beam's watermark-close pane).
-              // When the store horizon IS the window end
-              // (fixed/calendar — every element feeds exactly one
-              // window), the re-aggregation reads ONLY the windows
-              // firing this batch: closing candidates come from the
-              // store's partition LISTING (compaction already
-              // enforces retention on the dirs) and the scan prunes
-              // on __wend — per-batch read cost tracks the FIRED
-              // volume, not the whole open horizon. Sliding windows
-              // (one element, several windows) keep the full read.
-              val (aggedAll, closingEnds) =
-                if (recipe.elementEndExact && recipe.elementEndOf.isDefined) {
-                  val closing = wendValuesOnDisk(storeDir).filter(e =>
-                    e * 1000L < fNew && !fired.contains(e))
-                  val firedEnds = (tEnds ++ closing).distinct.toSeq
-                  val raw = readStore()
-                  val pruned =
-                    if (firedEnds.isEmpty) raw.where(lit(false))
-                    else raw.where(col("__wend").isin(firedEnds: _*))
-                  (reAgg(pruned.drop("__gbatch", "__wend")), closing)
-                } else recipe.elementGrid match {
-                  case Some((period, k)) if recipe.elementEndOf.isDefined =>
-                    // sliding with size = k·period: the horizon
-                    // partitions on disk determine EVERY candidate
-                    // window end arithmetically ({h − j·period,
-                    // 0 ≤ j < k} per horizon h — each contains the
-                    // partition's elements, so no phantom windows),
-                    // and conversely the elements feeding a fired
-                    // end e live exactly in horizons {e + j·period}.
-                    // The re-aggregation therefore reads only the
-                    // fired ends' contributing partitions — per-
-                    // firing cost tracks FIRED volume like the
-                    // fixed/calendar path, not the open horizon. An
-                    // end can be expired while its elements' later
-                    // horizon still lives, so the frontier+lateness
-                    // retention filter applies to candidates too
-                    // (the full-read path applied it post-agg).
-                    val horizons = wendValuesOnDisk(storeDir)
-                    val closing = horizons
-                      .flatMap(h => (0 until k).map(h - _ * period))
-                      .distinct
-                      .filter(e =>
-                        (fPrev == java.lang.Long.MIN_VALUE ||
-                          e * 1000L + latenessMs >= fPrev) &&
-                        e * 1000L < fNew && !fired.contains(e))
-                    val firedEnds = (tEnds ++ closing).distinct.toSeq
-                    val needed = firedEnds
-                      .flatMap(e => (0 until k).map(e + _ * period))
-                      .distinct.filter(horizons.toSet)
-                    val raw = readStore()
-                    val pruned =
-                      if (needed.isEmpty) raw.where(lit(false))
-                      else raw.where(col("__wend").isin(needed: _*))
-                    (reAgg(pruned.drop("__gbatch", "__wend")), closing)
-                  case _ =>
-                    val a = reAgg(storedAll())
-                    val aEnd = windowEndCol(a).get.cast("long")
-                    val live =
-                      if (fPrev == java.lang.Long.MIN_VALUE) a
-                      else a.filter(aEnd * 1000L + latenessMs >= fPrev)
-                    val retEnds = live.select(aEnd).distinct().collect()
-                      .flatMap(r =>
-                        Option(r.get(0)).map(_.asInstanceOf[Long]))
-                    (a, retEnds.filter(e =>
-                      e * 1000L < fNew && !fired.contains(e)).toSeq)
-                }
-              val endSec = windowEndCol(aggedAll).get.cast("long")
-              val keyCols = (Seq("window", "window_start")
-                .filter(aggedAll.columns.contains) ++ recipe.keys).distinct
-              // expired-window drop, same rule as the discarding
-              // engine (on the pruned path the dirs were already
-              // compacted to it — this is the defensive second guard)
-              val retained =
-                if (fPrev == java.lang.Long.MIN_VALUE) aggedAll
-                else aggedAll.filter(
-                  endSec * 1000L + latenessMs >= fPrev)
-              // a window emits at most ONE pane per batch: a window
-              // that both received elements and closed in this batch
-              // emits only the (cumulative) ON_TIME pane — its early
-              // pane would carry the identical aggregate, and a
-              // single firing keeps the pane ordinal well-defined
-              val earlyEnds = tEnds.filter(e =>
-                e * 1000L >= fPrev && !closingEnds.contains(e))
-              closingEnds.foreach(e => fired.add(e))
-              st.frontier = fNew
-              val touchedKeys = touched
-                .select(keyCols.map(col): _*).distinct()
-              val early = retained
-                .join(touchedKeys, keyCols, "left_semi")
-                .filter(endSec.isin(earlyEnds: _*))
-                .withColumn("__pane", lit("early"))
-              val closing = retained
-                .filter(endSec.isin(closingEnds: _*))
-                .withColumn("__pane", lit("onTime"))
-              val late = retained
-                .join(touchedKeys, keyCols, "left_semi")
-                .filter(endSec.isin(lateEnds: _*))
-                .withColumn("__pane", lit("late"))
-              val pane =
-                if (hasLate) early.union(closing).union(late)
-                else early.union(closing)
-              // no window fired this batch (elements arrived but
-              // everything stays early-pending behind the frontier,
-              // or all ends were already fired+expired): nothing to
-              // publish, and the ordinals snapshot is unchanged — a
-              // rewrite would be a pure read+write+rename cycle, so
-              // skip the whole emit (the next firing batch finds the
-              // same prior snapshot; a replay of this batch re-skips)
-              val willFire = earlyEnds.nonEmpty || closingEnds.nonEmpty ||
-                (hasLate && lateEnds.nonEmpty)
-              if (willFire) emitWithIndex(pane, keyCols, batchId)
-              // store compaction, element-level: each slice is
-              // partitioned by its elements' retention horizons
-              // (`__wend=<epochSec>`); once the frontier (plus
-              // lateness) passes a horizon, no element in that
-              // partition can contribute to any future pane — the
-              // same rule the `retained` filter applies post-agg —
-              // so the partition drops by path. Listing-driven (the
-              // horizons live in the paths, no driver map), so
-              // pre-restart slices keep compacting after a restart
-              // with no snapshot state; a slice emptied of elements
-              // drops wholly. Replay-safe: a replayed batch rewrites
-              // its entire slice (static partition overwrite) before
-              // compaction re-applies the frontier rule.
-              compactStore(storeDir, fNew, latenessMs)
-          }
-          persistTriggerState(st, triggerStateDir, batchId, latenessMs)
-          st.lastBatch = batchId
-          ()
-          } finally pinned.foreach(_.unpersist())
+                (a, retEnds.filter(e =>
+                  e * 1000L < fNew && !fired.contains(e)))
+            }
+            val endSec = windowEndCol(aggedAll).get.cast("long")
+            val keyCols = (Seq("window", "window_start")
+              .filter(aggedAll.columns.contains) ++ recipe.keys).distinct
+            // expired-window drop, same rule as the discarding
+            // engine (on the grid path the dirs were already
+            // compacted to it — this is the defensive second guard)
+            val retained =
+              if (fPrev == java.lang.Long.MIN_VALUE) aggedAll
+              else aggedAll.filter(
+                endSec * 1000L + latenessMs >= fPrev)
+            // a window emits at most ONE pane per batch: a window
+            // that both received elements and closed in this batch
+            // emits only the (cumulative) ON_TIME pane — its early
+            // pane would carry the identical aggregate, and a
+            // single firing keeps the pane ordinal well-defined
+            val earlyEnds = tEnds.filter(e =>
+              e * 1000L >= fPrev && !closingEnds.contains(e))
+            closingEnds.foreach(e => fired.add(e))
+            st.frontier = fNew
+            val touchedKeys = touched
+              .select(keyCols.map(col): _*).distinct()
+            val early = retained
+              .join(touchedKeys, keyCols, "left_semi")
+              .filter(endSec.isin(earlyEnds: _*))
+              .withColumn("__pane", lit("early"))
+            val closing = retained
+              .filter(endSec.isin(closingEnds: _*))
+              .withColumn("__pane", lit("onTime"))
+            val late = retained
+              .join(touchedKeys, keyCols, "left_semi")
+              .filter(endSec.isin(lateEnds: _*))
+              .withColumn("__pane", lit("late"))
+            val pane =
+              if (hasLate) early.union(closing).union(late)
+              else early.union(closing)
+            // no window fired this batch (elements arrived but
+            // everything stays early-pending behind the frontier,
+            // or all ends were already fired+expired): nothing to
+            // publish, and the ordinals snapshot is unchanged — a
+            // rewrite would be a pure read+write+rename cycle, so
+            // skip the whole emit (the next firing batch finds the
+            // same prior snapshot; a replay of this batch re-skips)
+            val willFire = earlyEnds.nonEmpty || closingEnds.nonEmpty ||
+              (hasLate && lateEnds.nonEmpty)
+            if (willFire) emitWithIndex(pane, keyCols, batchId)
+            // store compaction, element-level: each slice is
+            // partitioned by its elements' retention horizons
+            // (`__wend=<epochSec>`); once the frontier (plus
+            // lateness) passes a horizon, no element in that
+            // partition can contribute to any future pane — the
+            // same rule the `retained` filter applies post-agg —
+            // so the partition drops by path. Listing-driven (the
+            // horizons live in the paths, no driver map), so
+            // pre-restart slices keep compacting after a restart
+            // with no snapshot state; a slice emptied of elements
+            // drops wholly. Replay-safe: a replayed batch rewrites
+            // its entire slice (static partition overwrite) before
+            // compaction re-applies the frontier rule.
+            compactStore(storeDir, fNew, latenessMs)
         }
+        } finally pinned.foreach(_.unpersist())
       }
-    val q = graft.ops.ConfScope(df.sparkSession, listing)(w.start())
-    register(q)
-    q
+    }
   }
 
   /** Beam `AfterPane.elementCountAtLeast(n)` approximation
@@ -1096,20 +1056,23 @@ object StreamRunner {
     val tagCol = Option(tagOf).map(_(batch)).getOrElse(lit(tag))
     val tagged = post(pre(batch).withColumn("__pane", tagCol))
     cfg.module match {
-      case "debug" | "memory" =>
-        val rows = tagged.collect()
-        val buf = paneStore.computeIfAbsent(cfg.name,
-          _ => scala.collection.mutable.ListBuffer.empty)
-        buf.synchronized {
-          rows.foreach(r => buf += ((r.getAs[String]("__pane"),
-            r)))
-        }
+      case "debug" | "memory" => bufferPanes(cfg.name, tagged.collect())
       case _ =>
         val path = cfg.params.str("output")
           .orElse(cfg.params.str("path")).get
         tagged.write.mode("append")
           .format(cfg.params.str("format").getOrElse("parquet"))
           .save(path)
+    }
+  }
+
+  /** Append pane rows to a memory/debug sink's buffer, each with its
+    * `__pane` tag. */
+  private def bufferPanes(sink: String, rows: Array[Row]): Unit = {
+    val buf = paneStore.computeIfAbsent(sink,
+      _ => scala.collection.mutable.ListBuffer.empty)
+    buf.synchronized {
+      rows.foreach(r => buf += ((r.getAs[String]("__pane"), r)))
     }
   }
 

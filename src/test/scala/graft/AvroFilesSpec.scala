@@ -55,7 +55,8 @@ class AvroFilesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("avrofiles2").toString
     val out = s"$dir/nation_avro"
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    graft.ops.AvroFiles.write(nation, out, None, overwrite = true)
+    graft.ops.AvroFilesDynamic.writeDynamic(nation, out, None, None,
+      overwrite = true)
     val back = Pipeline.build(spark, s"""
       |sources:
       |  - name: rd
@@ -75,10 +76,10 @@ class AvroFilesSpec extends AnyFunSuite {
   test("avro sink compression actually applies (container header codec)") {
     val dir = java.nio.file.Files.createTempDirectory("avrocodec").toString
     val nation = spark.read.parquet(s"$sf/nation.parquet")
-    graft.ops.AvroFiles.write(nation, s"$dir/snappy", Some("snappy"),
-      overwrite = true)
-    graft.ops.AvroFiles.write(nation, s"$dir/plain", None,
-      overwrite = true)
+    graft.ops.AvroFilesDynamic.writeDynamic(nation, s"$dir/snappy", None,
+      Some("snappy"), overwrite = true)
+    graft.ops.AvroFilesDynamic.writeDynamic(nation, s"$dir/plain", None,
+      None, overwrite = true)
     def codecOf(d: String): String = {
       val f = new java.io.File(d).listFiles()
         .filter(f => f.isFile && f.getName.endsWith(".avro")).head
@@ -202,10 +203,10 @@ class AvroFilesSpec extends AnyFunSuite {
     val out = s"$dir/data"
     val nation = spark.read.parquet(s"$sf/nation.parquet")
       .select("n_nationkey", "n_name", "n_regionkey")
-    graft.ops.AvroFiles.writeDynamic(nation, out,
-      org.apache.spark.sql.functions.concat(
+    graft.ops.AvroFilesDynamic.writeDynamic(nation, out,
+      Some(org.apache.spark.sql.functions.concat(
         org.apache.spark.sql.functions.lit("r="),
-        org.apache.spark.sql.functions.col("n_regionkey")),
+        org.apache.spark.sql.functions.col("n_regionkey"))),
       None, overwrite = true)
     assert(graft.ops.AvroFiles.read(spark, Seq(s"$out/*/"), None)
       .count() === 25)
@@ -215,9 +216,9 @@ class AvroFilesSpec extends AnyFunSuite {
     val boom = org.apache.spark.sql.functions.udf((k: Long) =>
       if (k >= 0) throw new RuntimeException("boom") else k)
     intercept[org.apache.spark.SparkException] {
-      graft.ops.AvroFiles.writeDynamic(
+      graft.ops.AvroFilesDynamic.writeDynamic(
         nation.withColumn("n_nationkey", boom(col("n_nationkey"))),
-        out, org.apache.spark.sql.functions.lit("r=9"), None,
+        out, Some(org.apache.spark.sql.functions.lit("r=9")), None,
         overwrite = true)
     }
     assert(graft.ops.AvroFiles.read(spark, Seq(s"$out/*/"), None)
@@ -238,5 +239,51 @@ class AvroFilesSpec extends AnyFunSuite {
         |""".stripMargin)
     }
     assert(e.getMessage.contains("spark-avro"))
+  }
+
+  /** Overwriting with a zero-row frame replaces the old data. A frame
+    * that still has partitions (a filter no row passes) leaves
+    * header-only container files and reads back as an empty frame
+    * with its schema; a frame the optimizer folded to no partitions
+    * (`WHERE false`) leaves no data file, and reading it fails. */
+  test("avro overwrite with an empty frame: header-only files read " +
+      "back as an empty frame") {
+    val dir = java.nio.file.Files.createTempDirectory("avroempty").toString
+    def write(out: String, where: String): Unit =
+      Pipeline.execute(spark, s"""
+        |sources:
+        |  - name: nation
+        |    module: storage
+        |    parameters: {path: "$sf/nation.parquet"}
+        |transforms:
+        |  - name: sel
+        |    module: sql
+        |    inputs: [nation]
+        |    parameters:
+        |      sql: "SELECT n_nationkey, n_name FROM nation WHERE $where"
+        |sinks:
+        |  - name: snk
+        |    module: storage
+        |    input: sel
+        |    parameters: {output: "$out", format: avro}
+        |""".stripMargin)
+    def read(out: String) = Pipeline.build(spark, s"""
+      |sources:
+      |  - name: rd
+      |    module: storage
+      |    parameters: {path: "$out", format: avro}
+      |""".stripMargin)("rd")
+    val empty = s"$dir/empty"
+    write(empty, "true")
+    assert(read(empty).count() === 25)
+    write(empty, "n_nationkey < 0")
+    val back = read(empty)
+    assert(back.schema.fieldNames.toSeq === Seq("n_nationkey", "n_name"))
+    assert(back.count() === 0)
+    val none = s"$dir/none"
+    write(none, "true")
+    write(none, "false")
+    val e = intercept[IllegalArgumentException](read(none))
+    assert(e.getMessage.contains("no data files"), e.getMessage)
   }
 }

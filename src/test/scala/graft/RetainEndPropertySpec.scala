@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property check for Strategy.elementRetainEnd — the invariant the
-  * exact-pane engine's store compaction AND fired-window scan
-  * pruning rest on: for FIXED and CALENDAR windows the horizon must
-  * equal the element's single window's END exactly (every element
-  * feeds one window, so a `__wend`-pruned read sees all of a fired
-  * window's elements); for SLIDING windows it must be the MAXIMUM
-  * end over all containing windows (a safe retention bound — which
-  * is why sliding recipes are flagged non-exact and skip pruning).
-  * Checked against the window assignment Spark's own `window()`
-  * grouping produces, across random sizes/offsets/periods/zones. */
+/** Property check for Strategy.elementRetainEnd and Strategy.endGrid
+  * — the invariants the exact-pane engine's store compaction AND
+  * fired-window scan pruning rest on: for FIXED and CALENDAR windows
+  * the horizon must equal the element's single window's END exactly
+  * and the end grid has k = 1 (every element feeds one window, so a
+  * `__wend`-pruned read sees all of a fired window's elements); for
+  * SLIDING windows it must be the MAXIMUM end over all containing
+  * windows, and the grid (period, k) names every containing end when
+  * size = k·period. Checked against the window assignment Spark's
+  * own `window()` grouping produces, across random
+  * sizes/offsets/periods/zones. */
 class RetainEndPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -45,6 +46,32 @@ class RetainEndPropertySpec extends AnyFunSuite {
         .filter(col("__h") =!= col("__w.end").cast("long"))
         .count()
       assert(bad == 0, s"size=$size off=$off: $bad horizon mismatches")
+      assert(graft.streaming.Strategy.endGrid(st).contains((size, 1)))
+    }
+  }
+
+  test("fixed windows ignore a stray period: horizon == the window's " +
+      "end and the end grid is (size, 1)") {
+    val rnd = new scala.util.Random(17)
+    for (_ <- 1 to 6) {
+      val size = 60L * (2 + rnd.nextInt(720))
+      val period = 60L * (1 + rnd.nextInt((size / 60 - 1).toInt))
+      val off = rnd.nextInt(size.toInt).toLong
+      val st = strategy(
+        s"""{"timestampField": "ts", "window": {"type": "fixed",
+             "size": $size, "period": $period, "offset": $off}}""")
+      val df = tsFrame(200, rnd.nextInt())
+      val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
+      val w = graft.streaming.Strategy
+        .windowColumn(st, col("ts")).get
+      val bad = df
+        .withColumn("__h", horizon(df))
+        .withColumn("__w", w)
+        .filter(col("__h") =!= col("__w.end").cast("long"))
+        .count()
+      assert(bad == 0,
+        s"size=$size period=$period off=$off: $bad horizon mismatches")
+      assert(graft.streaming.Strategy.endGrid(st).contains((size, 1)))
     }
   }
 
@@ -63,8 +90,8 @@ class RetainEndPropertySpec extends AnyFunSuite {
         .filter(col("__h") =!= col("__e"))
         .count()
       assert(bad == 0, s"tz=$tz unit=$unit: $bad horizon mismatches")
-      assert(graft.streaming.Strategy.elementEndIsWindowEnd(st),
-        "calendar must be flagged prune-exact")
+      assert(graft.streaming.Strategy.endGrid(st).exists(_._2 == 1),
+        "calendar must have a one-end grid")
     }
   }
 
@@ -77,8 +104,9 @@ class RetainEndPropertySpec extends AnyFunSuite {
       val st = strategy(
         s"""{"timestampField": "ts", "window": {"type": "sliding",
              "size": $size, "period": $period}}""")
-      assert(!graft.streaming.Strategy.elementEndIsWindowEnd(st),
-        "sliding must NOT be flagged prune-exact")
+      assert(graft.streaming.Strategy.endGrid(st)
+        .contains((period, (size / period).toInt)),
+        "sliding must have a k-end grid, k > 1")
       val df = tsFrame(120, rnd.nextInt())
       val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
       // window() in a grouping explodes one row per containing
@@ -108,7 +136,7 @@ class RetainEndPropertySpec extends AnyFunSuite {
       val st = strategy(
         s"""{"timestampField": "ts", "window": {"type": "sliding",
              "size": $size, "period": $period}}""")
-      assert(graft.streaming.Strategy.slidingEndGrid(st)
+      assert(graft.streaming.Strategy.endGrid(st)
         .contains((period, k)))
       val df = tsFrame(120, rnd.nextInt())
       val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
@@ -136,6 +164,6 @@ class RetainEndPropertySpec extends AnyFunSuite {
     val odd = strategy(
       """{"timestampField": "ts", "window": {"type": "sliding",
           "size": 500, "period": 180}}""")
-    assert(graft.streaming.Strategy.slidingEndGrid(odd).isEmpty)
+    assert(graft.streaming.Strategy.endGrid(odd).isEmpty)
   }
 }

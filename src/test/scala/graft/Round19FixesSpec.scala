@@ -294,7 +294,10 @@ class Round19FixesSpec extends AnyFunSuite {
         new java.io.File(inDir, s"$file.parquet").toPath)
     }
     // b1: [0,6h) with one row, plus a row at 26h that pushes the
-    // frontier to 30h — [0,6h) closes (onTime) with lateness 1h
+    // frontier to 30h — [0,6h) closes (onTime) with lateness 1h.
+    // The aggregation keeps only windows with n < 2, so a firing
+    // whose windows all hold two or more elements has an EMPTY pane
+    // frame.
     stage("b1", Seq((1L, 3600L, 1.0), (2L, 93600L, 1.0)))
     Pipeline.execute(spark, s"""
       |sources:
@@ -320,6 +323,7 @@ class Round19FixesSpec extends AnyFunSuite {
       |           pastFirstElementDelayUnit: millisecond}
       |    parameters:
       |      groupFields: []
+      |      filter: [{key: n, op: "<", value: 2}]
       |      aggregations:
       |        - input: ev
       |          fields:
@@ -335,9 +339,11 @@ class Round19FixesSpec extends AnyFunSuite {
     val afterB1 = spark.read.parquet(out).count()
     assert(afterB1 > 0, "b1 must fire panes")
     // b2: a straggler at 02:00 — [0,6h) already FIRED and is past
-    // end+lateness (7h < 30h frontier): lateEnds is nonempty (the
-    // firing triggers) but `retained` drops every row → empty pane
-    stage("b2", Seq((3L, 7200L, 1.0)))
+    // end+lateness (7h < 30h frontier), so it fires nothing — plus
+    // two elements in the open [24h,30h), whose early pane (n = 3)
+    // the filter drops → an empty firing
+    stage("b2", Seq((3L, 7200L, 1.0), (5L, 97200L, 1.0),
+      (6L, 100800L, 1.0)))
     StreamRunner.drainAll()
     // WRITE-ONCE contract (r19 verdict): the empty firing publishes
     // NOTHING when the sink already holds a schema-bearing parquet
@@ -350,11 +356,12 @@ class Round19FixesSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == afterB1)
     // ...but a sink WITHOUT a schema file still gets its marker: drop
     // the published parts (the all-empty-firings shape) and drive
-    // another too-late straggler — the next empty firing must publish
-    // a schema-bearing empty file so the sink stays readable
+    // another empty firing — two elements in [48h,54h) that also
+    // close [24h,30h) (n = 3) — it must publish a schema-bearing
+    // empty file so the sink stays readable
     new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).foreach(_.delete())
-    stage("b3", Seq((4L, 10800L, 1.0)))
+    stage("b3", Seq((4L, 176400L, 1.0), (7L, 180000L, 1.0)))
     StreamRunner.drainAll()
     StreamRunner.stopAll()
     val files2 = new java.io.File(out).listFiles()

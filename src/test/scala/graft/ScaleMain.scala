@@ -443,7 +443,8 @@ object ScaleMain {
     val avroDir = java.nio.file.Files
       .createTempDirectory("scale-avro").toString + "/docs"
     val tAvroW = System.nanoTime()
-    graft.ops.AvroFiles.write(docs, avroDir, None, overwrite = true)
+    graft.ops.AvroFilesDynamic.writeDynamic(docs, avroDir, None, None,
+      overwrite = true)
     println(f"SCALE avro-write            " +
       f"${(System.nanoTime() - tAvroW) / 1e9}%6.2f s")
     time("avro-read") {
@@ -457,7 +458,7 @@ object ScaleMain {
       .createTempDirectory("scale-avro-dyn").toString + "/docs"
     val tDyn = System.nanoTime()
     graft.ops.AvroFilesDynamic.writeDynamic(docs, dynDir,
-      concat(lit("d="), pmod(col("doc_id"), lit(16))), None,
+      Some(concat(lit("d="), pmod(col("doc_id"), lit(16)))), None,
       overwrite = true)
     println(f"SCALE avro-write-dynamic    " +
       f"${(System.nanoTime() - tDyn) / 1e9}%6.2f s")

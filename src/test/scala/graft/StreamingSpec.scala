@@ -1879,11 +1879,11 @@ class StreamingSpec extends AnyFunSuite {
     StreamRunner.drainAll()
     stageParquet(dir, "b3", Seq((4L, 160000L, 1.0)))
     StreamRunner.drainAll()
-    // (memory-sink ordinals restart at 0 — the driver map dies with
-    // the process; FILE sinks derive ordinals from their own prior
-    // output, pinned by the restart test below. The value 7.0 is the
-    // substance: re-aggregated from the compacted store.)
-    assert(w(129600L) == List(("onTime", 7.0, 0L)))
+    // (the buffer restarts empty, but the ordinal continues: every
+    // sink numbers panes from the ordinals snapshot under the
+    // checkpoint, so this window's pre-restart early pane was #0.
+    // The value 7.0 is re-aggregated from the compacted store.)
+    assert(w(129600L) == List(("onTime", 7.0, 1L)))
     assert(w(151200L) == List(("early", 1.0, 0L)))
     StreamRunner.stopAll()
   }
@@ -2159,5 +2159,224 @@ class StreamingSpec extends AnyFunSuite {
       assert(solo.forall(_.exists(_._2 == "onTime")), solo)
       assert(Seq(panes(dirA), panes(dirB)) == solo)
     } finally StreamRunner.stopAll()
+  }
+
+  /** Exact-pane transforms over one keyed source, one per window
+    * shape, each feeding a memory sink `mem_<shape>` and a parquet
+    * sink `pq_<shape>` (output `<dir>/out-<shape>`). */
+  private def shapesConfig(dir: String, lateness: String,
+      shapes: Seq[(String, String)], groupFields: String): String = {
+    val delay = "{type: afterProcessingTime, pastFirstElementDelay: " +
+      "200, pastFirstElementDelayUnit: millisecond}"
+    val transforms = shapes.map { case (name, window) => s"""
+      |  - name: agg_$name
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy:
+      |      mode: accumulating
+      |      exactPanes: true
+      |      timestampField: ts
+      |      allowedLateness: $lateness
+      |      window: $window
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger: $delay
+      |        lateFiringTrigger: $delay
+      |    parameters:
+      |      groupFields: $groupFields
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: n, op: count}
+      |            - {name: s, op: sum, field: value}
+      |            - {name: mn, op: min, field: value}""" }
+    val sinks = shapes.map { case (name, _) => s"""
+      |  - name: mem_$name
+      |    module: memory
+      |    input: agg_$name
+      |    parameters: {checkpointLocation: $dir/ckpt-mem_$name}
+      |  - name: pq_$name
+      |    module: storage
+      |    input: agg_$name
+      |    parameters: {output: $dir/out-$name, format: parquet,
+      |      checkpointLocation: $dir/ckpt-pq_$name}""" }
+    (s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:""" + transforms.mkString + "\n|sinks:" +
+      sinks.mkString + "\n").stripMargin
+  }
+
+  /** Stage keyed (k, secs, value) rows as one parquet file. */
+  private def stageKeyed(dir: String, file: String,
+      rows: Seq[(String, Long, Double)]): Unit = {
+    val tmp = s"$dir/tmp-$file"
+    rows.toDF("k", "secs", "value")
+      .select($"k", timestamp_seconds($"secs").as("ts"), $"value")
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val inDir = new java.io.File(s"$dir/in")
+    inDir.mkdirs()
+    java.nio.file.Files.move(part.toPath,
+      new java.io.File(inDir, s"$file.parquet").toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** window end (epoch s) | key | pane | ordinal | n | s | mn */
+  private def paneLine(r: org.apache.spark.sql.Row): String =
+    Seq(r.getAs[org.apache.spark.sql.Row]("window")
+        .getAs[java.sql.Timestamp]("end").getTime / 1000,
+      r.getAs[String]("k"), r.getAs[String]("__pane"),
+      r.getAs[Long]("__pane_index"), r.getAs[Long]("n"),
+      r.getAs[Double]("s"), r.getAs[Double]("mn")).mkString("|")
+
+  /** One 3-batch fixture through every window shape the exact-pane
+    * engine serves — fixed 6 h, calendar day in a DST zone, sliding
+    * 12 h/6 h (size a period multiple) and sliding 5 h/2 h (not a
+    * multiple, the full-read path) — each into a memory sink and a
+    * parquet sink. Keys a and b, a in every batch; batch 3 brings a
+    * straggler within allowedLateness (a at 64 h), one beyond it
+    * (b at 40 h) and a frontier push (a at 120 h). Values are powers
+    * of two, so each sum names its element set. The golden rows were
+    * captured from the engine before its firing paths were merged;
+    * both sinks must match them. */
+  test("exactPanes window shapes x sinks: golden pane rows, memory " +
+      "sinks equal parquet sinks") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shapes")
+      .toString
+    val h = 3600L
+    val batches = Seq(
+      Seq(("a", 49 * h, 1.0), ("b", 50 * h, 2.0), ("a", 55 * h, 4.0),
+        ("a", 63 * h, 8.0)),
+      Seq(("a", 57 * h, 16.0), ("b", 80 * h, 32.0)),
+      Seq(("a", 64 * h, 64.0), ("b", 40 * h, 128.0),
+        ("a", 120 * h, 256.0)))
+    val shapes = Seq(
+      "fixed" -> "{type: fixed, unit: hour, size: 6}",
+      "calendar" ->
+        "{type: calendar, unit: day, timezone: Europe/Berlin}",
+      "sliding12x6" -> "{type: sliding, unit: hour, size: 12, period: 6}",
+      "sliding5x2" -> "{type: sliding, unit: hour, size: 5, period: 2}")
+    val golden: Map[String, Seq[String]] = Map(
+      "fixed" -> Seq(
+        "194400|a|onTime|0|1|1.0|1.0",
+        "194400|b|onTime|0|1|2.0|2.0",
+        "216000|a|late|1|2|20.0|4.0",
+        "216000|a|onTime|0|1|4.0|4.0",
+        "237600|a|early|0|1|8.0|8.0",
+        "237600|a|late|2|2|72.0|8.0",
+        "237600|a|onTime|1|1|8.0|8.0",
+        "302400|b|early|0|1|32.0|32.0",
+        "302400|b|onTime|1|1|32.0|32.0",
+        "453600|a|early|0|1|256.0|256.0"),
+      "calendar" -> Seq(
+        "255600|a|early|0|3|13.0|1.0",
+        "255600|a|late|2|5|93.0|1.0",
+        "255600|a|onTime|1|4|29.0|1.0",
+        "255600|b|early|0|1|2.0|2.0",
+        "255600|b|onTime|1|1|2.0|2.0",
+        "342000|b|early|0|1|32.0|32.0",
+        "342000|b|onTime|1|1|32.0|32.0",
+        "514800|a|early|0|1|256.0|256.0"),
+      "sliding12x6" -> Seq(
+        "194400|a|onTime|0|1|1.0|1.0",
+        "194400|b|onTime|0|1|2.0|2.0",
+        "216000|a|late|1|3|21.0|1.0",
+        "216000|a|onTime|0|2|5.0|1.0",
+        "216000|b|onTime|0|1|2.0|2.0",
+        "237600|a|late|1|3|28.0|4.0",
+        "237600|a|late|2|4|92.0|4.0",
+        "237600|a|onTime|0|2|12.0|4.0",
+        "259200|a|early|0|1|8.0|8.0",
+        "259200|a|late|2|2|72.0|8.0",
+        "259200|a|onTime|1|1|8.0|8.0",
+        "302400|b|onTime|0|1|32.0|32.0",
+        "324000|b|early|0|1|32.0|32.0",
+        "324000|b|onTime|1|1|32.0|32.0",
+        "453600|a|onTime|0|1|256.0|256.0",
+        "475200|a|early|0|1|256.0|256.0"),
+      "sliding5x2" -> Seq(
+        "183600|a|onTime|0|1|1.0|1.0",
+        "183600|b|onTime|0|1|2.0|2.0",
+        "190800|a|onTime|0|1|1.0|1.0",
+        "190800|b|onTime|0|1|2.0|2.0",
+        "198000|b|onTime|0|1|2.0|2.0",
+        "205200|a|onTime|0|1|4.0|4.0",
+        "212400|a|late|1|2|20.0|4.0",
+        "212400|a|onTime|0|1|4.0|4.0",
+        "219600|a|onTime|0|1|16.0|16.0",
+        "234000|a|late|1|2|72.0|8.0",
+        "234000|a|onTime|0|1|8.0|8.0",
+        "241200|a|early|0|1|8.0|8.0",
+        "241200|a|late|2|2|72.0|8.0",
+        "241200|a|onTime|1|1|8.0|8.0",
+        "248400|a|onTime|0|1|64.0|64.0",
+        "291600|b|onTime|0|1|32.0|32.0",
+        "298800|b|onTime|0|1|32.0|32.0",
+        "306000|b|early|0|1|32.0|32.0",
+        "306000|b|onTime|1|1|32.0|32.0",
+        "435600|a|onTime|0|1|256.0|256.0",
+        "442800|a|onTime|0|1|256.0|256.0",
+        "450000|a|early|0|1|256.0|256.0"))
+    shapes.foreach { case (name, _) =>
+      StreamRunner.paneStore.remove(s"mem_$name") }
+    stageKeyed(dir, "b0", batches.head)
+    try {
+      Pipeline.execute(spark,
+        shapesConfig(dir, "24h", shapes, "[k]"))
+      StreamRunner.drainAll()
+      batches.indices.tail.foreach { i =>
+        stageKeyed(dir, s"b$i", batches(i))
+        StreamRunner.drainAll()
+      }
+    } finally StreamRunner.stopAll()
+    shapes.foreach { case (name, _) =>
+      val mem = StreamRunner.paneStore.get(s"mem_$name").toList
+        .map(t => paneLine(t._2)).sorted
+      val pq = spark.read.parquet(s"$dir/out-$name").collect()
+        .map(paneLine).toSeq.sorted
+      assert(mem == golden(name), s"$name memory:\n${mem.mkString("\n")}")
+      assert(pq == golden(name), s"$name parquet:\n${pq.mkString("\n")}")
+    }
+  }
+
+  /** A fixed window ignores `period` — the grouping always did; the
+    * element store's retention horizon must too, or an element is
+    * compacted away before its window closes. */
+  test("exactPanes fixed windows ignore a stray period key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fixper")
+      .toString
+    val h = 3600L
+    val batches = Seq(Seq(("a", 6 * h, 1.0)), Seq(("a", 11 * h, 2.0)),
+      Seq(("a", 13 * h, 4.0)))
+    val shapes = Seq(
+      "plain" -> "{type: fixed, unit: hour, size: 6}",
+      "period" -> "{type: fixed, unit: hour, size: 6, period: 4}")
+    shapes.foreach { case (name, _) =>
+      StreamRunner.paneStore.remove(s"mem_$name") }
+    stageKeyed(dir, "b0", batches.head)
+    try {
+      Pipeline.execute(spark, shapesConfig(dir, "0", shapes, "[]"))
+      StreamRunner.drainAll()
+      batches.indices.tail.foreach { i =>
+        stageKeyed(dir, s"b$i", batches(i))
+        StreamRunner.drainAll()
+      }
+    } finally StreamRunner.stopAll()
+    def panes(name: String): List[(String, Long, Long, Long)] =
+      StreamRunner.paneStore.get(s"mem_$name").toList.map { case (tag, r) =>
+        (tag, r.getAs[org.apache.spark.sql.Row]("window")
+          .getAs[java.sql.Timestamp]("start").getTime / 1000,
+          r.getAs[Long]("n"), r.getAs[Long]("__pane_index"))
+      }
+    // window [06:00, 12:00): both elements in its second early pane
+    // and in its on-time pane
+    assert(panes("period").filter(_._2 == 6 * h) == List(
+      ("early", 6 * h, 1L, 0L), ("early", 6 * h, 2L, 1L),
+      ("onTime", 6 * h, 2L, 2L)), panes("period"))
+    assert(panes("period") == panes("plain"))
   }
 }
