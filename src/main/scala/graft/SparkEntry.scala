@@ -2413,10 +2413,10 @@ sinks:
 
     // q82's exact accumulating panes over CALENDAR-DAY windows in a
     // non-UTC timezone (Tokyo, fixed +9 — no DST in the fixture
-    // month): drives the pane engines' scalar-calendar-bucket
-    // rebuild (the r15 paneReAgg struct repair) end-to-end; the
-    // oracle reuses the q82 pane derivation with local-midnight
-    // bucket bounds
+    // month): drives the pane re-aggregation's calendar window
+    // encoding (the streaming aggregate's offset fixed window)
+    // end-to-end; the oracle reuses the q82 pane derivation with
+    // local-midnight bucket bounds
     "q161_calendar_panes" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions.{col, round}
       val base = graft.ops.FsUtil.scratchDir("graft_q161_")
@@ -2480,9 +2480,9 @@ sinks:
     // q161's calendar panes in a DST zone ACROSS the transition:
     // events shifted +89 days span Europe/Berlin's 2024-03-31
     // spring-forward (a 23-hour local day) — the streaming dynamic-
-    // gap session encoding, the batch re-aggregation's date_trunc
-    // plan, and the pane recipe's calendarEndOf end derivation must
-    // all bucket that day to the next local midnight (one UTC hour
+    // gap session encoding (which the pane re-aggregation shares)
+    // and the exact engine's calendarEndOf horizons must both
+    // bucket that day to the next local midnight (one UTC hour
     // early); the oracle replays the bucketing with DuckDB's ICU
     // timezone arithmetic (session-tz-independent two-arg timezone())
     "q167_calendar_dst_panes" -> ((s: SparkSession, dir: String) => {
@@ -2616,12 +2616,12 @@ sinks:
 
     // q161's exact panes over an ANCHORED N-UNIT calendar window
     // (CalendarWindows.days(3).withStartingDay — size 3, startDate
-    // 2024-01-02, Tokyo): drives calNBounds end-to-end through the
-    // pane engines — the batch re-agg's scalar anchored-bucket
-    // start, the recipe's calendarEndOf struct rebuild, and the
-    // element store's per-bucket retention horizons. The fixture
-    // month starts BEFORE the anchor, so the floor division's
-    // negative-bucket branch is exercised too. Oracle = the q82 pane
+    // 2024-01-02, Tokyo): drives the anchored fixed-window grid
+    // end-to-end through the pane engines — the pane
+    // re-aggregation's window encoding and the element store's
+    // per-bucket retention horizons, both from that grid. The fixture
+    // month starts BEFORE the anchor, so pre-anchor buckets are
+    // exercised too. Oracle = the q82 pane
     // derivation over the anchored 3-day grid (anchor local-midnight
     // epoch 1704121200 = 2024-01-02T00:00+09:00).
     "q171_calendar_anchored_panes" -> ((s: SparkSession, dir: String) => {

@@ -311,6 +311,8 @@ object SelectTransform {
   * aggregation and hot-key `fanout` are subsumed by Spark's
   * HashAggregateExec partial/final split + AQE skew handling. */
 object AggregationTransform {
+  private type Node = com.fasterxml.jackson.databind.JsonNode
+
   def build(spark: SparkSession, cfg: ModuleCfg,
       inputs: Map[String, DataFrame]): Map[String, DataFrame] = {
     val groupFields = cfg.params.strArr("groupFields")
@@ -318,11 +320,14 @@ object AggregationTransform {
     require(defs.nonEmpty, "aggregation requires aggregations parameter")
     // strategy block (SURVEY §2.9): window group column + watermark,
     // same window() semantics in batch and streaming
-    val strategyNode = cfg.node("strategy").orElse(cfg.param("strategy"))
+    val strategyNode = strategyOf(cfg)
     strategyNode.foreach(
       graft.streaming.Strategy.warnUnknownKeys(_, cfg.name))
+    // every input of a windowed aggregation groups by `window`
+    // (aggregate fails loudly on an input with no event time)
+    val windowed = strategyNode.exists(declaredWindow(_).isDefined)
+    validate(cfg, defs.size, windowed)
 
-    var anyWindow = false
     val perInput: Seq[DataFrame] = defs.map { d =>
       val inName = d.str("input").getOrElse(cfg.inputs.head)
       // a typo'd input must fail loudly — falling back to the first
@@ -343,200 +348,23 @@ object AggregationTransform {
       // repartition of a tiny frame creates (Spark's
       // ApproxTopKCombine.serialize MatchError: null). widen is
       // stats-probed — a no-op for streams and for inputs already a
-      // split per core wide.
+      // split per core wide. It stays HERE, not in aggregate: a pane
+      // re-aggregation of one micro-batch must not gain an exchange.
       val heavyAggOps = Set("count_distinct", "median", "percentile")
       // ignore-filtered (r22 advice): an ignored field never compiles,
       // so it must not trigger the widen exchange either
-      val hasHeavyAgg = d.arrOf("fields")
-        .filterNot(_.bool("ignore").getOrElse(false))
+      val hasHeavyAgg = fieldsOf(d)
         .exists(f =>
           f.str("op").orElse(f.str("func")).exists(heavyAggOps.contains))
-      var df = if (hasHeavyAgg) TransformCommon.widen(df0) else df0
-      var tsCol: Option[org.apache.spark.sql.Column] = None
-      val windowCol = strategyNode.flatMap { st =>
-        // watermark first: it casts the ts field to TimestampType in
-        // place, so the window then references the bare watermarked
-        // attribute (a cast wrapper would break watermark tracking)
-        df = graft.streaming.Strategy.applyWatermark(df, st,
-          st.str("timestampField").getOrElse("__event_time"))
-        val ts = graft.streaming.Strategy.eventTimeCol(df, st)
-        tsCol = ts
-        // a declared non-global window with no resolvable event time
-        // must fail loudly: silently dropping it would collapse all
-        // time buckets into one global group with plausible numbers
-        val declared = st("window").getOrElse(st)
-          .str("type").filter(_ != "global")
-        if (ts.isEmpty && declared.isDefined)
-          throw new IllegalArgumentException(
-            s"aggregation ${cfg.name}: strategy declares a " +
-              s"'${declared.get}' window but input '$inName' has no " +
-              "event time — set strategy.timestampField or provide " +
-              "an __event_time column")
-        ts.flatMap(t => graft.streaming.Strategy.windowGroup(st, t,
-          df.isStreaming))
-      }
-      if (windowCol.isDefined) anyWindow = true
-      val groupCols =
-        windowCol.map(_.column.as("window")).toSeq ++ groupFields.map(col)
-      val fieldNodes = d.arrOf("fields")
-        .filterNot(_.bool("ignore").getOrElse(false))
-      val aggCols = fieldNodes
-        .map(AggregationCompiler.compile(_, df.schema))
-      // timestampCombiner (reference Strategy.java:72-73, Beam
-      // TimestampCombiner): stamps the aggregate's OUTPUT event time
-      // as `__event_time`, which downstream modules pick up for
-      // re-windowing. EARLIEST/LATEST aggregate the input timestamps
-      // alongside the declared fields; END_OF_WINDOW is the window's
-      // max timestamp (end − 1 ms, Beam's maxTimestamp — window.end
-      // itself belongs to the NEXT window). Unset = no stamp, the
-      // window struct stays the only time authority.
-      val combiner = strategyNode.flatMap(_.str("timestampCombiner"))
-        .map(_.toUpperCase)
-      combiner.foreach { c =>
-        require(Set("EARLIEST", "LATEST", "END_OF_WINDOW")(c),
-          s"timestampCombiner: $c (valid: EARLIEST, LATEST, " +
-            "END_OF_WINDOW)")
-        require(defs.size == 1,
-          "timestampCombiner requires a single-input aggregation " +
-            "(multi-input merges have no per-element timestamp)")
-        require(windowCol.isDefined && tsCol.isDefined,
-          "timestampCombiner requires a non-global window with a " +
-            "resolvable event time")
-      }
-      val extraAgg = combiner match {
-        case Some("EARLIEST") => Seq(min(tsCol.get).as("__event_time"))
-        case Some("LATEST") => Seq(max(tsCol.get).as("__event_time"))
-        case _ => Nil
-      }
-      val allAgg = aggCols ++ extraAgg
-      // parity-plus (SURVEY §2.6: "no grouping sets / cube / rollup
-      // anywhere in the reference", free on Catalyst): `groupType:
-      // rollup|cube` or explicit `groupingSets: [[a,b],[a],[]]`
-      // subtotal lattices in ONE pass over the input (Expand node —
-      // no per-level rescan), with `__grouping_id` disambiguating
-      // subtotal rows from genuine null group values
-      val groupMode = cfg.params.str("groupType")
-      val setsParam = cfg.params.arrOf("groupingSets")
-        .map(_.elems.map(_.asText))
-      val agged =
-        if (groupMode.exists(_ != "groupBy") || setsParam.nonEmpty) {
-          require(windowCol.isEmpty,
-            s"aggregation ${cfg.name}: groupType/groupingSets cannot " +
-              "combine with a window strategy (subtotal rows have no " +
-              "single window)")
-          require(defs.size == 1,
-            s"aggregation ${cfg.name}: groupType/groupingSets require " +
-              "a single-input aggregation (subtotal rows cannot merge " +
-              "on the full group key)")
-          val grouped = groupMode match {
-            case Some("rollup") => df.rollup(groupCols: _*)
-            case Some("cube") => df.cube(groupCols: _*)
-            case None | Some("groupingSets") =>
-              require(setsParam.nonEmpty,
-                s"aggregation ${cfg.name}: groupingSets requires a " +
-                  "non-empty list of group-field subsets")
-              setsParam.flatten.foreach(f => require(
-                groupFields.contains(f),
-                s"aggregation ${cfg.name}: groupingSets field '$f' " +
-                  s"is not in groupFields ${groupFields.mkString(",")}"))
-              df.groupingSets(setsParam.map(_.map(col)), groupCols: _*)
-            case Some(other) => throw new IllegalArgumentException(
-              s"aggregation ${cfg.name}: groupType '$other' (valid: " +
-                "groupBy, rollup, cube, groupingSets)")
-          }
-          val withGid = allAgg :+ grouping_id().as("__grouping_id")
-          grouped.agg(withGid.head, withGid.tail: _*)
-        } else {
-          // exact percentile/median object buffers must not ride the
-          // count_distinct Expand: with both in ONE aggregate, Spark
-          // keys the partial object aggregate by (group, gid,
-          // distinct-key) — the key count explodes past the
-          // object-hash fallback threshold and the whole expanded
-          // input sort-aggregates with percentile buffers (q80's
-          // plan: Expand ×3 over 600k rows into an ObjectHashAggregate
-          // keyed per l_partkey). With both classes present, compile
-          // the distinct ops as their OWN aggregate over the same
-          // grouping and join back on the null-safe group key: the
-          // percentile side keeps its natural per-group object
-          // aggregate (no Expand), the distinct side keeps its
-          // hash-only Expand, and the join pairs group-count-sized
-          // frames. Both classes are deterministic, so the result is
-          // value-identical (q80 re-proven against the oracle at both
-          // SFs). Batch only — a second streaming aggregate + join
-          // would be an illegal stream-stream shape.
-          def opOf(n: com.fasterxml.jackson.databind.JsonNode): String =
-            n.str("op").orElse(n.str("func")).getOrElse("")
-          def isDistinctOp(n: com.fasterxml.jackson.databind.JsonNode) = opOf(n) == "count_distinct"
-          def isObjOp(n: com.fasterxml.jackson.databind.JsonNode) = opOf(n) == "median" ||
-            (opOf(n) == "percentile" &&
-              !n.bool("approximate").getOrElse(false))
-          val split = !df.isStreaming &&
-            fieldNodes.exists(isDistinctOp) && fieldNodes.exists(isObjOp)
-          if (!split) {
-            if (groupCols.nonEmpty)
-              df.groupBy(groupCols: _*).agg(allAgg.head, allAgg.tail: _*)
-            else df.agg(allAgg.head, allAgg.tail: _*)
-          } else {
-            // each compiled aggregate gets a unique internal alias
-            // (r22 advice): with duplicate declared names (two
-            // unnamed count_distinct ops) a nameOf lookup on the
-            // joined sides would be ambiguous; positional aliases
-            // never collide, and the final select restores the
-            // declared names in spec order
-            val pairs = fieldNodes.zip(aggCols).zipWithIndex
-              .map { case ((n, c), i) => (n, c.as(s"__agg_$i"), i) }
-            val (dPairs, mPairs) = pairs.partition(p => isDistinctOp(p._1))
-            val mAgg = mPairs.map(_._2) ++ extraAgg
-            val dAgg = dPairs.map(_._2)
-            val keyNames =
-              (if (windowCol.isDefined) Seq("window") else Nil) ++
-                groupFields
-            val (a, b) =
-              if (groupCols.nonEmpty)
-                (df.groupBy(groupCols: _*).agg(mAgg.head, mAgg.tail: _*),
-                  df.groupBy(groupCols: _*).agg(dAgg.head, dAgg.tail: _*))
-              else (df.agg(mAgg.head, mAgg.tail: _*),
-                df.agg(dAgg.head, dAgg.tail: _*))
-            val joined =
-              if (keyNames.isEmpty) a.crossJoin(b)
-              else a.join(b,
-                keyNames.map(k => a(k) <=> b(k)).reduce(_ && _),
-                "inner")
-            def nameOf(n: com.fasterxml.jackson.databind.JsonNode): String =
-              n.str("name").getOrElse(opOf(n))
-            // restore the declared output order exactly: group keys,
-            // then every aggregate in spec order (from whichever side
-            // computed it), then the combiner stamp
-            val outCols = keyNames.map(a(_)) ++
-              pairs.map { case (n, _, i) =>
-                (if (isDistinctOp(n)) b(s"__agg_$i") else a(s"__agg_$i"))
-                  .as(nameOf(n)) } ++
-              (if (extraAgg.nonEmpty) Seq(a("__event_time")) else Nil)
-            joined.select(outCols: _*)
-          }
-        }
-      // streaming calendar buckets post-project the session struct to
-      // the true bucket boundaries (identity for every other window)
-      val posted = windowCol.map(_.post(agged)).getOrElse(agged)
-      combiner match {
-        case Some("END_OF_WINDOW") =>
-          val isStruct = posted.schema("window").dataType
-            .isInstanceOf[org.apache.spark.sql.types.StructType]
-          val end =
-            if (isStruct) col("window.end")
-            else graft.streaming.Strategy.calendarEndOf(
-              strategyNode.get, col("window"))
-          posted.withColumn("__event_time",
-            end - expr("INTERVAL 1 MILLISECOND"))
-        case _ => posted
-      }
+      aggregate(if (hasHeavyAgg) TransformCommon.widen(df0) else df0,
+        cfg, d, df0.isStreaming)
     }
     // multi-input: merge per-input aggregates on the FULL group key —
     // including the window column when a strategy produced one, or
     // rows from unrelated windows would cross-pair and the result
     // would carry two ambiguous 'window' columns
     val mergeKeys =
-      (if (anyWindow) Seq("window") else Nil) ++ groupFields
+      (if (windowed) Seq("window") else Nil) ++ groupFields
     val merged = perInput.reduceLeft { (a, b) =>
       if (mergeKeys.nonEmpty) a.join(b, mergeKeys, "full_outer")
       else a.crossJoin(b)
@@ -553,53 +381,238 @@ object AggregationTransform {
         Map("__agg" -> routed(cfg.name)))(cfg.name)
       routed.updated(cfg.name, limited)
     }.getOrElse(routed)
-    // discarding-pane recipe (PaneRecipes): a single-input streaming
-    // aggregation also registers how to redo itself over a BATCH of
-    // raw input — StreamRunner uses it to emit true Beam discarding
-    // panes (each pane = aggregate of only the elements since the
-    // last firing) by re-aggregating each micro-batch instead of
-    // running a stateful streaming aggregate. Multi-input merges and
+    // pane recipe (PaneRecipes): a single-input streaming aggregation
+    // also registers how to redo itself over a BATCH of raw input —
+    // this same aggregate() over the batch, grouped with the
+    // streaming window encoding, so pane rows are the rows the
+    // streaming aggregate itself would emit. Multi-input merges and
     // post-agg limits have no per-pane semantics, so they simply
-    // don't register and a discarding sink fails actionably.
+    // don't register and a pane sink fails actionably.
     if (merged.isStreaming && defs.size == 1 && cfg.param("limit").isEmpty) {
       val d = defs.head
-      val raw = inputs(d.str("input").getOrElse(cfg.inputs.head))
-      val reAgg: DataFrame => DataFrame = { batch =>
-        val wc = strategyNode.flatMap { st =>
-          graft.streaming.Strategy.eventTimeCol(batch, st)
-            .flatMap(t => graft.streaming.Strategy.windowGroup(st, t,
-              streaming = false))
-        }
-        val gcols =
-          wc.map(_.column.as("window")).toSeq ++ groupFields.map(col)
-        val acols = d.arrOf("fields")
-          .filterNot(_.bool("ignore").getOrElse(false))
-          .map(AggregationCompiler.compile(_, batch.schema))
-        val agged =
-          if (gcols.nonEmpty)
-            batch.groupBy(gcols: _*).agg(acols.head, acols.tail: _*)
-          else batch.agg(acols.head, acols.tail: _*)
-        TransformCommon.finishRouted(
-          wc.map(_.post(agged)).getOrElse(agged), cfg)(cfg.name)
-      }
-      // calendar buckets re-aggregate to a SCALAR start column; hand
-      // the pane engines this aggregation's OWN end derivation
-      // (calendarEndOf covers every shape: simple units, anchored,
-      // N-unit, week-offset) so they can rebuild the {start, end}
-      // struct their frontier bookkeeping keys on
-      val windowEndOf = strategyNode
-        .filter(st => st("window").getOrElse(st).str("type")
-          .contains("calendar"))
-        .map(st => (c: org.apache.spark.sql.Column) =>
-          graft.streaming.Strategy.calendarEndOf(st, c))
-      graft.streaming.PaneRecipes.register(result(cfg.name), raw, reAgg,
-        keys = groupFields, windowEndOf = windowEndOf,
-        elementEndOf = strategyNode.flatMap(
-          graft.streaming.Strategy.elementRetainEnd),
-        elementGrid = strategyNode.flatMap(
-          graft.streaming.Strategy.endGrid))
+      graft.ops.CacheTracker.registerRecipe(
+        result(cfg.name).queryExecution.logical,
+        graft.streaming.PaneRecipes.Recipe(
+          preAgg = inputs(d.str("input").getOrElse(cfg.inputs.head)),
+          reAgg = batch => TransformCommon.finishRouted(
+            aggregate(batch, cfg, d, streaming = true), cfg)(cfg.name),
+          keys = groupFields, strategy = strategyNode))
     }
     result
+  }
+
+  private def strategyOf(cfg: ModuleCfg): Option[Node] =
+    cfg.node("strategy").orElse(cfg.param("strategy"))
+
+  /** The strategy's window type unless global (absent = global). */
+  private def declaredWindow(st: Node): Option[String] =
+    st("window").getOrElse(st).str("type").filter(_ != "global")
+
+  private def fieldsOf(d: Node): Seq[Node] =
+    d.arrOf("fields").filterNot(_.bool("ignore").getOrElse(false))
+
+  private def combinerOf(cfg: ModuleCfg): Option[String] =
+    strategyOf(cfg).flatMap(_.str("timestampCombiner")).map(_.toUpperCase)
+
+  /** The aggregation's config checks, run once at build. */
+  private def validate(cfg: ModuleCfg, inputCount: Int,
+      windowed: Boolean): Unit = {
+    combinerOf(cfg).foreach { c =>
+      require(Set("EARLIEST", "LATEST", "END_OF_WINDOW")(c),
+        s"timestampCombiner: $c (valid: EARLIEST, LATEST, " +
+          "END_OF_WINDOW)")
+      require(inputCount == 1,
+        "timestampCombiner requires a single-input aggregation " +
+          "(multi-input merges have no per-element timestamp)")
+      require(windowed,
+        "timestampCombiner requires a non-global window with a " +
+          "resolvable event time")
+    }
+    val groupMode = cfg.params.str("groupType")
+    val sets = cfg.params.arrOf("groupingSets").map(_.elems.map(_.asText))
+    if (groupMode.exists(_ != "groupBy") || sets.nonEmpty) {
+      require(!windowed,
+        s"aggregation ${cfg.name}: groupType/groupingSets cannot " +
+          "combine with a window strategy (subtotal rows have no " +
+          "single window)")
+      require(inputCount == 1,
+        s"aggregation ${cfg.name}: groupType/groupingSets require " +
+          "a single-input aggregation (subtotal rows cannot merge " +
+          "on the full group key)")
+      groupMode match {
+        case Some("rollup") | Some("cube") =>
+        case None | Some("groupingSets") =>
+          require(sets.nonEmpty,
+            s"aggregation ${cfg.name}: groupingSets requires a " +
+              "non-empty list of group-field subsets")
+          val groupFields = cfg.params.strArr("groupFields")
+          sets.flatten.foreach(f => require(groupFields.contains(f),
+            s"aggregation ${cfg.name}: groupingSets field '$f' " +
+              s"is not in groupFields ${groupFields.mkString(",")}"))
+        case Some(other) => throw new IllegalArgumentException(
+          s"aggregation ${cfg.name}: groupType '$other' (valid: " +
+            "groupBy, rollup, cube, groupingSets)")
+      }
+    }
+  }
+
+  /** One input's aggregation: watermark, event-time column, window
+    * group, group columns, compiled fields, timestampCombiner stamp,
+    * grouping sets, the distinct/percentile split and the window's
+    * post-projection. `streaming` picks the window encoding
+    * ([[graft.streaming.Strategy.windowGroup]]): `build` passes
+    * whether the input streams; the pane recipe passes true for each
+    * micro-batch, so a pane groups its windows — calendar buckets
+    * included — exactly as the streaming aggregate does. */
+  private def aggregate(df0: DataFrame, cfg: ModuleCfg, d: Node,
+      streaming: Boolean): DataFrame = {
+    val groupFields = cfg.params.strArr("groupFields")
+    val strategyNode = strategyOf(cfg)
+    var df = df0
+    var tsCol: Option[Column] = None
+    val windowCol = strategyNode.flatMap { st =>
+      // watermark first: it casts the ts field to TimestampType in
+      // place, so the window then references the bare watermarked
+      // attribute (a cast wrapper would break watermark tracking)
+      df = graft.streaming.Strategy.applyWatermark(df, st,
+        st.str("timestampField").getOrElse("__event_time"))
+      val ts = graft.streaming.Strategy.eventTimeCol(df, st)
+      tsCol = ts
+      // a declared non-global window with no resolvable event time
+      // must fail loudly: silently dropping it would collapse all
+      // time buckets into one global group with plausible numbers
+      val declared = declaredWindow(st)
+      if (ts.isEmpty && declared.isDefined)
+        throw new IllegalArgumentException(
+          s"aggregation ${cfg.name}: strategy declares a " +
+            s"'${declared.get}' window but input " +
+            s"'${d.str("input").getOrElse(cfg.inputs.head)}' has no " +
+            "event time — set strategy.timestampField or provide " +
+            "an __event_time column")
+      ts.flatMap(t =>
+        graft.streaming.Strategy.windowGroup(st, t, streaming))
+    }
+    val groupCols =
+      windowCol.map(_.column.as("window")).toSeq ++ groupFields.map(col)
+    val fieldNodes = fieldsOf(d)
+    val aggCols = fieldNodes
+      .map(AggregationCompiler.compile(_, df.schema))
+    // timestampCombiner (reference Strategy.java:72-73, Beam
+    // TimestampCombiner): stamps the aggregate's OUTPUT event time
+    // as `__event_time`, which downstream modules pick up for
+    // re-windowing. EARLIEST/LATEST aggregate the input timestamps
+    // alongside the declared fields; END_OF_WINDOW is the window's
+    // max timestamp (end − 1 ms, Beam's maxTimestamp — window.end
+    // itself belongs to the NEXT window). Unset = no stamp, the
+    // window struct stays the only time authority.
+    val combiner = combinerOf(cfg)
+    val extraAgg = combiner match {
+      case Some("EARLIEST") => Seq(min(tsCol.get).as("__event_time"))
+      case Some("LATEST") => Seq(max(tsCol.get).as("__event_time"))
+      case _ => Nil
+    }
+    val allAgg = aggCols ++ extraAgg
+    // parity-plus (SURVEY §2.6: "no grouping sets / cube / rollup
+    // anywhere in the reference", free on Catalyst): `groupType:
+    // rollup|cube` or explicit `groupingSets: [[a,b],[a],[]]`
+    // subtotal lattices in ONE pass over the input (Expand node —
+    // no per-level rescan), with `__grouping_id` disambiguating
+    // subtotal rows from genuine null group values
+    val groupMode = cfg.params.str("groupType")
+    val setsParam = cfg.params.arrOf("groupingSets")
+      .map(_.elems.map(_.asText))
+    val agged =
+      if (groupMode.exists(_ != "groupBy") || setsParam.nonEmpty) {
+        val grouped = groupMode match {
+          case Some("rollup") => df.rollup(groupCols: _*)
+          case Some("cube") => df.cube(groupCols: _*)
+          case _ => df.groupingSets(setsParam.map(_.map(col)), groupCols: _*)
+        }
+        val withGid = allAgg :+ grouping_id().as("__grouping_id")
+        grouped.agg(withGid.head, withGid.tail: _*)
+      } else {
+        // exact percentile/median object buffers must not ride the
+        // count_distinct Expand: with both in ONE aggregate, Spark
+        // keys the partial object aggregate by (group, gid,
+        // distinct-key) — the key count explodes past the
+        // object-hash fallback threshold and the whole expanded
+        // input sort-aggregates with percentile buffers (q80's
+        // plan: Expand ×3 over 600k rows into an ObjectHashAggregate
+        // keyed per l_partkey). With both classes present, compile
+        // the distinct ops as their OWN aggregate over the same
+        // grouping and join back on the null-safe group key: the
+        // percentile side keeps its natural per-group object
+        // aggregate (no Expand), the distinct side keeps its
+        // hash-only Expand, and the join pairs group-count-sized
+        // frames. Both classes are deterministic, so the result is
+        // value-identical (q80 re-proven against the oracle at both
+        // SFs). Batch only — a second streaming aggregate + join
+        // would be an illegal stream-stream shape.
+        def opOf(n: Node): String =
+          n.str("op").orElse(n.str("func")).getOrElse("")
+        def isDistinctOp(n: Node) = opOf(n) == "count_distinct"
+        def isObjOp(n: Node) = opOf(n) == "median" ||
+          (opOf(n) == "percentile" &&
+            !n.bool("approximate").getOrElse(false))
+        val split = !df.isStreaming &&
+          fieldNodes.exists(isDistinctOp) && fieldNodes.exists(isObjOp)
+        if (!split) {
+          if (groupCols.nonEmpty)
+            df.groupBy(groupCols: _*).agg(allAgg.head, allAgg.tail: _*)
+          else df.agg(allAgg.head, allAgg.tail: _*)
+        } else {
+          // each compiled aggregate gets a unique internal alias
+          // (r22 advice): with duplicate declared names (two
+          // unnamed count_distinct ops) a nameOf lookup on the
+          // joined sides would be ambiguous; positional aliases
+          // never collide, and the final select restores the
+          // declared names in spec order
+          val pairs = fieldNodes.zip(aggCols).zipWithIndex
+            .map { case ((n, c), i) => (n, c.as(s"__agg_$i"), i) }
+          val (dPairs, mPairs) = pairs.partition(p => isDistinctOp(p._1))
+          val mAgg = mPairs.map(_._2) ++ extraAgg
+          val dAgg = dPairs.map(_._2)
+          val keyNames =
+            (if (windowCol.isDefined) Seq("window") else Nil) ++
+              groupFields
+          val (a, b) =
+            if (groupCols.nonEmpty)
+              (df.groupBy(groupCols: _*).agg(mAgg.head, mAgg.tail: _*),
+                df.groupBy(groupCols: _*).agg(dAgg.head, dAgg.tail: _*))
+            else (df.agg(mAgg.head, mAgg.tail: _*),
+              df.agg(dAgg.head, dAgg.tail: _*))
+          val joined =
+            if (keyNames.isEmpty) a.crossJoin(b)
+            else a.join(b,
+              keyNames.map(k => a(k) <=> b(k)).reduce(_ && _),
+              "inner")
+          def nameOf(n: Node): String = n.str("name").getOrElse(opOf(n))
+          // restore the declared output order exactly: group keys,
+          // then every aggregate in spec order (from whichever side
+          // computed it), then the combiner stamp
+          val outCols = keyNames.map(a(_)) ++
+            pairs.map { case (n, _, i) =>
+              (if (isDistinctOp(n)) b(s"__agg_$i") else a(s"__agg_$i"))
+                .as(nameOf(n)) } ++
+            (if (extraAgg.nonEmpty) Seq(a("__event_time")) else Nil)
+          joined.select(outCols: _*)
+        }
+      }
+    // streaming calendar buckets post-project the session struct to
+    // the true bucket boundaries (identity for every other window)
+    val posted = windowCol.map(_.post(agged)).getOrElse(agged)
+    combiner match {
+      case Some("END_OF_WINDOW") =>
+        val isStruct = posted.schema("window").dataType
+          .isInstanceOf[org.apache.spark.sql.types.StructType]
+        val end =
+          if (isStruct) col("window.end")
+          else graft.streaming.Strategy.calendarEndOf(
+            strategyNode.get, col("window"))
+        posted.withColumn("__event_time",
+          end - expr("INTERVAL 1 MILLISECOND"))
+      case _ => posted
+    }
   }
 }
 

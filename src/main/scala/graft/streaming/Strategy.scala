@@ -123,14 +123,6 @@ object Strategy {
   final case class GroupWindow(column: Column,
       post: DataFrame => DataFrame = identity)
 
-  /** Window group Column for a strategy node, or None for global.
-    * Kept for callers/tests that only need the grouping column; the
-    * aggregation path uses [[windowGroup]] to also get the
-    * post-aggregation projection. */
-  def windowColumn(strategy: JsonNode, ts: Column,
-      streaming: Boolean = false): Option[Column] =
-    windowGroup(strategy, ts, streaming).map(_.column)
-
   def windowGroup(strategy: JsonNode, ts: Column,
       streaming: Boolean = false): Option[GroupWindow] = {
     val w = strategy("window").getOrElse(strategy)
@@ -168,89 +160,80 @@ object Strategy {
         // buckets of `unit` anchored at `startDate` (week: `offset`
         // is Beam's startDayOfWeek shift, applied as anchor+offset
         // days). The default (size 1, no anchor) keeps the cheaper
-        // date_trunc/fixed-window paths below — including their
-        // ISO-Monday week convention.
+        // date_trunc paths below — including their ISO-Monday week
+        // convention.
         val calSize = w.int("size").filter(_ > 0).getOrElse(1)
-        val calAnchor = w.str("startDate")
         val weekOff =
           if (unit == "week") w.int("offset").getOrElse(0) else 0
-        if (calSize != 1 || calAnchor.isDefined || weekOff != 0) {
-          val anchor = calAnchor.getOrElse("1970-01-01")
-          def bounds(c: Column): (Column, Column) =
-            calNBounds(c, unit, calSize, anchor, weekOff, tz)
-          if (!streaming) Some(GroupWindow(bounds(ts)._1.as("window_start")))
-          else {
-            val rules = java.time.ZoneId.of(tz).getRules
-            val now = java.time.Instant.now()
-            val fixedOffset = rules.isFixedOffset ||
-              (rules.getTransitionRules.isEmpty &&
-                rules.nextTransition(now) == null)
-            if ((unit == "day" || unit == "week") && fixedOffset) {
-              // day-based buckets in a fixed-offset zone are true
-              // fixed windows: span = size days, offset chosen so a
-              // boundary lands on the anchor's local midnight
-              val span = (if (unit == "week") 7L * calSize
-                else calSize.toLong) * 86400L
-              val tzOff = rules.getOffset(now).getTotalSeconds
-              val anchorUtc = java.time.LocalDate.parse(anchor)
-                .plusDays(weekOff).toEpochDay * 86400L - tzOff
-              val off = ((anchorUtc % span) + span) % span
-              Some(GroupWindow(window(ts, dur(span), dur(span), dur(off))))
-            } else
-              Some(dynamicCalendarSession(ts,
-                c => bounds(c)._1, c => bounds(c)._2))
-          }
-        } else if (streaming) {
+        val anchored =
+          calSize != 1 || w.str("startDate").isDefined || weekOff != 0
+        def bounds(c: Column): (Column, Column) =
+          calNBounds(c, unit, calSize,
+            w.str("startDate").getOrElse("1970-01-01"), weekOff, tz)
+        if (!streaming) {
+          val start =
+            if (anchored) bounds(ts)._1
+            else to_utc_timestamp(
+              date_trunc(truncUnit, from_utc_timestamp(ts, tz)), tz)
+          Some(GroupWindow(start.as("window_start")))
+        } else fixedCalendarGrid(w) match {
           // grouping by a bare date_trunc'd column loses the
           // watermark linkage (append mode then fails with a cryptic
           // Spark error). Two append-safe encodings instead:
           //  - day/week in a fixed-offset zone: true fixed windows
-          //    offset to local midnight / local Monday — same
+          //    with a boundary on the anchor's local midnight — same
           //    buckets, cheapest state (one window struct per key).
           //  - everything else (month/year anywhere; day/week in DST
-          //    zones): DYNAMIC-GAP session windows. Each event's gap
-          //    extends exactly to the end of its local calendar
-          //    bucket, so consecutive events of one bucket always
-          //    overlap and merge into a single session per bucket,
-          //    and an event of the next bucket can never reach back
-          //    across the boundary. The per-event boundary math runs
-          //    through from_utc/to_utc with full zone rules, so DST
-          //    transitions (23h/25h days, variable month lengths)
-          //    bucket identically to the batch date_trunc plan. The
-          //    session struct's end IS the bucket end; the start is
-          //    the first event's time, so `post` rewrites the struct
-          //    to the true bucket boundaries after the aggregation.
-          val rules = java.time.ZoneId.of(tz).getRules
-          val now = java.time.Instant.now()
-          // "effectively fixed": no DST rules and no scheduled offset
-          // change ahead — Asia/Tokyo (last transition 1951) counts
-          val fixedOffset = rules.isFixedOffset ||
-            (rules.getTransitionRules.isEmpty &&
-              rules.nextTransition(now) == null)
-          (unit, fixedOffset) match {
-            case ("day", true) =>
-              val tzOff = rules.getOffset(now).getTotalSeconds
-              val off = ((86400 - tzOff) % 86400 + 86400) % 86400
-              Some(GroupWindow(window(ts, "1 day", "1 day", dur(off))))
-            case ("week", true) => // epoch was a Thursday; Monday = +4d
-              val tzOff = rules.getOffset(now).getTotalSeconds
-              val wk = 7 * 86400
-              val off = ((4 * 86400 - tzOff) % wk + wk) % wk
-              Some(GroupWindow(window(ts, "7 days", "7 days", dur(off))))
-            case _ =>
-              Some(dynamicCalendarSession(ts,
-                c => to_utc_timestamp(
-                  date_trunc(truncUnit, from_utc_timestamp(c, tz)), tz),
-                c => calendarBucketEnd(c, truncUnit, tz)))
-          }
-        } else {
-          val local = from_utc_timestamp(ts, tz)
-          Some(GroupWindow(
-            to_utc_timestamp(date_trunc(truncUnit, local), tz)
-              .as("window_start")))
+          //    zones): DYNAMIC-GAP session windows, see
+          //    dynamicCalendarSession.
+          case Some((span, off)) =>
+            Some(GroupWindow(window(ts, dur(span), dur(span), dur(off))))
+          case None if anchored =>
+            Some(dynamicCalendarSession(ts,
+              c => bounds(c)._1, c => bounds(c)._2))
+          case None =>
+            Some(dynamicCalendarSession(ts,
+              c => to_utc_timestamp(
+                date_trunc(truncUnit, from_utc_timestamp(c, tz)), tz),
+              c => calendarBucketEnd(c, truncUnit, tz)))
         }
       case other =>
         throw new IllegalArgumentException(s"window type: $other")
+    }
+  }
+
+  /** `(span, offset)` seconds of the fixed `window()` whose buckets
+    * are a calendar day/week strategy's buckets, when its zone's UTC
+    * offset has not changed since the Unix epoch (UTC, "+09:00",
+    * Asia/Tokyo — last change 1951): spans of size days or weeks,
+    * a boundary on the anchor's local midnight (the default week
+    * starts on ISO Monday, 1970-01-05 being one). The streaming
+    * grouping and the exact-pane retention horizon
+    * ([[elementRetainEnd]]) both take this grid, so a pane's window
+    * end is always one of the engine's horizons. None for month and
+    * year, for zones with DST rules, and for zones whose offset
+    * changed since 1970 (America/Sao_Paulo until 2019,
+    * Europe/Moscow until 2014): a bucket there needs the zone's full
+    * history, which only the dynamic-gap session encoding follows. */
+  private def fixedCalendarGrid(w: JsonNode): Option[(Long, Long)] = {
+    val unit = w.str("unit").getOrElse("day")
+    val rules =
+      java.time.ZoneId.of(w.str("timezone").getOrElse("UTC")).getRules
+    val fixedSinceEpoch = rules.isFixedOffset ||
+      (rules.getTransitionRules.isEmpty &&
+        rules.nextTransition(java.time.Instant.EPOCH) == null)
+    if ((unit != "day" && unit != "week") || !fixedSinceEpoch) None
+    else {
+      val size = w.int("size").filter(_ > 0).getOrElse(1)
+      val weekOff = if (unit == "week") w.int("offset").getOrElse(0) else 0
+      val anchor = w.str("startDate").getOrElse(
+        if (unit == "week" && size == 1 && weekOff == 0) "1970-01-05"
+        else "1970-01-01")
+      val span = (if (unit == "week") 7L * size else size.toLong) * 86400L
+      val tzOff = rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds
+      val anchorUtc = java.time.LocalDate.parse(anchor)
+        .plusDays(weekOff).toEpochDay * 86400L - tzOff
+      Some((span, Math.floorMod(anchorUtc, span)))
     }
   }
 
@@ -259,7 +242,10 @@ object Strategy {
     * exactly to the end of the event's bucket, so consecutive events
     * of one bucket always overlap and merge into a single session,
     * and an event of the next bucket can never reach back across the
-    * boundary.
+    * boundary. The per-event boundary math runs through
+    * from_utc/to_utc with full zone rules, so DST transitions
+    * (23h/25h days, variable month lengths) and historical offset
+    * changes bucket identically to the batch date_trunc plan.
     *
     * The gap is the (fractional) seconds from the event to its
     * bucket end — always > 0 (an event ON the boundary belongs to
@@ -372,27 +358,29 @@ object Strategy {
     * loudly). */
   def elementRetainEnd(strategy: JsonNode): Option[DataFrame => Column] = {
     val w = strategy("window").getOrElse(strategy)
+    def atEvent(end: Column => Column): DataFrame => Column =
+      df => eventTimeCol(df, strategy) match {
+        case Some(t) => end(t)
+        case None => lit(null).cast("long")
+      }
+    def gridEnd(size: Long, period: Long, off: Long) = atEvent(t =>
+      floor((t.cast("long") - lit(off)).cast("double") /
+        lit(period)).cast("long") * lit(period) + lit(off + size))
     w.str("type").getOrElse("global") match {
       case wt @ ("fixed" | "sliding") =>
         seconds(w, "size").filter(_ > 0).map { size =>
           val period =
             if (wt == "fixed") size
             else seconds(w, "period").filter(_ > 0).getOrElse(size)
-          val off = seconds(w, "offset").getOrElse(0L)
-          df => eventTimeCol(df, strategy) match {
-            case Some(t) =>
-              (floor((t.cast("long") - lit(off)).cast("double") /
-                lit(period)).cast("long") * lit(period) +
-                lit(off + size))
-            case None => lit(null).cast("long")
-          }
+          gridEnd(size, period, seconds(w, "offset").getOrElse(0L))
         }
       case "calendar" =>
-        // calendarEndOf derives the bucket CONTAINING its argument,
-        // so the raw event time works directly (no start needed)
-        Some(df => eventTimeCol(df, strategy) match {
-          case Some(t) => calendarEndOf(strategy, t).cast("long")
-          case None => lit(null).cast("long")
+        // the streaming grouping's own end: its fixed grid when it
+        // has one, else calendarEndOf, which derives the bucket
+        // CONTAINING its argument (the raw event time works directly)
+        Some(fixedCalendarGrid(w) match {
+          case Some((span, off)) => gridEnd(span, span, off)
+          case None => atEvent(calendarEndOf(strategy, _).cast("long"))
         })
       case _ => None
     }

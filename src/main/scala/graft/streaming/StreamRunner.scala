@@ -192,41 +192,7 @@ object StreamRunner {
   /** Window-end column of a pane batch, if windowed. */
   private def windowEndCol(batch: DataFrame): Option[Column] =
     if (batch.columns.contains("window")) Some(col("window.end"))
-    else if (batch.columns.contains("window_start"))
-      Some(col("window_start")) // calendar windows: start stands in
     else None
-
-  /** The batch re-aggregation the pane engines run renders calendar
-    * buckets as a SCALAR start timestamp aliased `window` (the batch
-    * group column — gates read it as a date), while pane
-    * frontier/fired/ordinal bookkeeping keys on `window.end`.
-    * Rebuild the {start, end} struct with the END derivation the
-    * RECIPE carries — computed from the aggregation's own strategy
-    * at registration (the sink's strategy wins trigger/mode
-    * precedence but need not declare the window), covering every
-    * calendar shape via Strategy.calendarEndOf (simple, anchored,
-    * N-unit, week-offset). Fixed/sliding/session re-aggregations
-    * already emit the struct and pass through untouched; a scalar
-    * window with no recipe derivation fails loudly rather than
-    * mis-keying panes. */
-  private def paneReAgg(cfg: ModuleCfg,
-      recipe: PaneRecipes.Recipe): DataFrame => DataFrame = {
-    df0 => {
-      val df = recipe.reAgg(df0)
-      if (!df.columns.contains("window") ||
-          df.schema("window").dataType
-            .isInstanceOf[org.apache.spark.sql.types.StructType]) df
-      else recipe.windowEndOf match {
-        case Some(endOf) => df.withColumn("window",
-          struct(col("window").as("start"),
-            endOf(col("window")).as("end")))
-        case None => throw new IllegalArgumentException(
-          s"${cfg.name}: pane multiplexing cannot derive window " +
-            "ends for this window shape — use fixed/sliding/" +
-            "calendar windows on the aggregation, or a plain trigger")
-      }
-    }
-  }
 
   /** Beam `AfterWatermark.pastEndOfWindow().withEarlyFirings(...)
     * [.withLateFirings(...)]` approximation
@@ -314,9 +280,8 @@ object StreamRunner {
         "post-aggregation limit, or use 'accumulating'",
       "discarding") { rq =>
       import rq._
-      val reAgg = paneReAgg(cfg, recipe)
       (batch, id) => {
-        val agged = reAgg(batch)
+        val agged = recipe.reAgg(batch)
         windowEndCol(agged) match {
           case None => // global window: every firing is early
             paneWriter(cfg, "early")(agged, id)
@@ -389,8 +354,8 @@ object StreamRunner {
       engine: RecipeQuery => (DataFrame, Long) => Unit)
       : StreamingQuery = {
     requirePaneSink(cfg)
-    val recipe = PaneRecipes.lookup(df).getOrElse(
-      throw new IllegalArgumentException(noRecipe))
+    val recipe = graft.ops.CacheTracker.recipe(df.queryExecution.logical)
+      .getOrElse(throw new IllegalArgumentException(noRecipe))
     val st = new PaneState
     val ckpt = checkpoint(cfg)
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
@@ -621,7 +586,10 @@ object StreamRunner {
               s"${cfg.name}: storage pane sink requires output/path"))))
       }
       val storeDir = ckpt + "/acc-elements"
-      val reAgg = paneReAgg(cfg, recipe)
+      // the aggregation's own window: element retention horizon and
+      // window-end grid (None for a global window)
+      val elementEndOf = recipe.strategy.flatMap(Strategy.elementRetainEnd)
+      val elementGrid = recipe.strategy.flatMap(Strategy.endGrid)
       def partsIn(d: java.io.File): Array[java.io.File] =
         ls(d).filter(_.getName.endsWith(".parquet"))
 
@@ -823,9 +791,9 @@ object StreamRunner {
         // separate distinct+collect job over the re-aggregated batch
         // (measured 0.6 s/firing at sf0.1) is redundant.
         val obsEnds =
-          recipe.elementGrid.map(_ => new org.apache.spark.sql.Observation())
+          elementGrid.map(_ => new org.apache.spark.sql.Observation())
         var obsWends: Option[Array[Long]] = None
-        recipe.elementEndOf match {
+        elementEndOf match {
           case Some(endOf) =>
             // task-parallel partitioned write: up to (tasks ×
             // open horizons) files per batch, all short-lived
@@ -863,13 +831,13 @@ object StreamRunner {
             batch.write.mode("overwrite")
               .parquet(storeDir + s"/__gbatch=$batchId")
         }
-        val touched = reAgg(batch).persist()
+        val touched = recipe.reAgg(batch).persist()
         pinned += touched
         // the store's schema is statically known (batch columns +
         // the partition dirs) — passing it skips the per-batch
         // footer-sampling job parquet schema inference runs over
         // an ever-changing directory set
-        val storeSchema = recipe.elementEndOf match {
+        val storeSchema = elementEndOf match {
           case Some(_) => batch.schema
             .add("__wend", org.apache.spark.sql.types.LongType)
             .add("__gbatch", org.apache.spark.sql.types.LongType)
@@ -884,7 +852,7 @@ object StreamRunner {
           case None =>
             // global window: every firing is a cumulative early pane
             emitWithIndex(
-              reAgg(storedAll()).withColumn("__pane", lit("early")),
+              recipe.reAgg(storedAll()).withColumn("__pane", lit("early")),
               recipe.keys, batchId)
           case Some(_) =>
             val fPrev = st.frontier
@@ -897,7 +865,7 @@ object StreamRunner {
             // {h − j·period, 0 ≤ j < k} (Strategy.endGrid) — the
             // union over observed horizons IS the touched-end set
             def gridEnds(h: Long): Seq[Long] = {
-              val (period, k) = recipe.elementGrid.get
+              val (period, k) = elementGrid.get
               (0 until k).map(h - _ * period)
             }
             val tEnds = obsWends match {
@@ -917,7 +885,7 @@ object StreamRunner {
             // frontier crossing closes windows: ON_TIME pane for
             // ALL keys of each newly closed window (fires without
             // new elements, like Beam's watermark-close pane).
-            val (aggedAll, closingEnds) = recipe.elementGrid match {
+            val (aggedAll, closingEnds) = elementGrid match {
               case Some((period, k)) =>
                 // the horizon partitions on disk determine EVERY
                 // candidate window end through the grid (each
@@ -943,12 +911,12 @@ object StreamRunner {
                 val pruned =
                   if (needed.isEmpty) raw.where(lit(false))
                   else raw.where(col("__wend").isin(needed: _*))
-                (reAgg(pruned.drop("__gbatch", "__wend")), closing)
+                (recipe.reAgg(pruned.drop("__gbatch", "__wend")), closing)
               case None =>
                 // sliding windows whose size is not a period
                 // multiple: no grid, so re-aggregate the whole store
                 // and read the candidates off the result
-                val a = reAgg(storedAll())
+                val a = recipe.reAgg(storedAll())
                 val aEnd = windowEndCol(a).get.cast("long")
                 val retEnds =
                   (if (fPrev == java.lang.Long.MIN_VALUE) a
@@ -960,8 +928,7 @@ object StreamRunner {
                   e * 1000L < fNew && !fired.contains(e)))
             }
             val endSec = windowEndCol(aggedAll).get.cast("long")
-            val keyCols = (Seq("window", "window_start")
-              .filter(aggedAll.columns.contains) ++ recipe.keys).distinct
+            val keyCols = "window" +: recipe.keys
             // expired-window drop, same rule as the discarding
             // engine (on the grid path the dirs were already
             // compacted to it — this is the defensive second guard)

@@ -12,9 +12,9 @@ class CalendarAnchorSpec extends AnyFunSuite {
 
   private def winCol(strategyJson: String,
       df: org.apache.spark.sql.DataFrame) =
-    graft.streaming.Strategy.windowColumn(
+    graft.streaming.Strategy.windowGroup(
       graft.config.Json.parse(strategyJson),
-      graft.streaming.Strategy.toTimestamp(df, "ts")).get
+      graft.streaming.Strategy.toTimestamp(df, "ts")).map(_.column).get
 
   private def evDf = {
     val df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.time.{Instant, LocalDate, ZoneId}
 
 /** Property check: the engine's anchored N-unit calendar bucket
-  * arithmetic (Strategy.calNBounds, exercised through windowColumn)
+  * arithmetic (Strategy.calNBounds, exercised through windowGroup)
   * must agree with an independent java.time implementation for
   * random timestamps × zones × units × sizes × anchors — including
   * DST zones with 23h/25h days and a 30-minute-offset zone. */
@@ -65,7 +65,7 @@ class CalendarPropertySpec extends AnyFunSuite {
              "size": $size, "startDate": "$anchor",
              "timezone": "$tz"}}""")
       val w = graft.streaming.Strategy
-        .windowColumn(strategy, col("ts")).get
+        .windowGroup(strategy, col("ts")).map(_.column).get
       val got = df.select(col("ts"), w.as("w")).collect()
         .map(r => r.getTimestamp(0).toInstant ->
           r.getTimestamp(1).toInstant).toMap
@@ -78,7 +78,8 @@ class CalendarPropertySpec extends AnyFunSuite {
     }
   }
 
-  /** Pins calendarEndOf (the pane engines' bucket-END derivation,
+  /** Pins calendarEndOf (the bucket-END derivation behind the exact
+    * pane engine's retention horizon and END_OF_WINDOW,
     * local wall-time interval addition) at BOTH DST transitions in
     * two zones: the spring-forward 23h day must still end at the
     * next local midnight (one UTC hour early), the fall-back 25h day
@@ -121,13 +122,13 @@ class CalendarPropertySpec extends AnyFunSuite {
       1577836800L + (rnd.nextDouble() * 4 * 365.25 * 86400).toLong))
     val df = instants.map(i => java.sql.Timestamp.from(i)).toDF("ts")
     for (unit <- Seq("day", "month", "year"); tz <- zones) {
-      val legacy = graft.streaming.Strategy.windowColumn(
+      val legacy = graft.streaming.Strategy.windowGroup(
         graft.config.Json.parse(s"""{"window": {"type": "calendar",
-          "unit": "$unit", "timezone": "$tz"}}"""), col("ts")).get
-      val general = graft.streaming.Strategy.windowColumn(
+          "unit": "$unit", "timezone": "$tz"}}"""), col("ts")).map(_.column).get
+      val general = graft.streaming.Strategy.windowGroup(
         graft.config.Json.parse(s"""{"window": {"type": "calendar",
           "unit": "$unit", "timezone": "$tz", "size": 1,
-          "startDate": "1970-01-01"}}"""), col("ts")).get
+          "startDate": "1970-01-01"}}"""), col("ts")).map(_.column).get
       // explicit size/startDate routes through calNBounds; the
       // defaults route through date_trunc — same buckets required
       val bad = df.select(legacy.as("a"), general.as("b"))

@@ -39,7 +39,7 @@ class RetainEndPropertySpec extends AnyFunSuite {
       val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
       // the window() grouping's own end for each element
       val w = graft.streaming.Strategy
-        .windowColumn(st, col("ts")).get
+        .windowGroup(st, col("ts")).map(_.column).get
       val bad = df
         .withColumn("__h", horizon(df))
         .withColumn("__w", w)
@@ -63,7 +63,7 @@ class RetainEndPropertySpec extends AnyFunSuite {
       val df = tsFrame(200, rnd.nextInt())
       val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
       val w = graft.streaming.Strategy
-        .windowColumn(st, col("ts")).get
+        .windowGroup(st, col("ts")).map(_.column).get
       val bad = df
         .withColumn("__h", horizon(df))
         .withColumn("__w", w)
@@ -165,5 +165,40 @@ class RetainEndPropertySpec extends AnyFunSuite {
       """{"timestampField": "ts", "window": {"type": "sliding",
           "size": 500, "period": 180}}""")
     assert(graft.streaming.Strategy.endGrid(odd).isEmpty)
+  }
+
+  /** The exact-pane engine keeps an element until its horizon and
+    * fires only windows whose end is a horizon, so the streaming
+    * grouping's window end must BE the horizon — in zones whose UTC
+    * offset changed within the data's years too (a fixed window at
+    * today's offset would end an hour off the zone-history bucket
+    * end, and its panes would never fire). */
+  test("calendar buckets: horizon == the streaming grouping's window " +
+      "end, across historical offset changes") {
+    val zones = Seq(
+      "America/Sao_Paulo" -> "2018-10-01T00:00:00Z", // DST until 2019
+      "Europe/Moscow" -> "2014-06-01T00:00:00Z",     // +4 until 2014-10
+      "Asia/Tokyo" -> "2024-01-01T00:00:00Z",
+      "UTC" -> "2024-01-01T00:00:00Z")
+    for ((tz, from) <- zones; unit <- Seq("day", "week")) {
+      val st = strategy(
+        s"""{"timestampField": "ts", "window": {"type": "calendar",
+             "unit": "$unit", "timezone": "$tz"}}""")
+      val base = java.time.Instant.parse(from).getEpochSecond
+      val rnd = new scala.util.Random(tz.hashCode ^ unit.hashCode)
+      val df = (1 to 200).map(_ => base + (rnd.nextDouble() * 180 * 86400).toLong)
+        .toDF("sec").withColumn("ts", col("sec").cast("timestamp"))
+      val gw = graft.streaming.Strategy
+        .windowGroup(st, col("ts"), streaming = true).get
+      val ends = gw.post(df.groupBy(col("sec"), gw.column.as("window"))
+        .count())
+        .select(col("sec"), col("window.end").cast("long").as("__e"))
+      val horizon = graft.streaming.Strategy.elementRetainEnd(st).get
+      val bad = df.withColumn("__h", horizon(df))
+        .join(ends, "sec")
+        .filter(col("__h") =!= col("__e"))
+        .count()
+      assert(bad == 0, s"tz=$tz unit=$unit: $bad horizon mismatches")
+    }
   }
 }

@@ -28,16 +28,16 @@ class ReviewFixesSpec extends AnyFunSuite {
     // fixed windows still honor unit as a multiplier
     val fixedNode = Json.parse(
       """{"window": {"type": "fixed", "unit": "hour", "size": 6}}""")
-    val w = Strategy.windowColumn(fixedNode, col("ts")).get
+    val w = Strategy.windowGroup(fixedNode, col("ts")).map(_.column).get
     assert(w.toString.contains("21600"), w.toString)
   }
 
   test("sliding window missing period raises a pointed error") {
     import graft.streaming.Strategy
     val e = intercept[IllegalArgumentException] {
-      Strategy.windowColumn(
+      Strategy.windowGroup(
         Json.parse("""{"window": {"type": "sliding", "size": "1h"}}"""),
-        col("ts"))
+        col("ts")).map(_.column)
     }
     assert(e.getMessage.contains("sliding window requires period"))
   }

@@ -71,9 +71,9 @@ class StreamFileSinkSpec extends AnyFunSuite {
       + "a zero-width window") {
     import graft.streaming.Strategy
     import graft.config.Json
-    def win(sz: String) = Strategy.windowColumn(
+    def win(sz: String) = Strategy.windowGroup(
       Json.parse(s"""{"window": {"type": "fixed", "size": $sz}}"""),
-      org.apache.spark.sql.functions.col("ts"))
+      org.apache.spark.sql.functions.col("ts")).map(_.column)
     assert(win("60").isDefined)          // numeric + default unit
     assert(win("\"90s\"").isDefined)     // literal with unit
     assert(win("\"5m\"").isDefined)

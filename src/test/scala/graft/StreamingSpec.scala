@@ -1632,7 +1632,7 @@ class StreamingSpec extends AnyFunSuite {
     * derivation through the pane engines: the bucket start is NOT an
     * ISO Monday, so deriving the end as date_trunc(WEEK, start)+7d
     * (the simple-unit formula) would mis-key the frontier — the
-    * recipe's calendarEndOf must yield end = start + 7 days
+    * pane re-aggregation's window must yield end = start + 7 days
     * exactly. */
   test("exactPanes over week-offset calendar buckets: anchored ends " +
       "(start + 7d), cumulative panes") {
@@ -1697,9 +1697,79 @@ class StreamingSpec extends AnyFunSuite {
     StreamRunner.stopAll()
   }
 
+  /** America/Sao_Paulo kept DST until 2019 (December 2018 ran at
+    * -02:00, today's offset is -03:00): a day bucket there follows
+    * the zone's history, in the streaming grouping and in the exact
+    * engine's horizons alike. A fixed window at today's offset would
+    * give each pane an end no horizon matches, and no pane would
+    * fire; it would also put 02:30Z on Dec 11 into the Dec 10 bucket. */
+  test("exactPanes over calendar days in a zone whose offset changed " +
+      "since the data: panes fire in the zone-history buckets") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-accsp")
+      .toString
+    def at(iso: String) = java.time.Instant.parse(iso).getEpochSecond
+    stageParquet(dir, "b1", Seq((1L, at("2018-12-10T10:00:00Z"), 3.0)))
+    StreamRunner.paneStore.remove("sppanes")
+    Pipeline.execute(spark, s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |  - name: agg
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy:
+      |      mode: accumulating
+      |      exactPanes: true
+      |      timestampField: ts
+      |      window: {type: calendar, unit: day, timezone: America/Sao_Paulo, allowedLateness: 24}
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger:
+      |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+      |    parameters:
+      |      groupFields: []
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: s, op: sum, field: value}
+      |sinks:
+      |  - name: sppanes
+      |    module: memory
+      |    input: agg
+      |    parameters: {checkpointLocation: $dir/ckpt}
+      |""".stripMargin)
+    StreamRunner.drainAll()
+    def all(): List[(String, Long, Long, Double)] =
+      StreamRunner.paneStore.get("sppanes") match {
+        case null => Nil
+        case buf => buf.toList.map { case (tag, r) =>
+          val w = r.getAs[org.apache.spark.sql.Row]("window")
+          (tag, w.getAs[java.sql.Timestamp]("start").getTime / 1000,
+            w.getAs[java.sql.Timestamp]("end").getTime / 1000,
+            r.getAs[Double]("s"))
+        }
+      }
+    // local midnight at -02:00 is 02:00Z
+    val dec10 = at("2018-12-10T02:00:00Z")
+    val dec11 = at("2018-12-11T02:00:00Z")
+    val dec12 = at("2018-12-12T02:00:00Z")
+    assert(all().contains(("early", dec10, dec11, 3.0)), all())
+    stageParquet(dir, "b2", Seq((2L, at("2018-12-10T20:00:00Z"), 2.0)))
+    StreamRunner.drainAll()
+    assert(all().contains(("early", dec10, dec11, 5.0)), all())
+    // 00:30 local on Dec 11: the next bucket, not a refinement of Dec 10
+    stageParquet(dir, "b3", Seq((3L, at("2018-12-11T02:30:00Z"), 4.0)))
+    StreamRunner.drainAll()
+    assert(all().contains(("early", dec11, dec12, 4.0)), all())
+    assert(!all().exists(t => t._2 == dec10 && t._4 == 9.0), all())
+    StreamRunner.stopAll()
+  }
+
   /** The sink's strategy wins trigger/mode precedence but need not
-    * re-declare the WINDOW — the recipe carries the aggregation's
-    * own calendar end derivation, so a sink-level discarding block
+    * re-declare the WINDOW — the recipe groups with the
+    * aggregation's own strategy, so a sink-level discarding block
     * over an upstream calendar-windowed aggregation works. */
   test("discarding panes with the strategy split across modules: " +
       "agg declares the calendar window, sink declares mode+trigger") {
@@ -1739,6 +1809,64 @@ class StreamingSpec extends AnyFunSuite {
       |""".stripMargin)
     StreamRunner.drainAll()
     val rows = StreamRunner.paneStore.get("splitpanes") match {
+      case null => Nil
+      case buf => buf.toList.map { case (tag, r) =>
+        (tag, r.getAs[org.apache.spark.sql.Row]("window")
+          .getAs[java.sql.Timestamp]("start").getTime / 1000,
+          r.getAs[Double]("s"))
+      }
+    }
+    assert(rows.contains(("early", 0L, 3.0)), rows)
+    StreamRunner.stopAll()
+  }
+
+  /** Pane recipes live on the run scope: a pane sink started by hand
+    * after `Pipeline.build` returned, with no scope around both, says
+    * where to start it; inside an enclosing scope the same calls
+    * start it. */
+  test("a pane sink started outside a run scope fails pointedly; " +
+      "inside an enclosing scope it starts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scoped")
+      .toString
+    stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
+    StreamRunner.paneStore.remove("scopedpanes")
+    val strategy = """{"mode": "discarding", "timestampField": "ts",
+      "window": {"type": "fixed", "size": 21600},
+      "trigger": {"type": "afterWatermark", "earlyFiringTrigger":
+        {"type": "afterProcessingTime", "pastFirstElementDelay": 1}}}"""
+    val config = s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |  - name: agg
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy: ${strategy.replace("\n", " ")}
+      |    parameters:
+      |      groupFields: []
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: s, op: sum, field: value}
+      |""".stripMargin
+    val sink = Pipeline.ModuleCfg("scopedpanes", "memory", Seq("agg"), Nil,
+      graft.config.Json.parse(s"""{"checkpointLocation": "$dir/ckpt"}"""),
+      graft.config.Json.obj())
+    val st = Some(graft.config.Json.parse(strategy))
+    val built = Pipeline.build(spark, config)
+    val e = intercept[IllegalStateException] {
+      graft.operators.SinkExecutor.execute(spark, sink, built.get("agg"), st)
+    }
+    assert(e.getMessage.contains("must start inside a run"), e.getMessage)
+    val scope = graft.ops.CacheTracker.beginScope()
+    try {
+      val inScope = Pipeline.build(spark, config)
+      graft.operators.SinkExecutor.execute(spark, sink, inScope.get("agg"), st)
+      StreamRunner.drainAll()
+    } finally scope.close(release = true)
+    val rows = StreamRunner.paneStore.get("scopedpanes") match {
       case null => Nil
       case buf => buf.toList.map { case (tag, r) =>
         (tag, r.getAs[org.apache.spark.sql.Row]("window")
@@ -2378,5 +2506,153 @@ class StreamingSpec extends AnyFunSuite {
       ("early", 6 * h, 1L, 0L), ("early", 6 * h, 2L, 1L),
       ("onTime", 6 * h, 2L, 2L)), panes("period"))
     assert(panes("period") == panes("plain"))
+  }
+
+  /** A pane is the aggregation applied to a subset of the window's
+    * elements, so a pane row carries the aggregation's own
+    * timestampCombiner stamp: with EARLIEST, `__event_time` is the
+    * minimum event time over the pane's elements — the batch's
+    * elements for a discarding pane, every element of the window so
+    * far for an accumulating one. */
+  test("pane rows carry the aggregation's timestampCombiner stamp") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-combpanes")
+      .toString
+    val h = 3600L
+    val batches = Seq(
+      Seq(("a", 1 * h, 1.0), ("a", 3 * h, 2.0), ("b", 2 * h, 4.0),
+        ("a", 9 * h, 8.0)),
+      Seq(("a", 4 * h, 16.0), ("a", 7 * h, 32.0)))
+    val delay = "{type: afterProcessingTime, pastFirstElementDelay: " +
+      "200, pastFirstElementDelayUnit: millisecond}"
+    val modes = Seq("disc" -> "discarding", "acc" -> "accumulating")
+    val transforms = modes.map { case (name, mode) => s"""
+      |  - name: agg_$name
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy:
+      |      mode: $mode
+      |      exactPanes: ${mode == "accumulating"}
+      |      timestampField: ts
+      |      timestampCombiner: EARLIEST
+      |      allowedLateness: 24h
+      |      window: {type: fixed, unit: hour, size: 6}
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger: $delay
+      |        lateFiringTrigger: $delay
+      |    parameters:
+      |      groupFields: [k]
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: n, op: count}""" }
+    val sinks = modes.map { case (name, _) => s"""
+      |  - name: comb_$name
+      |    module: memory
+      |    input: agg_$name
+      |    parameters: {checkpointLocation: $dir/ckpt-$name}""" }
+    val config = (s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:""" + transforms.mkString + "\n|sinks:" +
+      sinks.mkString + "\n").stripMargin
+    modes.foreach { case (name, _) =>
+      StreamRunner.paneStore.remove(s"comb_$name") }
+    def rows(name: String): List[org.apache.spark.sql.Row] =
+      Option(StreamRunner.paneStore.get(s"comb_$name"))
+        .map(_.toList.map(_._2)).getOrElse(Nil)
+    // pane rows each batch appended, per sink
+    val perBatch = modes.map(_._1 -> scala.collection.mutable.ListBuffer
+      [List[org.apache.spark.sql.Row]]()).toMap
+    def drained(): Unit = {
+      StreamRunner.drainAll()
+      modes.foreach { case (name, _) =>
+        perBatch(name) += rows(name).drop(perBatch(name).map(_.size).sum)
+      }
+    }
+    stageKeyed(dir, "b0", batches.head)
+    try {
+      Pipeline.execute(spark, config)
+      drained()
+      stageKeyed(dir, "b1", batches(1))
+      drained()
+    } finally StreamRunner.stopAll()
+    modes.foreach { case (name, _) =>
+      perBatch(name).zipWithIndex.foreach { case (panes, i) =>
+        assert(panes.nonEmpty, s"$name: no pane in batch $i")
+        panes.foreach { r =>
+          assert(r.schema.fieldNames.contains("__event_time"),
+            s"$name pane row has no __event_time: ${r.schema}")
+          val end = r.getAs[org.apache.spark.sql.Row]("window")
+            .getAs[java.sql.Timestamp]("end").getTime / 1000
+          val k = r.getAs[String]("k")
+          val elements =
+            if (name == "disc") batches(i) else batches.take(i + 1).flatten
+          val want = elements.filter(e => e._1 == k &&
+            e._2 >= end - 6 * h && e._2 < end).map(_._2).min
+          assert(r.getAs[java.sql.Timestamp]("__event_time").getTime ==
+            want * 1000L, s"$name batch $i: $r")
+        }
+      }
+    }
+  }
+
+  /** Pane recipes live with the run: a pipeline with many streaming
+    * aggregations keeps every one of them, so a pane sink on the
+    * first still finds its recipe after 65 more registered. */
+  test("a pane recipe survives a pipeline with 66 streaming " +
+      "aggregations") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manyrecipes")
+      .toString
+    stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
+    val others = (2 to 66).map(i => s"""
+      |  - name: agg_$i
+      |    module: aggregation
+      |    inputs: [ev]
+      |    parameters:
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: n, op: count}""").mkString
+    val config = (s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |  - name: agg_1
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy:
+      |      mode: discarding
+      |      timestampField: ts
+      |      window: {type: fixed, unit: hour, size: 6}
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger:
+      |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+      |    parameters:
+      |      groupFields: []
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: s, op: sum, field: value}""" + others + s"""
+      |sinks:
+      |  - name: manypanes
+      |    module: memory
+      |    input: agg_1
+      |    parameters: {checkpointLocation: $dir/ckpt}
+      |""").stripMargin
+    StreamRunner.paneStore.remove("manypanes")
+    try {
+      Pipeline.execute(spark, config)
+      StreamRunner.drainAll()
+    } finally StreamRunner.stopAll()
+    val panes = Option(StreamRunner.paneStore.get("manypanes"))
+      .map(_.toList).getOrElse(Nil)
+    assert(panes.map { case (tag, r) => (tag, r.getAs[Double]("s")) } ==
+      List(("early", 3.0)), panes)
   }
 }
