@@ -2244,7 +2244,7 @@ transforms:
     // §2.9 ACCUMULATING accumulation, exact engine (exactPanes):
     // batches split at Jan 11 03:00 — INSIDE a 6h window — so the
     // [Jan 11 00:00, 06:00) window fires an early pane from batch 1
-    // and a cumulative ON_TIME pane when batch 2's frontier closes
+    // and a cumulative ON_TIME pane when batch 2's clock closes
     // it. Pane ordinals derive from the sink's own prior output.
     // the copyfile sink driven end-to-end: nation written as two
     // parquet shards, their runtime paths fed through the
@@ -2280,7 +2280,7 @@ sinks:
 
     // q82's pipeline with a FULL STOP + RESTART from the checkpoint
     // between the second and third staged batches: the exact-pane
-    // trigger state (frontier, fired windows, sliceMaxEnd) persists
+    // trigger state (event-time clock, fired windows) persists
     // as batch-stamped snapshots under the checkpoint, so the
     // restarted run must land on the IDENTICAL pane sequence the
     // q82 oracle derives from batch boundaries alone — the driver
@@ -2690,7 +2690,7 @@ sinks:
     // is 167 hours long, so the anchored local-date arithmetic
     // (calNBounds) must place its end one UTC hour early — the exact
     // class of the r15 week-offset mis-keying bug, now pinned
-    // through the pane engines' frontier/ordinal bookkeeping.
+    // through the pane engines' clock/ordinal bookkeeping.
     "q172_calendar_weekoffset_panes" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions.{col, round, expr}
       val base = graft.ops.FsUtil.scratchDir("graft_q172_")
@@ -8937,26 +8937,36 @@ transforms:
 
   /** q82's pane derivation with the window-bucket formulas
     * parameterized: the early/onTime sequencing depends only on
-    * batch boundaries and bucket ends, so the calendar twin (q161)
-    * swaps in its local-midnight bucket bounds and reuses the whole
-    * derivation. */
-  private def accPanesOracle(wsExpr: String, weExpr: String): String =
+    * batch boundaries, bucket ends and event times, so the calendar
+    * twin (q161) swaps in its local-midnight bucket bounds and reuses
+    * the whole derivation; `tsExpr` is the event time the engine
+    * sees (shifted where the gate shifts it). */
+  private def accPanesOracle(wsExpr: String, weExpr: String,
+      tsExpr: String = "ts"): String =
     accPanesOracleEv(s"""
            SELECT $wsExpr AS ws,
                   $weExpr AS we,
+                  epoch_ms($tsExpr) AS et,
                   CASE WHEN ts < TIMESTAMP '2024-01-11 03:00:00' THEN 1
                        WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN 2
                        ELSE 3 END AS b,
                   event_type, value
            FROM events""")
 
-  /** The pane derivation over an arbitrary (event, window) relation —
-    * the sliding twin (q176) explodes each event into its size/period
-    * containing windows and reuses the whole early/onTime/ordinal
-    * sequencing, which is generic over (ws, we) pairs. */
+  /** The pane derivation over an arbitrary (event, window) relation
+    * — the sliding twin (q176) explodes each event into its
+    * size/period containing windows and reuses the whole
+    * early/onTime/ordinal sequencing, which is generic over (ws, we)
+    * pairs. The clock `f` after batch b is the max event time `et`
+    * (epoch ms) over batches ≤ b: a window closes ON_TIME in the
+    * first batch whose clock reaches its end, and fires early in
+    * each earlier batch that touched its key; a pane's ordinal counts
+    * the key+window's earlier panes. */
   private def accPanesOracleEv(evSql: String): String =
       s"""WITH ev AS ($evSql),
-         emax AS (SELECT b, max(we) AS e FROM ev GROUP BY b),
+         clock AS (
+           SELECT b, max(max(et)) OVER (ORDER BY b) AS f
+           FROM ev GROUP BY b),
          cum AS (
            SELECT ev.ws, ev.we, ev.event_type, bb.b AS b,
              count(*) AS n, sum(value) AS total
@@ -8964,26 +8974,25 @@ transforms:
            GROUP BY ev.ws, ev.we, ev.event_type, bb.b),
          touch AS (SELECT DISTINCT ws, we, event_type, b FROM ev),
          early AS (
-           SELECT c.ws, c.event_type, c.n, c.total,
-             'early' AS pane, 0 AS idx
+           SELECT c.ws, c.we, c.event_type, c.b, c.n, c.total,
+             'early' AS pane
            FROM cum c
-           JOIN emax m ON c.b = m.b AND c.we = m.e
-           JOIN touch t ON t.ws = c.ws AND t.event_type = c.event_type
-             AND t.b = c.b),
+           JOIN clock m ON c.b = m.b
+           JOIN touch t ON t.ws = c.ws AND t.we = c.we
+             AND t.event_type = c.event_type AND t.b = c.b
+           WHERE c.we * 1000 > m.f),
          ontime AS (
-           SELECT c.ws, c.event_type, c.n, c.total,
-             'onTime' AS pane,
-             CASE WHEN c.we = prev.e AND EXISTS (
-               SELECT 1 FROM touch t WHERE t.ws = c.ws
-                 AND t.event_type = c.event_type AND t.b = c.b - 1)
-               THEN 1 ELSE 0 END AS idx
+           SELECT c.ws, c.we, c.event_type, c.b, c.n, c.total,
+             'onTime' AS pane
            FROM cum c
-           JOIN emax m ON c.b = m.b
-           LEFT JOIN emax prev ON prev.b = c.b - 1
-           WHERE c.we < m.e AND (prev.e IS NULL OR c.we >= prev.e))
+           JOIN clock m ON c.b = m.b
+           LEFT JOIN clock prev ON prev.b = c.b - 1
+           WHERE c.we * 1000 <= m.f
+             AND (prev.f IS NULL OR c.we * 1000 > prev.f))
          SELECT ws AS win_start, event_type, n,
            round(total, 4) AS total_r, pane,
-           CAST(idx AS BIGINT) AS pane_idx
+           CAST(row_number() OVER (PARTITION BY ws, we, event_type
+             ORDER BY b) - 1 AS BIGINT) AS pane_idx
          FROM (SELECT * FROM early UNION ALL SELECT * FROM ontime)"""
 
   /** Shared by q129 (raw-text cross winnow) and q134 (the same
@@ -10190,10 +10199,10 @@ transforms:
            ON e.event_type = d.event_type AND e.ts >= d.dim_ts""",
 
     // accumulating panes: cumulative aggregates per firing. EARLY =
-    // the batch-max-end window, keys with new elements, ordinal 0;
-    // ON_TIME = windows the advancing frontier closed (all keys,
-    // cumulative over every batch so far), ordinal 1 when the
-    // key+window already fired early in the previous batch
+    // windows ending after the batch's clock (max event time so
+    // far), keys with new elements; ON_TIME = windows the advancing
+    // clock reached (all keys, cumulative over every batch so far);
+    // ordinal = the key+window's earlier panes
     "q82_accumulating_panes" -> accPanesOracleSql,
 
     // Tokyo midnights: bucket = floor((epoch + 9h) / day) in local
@@ -10218,7 +10227,8 @@ transforms:
         "ts + INTERVAL 89 DAY))))) AS BIGINT)",
       "CAST(epoch(timezone('Europe/Berlin', date_trunc('day', " +
         "timezone('Europe/Berlin', timezone('UTC', " +
-        "ts + INTERVAL 89 DAY))) + INTERVAL 1 DAY)) AS BIGINT)"),
+        "ts + INTERVAL 89 DAY))) + INTERVAL 1 DAY)) AS BIGINT)",
+      "ts + INTERVAL 89 DAY"),
 
     // the restarted run must land on the same batch-boundary-
     // deterministic pane set — one oracle serves q82 and q153
@@ -10242,6 +10252,7 @@ transforms:
                     * 21600 - 43200 AS ws,
                   (CAST(floor(epoch(ts) / 21600) AS BIGINT) + 1 + k.k)
                     * 21600 AS we,
+                  epoch_ms(ts) AS et,
                   CASE WHEN ts < TIMESTAMP '2024-01-11 03:00:00' THEN 1
                        WHEN ts < TIMESTAMP '2024-01-21 00:00:00' THEN 2
                        ELSE 3 END AS b,
@@ -10262,7 +10273,8 @@ transforms:
       "CAST(epoch(timezone('Europe/Berlin', CAST(DATE '1970-01-03' + " +
         "CAST((floor((CAST(timezone('Europe/Berlin', timezone('UTC', " +
         "ts + INTERVAL 89 DAY)) AS DATE) - DATE '1970-01-03') / 7.0) " +
-        "+ 1) * 7 AS INT) AS TIMESTAMP))) AS BIGINT)"),
+        "+ 1) * 7 AS INT) AS TIMESTAMP))) AS BIGINT)",
+      "ts + INTERVAL 89 DAY"),
 
     "q23_knn" ->
       """SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (

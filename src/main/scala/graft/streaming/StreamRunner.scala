@@ -165,12 +165,14 @@ object StreamRunner {
     * run one at a time on its own thread), so two queries never see
     * each other's state — whatever their sinks are named.
     *
-    *  - `frontier`: the max window end (epoch millis) seen in batches
-    *    BEFORE the current one. Beam pane timing maps onto it — a
-    *    pane for a window whose end precedes the frontier fires after
-    *    event time passed the window, i.e. a LATE pane; the frontier
-    *    advances after each batch, mirroring how a watermark in
-    *    effect during batch N was computed from batch N-1.
+    *  - `maxEventTime`: the event-time clock W, the max event time
+    *    (epoch millis) over the batches applied so far. Beam pane
+    *    timing maps onto it (Dataflow Model): a window closes ON_TIME
+    *    once W reaches its end, and expires once W reaches its end +
+    *    allowedLateness ([[expired]]). A batch is judged against W
+    *    BEFORE it (early vs onTime/late) and then advances W, as a
+    *    watermark in effect during batch N was computed from batch
+    *    N-1.
     *  - `fired`: windows (by end, epoch seconds) whose ON_TIME pane
     *    already fired — drives the early/onTime/late split. Bounded
     *    by the windows a run observes (coarse), not by keys.
@@ -184,10 +186,35 @@ object StreamRunner {
     *    on replay) and file-sink panes publish as `b<id>-*` files
     *    that a replay deletes before re-publishing. */
   private final class PaneState {
-    var frontier: Long = Long.MinValue
+    var maxEventTime: Long = Long.MinValue
     val fired = scala.collection.mutable.Set[Long]()
     var lastBatch: Long = -1L
   }
+
+  /** Beam's expiry rule: the window ending at `endSec` (epoch
+    * seconds) never fires again once the clock `clock` (epoch millis)
+    * has reached its end plus allowedLateness. One rule for every
+    * place a window or its elements can expire. */
+  private def expired(endSec: Long, clock: Long, latenessMs: Long): Boolean =
+    clock >= endSec * 1000L + latenessMs
+
+  /** [[expired]]'s negation over a window-end column (epoch seconds). */
+  private def live(endSec: Column, clock: Long, latenessMs: Long): Column =
+    endSec * 1000L + latenessMs > clock
+
+  /** `max(event time)` in epoch millis over a batch of the recipe's
+    * pre-aggregation stream, as an Observation metric riding on an
+    * action the engine runs anyway; None without an event time. */
+  private def maxEventTimeMetric(batch: DataFrame,
+      recipe: PaneRecipes.Recipe): Option[Column] =
+    recipe.strategy.flatMap(Strategy.eventTimeCol(batch, _))
+      .map(t => max(unix_millis(t)).as("__max_event_time"))
+
+  /** The clock after a batch whose observed metrics are `m`. */
+  private def advanced(clock: Long, m: Map[String, Any]): Long =
+    m.get("__max_event_time").flatMap(Option(_))
+      .map(v => math.max(clock, v.asInstanceOf[Number].longValue))
+      .getOrElse(clock)
 
   /** Window-end column of a pane batch, if windowed. */
   private def windowEndCol(batch: DataFrame): Option[Column] =
@@ -219,7 +246,7 @@ object StreamRunner {
     val early = trig("earlyFiringTrigger").get
     val delayMs = delayMillis(early)
     val hasLate = trig("lateFiringTrigger").isDefined
-    val st = new PaneState
+    var frontier = Long.MinValue
     // each query needs its OWN checkpoint: a shared configured path
     // would collide on query metadata/offsets
     val earlyQ = df.writeStream
@@ -228,13 +255,13 @@ object StreamRunner {
       .option("checkpointLocation", checkpoint(cfg) + "/early")
       .foreachBatch(paneWriter(cfg, "early",
         tagOf = batch => windowEndCol(batch).map { end =>
-          val fPrev = st.frontier
+          val fPrev = frontier
           // advance the frontier AFTER snapshotting it: panes in this
           // batch are judged against where event time stood before it
           val batchMax = batch.agg(max(end.cast("long"))).collect()
             .headOption.flatMap(r => Option(r.get(0)))
             .map(_.asInstanceOf[Long] * 1000L)
-          batchMax.foreach(m => st.frontier = math.max(st.frontier, m))
+          batchMax.foreach(m => frontier = math.max(frontier, m))
           when(end.cast("long") * 1000L < fPrev, "late")
             .otherwise("early")
         }.getOrElse(lit("early")),
@@ -260,10 +287,10 @@ object StreamRunner {
     * stateless pass-through query; no streaming aggregation state
     * at all (the accumulating path pays for two stateful queries).
     *
-    * Pane timing keys on the same event-time frontier as the
-    * accumulating engine: a pane for a window whose end precedes
-    * the frontier snapshot is the window's first post-close firing
-    * (ON_TIME) or, if one already fired, a LATE pane — dropped
+    * Pane timing keys on the same event-time clock as the
+    * accumulating engine: a pane for a window whose end the clock
+    * had reached before this batch is the window's first post-close
+    * firing (ON_TIME) or, if one already fired, a LATE pane — dropped
     * unless `lateFiringTrigger` is declared, like Beam. Panes fire
     * only when elements arrived (Beam's FIRE_IF_NON_EMPTY on-time
     * behavior; an element-free window close emits nothing). */
@@ -281,30 +308,29 @@ object StreamRunner {
       "discarding") { rq =>
       import rq._
       (batch, id) => {
-        val agged = recipe.reAgg(batch)
+        // the batch's max event time rides on the distinct-ends
+        // collect below as an Observation
+        val obs = new org.apache.spark.sql.Observation()
+        val agged = recipe.reAgg(maxEventTimeMetric(batch, recipe)
+          .fold(batch)(m => batch.observe(obs, m)))
         windowEndCol(agged) match {
           case None => // global window: every firing is early
             paneWriter(cfg, "early")(agged, id)
           case Some(end) =>
             val endSec = end.cast("long")
-            val fPrev = st.frontier
-            // Beam expired-window drop: a pane row for a window
-            // whose end + allowedLateness the frontier already
-            // passed contains only beyond-lateness elements —
+            val wPrev = st.maxEventTime
+            // Beam expired-window drop: a pane row for an expired
+            // window contains only beyond-lateness elements —
             // dropping the row drops exactly those elements (each
             // pane aggregates one window of this batch only)
-            val pane =
-              if (fPrev == java.lang.Long.MIN_VALUE) agged
-              else agged.filter(
-                endSec * 1000L + latenessMs >= fPrev)
+            val pane = agged.filter(live(endSec, wPrev, latenessMs))
             // the handful of distinct window ends in one batch —
             // bounded by windows, never by keys or rows
             val ends = pane.select(endSec).distinct().collect()
               .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-            if (ends.nonEmpty)
-              st.frontier = math.max(st.frontier, ends.max * 1000L)
+            st.maxEventTime = advanced(wPrev, obs.get)
             val tagOf = ends.map { e =>
-              e -> (if (e * 1000L >= fPrev) "early"
+              e -> (if (e * 1000L > wPrev) "early"
               else if (st.fired.add(e)) "onTime"
               else "late")
             }.toMap
@@ -402,28 +428,28 @@ object StreamRunner {
 
   /** Beam-parity PERSISTENT trigger state (Beam keeps pane timing in
     * durable trigger state; Structured Streaming's checkpoint covers
-    * offsets only): after each batch the frontier and the
+    * offsets only): after each batch the event-time clock and the
     * fired-window set roll under the checkpoint as a batch-stamped
     * JSON snapshot, and a restart restores the latest one — so pane
     * TIMING (not just values, which were already replay-exact via
     * batch stamping) is identical across a kill/restart. Without it
     * a window that closed just before a crash re-fired tagged
-    * `early` until the frontier re-passed its end. (Store compaction
+    * `early` until the clock re-passed its end. (Store compaction
     * needs no snapshot state: the element store's retention horizons
     * live in its `__wend=` partition paths, so pre-restart slices
     * keep compacting from the directory listing alone.) Snapshots
-    * are tiny — one long plus the open-horizon window ends; fired
-    * ends expired beyond allowedLateness are pruned on write, which
-    * also bounds the set. The latest two snapshots survive (current
-    * + prior) so a replayed batch can overwrite its own and still
-    * find its predecessor. */
+    * are tiny — one long plus the open-horizon window ends; expired
+    * fired ends are pruned on write, which also bounds the set. The
+    * latest two snapshots survive (current + prior) so a replayed
+    * batch can overwrite its own and still find its predecessor. */
   private def persistTriggerState(st: PaneState, dir: java.io.File,
       batchId: Long, latenessMs: Long): Unit = {
     dir.mkdirs()
     val o = graft.config.Json.obj()
-    if (st.frontier != Long.MinValue) o.put("frontier", st.frontier)
+    if (st.maxEventTime != Long.MinValue)
+      o.put("maxEventTime", st.maxEventTime)
     // expired windows can never fire again
-    st.fired.filterInPlace(e => e * 1000L + latenessMs >= st.frontier)
+    st.fired.filterInPlace(e => !expired(e, st.maxEventTime, latenessMs))
     val fa = o.putArray("fired")
     st.fired.toSeq.sorted.foreach(e => fa.add(e))
     val tmp = new java.io.File(dir, s".tmp-$batchId")
@@ -455,7 +481,13 @@ object StreamRunner {
         java.nio.file.Files.readAllBytes(
           new java.io.File(dir, s"__tbatch=$id.json").toPath),
         java.nio.charset.StandardCharsets.UTF_8))
-      n.long("frontier").foreach(st.frontier = _)
+      // earlier builds kept a window-END clock under `frontier`:
+      // resuming on it would close the current window early
+      if (n("frontier").isDefined && n("maxEventTime").isEmpty)
+        throw new IllegalStateException(
+          s"$dir: pane trigger state written by an earlier build; " +
+            "start from a fresh checkpoint")
+      n.long("maxEventTime").foreach(st.maxEventTime = _)
       n.arrOf("fired").foreach(e => st.fired += e.asLong)
     }
 
@@ -472,14 +504,13 @@ object StreamRunner {
         .flatMap(_.stripPrefix("__wend=").toLongOption))
       .distinct.toSeq
 
-  /** Frontier-driven element-store compaction: delete every
-    * `__wend=E` partition (under any `__gbatch=` slice) whose
-    * retention horizon E (plus allowedLateness) is behind the
-    * frontier, then drop slices left
-    * with no element partitions. Unparseable partition names (e.g. a
+  /** Clock-driven element-store compaction: delete every `__wend=E`
+    * partition (under any `__gbatch=` slice) whose retention horizon
+    * E has [[expired]] on the clock, then drop slices left with no
+    * element partitions. Unparseable partition names (e.g. a
     * null-horizon `__HIVE_DEFAULT_PARTITION__`) are kept — safety
     * over space. */
-  private def compactStore(storeDir: String, frontierMs: Long,
+  private def compactStore(storeDir: String, clock: Long,
       latenessMs: Long): Unit =
     ls(new java.io.File(storeDir))
       .filter(_.getName.startsWith("__gbatch=")).foreach { g =>
@@ -487,7 +518,7 @@ object StreamRunner {
         ls(g).filter(_.getName.startsWith("__wend=")).foreach { p =>
           hadWend = true
           p.getName.stripPrefix("__wend=").toLongOption.foreach { e =>
-            if (e * 1000L + latenessMs < frontierMs) {
+            if (expired(e, clock, latenessMs)) {
               ls(p).foreach(_.delete())
               p.delete()
             }
@@ -515,8 +546,8 @@ object StreamRunner {
     * retains raw elements for open windows (bounded by horizon ×
     * rate, MORE than Beam's combiner state — the exactness price).
     * The store compacts at ELEMENT granularity: slices partition by
-    * each element's retention horizon (`__wend`), and the frontier
-    * (plus allowedLateness) drops expired partitions by path — so
+    * each element's retention horizon (`__wend`), and the clock
+    * (past allowedLateness) drops expired partitions by path — so
     * per-batch re-aggregation cost tracks open-window volume, not
     * stream lifetime.
     *
@@ -524,11 +555,11 @@ object StreamRunner {
     *  - firings are per key+window: only keys with new elements fire
     *    (semi-join on the recipe's group keys), except the ON_TIME
     *    closing pane, which fires once per window for ALL its keys
-    *    when the event-time frontier passes the window end — Beam's
+    *    when the event-time clock reaches the window end — Beam's
     *    watermark-close pane, which fires regardless of new data.
     *  - `__pane` = early | onTime | late (late panes dropped unless
     *    `lateFiringTrigger` is declared, like Beam); timing keys on
-    *    the same frontier as the discarding engine.
+    *    the same clock as the discarding engine.
     *  - `__pane_index` = the ordinal of this firing for its
     *    key+window (0-based), numbered for EVERY sink from one compact
     *    per-key ordinals snapshot under the checkpoint (batch-stamped,
@@ -541,7 +572,7 @@ object StreamRunner {
     * Replay safety: the element store, sink files, and ordinals
     * snapshot are all batch-stamped, so micro-batch retries and
     * restarts never duplicate VALUES — and pane TIMING survives too:
-    * the frontier/fired-window maps roll under the checkpoint as
+    * the clock and fired-window set roll under the checkpoint as
     * batch-stamped trigger-state snapshots (persistTriggerState,
     * Beam's persistent trigger state made concrete), so a restart
     * restores exactly where event time stood and a window that
@@ -551,8 +582,8 @@ object StreamRunner {
       trig: com.fasterxml.jackson.databind.JsonNode,
       strategy: com.fasterxml.jackson.databind.JsonNode)
       : StreamingQuery = {
-    // the exact-pane trigger bookkeeping (fired windows, frontier,
-    // per-window ordinals) is keyed on a window's END, which for
+    // the exact-pane trigger bookkeeping (fired windows, per-window
+    // ordinals) is keyed on a window's END, which for
     // fixed/sliced-sliding windows is immutable. A session window's
     // end EXTENDS as elements arrive and sessions merge, so an
     // extended session would read as a brand-new window — re-firing
@@ -665,14 +696,8 @@ object StreamRunner {
                   coalesce(col("__delta"), lit(0L)))
                   .as("__pane_index"): _*)
         }
-        val pruned = windowEndCol(merged) match {
-          case Some(e) =>
-            val f = st.frontier
-            if (f == Long.MinValue) merged
-            else merged.filter(
-              e.cast("long") * 1000L + latenessMs >= f)
-          case None => merged
-        }
+        val pruned = windowEndCol(merged).fold(merged)(e =>
+          merged.filter(live(e.cast("long"), st.maxEventTime, latenessMs)))
         // ONE write job and one stage → rename cycle for BOTH the
         // numbered panes and the next ordinals snapshot: the two
         // frames union under a role partition column (the ordinal
@@ -778,21 +803,19 @@ object StreamRunner {
         // every later cumulative pane exact across retries/restarts.
         // Sub-partitioned by each ELEMENT's retention horizon
         // (__wend = upper bound on the latest window end the
-        // element can feed, Strategy.elementRetainEnd) so frontier
+        // element can feed, Strategy.elementRetainEnd) so clock
         // compaction drops expired elements by path even when one
         // slice mixes near and far window ends — per-batch cost
         // tracks the open-window volume, not stream lifetime.
-        // touched-window ends ride the store-write job as an
-        // Observation (one job instead of two per firing): when
-        // the horizons form an end grid
-        // (Strategy.endGrid — fixed/calendar with k = 1, sliding
-        // with size = k·period), every touched end follows
-        // arithmetically from the observed horizons, and the
-        // separate distinct+collect job over the re-aggregated batch
-        // (measured 0.6 s/firing at sf0.1) is redundant.
-        val obsEnds =
-          elementGrid.map(_ => new org.apache.spark.sql.Observation())
-        var obsWends: Option[Array[Long]] = None
+        // The batch's max event time (the clock) and its horizons
+        // ride the store-write job as one Observation: when the
+        // horizons form an end grid (Strategy.endGrid — fixed/
+        // calendar with k = 1, sliding with size = k·period), every
+        // touched end follows arithmetically from the observed
+        // horizons, and the separate distinct+collect job over the
+        // re-aggregated batch (measured 0.6 s/firing at sf0.1) is
+        // redundant.
+        var observed = Map.empty[String, Any]
         elementEndOf match {
           case Some(endOf) =>
             // task-parallel partitioned write: up to (tasks ×
@@ -814,19 +837,16 @@ object StreamRunner {
             val slice = batch
               .withColumn("__wend", endOf(batch).cast("long"))
               .filter(col("__wend").isNotNull)
-            val observed = obsEnds.fold(slice)(o => slice.observe(
-              o, org.apache.spark.sql.functions.collect_set(
-                col("__wend")).as("__wends")))
-            observed.write.mode("overwrite")
+            val obs = new org.apache.spark.sql.Observation()
+            slice.observe(obs, collect_set(col("__wend")).as("__wends"),
+                maxEventTimeMetric(batch, recipe).toSeq: _*)
+              .write.mode("overwrite")
               .option("partitionOverwriteMode", "static")
               .partitionBy("__wend")
               .parquet(storeDir + s"/__gbatch=$batchId")
             // blocks only until the just-finished write job's
-            // listener fires; empty slices yield an empty set,
-            // matching the old path's empty collect
-            obsWends = obsEnds.map(_.get("__wends")
-              .asInstanceOf[Seq[Any]]
-              .map(_.asInstanceOf[Number].longValue).toArray)
+            // listener fires; an empty slice yields an empty set
+            observed = obs.get
           case None => // global window: no horizon, no compaction
             batch.write.mode("overwrite")
               .parquet(storeDir + s"/__gbatch=$batchId")
@@ -855,12 +875,8 @@ object StreamRunner {
               recipe.reAgg(storedAll()).withColumn("__pane", lit("early")),
               recipe.keys, batchId)
           case Some(_) =>
-            val fPrev = st.frontier
-            // Beam expired-window rule: an end the frontier passed by
-            // more than allowedLateness never fires again
-            def live(endSec: Long): Boolean =
-              fPrev == java.lang.Long.MIN_VALUE ||
-                endSec * 1000L + latenessMs >= fPrev
+            val wPrev = st.maxEventTime
+            val wNew = advanced(wPrev, observed)
             // an element with horizon h feeds exactly the k ends
             // {h − j·period, 0 ≤ j < k} (Strategy.endGrid) — the
             // union over observed horizons IS the touched-end set
@@ -868,23 +884,23 @@ object StreamRunner {
               val (period, k) = elementGrid.get
               (0 until k).map(h - _ * period)
             }
-            val tEnds = obsWends match {
-              case Some(ws) => ws.toSeq.flatMap(gridEnds).distinct
+            val tEnds = elementGrid match {
+              case Some(_) => observed("__wends").asInstanceOf[Seq[Any]]
+                .map(_.asInstanceOf[Number].longValue)
+                .flatMap(gridEnds).distinct
               case None =>
                 touched.select(windowEndCol(touched).get
                   .cast("long")).distinct().collect().toSeq
                   .flatMap(r =>
                     Option(r.get(0)).map(_.asInstanceOf[Long]))
             }
-            val fNew = math.max(fPrev,
-              if (tEnds.isEmpty) fPrev else tEnds.max * 1000L)
             val fired = st.fired
             // late BEFORE closing registration: a window is late
             // only if its ON_TIME pane fired in a PRIOR batch
             val lateEnds = tEnds.filter(e => fired.contains(e))
-            // frontier crossing closes windows: ON_TIME pane for
-            // ALL keys of each newly closed window (fires without
-            // new elements, like Beam's watermark-close pane).
+            // the clock reaching a window's end closes it: ON_TIME
+            // pane for ALL keys of each newly closed window (fires
+            // without new elements, like Beam's watermark-close pane).
             val (aggedAll, closingEnds) = elementGrid match {
               case Some((period, k)) =>
                 // the horizon partitions on disk determine EVERY
@@ -902,8 +918,8 @@ object StreamRunner {
                 // to candidates too.
                 val horizons = wendValuesOnDisk(storeDir)
                 val closing = horizons.flatMap(gridEnds).distinct
-                  .filter(e => live(e) && e * 1000L < fNew &&
-                    !fired.contains(e))
+                  .filter(e => !expired(e, wPrev, latenessMs) &&
+                    e * 1000L <= wNew && !fired.contains(e))
                 val needed = (tEnds ++ closing).distinct
                   .flatMap(e => (0 until k).map(e + _ * period))
                   .distinct.filter(horizons.toSet)
@@ -918,14 +934,12 @@ object StreamRunner {
                 // and read the candidates off the result
                 val a = recipe.reAgg(storedAll())
                 val aEnd = windowEndCol(a).get.cast("long")
-                val retEnds =
-                  (if (fPrev == java.lang.Long.MIN_VALUE) a
-                  else a.filter(aEnd * 1000L + latenessMs >= fPrev))
+                val retEnds = a.filter(live(aEnd, wPrev, latenessMs))
                     .select(aEnd).distinct().collect().toSeq
                     .flatMap(r =>
                       Option(r.get(0)).map(_.asInstanceOf[Long]))
                 (a, retEnds.filter(e =>
-                  e * 1000L < fNew && !fired.contains(e)))
+                  e * 1000L <= wNew && !fired.contains(e)))
             }
             val endSec = windowEndCol(aggedAll).get.cast("long")
             val keyCols = "window" +: recipe.keys
@@ -933,18 +947,16 @@ object StreamRunner {
             // engine (on the grid path the dirs were already
             // compacted to it — this is the defensive second guard)
             val retained =
-              if (fPrev == java.lang.Long.MIN_VALUE) aggedAll
-              else aggedAll.filter(
-                endSec * 1000L + latenessMs >= fPrev)
+              aggedAll.filter(live(endSec, wPrev, latenessMs))
             // a window emits at most ONE pane per batch: a window
             // that both received elements and closed in this batch
             // emits only the (cumulative) ON_TIME pane — its early
             // pane would carry the identical aggregate, and a
             // single firing keeps the pane ordinal well-defined
             val earlyEnds = tEnds.filter(e =>
-              e * 1000L >= fPrev && !closingEnds.contains(e))
+              e * 1000L > wPrev && !closingEnds.contains(e))
             closingEnds.foreach(e => fired.add(e))
-            st.frontier = fNew
+            st.maxEventTime = wNew
             val touchedKeys = touched
               .select(keyCols.map(col): _*).distinct()
             val early = retained
@@ -961,9 +973,9 @@ object StreamRunner {
             val pane =
               if (hasLate) early.union(closing).union(late)
               else early.union(closing)
-            // no window fired this batch (elements arrived but
-            // everything stays early-pending behind the frontier,
-            // or all ends were already fired+expired): nothing to
+            // no window fired this batch (every touched window
+            // already fired without a late firing declared, or
+            // expired): nothing to
             // publish, and the ordinals snapshot is unchanged — a
             // rewrite would be a pure read+write+rename cycle, so
             // skip the whole emit (the next firing batch finds the
@@ -973,8 +985,8 @@ object StreamRunner {
             if (willFire) emitWithIndex(pane, keyCols, batchId)
             // store compaction, element-level: each slice is
             // partitioned by its elements' retention horizons
-            // (`__wend=<epochSec>`); once the frontier (plus
-            // lateness) passes a horizon, no element in that
+            // (`__wend=<epochSec>`); once a horizon expires on the
+            // clock, no element in that
             // partition can contribute to any future pane — the
             // same rule the `retained` filter applies post-agg —
             // so the partition drops by path. Listing-driven (the
@@ -983,8 +995,8 @@ object StreamRunner {
             // with no snapshot state; a slice emptied of elements
             // drops wholly. Replay-safe: a replayed batch rewrites
             // its entire slice (static partition overwrite) before
-            // compaction re-applies the frontier rule.
-            compactStore(storeDir, fNew, latenessMs)
+            // compaction re-applies the expiry rule.
+            compactStore(storeDir, wNew, latenessMs)
         }
         } finally pinned.foreach(_.unpersist())
       }

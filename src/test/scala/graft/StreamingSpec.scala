@@ -2367,10 +2367,13 @@ class StreamingSpec extends AnyFunSuite {
     * multiple, the full-read path) — each into a memory sink and a
     * parquet sink. Keys a and b, a in every batch; batch 3 brings a
     * straggler within allowedLateness (a at 64 h), one beyond it
-    * (b at 40 h) and a frontier push (a at 120 h). Values are powers
-    * of two, so each sum names its element set. The golden rows were
-    * captured from the engine before its firing paths were merged;
-    * both sinks must match them. */
+    * (b at 40 h) and a clock push (a at 120 h). Values are powers
+    * of two, so each sum names its element set. The fixed and
+    * calendar golden rows were captured from the engine before its
+    * firing paths were merged; the sliding rows follow the
+    * event-time clock (a window closes once the max event time
+    * reaches its end: [54 h, 66 h) is still open when the max event
+    * is at 63 h). Both sinks must match them. */
   test("exactPanes window shapes x sinks: golden pane rows, memory " +
       "sinks equal parquet sinks") {
     val dir = java.nio.file.Files.createTempDirectory("graft-shapes")
@@ -2415,16 +2418,17 @@ class StreamingSpec extends AnyFunSuite {
         "216000|a|late|1|3|21.0|1.0",
         "216000|a|onTime|0|2|5.0|1.0",
         "216000|b|onTime|0|1|2.0|2.0",
-        "237600|a|late|1|3|28.0|4.0",
+        "237600|a|early|0|2|12.0|4.0",
         "237600|a|late|2|4|92.0|4.0",
-        "237600|a|onTime|0|2|12.0|4.0",
+        "237600|a|onTime|1|3|28.0|4.0",
         "259200|a|early|0|1|8.0|8.0",
         "259200|a|late|2|2|72.0|8.0",
         "259200|a|onTime|1|1|8.0|8.0",
-        "302400|b|onTime|0|1|32.0|32.0",
+        "302400|b|early|0|1|32.0|32.0",
+        "302400|b|onTime|1|1|32.0|32.0",
         "324000|b|early|0|1|32.0|32.0",
         "324000|b|onTime|1|1|32.0|32.0",
-        "453600|a|onTime|0|1|256.0|256.0",
+        "453600|a|early|0|1|256.0|256.0",
         "475200|a|early|0|1|256.0|256.0"),
       "sliding5x2" -> Seq(
         "183600|a|onTime|0|1|1.0|1.0",
@@ -2436,18 +2440,21 @@ class StreamingSpec extends AnyFunSuite {
         "212400|a|late|1|2|20.0|4.0",
         "212400|a|onTime|0|1|4.0|4.0",
         "219600|a|onTime|0|1|16.0|16.0",
-        "234000|a|late|1|2|72.0|8.0",
-        "234000|a|onTime|0|1|8.0|8.0",
+        "234000|a|early|0|1|8.0|8.0",
+        "234000|a|late|2|2|72.0|8.0",
+        "234000|a|onTime|1|1|8.0|8.0",
         "241200|a|early|0|1|8.0|8.0",
         "241200|a|late|2|2|72.0|8.0",
         "241200|a|onTime|1|1|8.0|8.0",
         "248400|a|onTime|0|1|64.0|64.0",
-        "291600|b|onTime|0|1|32.0|32.0",
-        "298800|b|onTime|0|1|32.0|32.0",
+        "291600|b|early|0|1|32.0|32.0",
+        "291600|b|onTime|1|1|32.0|32.0",
+        "298800|b|early|0|1|32.0|32.0",
+        "298800|b|onTime|1|1|32.0|32.0",
         "306000|b|early|0|1|32.0|32.0",
         "306000|b|onTime|1|1|32.0|32.0",
-        "435600|a|onTime|0|1|256.0|256.0",
-        "442800|a|onTime|0|1|256.0|256.0",
+        "435600|a|early|0|1|256.0|256.0",
+        "442800|a|early|0|1|256.0|256.0",
         "450000|a|early|0|1|256.0|256.0"))
     shapes.foreach { case (name, _) =>
       StreamRunner.paneStore.remove(s"mem_$name") }
