@@ -80,9 +80,9 @@ object CacheTracker {
     * `Pipeline.build` returned. */
   private[graft] def recipe(plan: LogicalPlan): Option[PaneRecipes.Recipe] = {
     if (scope.get() == null) throw new IllegalStateException(
-      "a pane sink (discarding mode or exactPanes) must start inside a " +
-        "run: Pipeline.execute, or Pipeline.build and the sink both " +
-        "inside an enclosing CacheTracker.beginScope()")
+      "a pane sink (afterWatermark with early firings) must start " +
+        "inside a run: Pipeline.execute, or Pipeline.build and the " +
+        "sink both inside an enclosing CacheTracker.beginScope()")
     Iterator.iterate(scope.get())(_.prev).takeWhile(_ != null)
       .flatMap(s => s.synchronized(Option(s.recipes.get(plan))))
       .nextOption()

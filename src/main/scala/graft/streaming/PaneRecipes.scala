@@ -4,10 +4,9 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 
 /** Side-channel from the aggregation module to [[StreamRunner]]'s
-  * recipe engines — DISCARDING panes and EXACT ACCUMULATING panes
-  * (`strategy.exactPanes`) with early firings (reference
-  * `module/Strategy.java:84-89` mode enum + `:276-297` early
-  * firings).
+  * recipe engines — DISCARDING and ACCUMULATING panes with early
+  * firings, both exact (reference `module/Strategy.java:84-89` mode
+  * enum + `:276-297` early firings).
   *
   * In the Dataflow Model a pane is the window's combine applied to a
   * subset of its elements: the elements since the previous firing

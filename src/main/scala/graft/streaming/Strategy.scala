@@ -468,8 +468,9 @@ object Strategy {
 
   /** `allowedLateness` in seconds from a strategy node — on the
     * window sub-node (reference Strategy.java nests it there) or the
-    * strategy root. Shared by the watermark and by the discarding
-    * pane engine's expired-window drop. */
+    * strategy root. Shared by the watermark and by the pane
+    * engines' window expiry, both reading the aggregation's own
+    * strategy. */
   def allowedLatenessSeconds(strategy: JsonNode): Option[Long] =
     strategy("window").flatMap(w => seconds(w, "allowedLateness"))
       .orElse(seconds(strategy, "allowedLateness"))

@@ -11,10 +11,13 @@ import scala.jdk.CollectionConverters._
 /** Starts streaming sinks (SURVEY §2.9): `writeStream` with the
   * module's trigger; output mode maps Beam accumulation
   * (`discarding` → append, `accumulating` → update/complete). With
-  * early-firing triggers, `discarding` switches to an EXACT pane
-  * engine (per-micro-batch re-aggregation via [[PaneRecipes]] —
-  * each pane holds only since-last-firing elements) while
-  * `accumulating` runs the stateful update+append query pair.
+  * early-firing triggers both modes run an EXACT pane engine over
+  * the aggregation's [[PaneRecipes]] recipe — `discarding`
+  * re-aggregates each micro-batch (each pane holds only
+  * since-last-firing elements), `accumulating` (the default)
+  * re-aggregates a retained element store (each pane holds every
+  * element so far) — and both close and expire windows on one
+  * event-time clock, the max event time seen (`PaneState`).
   * Started queries are registered here so callers (tests, drivers)
   * can drain with `processAllAvailable` or block on `awaitAny`; that
   * registry and the memory-sink pane buffer are the only state kept
@@ -119,7 +122,7 @@ object StreamRunner {
     }
   }
 
-  /** Pane-multiplexed triggers route through `paneWriter`, which can
+  /** Pane-multiplexed triggers route through `writePanes`, which can
     * drain to buffers and file sinks only — anything else must fail
     * at start, not with a None.get inside foreachBatch. */
   private def requirePaneSink(cfg: ModuleCfg): Unit =
@@ -147,14 +150,13 @@ object StreamRunner {
     if (trigType == "afterWatermark" &&
       trig.exists(_.apply("earlyFiringTrigger").isDefined))
       // accumulation mode picks the pane engine: discarding panes
-      // re-aggregate each micro-batch (exact Beam semantics, any
-      // aggregate type); the default/accumulating path runs the
-      // stateful update+append query pair
+      // re-aggregate each micro-batch, accumulating panes (the
+      // default) the retained elements — exact Beam semantics for any
+      // aggregate type either way. `exactPanes` is accepted and
+      // ignored: there is no other accumulating engine to select.
       return if (strategy.exists(_.str("mode").contains("discarding")))
-        startDiscardingEarly(cfg, df, trig.get, strategy.get)
-      else if (strategy.exists(_.bool("exactPanes").getOrElse(false)))
-        startAccumulatingExact(cfg, df, trig.get, strategy.get)
-      else startEarlyFiring(cfg, df, trig.get)
+        startDiscardingEarly(cfg, df, trig.get)
+      else startAccumulatingExact(cfg, df, trig.get)
     if (trigType == "afterPane")
       return startAfterPane(cfg, df, trig.get)
     startPlain(cfg, df, trig, strategy)
@@ -221,62 +223,6 @@ object StreamRunner {
     if (batch.columns.contains("window")) Some(col("window.end"))
     else None
 
-  /** Beam `AfterWatermark.pastEndOfWindow().withEarlyFirings(...)
-    * [.withLateFirings(...)]` approximation
-    * (`module/Strategy.java:276-297`), pane timing keyed on the
-    * event-time frontier (max window end of previous batches):
-    *
-    *  - update-mode query, ProcessingTime trigger of the early delay:
-    *    emits panes while windows evolve. A pane whose window end is
-    *    ahead of the frontier is EARLY; one behind it is a
-    *    post-window refinement — LATE when `lateFiringTrigger` is
-    *    declared, silently dropped otherwise (Beam fires late panes
-    *    only when a late firing is configured).
-    *  - append-mode query: emits each window exactly once when the
-    *    watermark (delayed by allowedLateness) passes it — Beam's
-    *    ON_TIME pane when lateness is 0, the closing/FINAL pane
-    *    (late data folded in) when lateness > 0.
-    *
-    * The cost of the approximation is duplicated aggregation state —
-    * the price of pane multiplexing on an engine with one output mode
-    * per query. */
-  private def startEarlyFiring(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery = {
-    requirePaneSink(cfg)
-    val early = trig("earlyFiringTrigger").get
-    val delayMs = delayMillis(early)
-    val hasLate = trig("lateFiringTrigger").isDefined
-    var frontier = Long.MinValue
-    // each query needs its OWN checkpoint: a shared configured path
-    // would collide on query metadata/offsets
-    val earlyQ = df.writeStream
-      .outputMode("update")
-      .trigger(Trigger.ProcessingTime(delayMs))
-      .option("checkpointLocation", checkpoint(cfg) + "/early")
-      .foreachBatch(paneWriter(cfg, "early",
-        tagOf = batch => windowEndCol(batch).map { end =>
-          val fPrev = frontier
-          // advance the frontier AFTER snapshotting it: panes in this
-          // batch are judged against where event time stood before it
-          val batchMax = batch.agg(max(end.cast("long"))).collect()
-            .headOption.flatMap(r => Option(r.get(0)))
-            .map(_.asInstanceOf[Long] * 1000L)
-          batchMax.foreach(m => frontier = math.max(frontier, m))
-          when(end.cast("long") * 1000L < fPrev, "late")
-            .otherwise("early")
-        }.getOrElse(lit("early")),
-        post = b => if (hasLate) b else b.filter(col("__pane") =!= "late")))
-      .start()
-    register(earlyQ)
-    val finalQ = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint(cfg) + "/final")
-      .foreachBatch(paneWriter(cfg, "onTime"))
-      .start()
-    register(finalQ)
-    finalQ
-  }
-
   /** Beam DISCARDING accumulation with early firings — exact, not
     * approximated: each ProcessingTime micro-batch of the
     * PRE-aggregation stream holds precisely the elements that
@@ -285,7 +231,7 @@ object StreamRunner {
     * discarding pane, for every aggregate type — min/max/array_agg
     * included, which no output-delta scheme could reconstruct. One
     * stateless pass-through query; no streaming aggregation state
-    * at all (the accumulating path pays for two stateful queries).
+    * at all.
     *
     * Pane timing keys on the same event-time clock as the
     * accumulating engine: a pane for a window whose end the clock
@@ -295,27 +241,18 @@ object StreamRunner {
     * only when elements arrived (Beam's FIRE_IF_NON_EMPTY on-time
     * behavior; an element-free window close emits nothing). */
   private def startDiscardingEarly(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode,
-      strategy: com.fasterxml.jackson.databind.JsonNode)
-      : StreamingQuery =
-    startRecipeEngine(cfg, df, trig, strategy,
-      "accumulation mode 'discarding' with early firings requires " +
-        "the pane sink to read a single-input aggregation module's " +
-        "output directly (per-pane re-aggregation needs the " +
-        "pre-aggregation stream) — move intervening transforms or " +
-        "logging taps upstream of the aggregation, drop the " +
-        "post-aggregation limit, or use 'accumulating'",
-      "discarding") { rq =>
+      trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery =
+    startRecipeEngine(cfg, df, trig, "discarding") { rq =>
       import rq._
       (batch, id) => {
         // the batch's max event time rides on the distinct-ends
         // collect below as an Observation
         val obs = new org.apache.spark.sql.Observation()
-        val agged = recipe.reAgg(maxEventTimeMetric(batch, recipe)
-          .fold(batch)(m => batch.observe(obs, m)))
+        val metric = maxEventTimeMetric(batch, recipe)
+        val agged = recipe.reAgg(metric.fold(batch)(batch.observe(obs, _)))
         windowEndCol(agged) match {
           case None => // global window: every firing is early
-            paneWriter(cfg, "early")(agged, id)
+            writePanes(cfg, agged, lit("early"))
           case Some(end) =>
             val endSec = end.cast("long")
             val wPrev = st.maxEventTime
@@ -328,35 +265,40 @@ object StreamRunner {
             // bounded by windows, never by keys or rows
             val ends = pane.select(endSec).distinct().collect()
               .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-            st.maxEventTime = advanced(wPrev, obs.get)
+            if (metric.isDefined)
+              st.maxEventTime = advanced(wPrev, obs.get)
             val tagOf = ends.map { e =>
               e -> (if (e * 1000L > wPrev) "early"
               else if (st.fired.add(e)) "onTime"
               else "late")
             }.toMap
-            val tagExpr = tagOf.foldLeft(lit("early")) {
+            val tag = tagOf.foldLeft(lit("early")) {
               case (acc, (e, t)) => when(endSec === e, t).otherwise(acc)
             }
-            paneWriter(cfg, "early", tagOf = _ => tagExpr,
-              post = b =>
-                if (hasLate) b
-                else b.filter(col("__pane") =!= "late"))(pane, id)
+            val lateEnds = tagOf.collect { case (e, "late") => e }.toSeq
+            writePanes(cfg,
+              if (hasLate) pane else pane.filter(!endSec.isin(lateEnds: _*)),
+              tag)
         }
       }
     }
 
   /** What a recipe engine's batch body works with: the aggregation's
     * pane recipe, the query's trigger state, whether late panes are
-    * emitted, allowedLateness in millis and the sink's checkpoint. */
+    * emitted, the aggregation's allowedLateness in millis and the
+    * sink's checkpoint. */
   private final case class RecipeQuery(recipe: PaneRecipes.Recipe,
       st: PaneState, hasLate: Boolean, latenessMs: Long, ckpt: String)
 
   /** The one shell both recipe engines (discarding and exact
-    * accumulating) start through: look up the aggregation's pane
-    * recipe (`noRecipe` is the engine's own error), restore the
-    * query's trigger state from the checkpoint, and run ONE
+    * accumulating, named by their accumulation `mode`) start
+    * through: look up the aggregation's pane recipe, take
+    * allowedLateness from the aggregation's strategy (the one its
+    * watermark uses; a sink strategy that sets a different value
+    * fails here), restore the query's trigger state from the
+    * checkpoint, and run ONE
     * ProcessingTime foreachBatch query of the early-firing delay over
-    * the pre-aggregation stream, checkpointed under `ckpt/<name>`.
+    * the pre-aggregation stream, checkpointed under `ckpt/<mode>`.
     * `engine` does its per-query setup and returns the batch body;
     * the shell skips batches without input and batch ids already
     * applied (a same-process retry re-enters with the same id), and
@@ -374,21 +316,33 @@ object StreamRunner {
     * session that created it, so it is re-created on a private clone.
     * Neither touches the caller's session once start() returns. */
   private def startRecipeEngine(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode,
-      strategy: com.fasterxml.jackson.databind.JsonNode,
-      noRecipe: String, name: String)(
+      trig: com.fasterxml.jackson.databind.JsonNode, mode: String)(
       engine: RecipeQuery => (DataFrame, Long) => Unit)
       : StreamingQuery = {
     requirePaneSink(cfg)
     val recipe = graft.ops.CacheTracker.recipe(df.queryExecution.logical)
-      .getOrElse(throw new IllegalArgumentException(noRecipe))
+      .getOrElse(throw new IllegalArgumentException(
+        s"accumulation mode '$mode' with early firings requires the " +
+          "pane sink to read a single-input aggregation module's " +
+          "output directly (per-pane re-aggregation needs the " +
+          "pre-aggregation stream) — move intervening transforms or " +
+          "logging taps upstream of the aggregation, or drop the " +
+          "post-aggregation limit"))
+    val lateness = recipe.strategy
+      .flatMap(Strategy.allowedLatenessSeconds).getOrElse(0L)
+    cfg.node("strategy").flatMap(Strategy.allowedLatenessSeconds)
+      .filter(_ != lateness).foreach(own =>
+        throw new IllegalArgumentException(
+          s"${cfg.name}: the sink strategy's allowedLateness (${own}s) " +
+            s"differs from the aggregation's (${lateness}s) — " +
+            "windows expire on the aggregation's, which its watermark " +
+            "uses too; declare allowedLateness on the aggregation only"))
     val st = new PaneState
     val ckpt = checkpoint(cfg)
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
     restoreTriggerState(st, triggerStateDir)
     val rq = RecipeQuery(recipe, st, trig("lateFiringTrigger").isDefined,
-      Strategy.allowedLatenessSeconds(strategy).getOrElse(0L) * 1000L,
-      ckpt)
+      lateness * 1000L, ckpt)
     val body = engine(rq)
     val listing =
       "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
@@ -399,7 +353,7 @@ object StreamRunner {
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(
         delayMillis(trig("earlyFiringTrigger").get)))
-      .option("checkpointLocation", s"$ckpt/$name")
+      .option("checkpointLocation", s"$ckpt/$mode")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (batchId > st.lastBatch && hasInput(batch)) {
           body(batch, batchId)
@@ -534,9 +488,7 @@ object StreamRunner {
       }
 
   /** Beam ACCUMULATING accumulation with early firings — exact, not
-    * approximated, opt-in via `strategy.exactPanes: true` (the
-    * default accumulating path stays the stateful update+append
-    * query pair, which is the scale path for combinable aggregates).
+    * approximated, and the default accumulation mode.
     *
     * Each accumulating pane is the aggregate over ALL elements of
     * the window so far — exact for every aggregate type only by
@@ -579,35 +531,28 @@ object StreamRunner {
     * closed just before the crash stays closed instead of re-firing
     * early. */
   private def startAccumulatingExact(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode,
-      strategy: com.fasterxml.jackson.databind.JsonNode)
-      : StreamingQuery = {
-    // the exact-pane trigger bookkeeping (fired windows, per-window
-    // ordinals) is keyed on a window's END, which for
-    // fixed/sliced-sliding windows is immutable. A session window's
-    // end EXTENDS as elements arrive and sessions merge, so an
-    // extended session would read as a brand-new window — re-firing
-    // onTime panes and corrupting ordinals. Silent wrong panes are
-    // worse than a loud gap: fail with the alternative named.
-    strategy("window").flatMap(_.str("type")).foreach(wt =>
-      require(wt != "session",
-        s"${cfg.name}: exactPanes does not support session windows " +
-          "(a session's identity — its end — extends as elements " +
-          "arrive and sessions merge, so end-keyed pane bookkeeping " +
-          "would re-fire closed panes) — drop exactPanes to use the " +
-          "stateful session aggregation, or use fixed/sliding windows"))
-    startRecipeEngine(cfg, df, trig, strategy,
-      "exactPanes accumulating requires the pane sink to read a " +
-        "single-input aggregation module's output directly " +
-        "(per-pane re-aggregation needs the pre-aggregation " +
-        "stream) — move intervening transforms upstream of the " +
-        "aggregation or drop exactPanes",
-      "accumulating") { rq =>
+      trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery =
+    startRecipeEngine(cfg, df, trig, "accumulating") { rq =>
       import rq._
+      // the trigger bookkeeping (fired windows, per-window ordinals)
+      // is keyed on a window's END, which for fixed, sliding and
+      // calendar windows is immutable. A session window's end
+      // EXTENDS as elements arrive and sessions merge, so an extended
+      // session would read as a brand-new window — re-firing onTime
+      // panes and corrupting ordinals. Silent wrong panes are worse
+      // than a loud gap: fail with the alternatives named.
+      require(!recipe.strategy.map(s => s("window").getOrElse(s))
+          .flatMap(_.str("type")).contains("session"),
+        s"${cfg.name}: accumulating panes with early firings do not " +
+          "support session windows (a session's identity — its end — " +
+          "extends as elements arrive and sessions merge, so end-keyed " +
+          "pane bookkeeping would re-fire closed panes) — use fixed, " +
+          "sliding or calendar windows, or drop earlyFiringTrigger for " +
+          "one final pane per session")
       val fmt = cfg.params.str("format").getOrElse("parquet")
       require(fmt == "parquet",
-        s"exactPanes file sinks must be parquet (got $fmt): pane " +
-          "parts are staged as parquet and moved into the sink")
+        s"accumulating pane file sinks must be parquet (got $fmt): " +
+          "pane parts are staged as parquet and moved into the sink")
       // None: a memory/debug sink, which buffers the numbered rows
       val sinkDir = cfg.module match {
         case "debug" | "memory" => None
@@ -815,8 +760,7 @@ object StreamRunner {
         // horizons, and the separate distinct+collect job over the
         // re-aggregated batch (measured 0.6 s/firing at sf0.1) is
         // redundant.
-        var observed = Map.empty[String, Any]
-        elementEndOf match {
+        val observed = elementEndOf match {
           case Some(endOf) =>
             // task-parallel partitioned write: up to (tasks ×
             // open horizons) files per batch, all short-lived
@@ -846,10 +790,11 @@ object StreamRunner {
               .parquet(storeDir + s"/__gbatch=$batchId")
             // blocks only until the just-finished write job's
             // listener fires; an empty slice yields an empty set
-            observed = obs.get
+            obs.get
           case None => // global window: no horizon, no compaction
             batch.write.mode("overwrite")
               .parquet(storeDir + s"/__gbatch=$batchId")
+            Map.empty[String, Any]
         }
         val touched = recipe.reAgg(batch).persist()
         pinned += touched
@@ -1001,7 +946,6 @@ object StreamRunner {
         } finally pinned.foreach(_.unpersist())
       }
     }
-  }
 
   /** Beam `AfterPane.elementCountAtLeast(n)` approximation
     * (`module/Strategy.java:320`): UPDATE-mode panes pass through only
@@ -1018,22 +962,19 @@ object StreamRunner {
     val q = df.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint(cfg))
-      .foreachBatch(paneWriter(cfg, "pane",
-        pre = b => b.filter(col(countField) >= n)))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        writePanes(cfg, batch.filter(col(countField) >= n), lit("pane"))
+      }
       .start()
     register(q)
     q
   }
 
-  /** foreachBatch body: tag panes (fixed `tag` or per-row `tagOf`
-    * column), then append to the sink (memory buffer or files). */
-  private def paneWriter(cfg: ModuleCfg, tag: String,
-      pre: DataFrame => DataFrame = identity,
-      tagOf: DataFrame => Column = null,
-      post: DataFrame => DataFrame = identity)
-      : (DataFrame, Long) => Unit = { (batch, _) =>
-    val tagCol = Option(tagOf).map(_(batch)).getOrElse(lit(tag))
-    val tagged = post(pre(batch).withColumn("__pane", tagCol))
+  /** Tag `panes` with `__pane` = `tag`, then append them to the sink
+    * (memory buffer or files). */
+  private def writePanes(cfg: ModuleCfg, panes: DataFrame,
+      tag: Column): Unit = {
+    val tagged = panes.withColumn("__pane", tag)
     cfg.module match {
       case "debug" | "memory" => bufferPanes(cfg.name, tagged.collect())
       case _ =>

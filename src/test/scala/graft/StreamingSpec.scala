@@ -357,16 +357,18 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Beam trigger approximation (Strategy.java:276-320): early panes
-    * emit while the watermark has not closed the window; a late
-    * refinement after closure tags onTime. */
+  /** Beam AfterWatermark with early firings (Strategy.java:276-320) on
+    * the event-time clock (the max event time seen): a window fires
+    * early panes while the clock is before its end and its ON_TIME
+    * pane once the clock reaches the end — allowedLateness delays
+    * expiry, not the ON_TIME pane. */
   test("afterWatermark early firing: early pane before close, onTime after") {
     val dir = java.nio.file.Files.createTempDirectory("graft-early")
       .toString
     def writeBatch(file: String, rows: Seq[(Long, Long, Double)]): Unit =
       stageParquet(dir, file, rows)
-    // batch 1: windows [0,6h) and [6,12h) and [12,18h); watermark
-    // after the batch = 13:00 - 6h lateness = 07:00 > 06:00
+    // batch 1: windows [0,6h) and [6,12h) and [12,18h); the clock
+    // after the batch = 13:00, past the first two windows' ends
     writeBatch("b1", Seq((1L, 3600L, 1.0), (2L, 25200L, 1.0),
       (3L, 46800L, 1.0)))
     val config = s"""
@@ -406,32 +408,30 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    // early panes fired for ALL windows — including [6,12h) and
-    // [12,18h), which the watermark (07:00) has NOT closed yet
-    val earlyB1 = panes("early")
-    assert(earlyB1.map(winStart).toSet == Set(0L, 21600L, 43200L))
-    // the append side fired the ON_TIME pane only for the closed
-    // [0,6h) window
-    assert(panes("onTime").map(winStart) == List(0L))
-    // batch 2 at 19:00 pushes the watermark to 13:00 → [6,12h)
-    // closes and fires its ON_TIME pane
+    // the clock closed [0,6h) and [6,12h) in the batch that brought
+    // their elements — ON_TIME panes, no early pane before them;
+    // [12,18h) is still open and fires an early pane
+    assert(panes("early").map(winStart) == List(43200L))
+    assert(panes("onTime").map(winStart).toSet == Set(0L, 21600L))
+    // batch 2 at 19:00 moves the clock past 18:00 → [12,18h) closes
+    // and fires its ON_TIME pane
     writeBatch("b2", Seq((4L, 68400L, 1.0)))
     StreamRunner.drainAll()
-    assert(panes("onTime").map(winStart).toSet == Set(0L, 21600L))
+    assert(panes("onTime").map(winStart).toSet ==
+      Set(0L, 21600L, 43200L))
     assert(panes("onTime").forall(_.getAs[Long]("n") == 1L))
     StreamRunner.stopAll()
   }
 
   /** Beam lateFiringTrigger (Strategy.java:283-297): a pane refining
-    * a window that event time already passed (the frontier) is LATE;
-    * the append query's single firing is the closing pane with late
-    * data folded in (accumulating final). */
+    * a window whose ON_TIME pane already fired (the clock reached its
+    * end) is LATE, cumulative over every element so far, until the
+    * clock passes the end + allowedLateness. */
   test("afterWatermark late firing: post-window refinements tag late") {
     val dir = java.nio.file.Files.createTempDirectory("graft-late")
       .toString
-    // batch 1: [0,6h) and [12,18h). Watermark after b1 =
-    // 13:00 - 8h lateness = 05:00, so no window is append-closed yet,
-    // but the event-time frontier stands at 18:00
+    // batch 1: [0,6h) and [12,18h); the clock after b1 = 13:00, past
+    // [0,6h)'s end but inside its 8h allowedLateness
     stageParquet(dir, "b1", Seq((1L, 3600L, 1.0), (2L, 46800L, 1.0)))
     val config = s"""
       |sources:
@@ -472,12 +472,13 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    // first batch: everything is an early pane (frontier was unset)
-    assert(panes("early").map(winStart).toSet == Set(0L, 43200L))
-    assert(panes("late").isEmpty && panes("onTime").isEmpty)
-    // batch 2: a row at 02:00 refines [0,6h) AFTER the frontier
-    // (18:00) passed it — a LATE pane; watermark (05:00) still admits
-    // the row into state
+    // first batch: [0,6h) closes ON_TIME, [12,18h) fires early
+    assert(panes("onTime").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((0L, 1L)))
+    assert(panes("early").map(winStart) == List(43200L))
+    assert(panes("late").isEmpty)
+    // batch 2: a row at 02:00 refines [0,6h) AFTER its ON_TIME pane
+    // fired — a LATE pane (the clock, 13:00, is inside 06:00 + 8h)
     stageParquet(dir, "b2", Seq((3L, 7200L, 1.0)))
     StreamRunner.drainAll()
     val late = panes("late")
@@ -486,16 +487,15 @@ class StreamingSpec extends AnyFunSuite {
     // the refinement surfaced only as a late pane, never as early
     assert(!panes("early").exists(r => winStart(r) == 0L &&
       r.getAs[Long]("n") == 2L))
-    // batch 3 at 15:00: [12,18h) refines while the frontier sits at
-    // its own end (18:00) — NOT late; the watermark moves to 07:00
-    // and the append query fires [0,6h)'s closing pane with the late
-    // row folded in (accumulating final)
+    // batch 3 at 15:00: [12,18h) refines before the clock reaches
+    // its end — early, cumulative; [0,6h) fired ON_TIME once and
+    // never again
     stageParquet(dir, "b3", Seq((4L, 54000L, 1.0)))
     StreamRunner.drainAll()
     assert(panes("early").exists(r => winStart(r) == 43200L &&
       r.getAs[Long]("n") == 2L))
     assert(panes("onTime").map(r => (winStart(r),
-      r.getAs[Long]("n"))) == List((0L, 2L)))
+      r.getAs[Long]("n"))) == List((0L, 1L)))
     StreamRunner.stopAll()
   }
 
@@ -555,12 +555,12 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.getAs[Double]("s"), r.getAs[Double]("mn")))
     assert(w0("early") == List((3.0, 3.0)))
     // batch 2: a second element (4.0) in [0,6h) plus one at 14:00
-    // that pushes the frontier to 18:00. The discarding pane holds
+    // that pushes the clock to 14:00. The discarding pane holds
     // ONLY the new element: sum 4 (not 7), min 4 (not 3).
     stageParquet(dir, "b2", Seq((2L, 7200L, 4.0), (3L, 50400L, 9.0)))
     StreamRunner.drainAll()
     assert(w0("early") == List((3.0, 3.0), (4.0, 4.0)))
-    // batch 3: a straggler (2.0) after the frontier (18:00) passed
+    // batch 3: a straggler (2.0) after the clock (14:00) passed
     // [0,6h) but inside allowedLateness — the window's first
     // post-close firing, Beam's ON_TIME pane, again since-last only
     stageParquet(dir, "b3", Seq((4L, 10800L, 2.0)))
@@ -571,8 +571,8 @@ class StreamingSpec extends AnyFunSuite {
     stageParquet(dir, "b4", Seq((5L, 14400L, 7.0)))
     StreamRunner.drainAll()
     assert(w0("late") == List((7.0, 7.0)))
-    // batch 5 pushes the frontier to 36:00; batch 6's straggler is
-    // now BEYOND end + allowedLateness (06:00 + 24h < 36:00) — the
+    // batch 5 pushes the clock to 33:20; batch 6's straggler is
+    // now BEYOND end + allowedLateness (06:00 + 24h < 33:20) — the
     // expired window drops it, like Beam
     stageParquet(dir, "b5", Seq((6L, 120000L, 1.0)))
     StreamRunner.drainAll()
@@ -724,8 +724,8 @@ class StreamingSpec extends AnyFunSuite {
       "refinement") {
     val dir = java.nio.file.Files.createTempDirectory("graft-drop")
       .toString
-    // [0,6h) has one row; the 31:00 row pushes the watermark to
-    // 30:00, far past [0,6h)+1h lateness
+    // [0,6h) has one row; the 31:00 row pushes the clock to 31:00,
+    // far past [0,6h)+1h lateness
     stageParquet(dir, "b1", Seq((1L, 3600L, 1.0), (2L, 111600L, 1.0)))
     Pipeline.execute(spark, s"""
       |sources:
@@ -764,9 +764,10 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    assert(panes("early").map(winStart).toSet === Set(0L, 108000L))
-    // batch 2: a row at 02:00 — [0,6h) ended 24h before the
-    // watermark, lateness 1h → Beam drops it. No late pane for
+    assert(panes("early").map(winStart) === List(108000L))
+    assert(panes("onTime").map(winStart) === List(0L))
+    // batch 2: a row at 02:00 — [0,6h) ended 25h before the clock,
+    // lateness 1h → Beam drops it. No late pane for
     // [0,6h); its count stays 1 in every pane ever fired.
     stageParquet(dir, "b2", Seq((3L, 7200L, 1.0)))
     StreamRunner.drainAll()
@@ -865,8 +866,8 @@ class StreamingSpec extends AnyFunSuite {
       "child never gates") {
     val dir = java.nio.file.Files.createTempDirectory("graft-each")
       .toString
-    // [0,6h) single-element and [12,18h) single-element; watermark
-    // after b1 = 13:00 - 6h = 07:00 closes [0,6h) only
+    // [0,6h) single-element and [12,18h) single-element; the clock
+    // after b1 = 13:00 closes [0,6h) only
     stageParquet(dir, "b1", Seq((1L, 3600L, 1.0), (2L, 46800L, 1.0)))
     StreamRunner.paneStore.remove("eachpanes")
     Pipeline.execute(spark, s"""
@@ -907,13 +908,14 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    // first-child (afterWatermark+early) sequence: early panes for
-    // BOTH windows even at n=1 — the afterPane(100) second child is
-    // not consulted (Beam would switch to it only after t1 finishes)
-    assert(panes("early").map(winStart).toSet == Set(0L, 43200L))
-    assert(panes("early").forall(_.getAs[Long]("n") == 1L))
-    // and the append side fired the closed window's ON_TIME pane
+    // first-child (afterWatermark+early) sequence: the open window's
+    // early pane and the closed window's ON_TIME pane, both at n=1 —
+    // the afterPane(100) second child is not consulted (Beam would
+    // switch to it only after t1 finishes)
+    assert(panes("early").map(winStart) == List(43200L))
     assert(panes("onTime").map(winStart) == List(0L))
+    assert((panes("early") ++ panes("onTime"))
+      .forall(_.getAs[Long]("n") == 1L))
     StreamRunner.stopAll()
   }
 
@@ -922,16 +924,16 @@ class StreamingSpec extends AnyFunSuite {
     * while child 1 is unfinished (AfterEach only advances when the
     * current child finishes, and a repeating afterWatermark child
     * never does) — so the first child's lateFiringTrigger owns the
-    * post-frontier refinement and the pinned sequence gains exactly
-    * one LATE pane, then the closing ON_TIME pane folds the late row
-    * in (accumulating final). Deterministic because the frontier /
+    * post-close refinement and the pinned sequence gains exactly
+    * one LATE pane (cumulative, with the late row folded in) after
+    * the window's ON_TIME pane. Deterministic because the clock /
     * fired-window trigger state persists across batches. */
   test("afterEach late pane sequence: first child's late firing owns " +
       "post-frontier refinements; count child still never gates") {
     val dir = java.nio.file.Files.createTempDirectory("graft-eachlate")
       .toString
-    // frontier after b1 = 18:00 (event at 13:00 in [12,18h)); the
-    // watermark 13:00 - 8h = 05:00 keeps [0,6h) open for late rows
+    // the clock after b1 = 13:00 closes [0,6h); its 8h
+    // allowedLateness keeps it open for late rows until 14:00
     stageParquet(dir, "b1", Seq((1L, 3600L, 1.0), (2L, 46800L, 1.0)))
     StreamRunner.paneStore.remove("eachlatepanes")
     Pipeline.execute(spark, s"""
@@ -974,13 +976,15 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    // batch 1: early panes for both windows at n=1 (the count-100
-    // second child is never consulted)
-    assert(panes("early").map(winStart).toSet == Set(0L, 43200L))
-    assert(panes("early").forall(_.getAs[Long]("n") == 1L))
-    assert(panes("late").isEmpty && panes("onTime").isEmpty)
-    // batch 2: a 02:00 straggler refines [0,6h) AFTER the frontier
-    // passed it → exactly one LATE pane from the first child's late
+    // batch 1: [0,6h)'s ON_TIME pane and [12,18h)'s early pane at
+    // n=1 (the count-100 second child is never consulted)
+    assert(panes("onTime").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((0L, 1L)))
+    assert(panes("early").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((43200L, 1L)))
+    assert(panes("late").isEmpty)
+    // batch 2: a 02:00 straggler refines [0,6h) AFTER its ON_TIME
+    // pane → exactly one LATE pane from the first child's late
     // firing, never a second early pane for that window
     stageParquet(dir, "b2", Seq((3L, 7200L, 1.0)))
     StreamRunner.drainAll()
@@ -988,12 +992,14 @@ class StreamingSpec extends AnyFunSuite {
       r.getAs[Long]("n"))) == List((0L, 2L)))
     assert(!panes("early").exists(r => winStart(r) == 0L &&
       r.getAs[Long]("n") == 2L))
-    // batch 3 at 15:00 pushes the watermark to 07:00: [0,6h) closes
-    // with the late row folded in (accumulating final ON_TIME pane)
+    // batch 3 at 15:00 refines the open [12,18h) early; [0,6h)
+    // fired ON_TIME once and never again
     stageParquet(dir, "b3", Seq((4L, 54000L, 1.0)))
     StreamRunner.drainAll()
+    assert(panes("early").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((43200L, 1L), (43200L, 2L)))
     assert(panes("onTime").map(r => (winStart(r),
-      r.getAs[Long]("n"))) == List((0L, 2L)))
+      r.getAs[Long]("n"))) == List((0L, 1L)))
     StreamRunner.stopAll()
   }
 
@@ -1050,15 +1056,18 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    assert(panes("early").map(winStart).toSet == Set(0L, 43200L))
+    assert(panes("early").map(winStart) == List(43200L))
+    assert(panes("onTime").map(winStart) == List(0L))
     stageParquet(dir, "b2", Seq((3L, 7200L, 1.0)))
     StreamRunner.drainAll()
     assert(panes("late").map(r => (winStart(r),
       r.getAs[Long]("n"))) == List((0L, 2L)))
     stageParquet(dir, "b3", Seq((4L, 54000L, 1.0)))
     StreamRunner.drainAll()
+    assert(panes("early").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((43200L, 1L), (43200L, 2L)))
     assert(panes("onTime").map(r => (winStart(r),
-      r.getAs[Long]("n"))) == List((0L, 2L)))
+      r.getAs[Long]("n"))) == List((0L, 1L)))
     StreamRunner.stopAll()
   }
 
@@ -1114,9 +1123,10 @@ class StreamingSpec extends AnyFunSuite {
     def fwin(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    assert(fpanes("early").map(fwin).toSet == Set(0L, 43200L))
-    assert(fpanes("early").forall(_.getAs[Long]("n") == 1L))
+    assert(fpanes("early").map(fwin) == List(43200L))
     assert(fpanes("onTime").map(fwin) == List(0L))
+    assert((fpanes("early") ++ fpanes("onTime"))
+      .forall(_.getAs[Long]("n") == 1L))
     StreamRunner.stopAll()
   }
 
@@ -1125,18 +1135,18 @@ class StreamingSpec extends AnyFunSuite {
     * child — the afterWatermark trigger with its lateFiringTrigger —
     * which is also what Beam's AfterFirst delivers here: the
     * disjunction fires whenever EITHER child would, and after the
-    * frontier passes a window only the afterWatermark child's late
+    * clock passes a window only the afterWatermark child's late
     * firing reacts to a straggler (the count-100 child stays below
     * threshold forever). So the pinned sequence gains exactly one
-    * LATE pane for the refined window, then the closing ON_TIME pane
-    * folds the late row in — identical reasoning to the afterEach
-    * late pin, because both reductions land on the same child. */
+    * LATE pane for the refined window after its ON_TIME pane —
+    * identical reasoning to the afterEach late pin, because both
+    * reductions land on the same child. */
   test("afterFirst late pane sequence: the watermark child's late " +
       "firing owns post-frontier refinements") {
     val dir = java.nio.file.Files.createTempDirectory("graft-firstlate")
       .toString
-    // frontier after b1 = 18:00 (event at 13:00 in [12,18h)); the
-    // watermark 13:00 - 8h = 05:00 keeps [0,6h) open for late rows
+    // the clock after b1 = 13:00 closes [0,6h); its 8h
+    // allowedLateness keeps it open for late rows until 14:00
     stageParquet(dir, "b1", Seq((1L, 3600L, 1.0), (2L, 46800L, 1.0)))
     StreamRunner.paneStore.remove("firstlatepanes")
     Pipeline.execute(spark, s"""
@@ -1179,12 +1189,14 @@ class StreamingSpec extends AnyFunSuite {
     def winStart(r: org.apache.spark.sql.Row): Long =
       r.getAs[org.apache.spark.sql.Row]("window")
         .getAs[java.sql.Timestamp]("start").getTime / 1000
-    // batch 1: early panes for both windows at n=1
-    assert(panes("early").map(winStart).toSet == Set(0L, 43200L))
-    assert(panes("early").forall(_.getAs[Long]("n") == 1L))
-    assert(panes("late").isEmpty && panes("onTime").isEmpty)
-    // batch 2: a 02:00 straggler refines [0,6h) after the frontier
-    // passed it → exactly one LATE pane (Beam: the disjunction fires
+    // batch 1: [0,6h)'s ON_TIME pane and [12,18h)'s early pane at n=1
+    assert(panes("onTime").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((0L, 1L)))
+    assert(panes("early").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((43200L, 1L)))
+    assert(panes("late").isEmpty)
+    // batch 2: a 02:00 straggler refines [0,6h) after its ON_TIME
+    // pane → exactly one LATE pane (Beam: the disjunction fires
     // because the afterWatermark child's late firing does)
     stageParquet(dir, "b2", Seq((3L, 7200L, 1.0)))
     StreamRunner.drainAll()
@@ -1192,12 +1204,14 @@ class StreamingSpec extends AnyFunSuite {
       r.getAs[Long]("n"))) == List((0L, 2L)))
     assert(!panes("early").exists(r => winStart(r) == 0L &&
       r.getAs[Long]("n") == 2L))
-    // batch 3 at 15:00 pushes the watermark to 07:00: [0,6h) closes
-    // with the late row folded in
+    // batch 3 at 15:00 refines the open [12,18h) early; [0,6h)
+    // fired ON_TIME once and never again
     stageParquet(dir, "b3", Seq((4L, 54000L, 1.0)))
     StreamRunner.drainAll()
+    assert(panes("early").map(r => (winStart(r),
+      r.getAs[Long]("n"))) == List((43200L, 1L), (43200L, 2L)))
     assert(panes("onTime").map(r => (winStart(r),
-      r.getAs[Long]("n"))) == List((0L, 2L)))
+      r.getAs[Long]("n"))) == List((0L, 1L)))
     StreamRunner.stopAll()
   }
 
@@ -1453,7 +1467,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(t => (t._1, t._3, t._4, t._5))
     assert(w(0L) == List(("early", 3.0, 3.0, 0L)))
     // batch 2: 4.0 joins [0,6h) AND an element at 14:00 pushes the
-    // frontier to 18:00, closing [0,6h) in the same batch — one
+    // clock to 14:00, closing [0,6h) in the same batch — one
     // cumulative ON_TIME pane (sum 7 = 3+4, min 3), not an early +
     // onTime pair, so the ordinal stays one-per-batch
     stageParquet(dir, "b2", Seq((2L, 7200L, 4.0), (3L, 50400L, 9.0)))
@@ -1466,7 +1480,7 @@ class StreamingSpec extends AnyFunSuite {
     stageParquet(dir, "b3", Seq((4L, 10800L, 2.0)))
     StreamRunner.drainAll()
     assert(w(0L).last == ("late", 9.0, 2.0, 2L))
-    // batch 4: an element at 33h closes [12,18h) via the frontier —
+    // batch 4: an element at 33h closes [12,18h) via the clock —
     // its ON_TIME pane fires with NO new [12,18h) element, carrying
     // the unchanged cumulative aggregate
     stageParquet(dir, "b4", Seq((5L, 120000L, 1.0)))
@@ -1475,8 +1489,8 @@ class StreamingSpec extends AnyFunSuite {
       ("onTime", 9.0, 9.0, 1L)))
     assert(w(108000L) == List(("early", 1.0, 1.0, 0L)))
     // retention bound: batch 1's and batch 3's store slices feed only
-    // windows now beyond end + allowedLateness (ends ≤ 6h, frontier
-    // 36h, lateness 24h) — compaction must have dropped their
+    // windows now beyond end + allowedLateness (ends ≤ 6h, clock
+    // 33h20, lateness 24h) — compaction must have dropped their
     // __gbatch dirs, leaving on disk only the 3 open-horizon elements
     // (7200, 50400, 120000), not all 5 ever ingested
     val store = new java.io.File(s"$dir/ckpt/acc-elements")
@@ -1488,7 +1502,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(storeRows <= 3,
       s"store retains $storeRows rows — open-horizon bound exceeded")
     // batch 5: [0,6h) is now beyond end + allowedLateness (6h + 24h
-    // < 36h frontier) — expired, the straggler emits nothing
+    // ≤ 33h20 clock) — expired, the straggler emits nothing
     val before = all()
     stageParquet(dir, "b5", Seq((6L, 3600L, 5.0)))
     StreamRunner.drainAll()
@@ -1497,7 +1511,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Beam persists trigger state; so does the exact-pane engine now —
-    * the frontier / fired-window / slice-max-end maps snapshot under
+    * the event-time clock and fired-window set snapshot under
     * the checkpoint per batch and restore on restart, so pane TIMING
     * (not just values) is identical across a kill/restart: a window
     * that closed before the crash stays closed instead of re-firing
@@ -1631,7 +1645,7 @@ class StreamingSpec extends AnyFunSuite {
   /** Week-offset calendar buckets exercise the ANCHORED end
     * derivation through the pane engines: the bucket start is NOT an
     * ISO Monday, so deriving the end as date_trunc(WEEK, start)+7d
-    * (the simple-unit formula) would mis-key the frontier — the
+    * (the simple-unit formula) would mis-key the window end — the
     * pane re-aggregation's window must yield end = start + 7 days
     * exactly. */
   test("exactPanes over week-offset calendar buckets: anchored ends " +
@@ -1917,16 +1931,16 @@ class StreamingSpec extends AnyFunSuite {
       try Pipeline.execute(spark, config)
       finally StreamRunner.stopAll())
     assert(e.getMessage.contains("session windows"), e.getMessage)
-    assert(e.getMessage.contains("drop exactPanes"), e.getMessage)
+    assert(e.getMessage.contains("drop earlyFiringTrigger"), e.getMessage)
   }
 
   /** Element-level store compaction: one micro-batch mixing a
     * near-window and a far-window element lands in ONE `__gbatch`
     * slice, partitioned by each element's retention horizon
-    * (`__wend`). When the frontier passes the near horizon the slice
+    * (`__wend`). When the clock passes the near horizon the slice
     * SURVIVES but the near element's partition drops by path —
     * slice-level (max-end) compaction would have kept both until the
-    * far window expired. The frontier then crosses a second horizon
+    * far window expired. The clock then crosses a second horizon
     * (slice fully empties → dir drops), and a restart re-aggregates
     * the compacted store into the correct cumulative onTime pane. */
   test("exactPanes element-level compaction: expired elements drop " +
@@ -1979,8 +1993,8 @@ class StreamingSpec extends AnyFunSuite {
     def storeRows(): Long = spark.read.parquet(store.toString).count()
     // batch 0: t=3600 (window [0,6h), horizon = its end 21600) and
     // t=90000 ([24h,30h), horizon 108000) in ONE slice; the far
-    // element pushes the frontier to 30h, closing [0,6h) in the same
-    // batch — its element's horizon is already behind the frontier
+    // element pushes the clock to 25h, closing [0,6h) in the same
+    // batch — its element's horizon is already behind the clock
     StreamRunner.paneStore.remove("epanes")
     stageParquet(dir, "b1", Seq((1L, 3600L, 3.0), (2L, 90000L, 5.0)))
     Pipeline.execute(spark, config)
@@ -1991,7 +2005,7 @@ class StreamingSpec extends AnyFunSuite {
       s"near element's partition should drop from the surviving " +
         s"slice: ${slice(0)}")
     assert(storeRows() == 1L, s"store retains ${storeRows()} rows")
-    // batch 1: t=130000 closes [24h,30h) — the frontier crosses a
+    // batch 1: t=130000 closes [24h,30h) — the clock crosses a
     // SECOND horizon: slice 0 fully empties and drops by dir
     stageParquet(dir, "b2", Seq((3L, 130000L, 7.0)))
     StreamRunner.drainAll()
@@ -1999,7 +2013,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(store, "__gbatch=0").exists(),
       "fully expired slice should drop")
     assert(storeRows() == 1L)
-    // restart against the compacted store: the next frontier advance
+    // restart against the compacted store: the next clock advance
     // closes [36h,42h) and its cumulative onTime pane re-aggregates
     // from the retained element — value survives compaction + restart
     StreamRunner.stopAll()
@@ -2062,7 +2076,7 @@ class StreamingSpec extends AnyFunSuite {
           r.getLong(3)))
         .toSeq.sortBy(t => (t._1, t._4))
     // window [0,6h) gets an element, then an element at 14:00 pushes
-    // the frontier past its end — early pane, then cumulative onTime
+    // the clock past its end — early pane, then cumulative onTime
     stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
     Pipeline.execute(spark, config)
     StreamRunner.drainAll()
@@ -2079,16 +2093,16 @@ class StreamingSpec extends AnyFunSuite {
       "trigger-state snapshot missing from the checkpoint")
     Pipeline.execute(spark, config)
     StreamRunner.drainAll()
-    // post-restart straggler into the CLOSED [0,6h): with the frontier
-    // and fired set restored it is a late refinement (dropped — no
-    // lateFiringTrigger, lateness 0); losing the state would re-fire
+    // post-restart straggler into the CLOSED [0,6h): with the clock
+    // and fired set restored it is an expired refinement (dropped —
+    // lateness 0); losing the state would re-fire
     // the closed window tagged `early`
     stageParquet(dir, "b3", Seq((4L, 10800L, 2.0)))
     StreamRunner.drainAll()
     assert(panes() == preRestart,
       s"closed window re-fired after restart: ${panes()}")
-    // a new element far ahead advances the frontier past b2's slice
-    // max-end: the PRE-restart slice must compact (its max-end was
+    // a new element far ahead advances the clock past b2's
+    // horizons: the PRE-restart slice must compact (the clock was
     // restored from the snapshot, not lost with the process)
     stageParquet(dir, "b4", Seq((5L, 100800L, 1.0)))
     StreamRunner.drainAll()
@@ -2661,5 +2675,92 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.toList).getOrElse(Nil)
     assert(panes.map { case (tag, r) => (tag, r.getAs[Double]("s")) } ==
       List(("early", 3.0)), panes)
+  }
+
+  /** allowedLateness belongs to the aggregation: its watermark and
+    * its windows' expiry read the same strategy. A sink strategy that
+    * sets only the mode and the trigger keeps the aggregation's 24 h,
+    * so the 02:00 straggler (the clock stands at 14:00) still fires
+    * [0 h, 6 h)'s pane; a sink strategy with a different
+    * allowedLateness fails at start and names both values. */
+  test("pane engines take allowedLateness from the aggregation, and a " +
+      "different sink value fails at start") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-latesrc")
+      .toString
+    stageParquet(dir, "b1", Seq((1L, 3600L, 1.0)))
+    def config(sinkLateness: String) = s"""
+      |sources:
+      |  - name: ev
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |  - name: agg
+      |    module: aggregation
+      |    inputs: [ev]
+      |    strategy:
+      |      timestampField: ts
+      |      window: {type: fixed, unit: hour, size: 6, allowedLateness: 24}
+      |    parameters:
+      |      groupFields: []
+      |      aggregations:
+      |        - input: ev
+      |          fields:
+      |            - {name: s, op: sum, field: value}
+      |sinks:
+      |  - name: latepanes
+      |    module: memory
+      |    input: agg
+      |    strategy:
+      |      mode: discarding$sinkLateness
+      |      trigger:
+      |        type: afterWatermark
+      |        earlyFiringTrigger:
+      |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+      |    parameters: {checkpointLocation: $dir/ckpt}
+      |""".stripMargin
+    val e = intercept[IllegalArgumentException](
+      try Pipeline.execute(spark,
+        config("\n      |      allowedLateness: 8h"))
+      finally StreamRunner.stopAll())
+    assert(e.getMessage.contains("28800s") &&
+      e.getMessage.contains("86400s"), e.getMessage)
+    StreamRunner.paneStore.remove("latepanes")
+    def panes(): List[(String, Long, Double)] =
+      StreamRunner.paneStore.get("latepanes").toList.map { case (tag, r) =>
+        (tag, r.getAs[org.apache.spark.sql.Row]("window")
+          .getAs[java.sql.Timestamp]("start").getTime / 1000,
+          r.getAs[Double]("s"))
+      }
+    try {
+      Pipeline.execute(spark, config(""))
+      StreamRunner.drainAll()
+      stageParquet(dir, "b2", Seq((2L, 50400L, 2.0)))
+      StreamRunner.drainAll()
+      stageParquet(dir, "b3", Seq((3L, 7200L, 4.0)))
+      StreamRunner.drainAll()
+      assert(panes() == List(("early", 0L, 1.0), ("early", 43200L, 2.0),
+        ("onTime", 0L, 4.0)))
+    } finally StreamRunner.stopAll()
+  }
+
+  /** A trigger-state snapshot from a build whose clock was the max
+    * window END (`frontier`) cannot resume: read as an event time it
+    * would close the current window early. The engine refuses it at
+    * start and names the remedy. */
+  test("a trigger-state snapshot from an earlier build fails at start") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-oldsnap")
+      .toString
+    stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
+    val snaps = new java.io.File(s"$dir/ckpt/trigger-state")
+    snaps.mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(snaps, "__tbatch=0.json").toPath,
+      """{"frontier":21600000,"fired":[]}""".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      try Pipeline.execute(spark, exactPaneConfig(dir, "oldpanes",
+        s"{checkpointLocation: $dir/ckpt}"))
+      finally StreamRunner.stopAll())
+    assert(e.getMessage.contains("written by an earlier build; start " +
+      "from a fresh checkpoint"), e.getMessage)
   }
 }
