@@ -1964,11 +1964,13 @@ transforms:
     // pane engine (per-micro-batch re-aggregation, PaneRecipes):
     // events staged as three time-ordered files (split at Jan 11 /
     // Jan 21, both 6h-window boundaries, so no window straddles a
-    // batch and every pane tags 'early'), drained one micro-batch at
-    // a time. Each pane row is the aggregate of ONLY its batch's
-    // elements — the oracle groups by the same ts-range batch key
-    // and must reproduce the multiset exactly (a running/accumulating
-    // aggregate would double-count and hash-mismatch).
+    // batch and no pane is late), drained one micro-batch at a time.
+    // Each pane row is the aggregate of ONLY its batch's elements —
+    // the oracle groups by the same ts-range batch key and must
+    // reproduce the multiset exactly (a running/accumulating
+    // aggregate would double-count and hash-mismatch); a pane is
+    // early while its window ends after its batch's max event time,
+    // ON_TIME otherwise.
     "q77_discarding_panes" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions.{col, round}
       val base = graft.ops.FsUtil.scratchDir("graft_q77_")
@@ -10112,7 +10114,10 @@ transforms:
 
     // discarding panes: one aggregate row per (micro-batch, window,
     // key) — the batch key replays as the staged ts ranges; an
-    // accumulating engine would emit running totals and mismatch
+    // accumulating engine would emit running totals and mismatch.
+    // The batches are time-ordered, so the clock a batch leaves is
+    // its own max ts: a window ending after it is early, any other
+    // closes ON_TIME in that batch (no window straddles a batch)
     "q77_discarding_panes" ->
       """WITH b AS (
            SELECT CASE WHEN ts < TIMESTAMP '2024-01-11' THEN 1
@@ -10120,11 +10125,16 @@ transforms:
                        ELSE 3 END AS batch,
                   CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT)
                     AS win_start,
-                  event_type, value
-           FROM events)
+                  event_type, value, ts
+           FROM events),
+         c AS (SELECT batch, max(epoch_ms(ts)) AS clock_ms
+               FROM b GROUP BY batch)
          SELECT win_start, event_type, count(*) AS n,
-           round(sum(value), 4) AS total_r, 'early' AS pane
-         FROM b GROUP BY batch, win_start, event_type""",
+           round(sum(value), 4) AS total_r,
+           CASE WHEN (win_start + 21600) * 1000 > any_value(clock_ms)
+             THEN 'early' ELSE 'onTime' END AS pane
+         FROM b JOIN c USING (batch)
+         GROUP BY batch, win_start, event_type""",
 
     // two-stage sketch merge must equal exact distinct on the
     // bounded (mod 97) domain — coupon-exact at every sf

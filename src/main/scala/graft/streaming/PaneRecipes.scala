@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.DataFrame
 
 /** Side-channel from the aggregation module to [[StreamRunner]]'s
-  * recipe engines — DISCARDING and ACCUMULATING panes with early
+  * pane engine — DISCARDING and ACCUMULATING panes with early
   * firings, both exact (reference `module/Strategy.java:84-89` mode
   * enum + `:276-297` early firings).
   *
@@ -17,10 +17,10 @@ import org.apache.spark.sql.DataFrame
   * streaming aggregate would emit — `{start, end}` window struct,
   * timestampCombiner stamp and all — for every aggregate type
   * (min/max/argmax/array_agg included, which no output-delta scheme
-  * could reconstruct). The discarding engine runs it on each
-  * micro-batch (with a ProcessingTime trigger a micro-batch holds
-  * precisely the elements since the last tick); the accumulating
-  * engine runs it on its retained element store.
+  * could reconstruct). The engine runs it on each micro-batch for
+  * discarding panes (with a ProcessingTime trigger a micro-batch
+  * holds precisely the elements since the last tick) and on its
+  * retained element store for accumulating ones.
   *
   * The aggregation registers the recipe on the current run scope
   * (`CacheTracker.registerRecipe`), identity-keyed on its output
@@ -33,7 +33,7 @@ private[graft] object PaneRecipes {
     * (window column excluded — engines detect it from the
     * re-aggregated frame), so pane engines can scope firings per
     * key+window like Beam triggers do; `strategy` = the aggregation's
-    * OWN strategy node, from which the exact engine derives its
+    * OWN strategy node, from which the engine derives its
     * element retention horizon and window-end grid
     * ([[Strategy.elementRetainEnd]], [[Strategy.endGrid]]) — the
     * sink's strategy wins the trigger/mode precedence but need not

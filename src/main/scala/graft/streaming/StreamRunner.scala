@@ -11,13 +11,15 @@ import scala.jdk.CollectionConverters._
 /** Starts streaming sinks (SURVEY §2.9): `writeStream` with the
   * module's trigger; output mode maps Beam accumulation
   * (`discarding` → append, `accumulating` → update/complete). With
-  * early-firing triggers both modes run an EXACT pane engine over
-  * the aggregation's [[PaneRecipes]] recipe — `discarding`
+  * early-firing triggers both modes run ONE exact pane engine over
+  * the aggregation's [[PaneRecipes]] recipe (`startRecipeEngine`);
+  * the mode picks only a pane's elements — `discarding`
   * re-aggregates each micro-batch (each pane holds only
   * since-last-firing elements), `accumulating` (the default)
   * re-aggregates a retained element store (each pane holds every
-  * element so far) — and both close and expire windows on one
-  * event-time clock, the max event time seen (`PaneState`).
+  * element so far). Both tag, number and publish panes the same
+  * way, and close and expire windows on one event-time clock, the
+  * max event time seen (`PaneState`).
   * Started queries are registered here so callers (tests, drivers)
   * can drain with `processAllAvailable` or block on `awaitAny`; that
   * registry and the memory-sink pane buffer are the only state kept
@@ -122,9 +124,9 @@ object StreamRunner {
     }
   }
 
-  /** Pane-multiplexed triggers route through `writePanes`, which can
-    * drain to buffers and file sinks only — anything else must fail
-    * at start, not with a None.get inside foreachBatch. */
+  /** Pane-multiplexed triggers drain to buffers and file sinks only —
+    * anything else must fail at start, not with a None.get inside
+    * foreachBatch. */
   private def requirePaneSink(cfg: ModuleCfg): Unit =
     if (!Set("debug", "memory", "storage", "files").contains(cfg.module))
       throw new IllegalArgumentException(
@@ -149,14 +151,14 @@ object StreamRunner {
     val trigType = trig.flatMap(_.str("type")).getOrElse("")
     if (trigType == "afterWatermark" &&
       trig.exists(_.apply("earlyFiringTrigger").isDefined))
-      // accumulation mode picks the pane engine: discarding panes
+      // one pane engine for both accumulation modes: discarding panes
       // re-aggregate each micro-batch, accumulating panes (the
-      // default) the retained elements — exact Beam semantics for any
-      // aggregate type either way. `exactPanes` is accepted and
-      // ignored: there is no other accumulating engine to select.
-      return if (strategy.exists(_.str("mode").contains("discarding")))
-        startDiscardingEarly(cfg, df, trig.get)
-      else startAccumulatingExact(cfg, df, trig.get)
+      // default) the retained elements. `exactPanes` is accepted and
+      // ignored: there is no other engine to select.
+      return startRecipeEngine(cfg, df, trig.get,
+        if (strategy.exists(_.str("mode").contains("discarding")))
+          "discarding"
+        else "accumulating")
     if (trigType == "afterPane")
       return startAfterPane(cfg, df, trig.get)
     startPlain(cfg, df, trig, strategy)
@@ -171,22 +173,27 @@ object StreamRunner {
     *    (epoch millis) over the batches applied so far. Beam pane
     *    timing maps onto it (Dataflow Model): a window closes ON_TIME
     *    once W reaches its end, and expires once W reaches its end +
-    *    allowedLateness ([[expired]]). A batch is judged against W
-    *    BEFORE it (early vs onTime/late) and then advances W, as a
-    *    watermark in effect during batch N was computed from batch
-    *    N-1.
+    *    allowedLateness ([[expired]]). A batch's pane of a window is
+    *    early while the window ends after W as the batch leaves it,
+    *    so a window whose end the batch itself reaches fires its
+    *    ON_TIME pane in that batch; expiry is judged on W before the
+    *    batch.
     *  - `fired`: windows (by end, epoch seconds) whose ON_TIME pane
     *    already fired — drives the early/onTime/late split. Bounded
     *    by the windows a run observes (coarse), not by keys.
-    *  - `lastBatch`: highest batchId already applied by a recipe-
-    *    engine query — a same-process micro-batch retry re-enters
-    *    foreachBatch with the same id and must be a no-op (the
+    *  - `lastBatch`: highest batchId already applied — a batch that
+    *    re-enters foreachBatch with an applied id must be a no-op (the
     *    element store, this state, and the sink were all already
-    *    updated). Cross-restart replay safety comes from the on-disk
-    *    layout instead: the store and the pane-ordinals snapshot are
-    *    batch-stamped (`__gbatch=<id>`, `__obatch=<id>`, overwritten
-    *    on replay) and file-sink panes publish as `b<id>-*` files
-    *    that a replay deletes before re-publishing. */
+    *    updated). A same-process micro-batch retry re-enters with the
+    *    same id; a restart replays the last batch when its commit is
+    *    missing, so a restart sets `lastBatch` to the restored
+    *    snapshot's batch id. A batch that failed before its snapshot
+    *    was written replays against the state before it, and the
+    *    on-disk layout keeps that replay exact: the store and the
+    *    pane-ordinals snapshot are batch-stamped (`__gbatch=<id>`,
+    *    `__obatch=<id>`, overwritten on replay) and file-sink panes
+    *    publish as `b<id>-*` files that a replay deletes before
+    *    re-publishing. */
   private final class PaneState {
     var maxEventTime: Long = Long.MinValue
     val fired = scala.collection.mutable.Set[Long]()
@@ -222,149 +229,6 @@ object StreamRunner {
   private def windowEndCol(batch: DataFrame): Option[Column] =
     if (batch.columns.contains("window")) Some(col("window.end"))
     else None
-
-  /** Beam DISCARDING accumulation with early firings — exact, not
-    * approximated: each ProcessingTime micro-batch of the
-    * PRE-aggregation stream holds precisely the elements that
-    * arrived since the last firing, so re-aggregating the batch
-    * inside foreachBatch (the [[PaneRecipes]] recipe) IS the
-    * discarding pane, for every aggregate type — min/max/array_agg
-    * included, which no output-delta scheme could reconstruct. One
-    * stateless pass-through query; no streaming aggregation state
-    * at all.
-    *
-    * Pane timing keys on the same event-time clock as the
-    * accumulating engine: a pane for a window whose end the clock
-    * had reached before this batch is the window's first post-close
-    * firing (ON_TIME) or, if one already fired, a LATE pane — dropped
-    * unless `lateFiringTrigger` is declared, like Beam. Panes fire
-    * only when elements arrived (Beam's FIRE_IF_NON_EMPTY on-time
-    * behavior; an element-free window close emits nothing). */
-  private def startDiscardingEarly(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery =
-    startRecipeEngine(cfg, df, trig, "discarding") { rq =>
-      import rq._
-      (batch, id) => {
-        // the batch's max event time rides on the distinct-ends
-        // collect below as an Observation
-        val obs = new org.apache.spark.sql.Observation()
-        val metric = maxEventTimeMetric(batch, recipe)
-        val agged = recipe.reAgg(metric.fold(batch)(batch.observe(obs, _)))
-        windowEndCol(agged) match {
-          case None => // global window: every firing is early
-            writePanes(cfg, agged, lit("early"))
-          case Some(end) =>
-            val endSec = end.cast("long")
-            val wPrev = st.maxEventTime
-            // Beam expired-window drop: a pane row for an expired
-            // window contains only beyond-lateness elements —
-            // dropping the row drops exactly those elements (each
-            // pane aggregates one window of this batch only)
-            val pane = agged.filter(live(endSec, wPrev, latenessMs))
-            // the handful of distinct window ends in one batch —
-            // bounded by windows, never by keys or rows
-            val ends = pane.select(endSec).distinct().collect()
-              .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-            if (metric.isDefined)
-              st.maxEventTime = advanced(wPrev, obs.get)
-            val tagOf = ends.map { e =>
-              e -> (if (e * 1000L > wPrev) "early"
-              else if (st.fired.add(e)) "onTime"
-              else "late")
-            }.toMap
-            val tag = tagOf.foldLeft(lit("early")) {
-              case (acc, (e, t)) => when(endSec === e, t).otherwise(acc)
-            }
-            val lateEnds = tagOf.collect { case (e, "late") => e }.toSeq
-            writePanes(cfg,
-              if (hasLate) pane else pane.filter(!endSec.isin(lateEnds: _*)),
-              tag)
-        }
-      }
-    }
-
-  /** What a recipe engine's batch body works with: the aggregation's
-    * pane recipe, the query's trigger state, whether late panes are
-    * emitted, the aggregation's allowedLateness in millis and the
-    * sink's checkpoint. */
-  private final case class RecipeQuery(recipe: PaneRecipes.Recipe,
-      st: PaneState, hasLate: Boolean, latenessMs: Long, ckpt: String)
-
-  /** The one shell both recipe engines (discarding and exact
-    * accumulating, named by their accumulation `mode`) start
-    * through: look up the aggregation's pane recipe, take
-    * allowedLateness from the aggregation's strategy (the one its
-    * watermark uses; a sink strategy that sets a different value
-    * fails here), restore the query's trigger state from the
-    * checkpoint, and run ONE
-    * ProcessingTime foreachBatch query of the early-firing delay over
-    * the pre-aggregation stream, checkpointed under `ckpt/<mode>`.
-    * `engine` does its per-query setup and returns the batch body;
-    * the shell skips batches without input and batch ids already
-    * applied (a same-process retry re-enters with the same id), and
-    * persists the trigger state after each applied batch.
-    *
-    * Partition discovery stays on the driver: past 32 paths Spark
-    * launches a distributed LISTING JOB per micro-batch — for the
-    * exact engine's element store read, which routinely holds
-    * (slices × open horizons) > 32 dirs, bounded by the open-window
-    * horizon (the same listing already runs driver-side for
-    * compaction), and for the file source whenever a micro-batch
-    * picks up > 32 new files (0.2-1.2 s per batch measured on a
-    * backlogged 4-core stream). The store is read through the
-    * query's session, cloned at start(); the source lists through the
-    * session that created it, so it is re-created on a private clone.
-    * Neither touches the caller's session once start() returns. */
-  private def startRecipeEngine(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode, mode: String)(
-      engine: RecipeQuery => (DataFrame, Long) => Unit)
-      : StreamingQuery = {
-    requirePaneSink(cfg)
-    val recipe = graft.ops.CacheTracker.recipe(df.queryExecution.logical)
-      .getOrElse(throw new IllegalArgumentException(
-        s"accumulation mode '$mode' with early firings requires the " +
-          "pane sink to read a single-input aggregation module's " +
-          "output directly (per-pane re-aggregation needs the " +
-          "pre-aggregation stream) — move intervening transforms or " +
-          "logging taps upstream of the aggregation, or drop the " +
-          "post-aggregation limit"))
-    val lateness = recipe.strategy
-      .flatMap(Strategy.allowedLatenessSeconds).getOrElse(0L)
-    cfg.node("strategy").flatMap(Strategy.allowedLatenessSeconds)
-      .filter(_ != lateness).foreach(own =>
-        throw new IllegalArgumentException(
-          s"${cfg.name}: the sink strategy's allowedLateness (${own}s) " +
-            s"differs from the aggregation's (${lateness}s) — " +
-            "windows expire on the aggregation's, which its watermark " +
-            "uses too; declare allowedLateness on the aggregation only"))
-    val st = new PaneState
-    val ckpt = checkpoint(cfg)
-    val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
-    restoreTriggerState(st, triggerStateDir)
-    val rq = RecipeQuery(recipe, st, trig("lateFiringTrigger").isDefined,
-      lateness * 1000L, ckpt)
-    val body = engine(rq)
-    val listing =
-      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
-    val srcSess = SessionBridge.cloneSession(df.sparkSession)
-    srcSess.conf.set(listing._1, listing._2)
-    val w = SessionBridge.withSourcesOn(recipe.preAgg, srcSess)
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(
-        delayMillis(trig("earlyFiringTrigger").get)))
-      .option("checkpointLocation", s"$ckpt/$mode")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > st.lastBatch && hasInput(batch)) {
-          body(batch, batchId)
-          persistTriggerState(st, triggerStateDir, batchId, rq.latenessMs)
-          st.lastBatch = batchId
-        }
-      }
-    val q = graft.ops.ConfScope(df.sparkSession, listing)(w.start())
-    register(q)
-    q
-  }
 
   /** Plan-level emptiness probe for foreachBatch micro-batches
     * (r22): a no-data batch (watermark-advance cleanup, restart
@@ -427,7 +291,8 @@ object StreamRunner {
 
   /** Restore the latest trigger-state snapshot, if the checkpoint has
     * one (a fresh checkpoint starts fresh — reusing a checkpoint dir
-    * IS the restart contract, exactly as for offsets). */
+    * IS the restart contract, exactly as for offsets), and the id of
+    * the batch that wrote it as the last applied batch. */
   private def restoreTriggerState(st: PaneState,
       dir: java.io.File): Unit =
     triggerSnapIds(dir).sorted.lastOption.foreach { id =>
@@ -443,11 +308,12 @@ object StreamRunner {
             "start from a fresh checkpoint")
       n.long("maxEventTime").foreach(st.maxEventTime = _)
       n.arrOf("fired").foreach(e => st.fired += e.asLong)
+      st.lastBatch = id
     }
 
   /** Distinct retention horizons present in the element store's
     * partition paths — through the window-end grid they name every
-    * window end on disk, so the accumulating engine derives its
+    * window end on disk, so accumulating panes derive their
     * closing-candidate set from this listing instead of a full
     * re-aggregation. */
   private def wendValuesOnDisk(storeDir: String): Seq[Long] =
@@ -487,31 +353,42 @@ object StreamRunner {
         }
       }
 
-  /** Beam ACCUMULATING accumulation with early firings — exact, not
-    * approximated, and the default accumulation mode.
+  /** Beam early firings in either accumulation mode — exact, not
+    * approximated, for every aggregate type (min/max/array_agg
+    * included, which no output-delta scheme could reconstruct): a
+    * pane is the aggregation's [[PaneRecipes]] recipe applied to the
+    * pane's elements. The mode decides only where those come from:
+    *  - `accumulating` (the default): every element of the window so
+    *    far. Each batch appends its pre-agg rows to a parquet element
+    *    store under the checkpoint dir and the pane re-aggregates the
+    *    store. This retains raw elements for open windows (bounded by
+    *    horizon × rate, MORE than Beam's combiner state — the
+    *    exactness price). The store compacts at ELEMENT granularity:
+    *    slices partition by each element's retention horizon
+    *    (`__wend`), and the clock (past allowedLateness) drops
+    *    expired partitions by path — so per-batch re-aggregation cost
+    *    tracks open-window volume, not stream lifetime.
+    *  - `discarding`: the elements since the window's last firing.
+    *    Every touched (key, window) fires in every batch, so a
+    *    ProcessingTime micro-batch of the pre-aggregation stream holds
+    *    exactly those elements and the pane re-aggregates the batch —
+    *    no store, no compaction.
     *
-    * Each accumulating pane is the aggregate over ALL elements of
-    * the window so far — exact for every aggregate type only by
-    * re-aggregating the retained pre-agg elements, so each batch
-    * appends its pre-agg rows to a parquet element store under the
-    * checkpoint dir and the pane re-aggregates the store. This
-    * retains raw elements for open windows (bounded by horizon ×
-    * rate, MORE than Beam's combiner state — the exactness price).
-    * The store compacts at ELEMENT granularity: slices partition by
-    * each element's retention horizon (`__wend`), and the clock
-    * (past allowedLateness) drops expired partitions by path — so
-    * per-batch re-aggregation cost tracks open-window volume, not
-    * stream lifetime.
-    *
-    * Pane scope and metadata mirror Beam PaneInfo:
+    * Pane scope and metadata mirror Beam PaneInfo, one rule for both
+    * modes:
     *  - firings are per key+window: only keys with new elements fire
     *    (semi-join on the recipe's group keys), except the ON_TIME
-    *    closing pane, which fires once per window for ALL its keys
-    *    when the event-time clock reaches the window end — Beam's
-    *    watermark-close pane, which fires regardless of new data.
-    *  - `__pane` = early | onTime | late (late panes dropped unless
-    *    `lateFiringTrigger` is declared, like Beam); timing keys on
-    *    the same clock as the discarding engine.
+    *    closing pane of an accumulating window, which fires once per
+    *    window for ALL its keys when the event-time clock reaches the
+    *    window end — Beam's watermark-close pane, which fires
+    *    regardless of new data. A discarding pane without new
+    *    elements would be empty, so only touched windows close
+    *    (Beam's FIRE_IF_NON_EMPTY).
+    *  - `__pane` = early while the window ends after the clock the
+    *    batch leaves, else onTime for the window's first such firing,
+    *    else late (late panes dropped unless `lateFiringTrigger` is
+    *    declared, like Beam). A window emits at most one pane per
+    *    batch.
     *  - `__pane_index` = the ordinal of this firing for its
     *    key+window (0-based), numbered for EVERY sink from one compact
     *    per-key ordinals snapshot under the checkpoint (batch-stamped,
@@ -529,324 +406,393 @@ object StreamRunner {
     * Beam's persistent trigger state made concrete), so a restart
     * restores exactly where event time stood and a window that
     * closed just before the crash stays closed instead of re-firing
-    * early. */
-  private def startAccumulatingExact(cfg: ModuleCfg, df: DataFrame,
-      trig: com.fasterxml.jackson.databind.JsonNode): StreamingQuery =
-    startRecipeEngine(cfg, df, trig, "accumulating") { rq =>
-      import rq._
-      // the trigger bookkeeping (fired windows, per-window ordinals)
-      // is keyed on a window's END, which for fixed, sliding and
-      // calendar windows is immutable. A session window's end
-      // EXTENDS as elements arrive and sessions merge, so an extended
-      // session would read as a brand-new window — re-firing onTime
-      // panes and corrupting ordinals. Silent wrong panes are worse
-      // than a loud gap: fail with the alternatives named.
-      require(!recipe.strategy.map(s => s("window").getOrElse(s))
-          .flatMap(_.str("type")).contains("session"),
-        s"${cfg.name}: accumulating panes with early firings do not " +
-          "support session windows (a session's identity — its end — " +
-          "extends as elements arrive and sessions merge, so end-keyed " +
-          "pane bookkeeping would re-fire closed panes) — use fixed, " +
-          "sliding or calendar windows, or drop earlyFiringTrigger for " +
-          "one final pane per session")
-      val fmt = cfg.params.str("format").getOrElse("parquet")
-      require(fmt == "parquet",
-        s"accumulating pane file sinks must be parquet (got $fmt): " +
-          "pane parts are staged as parquet and moved into the sink")
-      // None: a memory/debug sink, which buffers the numbered rows
-      val sinkDir = cfg.module match {
-        case "debug" | "memory" => None
-        case _ => Some(new java.io.File(
-          cfg.params.str("output").orElse(cfg.params.str("path"))
-            .getOrElse(throw new IllegalArgumentException(
-              s"${cfg.name}: storage pane sink requires output/path"))))
-      }
-      val storeDir = ckpt + "/acc-elements"
-      // the aggregation's own window: element retention horizon and
-      // window-end grid (None for a global window)
-      val elementEndOf = recipe.strategy.flatMap(Strategy.elementRetainEnd)
-      val elementGrid = recipe.strategy.flatMap(Strategy.endGrid)
-      def partsIn(d: java.io.File): Array[java.io.File] =
-        ls(d).filter(_.getName.endsWith(".parquet"))
+    * early.
+    *
+    * The engine looks up the aggregation's pane recipe, takes
+    * allowedLateness from the aggregation's strategy (the one its
+    * watermark uses; a sink strategy that sets a different value
+    * fails here), restores the query's trigger state from the
+    * checkpoint, and runs ONE ProcessingTime foreachBatch query of
+    * the early-firing delay over the pre-aggregation stream,
+    * checkpointed under `ckpt/<mode>`. It skips batches without input
+    * and batch ids already applied (a same-process retry re-enters
+    * with the same id, a restart replays a batch whose commit is
+    * missing), and persists the trigger state after each applied
+    * batch.
+    *
+    * Partition discovery stays on the driver: past 32 paths Spark
+    * launches a distributed LISTING JOB per micro-batch — for the
+    * element store read, which routinely holds (slices × open
+    * horizons) > 32 dirs, bounded by the open-window horizon (the
+    * same listing already runs driver-side for compaction), and for
+    * the file source whenever a micro-batch picks up > 32 new files
+    * (0.2-1.2 s per batch measured on a backlogged 4-core stream).
+    * The store is read through the query's session, cloned at
+    * start(); the source lists through the session that created it,
+    * so it is re-created on a private clone. Neither touches the
+    * caller's session once start() returns. */
+  private def startRecipeEngine(cfg: ModuleCfg, df: DataFrame,
+      trig: com.fasterxml.jackson.databind.JsonNode, mode: String)
+      : StreamingQuery = {
+    requirePaneSink(cfg)
+    val accumulating = mode == "accumulating"
+    val recipe = graft.ops.CacheTracker.recipe(df.queryExecution.logical)
+      .getOrElse(throw new IllegalArgumentException(
+        s"accumulation mode '$mode' with early firings requires the " +
+          "pane sink to read a single-input aggregation module's " +
+          "output directly (per-pane re-aggregation needs the " +
+          "pre-aggregation stream) — move intervening transforms or " +
+          "logging taps upstream of the aggregation, or drop the " +
+          "post-aggregation limit"))
+    val lateness = recipe.strategy
+      .flatMap(Strategy.allowedLatenessSeconds).getOrElse(0L)
+    cfg.node("strategy").flatMap(Strategy.allowedLatenessSeconds)
+      .filter(_ != lateness).foreach(own =>
+        throw new IllegalArgumentException(
+          s"${cfg.name}: the sink strategy's allowedLateness (${own}s) " +
+            s"differs from the aggregation's (${lateness}s) — " +
+            "windows expire on the aggregation's, which its watermark " +
+            "uses too; declare allowedLateness on the aggregation only"))
+    val latenessMs = lateness * 1000L
+    val hasLate = trig("lateFiringTrigger").isDefined
+    // the trigger bookkeeping (fired windows, per-window ordinals)
+    // is keyed on a window's END, which for fixed, sliding and
+    // calendar windows is immutable. A session window's end
+    // EXTENDS as elements arrive and sessions merge, so an extended
+    // session would read as a brand-new window — re-firing onTime
+    // panes and corrupting ordinals. Silent wrong panes are worse
+    // than a loud gap: fail with the alternatives named.
+    require(!recipe.strategy.map(s => s("window").getOrElse(s))
+        .flatMap(_.str("type")).contains("session"),
+      s"${cfg.name}: $mode panes with early firings do not " +
+        "support session windows (a session's identity — its end — " +
+        "extends as elements arrive and sessions merge, so end-keyed " +
+        "pane bookkeeping would re-fire closed panes) — use fixed, " +
+        "sliding or calendar windows, or drop earlyFiringTrigger for " +
+        "one final pane per session")
+    val fmt = cfg.params.str("format").getOrElse("parquet")
+    require(fmt == "parquet",
+      s"$mode pane file sinks must be parquet (got $fmt): " +
+        "pane parts are staged as parquet and moved into the sink")
+    // None: a memory/debug sink, which buffers the numbered rows
+    val sinkDir = cfg.module match {
+      case "debug" | "memory" => None
+      case _ => Some(new java.io.File(
+        cfg.params.str("output").orElse(cfg.params.str("path"))
+          .getOrElse(throw new IllegalArgumentException(
+            s"${cfg.name}: storage pane sink requires output/path"))))
+    }
+    val st = new PaneState
+    val ckpt = checkpoint(cfg)
+    val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
+    restoreTriggerState(st, triggerStateDir)
+    val storeDir = ckpt + "/acc-elements"
+    // the aggregation's own window: element retention horizon and
+    // window-end grid (None for a global window)
+    val elementEndOf = recipe.strategy.flatMap(Strategy.elementRetainEnd)
+    val elementGrid = recipe.strategy.flatMap(Strategy.endGrid)
 
-      def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
-          batchId: Long): Unit = {
-        // the pane frame re-aggregates the element store; it feeds
-        // both the staged publish and the ordinals delta, so pin it —
-        // otherwise each action re-reads and re-aggregates the store
-        val pane = pane0.persist()
-        try {
-        val spark = pane.sparkSession
-        // Pane ordinals come from a compact per-key+window snapshot
-        // (`pane-ordinals/__obatch=<id>`, one row per key that has
-        // ever fired, retention-pruned), NOT from re-reading the
-        // sink's whole pane history — that read grew with every
-        // firing ever made (quadratic over stream lifetime); the
-        // snapshot is bounded by open-horizon keys. Batch-stamped
-        // like the element store: a replay re-reads the same prior
-        // snapshot and overwrites its own, so ordinals survive
-        // retries and restarts exactly.
-        val ordsDir = new java.io.File(ckpt + "/pane-ordinals")
-        def snapIds: Seq[Long] = ls(ordsDir).toSeq
-          .map(_.getName).filter(_.startsWith("__obatch="))
-          .map(_.stripPrefix("__obatch=").toLong)
-        val priorId = snapIds.filter(_ < batchId).sorted.lastOption
-        // snapshot files written by the merged pane+ordinals job
-        // carry the full pane schema (non-key columns null-padded by
-        // the union below) — read ONLY the ordinal subset, with the
-        // schema stated explicitly (key types from the pane frame +
-        // the Long ordinal): parquet ignores the file's extra
-        // columns, and passing the schema skips the per-firing
-        // footer-inference job this read otherwise schedules (the
-        // same trick as the element store's storeSchema below)
-        val prior = priorId.map { id =>
-          val ordsSchema = org.apache.spark.sql.types.StructType(
-            keyCols.map(k => pane.schema(k)) :+
-              org.apache.spark.sql.types.StructField("__pane_index",
-                org.apache.spark.sql.types.LongType))
-          spark.read.schema(ordsSchema)
-            .parquet(s"$ordsDir/__obatch=$id")
-        }
-        val withIdx = prior match {
-          case None => pane.withColumn("__pane_index", lit(0L))
-          case Some(p) if keyCols.isEmpty =>
-            pane.crossJoin(p)
-          case Some(p) =>
-            pane.join(p, keyCols, "left")
-              .withColumn("__pane_index",
-                coalesce(col("__pane_index"), lit(0L)))
-        }
-        // the NEXT ordinals snapshot: prior counts + this firing's
-        // panes, pruned to the open horizon (an expired window can
-        // never fire again, so its rows drop). Only the snapshot
-        // just read and the one just written survive — the read one
-        // stays until the NEXT batch so a replay of this batch can
-        // still find its prior.
-        val delta =
-          if (keyCols.isEmpty) pane.agg(count(lit(1)).as("__delta"))
-          else pane.groupBy(keyCols.map(col): _*)
-            .agg(count(lit(1)).as("__delta"))
-        val merged = (prior, keyCols.isEmpty) match {
-          case (None, _) =>
-            delta.select(keyCols.map(col) :+
-              col("__delta").as("__pane_index"): _*)
-          case (Some(p), true) =>
-            p.crossJoin(delta).select(
-              (col("__pane_index") + col("__delta"))
-                .as("__pane_index"))
-          case (Some(p), false) =>
-            p.join(delta, keyCols, "full_outer")
-              .select(keyCols.map(col) :+
-                (coalesce(col("__pane_index"), lit(0L)) +
-                  coalesce(col("__delta"), lit(0L)))
-                  .as("__pane_index"): _*)
-        }
-        val pruned = windowEndCol(merged).fold(merged)(e =>
-          merged.filter(live(e.cast("long"), st.maxEventTime, latenessMs)))
-        // ONE write job and one stage → rename cycle for BOTH the
-        // numbered panes and the next ordinals snapshot: the two
-        // frames union under a role partition column (the ordinal
-        // rows null-pad the non-key columns), so the batch pays one
-        // job-schedule + commit instead of two. Idempotent publish:
-        // stage under the checkpoint, then hand the pane partition to
-        // the sink and move the ordinal partition to `__obatch=<id>`
-        // — a replay of this batch re-publishes the identical set
-        // instead of appending a duplicate. (Local-FS rename
-        // protocol; an object-store deployment would swap this for
-        // the committer's equivalent.)
-        val stageDir = new java.io.File(ckpt + s"/pane-stage/$batchId")
-        withIdx.withColumn("__graft_role", lit("pane"))
-          .unionByName(
-            pruned.withColumn("__graft_role", lit("ords")),
-            allowMissingColumns = true)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "static")
-          .partitionBy("__graft_role")
-          .parquet(stageDir.toString)
-        val paneStage = new java.io.File(stageDir, "__graft_role=pane")
-        val paneParts = partsIn(paneStage)
-        sinkDir match {
-          case None =>
-            bufferPanes(cfg.name,
-              if (paneParts.isEmpty) Array.empty[Row]
-              else spark.read.schema(withIdx.schema)
-                .parquet(paneStage.toString).collect())
-          case Some(dst) =>
-            // each pane part moves into the sink under a
-            // batch-stamped name, after deleting any `b<id>-*`
-            // leftovers from a failed prior attempt
-            dst.mkdirs()
-            ls(dst).filter(_.getName.startsWith(s"b$batchId-"))
-              .foreach(_.delete())
-            def moveIn(parts: Array[java.io.File]): Unit =
-              parts.foreach { f =>
-                java.nio.file.Files.move(f.toPath,
-                  new java.io.File(dst, s"b$batchId-${f.getName}").toPath,
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              }
-            moveIn(paneParts)
-            // the schema marker is needed at most ONCE per sink: any
-            // parquet file already in dst (a real pane part or an
-            // earlier firing's marker) carries the schema, so later
-            // empty firings skip the extra write job + commit cycle.
-            // A replay that just deleted its own b<id>-* marker sees
-            // an empty dst again and rewrites — idempotence holds.
-            if (paneParts.isEmpty && partsIn(dst).isEmpty) {
-              // a firing whose pane frame is EMPTY writes no
-              // __graft_role=pane partition — write a schema-bearing
-              // (empty) file so a sink whose firings were all empty
-              // still reads as an empty frame instead of failing
-              // schema inference. limit(0): the optimizer collapses it
-              // to an empty LocalRelation, so the schema file writes
-              // WITHOUT re-executing the pane subtree
-              val emptyDir = new java.io.File(stageDir, "pane-empty")
-              withIdx.limit(0).write.mode("overwrite")
-                .parquet(emptyDir.toString)
-              moveIn(partsIn(emptyDir))
-            }
-        }
-        def rmRec(f: java.io.File): Unit =
-          graft.ops.FsUtil.deleteRecursively(f)
-        val ordsTarget = new java.io.File(s"$ordsDir/__obatch=$batchId")
-        ordsDir.mkdirs() // first batch: the parquet write used to create it
-        // RECURSIVE pre-move cleanup: a failed prior attempt (or a
-        // pre-merge-era crash) can leave a _temporary subdir inside
-        // the target, which a flat delete would skip — Files.move
-        // then throws DirectoryNotEmptyException on every replay
-        if (ordsTarget.exists()) rmRec(ordsTarget)
-        val ordsStage = new java.io.File(stageDir, "__graft_role=ords")
-        if (ordsStage.exists())
-          java.nio.file.Files.move(ordsStage.toPath, ordsTarget.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else
-          // every new ordinal row was retention-pruned (e.g. a
-          // lateness-0 closing): an empty partition writes no dir,
-          // but the snapshot chain needs a schema-bearing marker so
-          // the next batch resets cleanly instead of resurrecting
-          // the pre-prior snapshot
-          pruned.write.mode("overwrite").parquet(ordsTarget.toString)
-        rmRec(stageDir)
-        // recursive (rmRec), not a flat delete: a stale snapshot can
-        // carry a _temporary subdir from a crashed write, which a
-        // flat delete skips — the dir would then leak forever
-        snapIds.filter(id => id != batchId && priorId.forall(_ != id))
-          .foreach(id => rmRec(new java.io.File(s"$ordsDir/__obatch=$id")))
-        } finally pane.unpersist()
-      }
+    def partsIn(d: java.io.File): Array[java.io.File] =
+      ls(d).filter(_.getName.endsWith(".parquet"))
 
-      (batch0, batchId) => {
-        // the micro-batch is scanned several times per firing
-        // (store write, touched re-aggregation, distinct-ends
-        // collect, touched-keys projection) — one persist cuts
-        // that to a single source read
-        val batch = batch0.persist()
-        val pinned = scala.collection.mutable.ListBuffer[DataFrame](batch)
-        try {
-        val spark = batch.sparkSession
-        // batch-stamped store slice: a replayed batch OVERWRITES
-        // its own slice instead of appending a duplicate, keeping
-        // every later cumulative pane exact across retries/restarts.
-        // Sub-partitioned by each ELEMENT's retention horizon
-        // (__wend = upper bound on the latest window end the
-        // element can feed, Strategy.elementRetainEnd) so clock
-        // compaction drops expired elements by path even when one
-        // slice mixes near and far window ends — per-batch cost
-        // tracks the open-window volume, not stream lifetime.
-        // The batch's max event time (the clock) and its horizons
-        // ride the store-write job as one Observation: when the
-        // horizons form an end grid (Strategy.endGrid — fixed/
-        // calendar with k = 1, sliding with size = k·period), every
-        // touched end follows arithmetically from the observed
-        // horizons, and the separate distinct+collect job over the
-        // re-aggregated batch (measured 0.6 s/firing at sf0.1) is
-        // redundant.
-        val observed = elementEndOf match {
-          case Some(endOf) =>
-            // task-parallel partitioned write: up to (tasks ×
-            // open horizons) files per batch, all short-lived
-            // (compaction deletes whole partitions). A keyed
-            // repartition(__wend) would cut that to one file per
-            // horizon but funnels EVERY element of a window
-            // through one task — a hot-partition at scale — so
-            // parallelism wins here (measured: horizon-clustering
-            // the slice did not move store-write time at sf0.1
-            // either). Null-horizon rows (null event
-            // time — can never feed a window in either read path)
-            // are dropped here, or they'd accumulate forever in a
-            // __HIVE_DEFAULT_PARTITION__ compaction never touches.
-            // Replay correctness needs STATIC partition overwrite
-            // (full-slice replacement); pin it on the writer so a
-            // session-wide dynamic overwriteMode cannot leave a
-            // failed attempt's stale __wend partitions in place.
-            val slice = batch
-              .withColumn("__wend", endOf(batch).cast("long"))
-              .filter(col("__wend").isNotNull)
-            val obs = new org.apache.spark.sql.Observation()
-            slice.observe(obs, collect_set(col("__wend")).as("__wends"),
-                maxEventTimeMetric(batch, recipe).toSeq: _*)
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "static")
-              .partitionBy("__wend")
-              .parquet(storeDir + s"/__gbatch=$batchId")
-            // blocks only until the just-finished write job's
-            // listener fires; an empty slice yields an empty set
-            obs.get
-          case None => // global window: no horizon, no compaction
-            batch.write.mode("overwrite")
-              .parquet(storeDir + s"/__gbatch=$batchId")
-            Map.empty[String, Any]
-        }
-        val touched = recipe.reAgg(batch).persist()
-        pinned += touched
-        // the store's schema is statically known (batch columns +
-        // the partition dirs) — passing it skips the per-batch
-        // footer-sampling job parquet schema inference runs over
-        // an ever-changing directory set
-        val storeSchema = elementEndOf match {
-          case Some(_) => batch.schema
-            .add("__wend", org.apache.spark.sql.types.LongType)
-            .add("__gbatch", org.apache.spark.sql.types.LongType)
-          case None => batch.schema
-            .add("__gbatch", org.apache.spark.sql.types.LongType)
-        }
-        def readStore(): DataFrame =
-          spark.read.schema(storeSchema).parquet(storeDir)
-        def storedAll(): DataFrame = readStore()
-          .drop("__gbatch", "__wend")
-        windowEndCol(touched) match {
-          case None =>
-            // global window: every firing is a cumulative early pane
-            emitWithIndex(
-              recipe.reAgg(storedAll()).withColumn("__pane", lit("early")),
-              recipe.keys, batchId)
-          case Some(_) =>
-            val wPrev = st.maxEventTime
-            val wNew = advanced(wPrev, observed)
-            // an element with horizon h feeds exactly the k ends
-            // {h − j·period, 0 ≤ j < k} (Strategy.endGrid) — the
-            // union over observed horizons IS the touched-end set
-            def gridEnds(h: Long): Seq[Long] = {
-              val (period, k) = elementGrid.get
-              (0 until k).map(h - _ * period)
+    def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
+        batchId: Long): Unit = {
+      // the pane frame re-aggregates its elements; it feeds both the
+      // staged publish and the ordinals delta, so pin it — otherwise
+      // each action re-reads and re-aggregates them
+      val pane = pane0.persist()
+      try {
+      val spark = pane.sparkSession
+      // Pane ordinals come from a compact per-key+window snapshot
+      // (`pane-ordinals/__obatch=<id>`, one row per key that has
+      // ever fired, retention-pruned), NOT from re-reading the
+      // sink's whole pane history — that read grew with every
+      // firing ever made (quadratic over stream lifetime); the
+      // snapshot is bounded by open-horizon keys. Batch-stamped
+      // like the element store: a replay re-reads the same prior
+      // snapshot and overwrites its own, so ordinals survive
+      // retries and restarts exactly.
+      val ordsDir = new java.io.File(ckpt + "/pane-ordinals")
+      def snapIds: Seq[Long] = ls(ordsDir).toSeq
+        .map(_.getName).filter(_.startsWith("__obatch="))
+        .map(_.stripPrefix("__obatch=").toLong)
+      val priorId = snapIds.filter(_ < batchId).sorted.lastOption
+      // snapshot files written by the merged pane+ordinals job
+      // carry the full pane schema (non-key columns null-padded by
+      // the union below) — read ONLY the ordinal subset, with the
+      // schema stated explicitly (key types from the pane frame +
+      // the Long ordinal): parquet ignores the file's extra
+      // columns, and passing the schema skips the per-firing
+      // footer-inference job this read otherwise schedules (the
+      // same trick as the element store's storeSchema below)
+      val prior = priorId.map { id =>
+        val ordsSchema = org.apache.spark.sql.types.StructType(
+          keyCols.map(k => pane.schema(k)) :+
+            org.apache.spark.sql.types.StructField("__pane_index",
+              org.apache.spark.sql.types.LongType))
+        spark.read.schema(ordsSchema)
+          .parquet(s"$ordsDir/__obatch=$id")
+      }
+      val withIdx = prior match {
+        case None => pane.withColumn("__pane_index", lit(0L))
+        case Some(p) if keyCols.isEmpty =>
+          pane.crossJoin(p)
+        case Some(p) =>
+          pane.join(p, keyCols, "left")
+            .withColumn("__pane_index",
+              coalesce(col("__pane_index"), lit(0L)))
+      }
+      // the NEXT ordinals snapshot: prior counts + this firing's
+      // panes, pruned to the open horizon (an expired window can
+      // never fire again, so its rows drop). Only the snapshot
+      // just read and the one just written survive — the read one
+      // stays until the NEXT batch so a replay of this batch can
+      // still find its prior.
+      val delta =
+        if (keyCols.isEmpty) pane.agg(count(lit(1)).as("__delta"))
+        else pane.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("__delta"))
+      val merged = (prior, keyCols.isEmpty) match {
+        case (None, _) =>
+          delta.select(keyCols.map(col) :+
+            col("__delta").as("__pane_index"): _*)
+        case (Some(p), true) =>
+          p.crossJoin(delta).select(
+            (col("__pane_index") + col("__delta"))
+              .as("__pane_index"))
+        case (Some(p), false) =>
+          p.join(delta, keyCols, "full_outer")
+            .select(keyCols.map(col) :+
+              (coalesce(col("__pane_index"), lit(0L)) +
+                coalesce(col("__delta"), lit(0L)))
+                .as("__pane_index"): _*)
+      }
+      val pruned = windowEndCol(merged).fold(merged)(e =>
+        merged.filter(live(e.cast("long"), st.maxEventTime, latenessMs)))
+      // ONE write job and one stage → rename cycle for BOTH the
+      // numbered panes and the next ordinals snapshot: the two
+      // frames union under a role partition column (the ordinal
+      // rows null-pad the non-key columns), so the batch pays one
+      // job-schedule + commit instead of two. Idempotent publish:
+      // stage under the checkpoint, then hand the pane partition to
+      // the sink and move the ordinal partition to `__obatch=<id>`
+      // — a replay of this batch re-publishes the identical set
+      // instead of appending a duplicate. (Local-FS rename
+      // protocol; an object-store deployment would swap this for
+      // the committer's equivalent.)
+      val stageDir = new java.io.File(ckpt + s"/pane-stage/$batchId")
+      withIdx.withColumn("__graft_role", lit("pane"))
+        .unionByName(
+          pruned.withColumn("__graft_role", lit("ords")),
+          allowMissingColumns = true)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("__graft_role")
+        .parquet(stageDir.toString)
+      val paneStage = new java.io.File(stageDir, "__graft_role=pane")
+      val paneParts = partsIn(paneStage)
+      sinkDir match {
+        case None =>
+          bufferPanes(cfg.name,
+            if (paneParts.isEmpty) Array.empty[Row]
+            else spark.read.schema(withIdx.schema)
+              .parquet(paneStage.toString).collect())
+        case Some(dst) =>
+          // each pane part moves into the sink under a
+          // batch-stamped name, after deleting any `b<id>-*`
+          // leftovers from a failed prior attempt
+          dst.mkdirs()
+          ls(dst).filter(_.getName.startsWith(s"b$batchId-"))
+            .foreach(_.delete())
+          def moveIn(parts: Array[java.io.File]): Unit =
+            parts.foreach { f =>
+              java.nio.file.Files.move(f.toPath,
+                new java.io.File(dst, s"b$batchId-${f.getName}").toPath,
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
             }
-            val tEnds = elementGrid match {
-              case Some(_) => observed("__wends").asInstanceOf[Seq[Any]]
+          moveIn(paneParts)
+          // the schema marker is needed at most ONCE per sink: any
+          // parquet file already in dst (a real pane part or an
+          // earlier firing's marker) carries the schema, so later
+          // empty firings skip the extra write job + commit cycle.
+          // A replay that just deleted its own b<id>-* marker sees
+          // an empty dst again and rewrites — idempotence holds.
+          if (paneParts.isEmpty && partsIn(dst).isEmpty) {
+            // a firing whose pane frame is EMPTY writes no
+            // __graft_role=pane partition — write a schema-bearing
+            // (empty) file so a sink whose firings were all empty
+            // still reads as an empty frame instead of failing
+            // schema inference. limit(0): the optimizer collapses it
+            // to an empty LocalRelation, so the schema file writes
+            // WITHOUT re-executing the pane subtree
+            val emptyDir = new java.io.File(stageDir, "pane-empty")
+            withIdx.limit(0).write.mode("overwrite")
+              .parquet(emptyDir.toString)
+            moveIn(partsIn(emptyDir))
+          }
+      }
+      def rmRec(f: java.io.File): Unit =
+        graft.ops.FsUtil.deleteRecursively(f)
+      val ordsTarget = new java.io.File(s"$ordsDir/__obatch=$batchId")
+      ordsDir.mkdirs() // first batch: the parquet write used to create it
+      // RECURSIVE pre-move cleanup: a failed prior attempt (or a
+      // pre-merge-era crash) can leave a _temporary subdir inside
+      // the target, which a flat delete would skip — Files.move
+      // then throws DirectoryNotEmptyException on every replay
+      if (ordsTarget.exists()) rmRec(ordsTarget)
+      val ordsStage = new java.io.File(stageDir, "__graft_role=ords")
+      if (ordsStage.exists())
+        java.nio.file.Files.move(ordsStage.toPath, ordsTarget.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      else
+        // every new ordinal row was retention-pruned (e.g. a
+        // lateness-0 closing): an empty partition writes no dir,
+        // but the snapshot chain needs a schema-bearing marker so
+        // the next batch resets cleanly instead of resurrecting
+        // the pre-prior snapshot
+        pruned.write.mode("overwrite").parquet(ordsTarget.toString)
+      rmRec(stageDir)
+      // recursive (rmRec), not a flat delete: a stale snapshot can
+      // carry a _temporary subdir from a crashed write, which a
+      // flat delete skips — the dir would then leak forever
+      snapIds.filter(id => id != batchId && priorId.forall(_ != id))
+        .foreach(id => rmRec(new java.io.File(s"$ordsDir/__obatch=$id")))
+      } finally pane.unpersist()
+    }
+
+    def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
+      // an accumulating firing scans the micro-batch twice (store
+      // write, touched re-aggregation) — one persist cuts that to a
+      // single source read; a discarding one reads it once, through
+      // the pinned `touched`
+      val batch = if (accumulating) batch0.persist() else batch0
+      val pinned = scala.collection.mutable.ListBuffer[DataFrame](batch)
+      try {
+      val spark = batch.sparkSession
+      // The batch's max event time (the clock) rides the batch's
+      // first action as an Observation: the store write for
+      // accumulating panes, the distinct-ends collect below for
+      // discarding ones.
+      val obs = new org.apache.spark.sql.Observation()
+      val clockMetric = maxEventTimeMetric(batch, recipe)
+      // batch-stamped store slice: a replayed batch OVERWRITES
+      // its own slice instead of appending a duplicate, keeping
+      // every later cumulative pane exact across retries/restarts.
+      // Sub-partitioned by each ELEMENT's retention horizon
+      // (__wend = upper bound on the latest window end the
+      // element can feed, Strategy.elementRetainEnd) so clock
+      // compaction drops expired elements by path even when one
+      // slice mixes near and far window ends — per-batch cost
+      // tracks the open-window volume, not stream lifetime.
+      // The clock and the batch's horizons ride the store-write job
+      // as one Observation: when the
+      // horizons form an end grid (Strategy.endGrid — fixed/
+      // calendar with k = 1, sliding with size = k·period), every
+      // touched end follows arithmetically from the observed
+      // horizons, and the separate distinct+collect job over the
+      // re-aggregated batch (measured 0.6 s/firing at sf0.1) is
+      // redundant.
+      if (accumulating) elementEndOf match {
+        case Some(endOf) =>
+          // task-parallel partitioned write: up to (tasks ×
+          // open horizons) files per batch, all short-lived
+          // (compaction deletes whole partitions). A keyed
+          // repartition(__wend) would cut that to one file per
+          // horizon but funnels EVERY element of a window
+          // through one task — a hot-partition at scale — so
+          // parallelism wins here (measured: horizon-clustering
+          // the slice did not move store-write time at sf0.1
+          // either). Null-horizon rows (null event
+          // time — can never feed a window in either read path)
+          // are dropped here, or they'd accumulate forever in a
+          // __HIVE_DEFAULT_PARTITION__ compaction never touches.
+          // Replay correctness needs STATIC partition overwrite
+          // (full-slice replacement); pin it on the writer so a
+          // session-wide dynamic overwriteMode cannot leave a
+          // failed attempt's stale __wend partitions in place.
+          val slice = batch
+            .withColumn("__wend", endOf(batch).cast("long"))
+            .filter(col("__wend").isNotNull)
+          slice.observe(obs, collect_set(col("__wend")).as("__wends"),
+              clockMetric.toSeq: _*)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("__wend")
+            .parquet(storeDir + s"/__gbatch=$batchId")
+        case None => // global window: no horizon, no compaction
+          batch.write.mode("overwrite")
+            .parquet(storeDir + s"/__gbatch=$batchId")
+      }
+      val observing =
+        if (accumulating) elementEndOf.isDefined else clockMetric.isDefined
+      // blocks only until the observed action's listener fires; an
+      // empty slice yields an empty set
+      def observed: Map[String, Any] =
+        if (observing) obs.get else Map.empty[String, Any]
+      val touched = recipe.reAgg(
+        if (accumulating || !observing) batch
+        else batch.observe(obs, clockMetric.get)).persist()
+      pinned += touched
+      // the store's schema is statically known (batch columns +
+      // the partition dirs) — passing it skips the per-batch
+      // footer-sampling job parquet schema inference runs over
+      // an ever-changing directory set
+      val storeSchema = elementEndOf match {
+        case Some(_) => batch.schema
+          .add("__wend", org.apache.spark.sql.types.LongType)
+          .add("__gbatch", org.apache.spark.sql.types.LongType)
+        case None => batch.schema
+          .add("__gbatch", org.apache.spark.sql.types.LongType)
+      }
+      def readStore(): DataFrame =
+        spark.read.schema(storeSchema).parquet(storeDir)
+      def storedAll(): DataFrame = readStore()
+        .drop("__gbatch", "__wend")
+      windowEndCol(touched) match {
+        case None =>
+          // global window: every firing is an early pane
+          emitWithIndex(
+            (if (accumulating) recipe.reAgg(storedAll()) else touched)
+              .withColumn("__pane", lit("early")),
+            recipe.keys, batchId)
+        case Some(touchedEnd) =>
+          val wPrev = st.maxEventTime
+          // an element with horizon h feeds exactly the k ends
+          // {h − j·period, 0 ≤ j < k} (Strategy.endGrid) — the
+          // union over observed horizons IS the touched-end set
+          def gridEnds(h: Long): Seq[Long] = {
+            val (period, k) = elementGrid.get
+            (0 until k).map(h - _ * period)
+          }
+          // the handful of distinct window ends in one batch —
+          // bounded by windows, never by keys or rows
+          val tEnds = elementGrid match {
+            case Some(_) if accumulating =>
+              observed("__wends").asInstanceOf[Seq[Any]]
                 .map(_.asInstanceOf[Number].longValue)
                 .flatMap(gridEnds).distinct
-              case None =>
-                touched.select(windowEndCol(touched).get
-                  .cast("long")).distinct().collect().toSeq
-                  .flatMap(r =>
-                    Option(r.get(0)).map(_.asInstanceOf[Long]))
-            }
-            val fired = st.fired
-            // late BEFORE closing registration: a window is late
-            // only if its ON_TIME pane fired in a PRIOR batch
-            val lateEnds = tEnds.filter(e => fired.contains(e))
-            // the clock reaching a window's end closes it: ON_TIME
-            // pane for ALL keys of each newly closed window (fires
-            // without new elements, like Beam's watermark-close pane).
-            val (aggedAll, closingEnds) = elementGrid match {
+            case _ =>
+              touched.select(touchedEnd.cast("long")).distinct()
+                .collect().toSeq
+                .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+          }
+          val wNew = advanced(wPrev, observed)
+          val fired = st.fired
+          // late BEFORE closing registration: a window is late
+          // only if its ON_TIME pane fired in a PRIOR batch
+          val lateEnds = tEnds.filter(e => fired.contains(e))
+          // the clock reaching a window's end closes it
+          def closes(e: Long): Boolean = !expired(e, wPrev, latenessMs) &&
+            e * 1000L <= wNew && !fired.contains(e)
+          // the frame the panes are cut from, and the windows that
+          // close in this batch: a discarding pane's elements are the
+          // batch, so only touched windows close; an accumulating
+          // pane's are the store, and its ON_TIME pane fires for ALL
+          // keys of each newly closed window (fires without new
+          // elements, like Beam's watermark-close pane).
+          val (aggedAll, closingEnds) =
+            if (!accumulating) (touched, tEnds.filter(closes))
+            else elementGrid match {
               case Some((period, k)) =>
                 // the horizon partitions on disk determine EVERY
                 // candidate window end through the grid (each
@@ -863,8 +809,7 @@ object StreamRunner {
                 // to candidates too.
                 val horizons = wendValuesOnDisk(storeDir)
                 val closing = horizons.flatMap(gridEnds).distinct
-                  .filter(e => !expired(e, wPrev, latenessMs) &&
-                    e * 1000L <= wNew && !fired.contains(e))
+                  .filter(closes)
                 val needed = (tEnds ++ closing).distinct
                   .flatMap(e => (0 until k).map(e + _ * period))
                   .distinct.filter(horizons.toSet)
@@ -883,69 +828,94 @@ object StreamRunner {
                     .select(aEnd).distinct().collect().toSeq
                     .flatMap(r =>
                       Option(r.get(0)).map(_.asInstanceOf[Long]))
-                (a, retEnds.filter(e =>
-                  e * 1000L <= wNew && !fired.contains(e)))
+                (a, retEnds.filter(closes))
             }
-            val endSec = windowEndCol(aggedAll).get.cast("long")
-            val keyCols = "window" +: recipe.keys
-            // expired-window drop, same rule as the discarding
-            // engine (on the grid path the dirs were already
-            // compacted to it — this is the defensive second guard)
-            val retained =
-              aggedAll.filter(live(endSec, wPrev, latenessMs))
-            // a window emits at most ONE pane per batch: a window
-            // that both received elements and closed in this batch
-            // emits only the (cumulative) ON_TIME pane — its early
-            // pane would carry the identical aggregate, and a
-            // single firing keeps the pane ordinal well-defined
-            val earlyEnds = tEnds.filter(e =>
-              e * 1000L > wPrev && !closingEnds.contains(e))
-            closingEnds.foreach(e => fired.add(e))
-            st.maxEventTime = wNew
-            val touchedKeys = touched
-              .select(keyCols.map(col): _*).distinct()
-            val early = retained
-              .join(touchedKeys, keyCols, "left_semi")
-              .filter(endSec.isin(earlyEnds: _*))
-              .withColumn("__pane", lit("early"))
-            val closing = retained
-              .filter(endSec.isin(closingEnds: _*))
-              .withColumn("__pane", lit("onTime"))
-            val late = retained
-              .join(touchedKeys, keyCols, "left_semi")
-              .filter(endSec.isin(lateEnds: _*))
-              .withColumn("__pane", lit("late"))
-            val pane =
-              if (hasLate) early.union(closing).union(late)
-              else early.union(closing)
-            // no window fired this batch (every touched window
-            // already fired without a late firing declared, or
-            // expired): nothing to
-            // publish, and the ordinals snapshot is unchanged — a
-            // rewrite would be a pure read+write+rename cycle, so
-            // skip the whole emit (the next firing batch finds the
-            // same prior snapshot; a replay of this batch re-skips)
-            val willFire = earlyEnds.nonEmpty || closingEnds.nonEmpty ||
-              (hasLate && lateEnds.nonEmpty)
-            if (willFire) emitWithIndex(pane, keyCols, batchId)
-            // store compaction, element-level: each slice is
-            // partitioned by its elements' retention horizons
-            // (`__wend=<epochSec>`); once a horizon expires on the
-            // clock, no element in that
-            // partition can contribute to any future pane — the
-            // same rule the `retained` filter applies post-agg —
-            // so the partition drops by path. Listing-driven (the
-            // horizons live in the paths, no driver map), so
-            // pre-restart slices keep compacting after a restart
-            // with no snapshot state; a slice emptied of elements
-            // drops wholly. Replay-safe: a replayed batch rewrites
-            // its entire slice (static partition overwrite) before
-            // compaction re-applies the expiry rule.
-            compactStore(storeDir, wNew, latenessMs)
-        }
-        } finally pinned.foreach(_.unpersist())
+          val endSec = windowEndCol(aggedAll).get.cast("long")
+          val keyCols = "window" +: recipe.keys
+          // Beam expired-window drop: a discarding pane row for an
+          // expired window holds only beyond-lateness elements, so
+          // dropping the row drops exactly those (on the accumulating
+          // grid path the dirs were already compacted to it — this is
+          // the defensive second guard)
+          val retained =
+            aggedAll.filter(live(endSec, wPrev, latenessMs))
+          // a window emits at most ONE pane per batch: a window
+          // that both received elements and closed in this batch
+          // emits only the ON_TIME pane — its early pane would carry
+          // the identical aggregate, and a single firing keeps the
+          // pane ordinal well-defined
+          val earlyEnds = tEnds.filter(e =>
+            e * 1000L > wPrev && !closingEnds.contains(e))
+          closingEnds.foreach(e => fired.add(e))
+          st.maxEventTime = wNew
+          // early and late panes fire for keys with new elements
+          // only — the batch holds just those keys already
+          val touchedKeys = touched
+            .select(keyCols.map(col): _*).distinct()
+          def ofTouchedKeys(panes: DataFrame): DataFrame =
+            if (accumulating) panes.join(touchedKeys, keyCols, "left_semi")
+            else panes
+          val early = ofTouchedKeys(retained)
+            .filter(endSec.isin(earlyEnds: _*))
+            .withColumn("__pane", lit("early"))
+          val closing = retained
+            .filter(endSec.isin(closingEnds: _*))
+            .withColumn("__pane", lit("onTime"))
+          val late = ofTouchedKeys(retained)
+            .filter(endSec.isin(lateEnds: _*))
+            .withColumn("__pane", lit("late"))
+          val pane =
+            if (hasLate) early.union(closing).union(late)
+            else early.union(closing)
+          // no window fired this batch (every touched window
+          // already fired without a late firing declared, or
+          // expired): nothing to
+          // publish, and the ordinals snapshot is unchanged — a
+          // rewrite would be a pure read+write+rename cycle, so
+          // skip the whole emit (the next firing batch finds the
+          // same prior snapshot; a replay of this batch re-skips)
+          val willFire = earlyEnds.nonEmpty || closingEnds.nonEmpty ||
+            (hasLate && lateEnds.nonEmpty)
+          if (willFire) emitWithIndex(pane, keyCols, batchId)
+          // store compaction, element-level: each slice is
+          // partitioned by its elements' retention horizons
+          // (`__wend=<epochSec>`); once a horizon expires on the
+          // clock, no element in that
+          // partition can contribute to any future pane — the
+          // same rule the `retained` filter applies post-agg —
+          // so the partition drops by path. Listing-driven (the
+          // horizons live in the paths, no driver map), so
+          // pre-restart slices keep compacting after a restart
+          // with no snapshot state; a slice emptied of elements
+          // drops wholly. Replay-safe: a replayed batch rewrites
+          // its entire slice (static partition overwrite) before
+          // compaction re-applies the expiry rule.
+          if (accumulating) compactStore(storeDir, wNew, latenessMs)
       }
+      } finally pinned.foreach(_.unpersist())
     }
+
+    val listing =
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192"
+    val srcSess = SessionBridge.cloneSession(df.sparkSession)
+    srcSess.conf.set(listing._1, listing._2)
+    val w = SessionBridge.withSourcesOn(recipe.preAgg, srcSess)
+      .writeStream
+      .outputMode("append")
+      .trigger(Trigger.ProcessingTime(
+        delayMillis(trig("earlyFiringTrigger").get)))
+      .option("checkpointLocation", s"$ckpt/$mode")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (batchId > st.lastBatch && hasInput(batch)) {
+          applyBatch(batch, batchId)
+          persistTriggerState(st, triggerStateDir, batchId, latenessMs)
+          st.lastBatch = batchId
+        }
+      }
+    val q = graft.ops.ConfScope(df.sparkSession, listing)(w.start())
+    register(q)
+    q
+  }
 
   /** Beam `AfterPane.elementCountAtLeast(n)` approximation
     * (`module/Strategy.java:320`): UPDATE-mode panes pass through only
@@ -963,27 +933,20 @@ object StreamRunner {
       .outputMode("update")
       .option("checkpointLocation", checkpoint(cfg))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        writePanes(cfg, batch.filter(col(countField) >= n), lit("pane"))
+        val panes = batch.filter(col(countField) >= n)
+          .withColumn("__pane", lit("pane"))
+        cfg.module match {
+          case "debug" | "memory" => bufferPanes(cfg.name, panes.collect())
+          case _ =>
+            panes.write.mode("append")
+              .format(cfg.params.str("format").getOrElse("parquet"))
+              .save(cfg.params.str("output")
+                .orElse(cfg.params.str("path")).get)
+        }
       }
       .start()
     register(q)
     q
-  }
-
-  /** Tag `panes` with `__pane` = `tag`, then append them to the sink
-    * (memory buffer or files). */
-  private def writePanes(cfg: ModuleCfg, panes: DataFrame,
-      tag: Column): Unit = {
-    val tagged = panes.withColumn("__pane", tag)
-    cfg.module match {
-      case "debug" | "memory" => bufferPanes(cfg.name, tagged.collect())
-      case _ =>
-        val path = cfg.params.str("output")
-          .orElse(cfg.params.str("path")).get
-        tagged.write.mode("append")
-          .format(cfg.params.str("format").getOrElse("parquet"))
-          .save(path)
-    }
   }
 
   /** Append pane rows to a memory/debug sink's buffer, each with its

@@ -556,21 +556,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(w0("early") == List((3.0, 3.0)))
     // batch 2: a second element (4.0) in [0,6h) plus one at 14:00
     // that pushes the clock to 14:00. The discarding pane holds
-    // ONLY the new element: sum 4 (not 7), min 4 (not 3).
+    // ONLY the new element: sum 4 (not 7), min 4 (not 3). The clock
+    // reaches the window's end in this batch, so the pane is Beam's
+    // ON_TIME pane (it fires once the watermark passes the end), and
+    // the window, receiving elements and closing in one batch, fires
+    // only that pane
     stageParquet(dir, "b2", Seq((2L, 7200L, 4.0), (3L, 50400L, 9.0)))
     StreamRunner.drainAll()
-    assert(w0("early") == List((3.0, 3.0), (4.0, 4.0)))
+    assert(w0("early") == List((3.0, 3.0)))
+    assert(w0("onTime") == List((4.0, 4.0)))
     // batch 3: a straggler (2.0) after the clock (14:00) passed
-    // [0,6h) but inside allowedLateness — the window's first
-    // post-close firing, Beam's ON_TIME pane, again since-last only
+    // [0,6h) but inside allowedLateness — the ON_TIME pane already
+    // fired, so this is a LATE pane (kept because lateFiringTrigger
+    // is declared), again since-last only
     stageParquet(dir, "b3", Seq((4L, 10800L, 2.0)))
     StreamRunner.drainAll()
-    assert(w0("onTime") == List((2.0, 2.0)))
-    // batch 4: a second post-close straggler → LATE pane (kept
-    // because lateFiringTrigger is declared)
+    assert(w0("late") == List((2.0, 2.0)))
+    // batch 4: a second post-close straggler → a second LATE pane
     stageParquet(dir, "b4", Seq((5L, 14400L, 7.0)))
     StreamRunner.drainAll()
-    assert(w0("late") == List((7.0, 7.0)))
+    assert(w0("onTime") == List((4.0, 4.0)))
+    assert(w0("late") == List((2.0, 2.0), (7.0, 7.0)))
     // batch 5 pushes the clock to 33:20; batch 6's straggler is
     // now BEYOND end + allowedLateness (06:00 + 24h < 33:20) — the
     // expired window drops it, like Beam
@@ -1894,6 +1900,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("exactPanes rejects session windows loudly (end-keyed pane " +
       "bookkeeping cannot track merging sessions)") {
+    Seq("accumulating", "discarding").foreach(rejectsSessionWindows)
+  }
+
+  private def rejectsSessionWindows(mode: String): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-accsx")
       .toString
     stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
@@ -1907,7 +1917,7 @@ class StreamingSpec extends AnyFunSuite {
       |    module: aggregation
       |    inputs: [ev]
       |    strategy:
-      |      mode: accumulating
+      |      mode: $mode
       |      exactPanes: true
       |      timestampField: ts
       |      window: {type: session, unit: hour, gap: 1}
@@ -1930,8 +1940,9 @@ class StreamingSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       try Pipeline.execute(spark, config)
       finally StreamRunner.stopAll())
-    assert(e.getMessage.contains("session windows"), e.getMessage)
-    assert(e.getMessage.contains("drop earlyFiringTrigger"), e.getMessage)
+    assert(e.getMessage.contains("session windows"), s"$mode: ${e.getMessage}")
+    assert(e.getMessage.contains("drop earlyFiringTrigger"),
+      s"$mode: ${e.getMessage}")
   }
 
   /** Element-level store compaction: one micro-batch mixing a
@@ -2115,6 +2126,82 @@ class StreamingSpec extends AnyFunSuite {
     assert(!slices.contains("__gbatch=1"),
       s"pre-restart slice not compacted after restart: $slices")
     StreamRunner.stopAll()
+  }
+
+  /** A restart replays the last micro-batch when its commit is
+    * missing, and the replay finds the trigger state that the batch
+    * itself already wrote. It must be a no-op, exactly as a retry in
+    * the same process is: the sink keeps each pane once, and the
+    * window that closed in the replayed batch keeps its ON_TIME pane.
+    * Checked in both accumulation modes on a parquet sink: two
+    * batches, stop, delete the last commit, re-execute. */
+  test("a batch replayed after a restart publishes its panes once, in " +
+      "both accumulation modes") {
+    Seq("accumulating", "discarding").foreach { mode =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-replay-$mode")
+        .toString
+      val out = s"$dir/out"
+      val config = s"""
+        |sources:
+        |  - name: ev
+        |    module: storage
+        |    parameters: {path: $dir/in, stream: true}
+        |transforms:
+        |  - name: agg
+        |    module: aggregation
+        |    inputs: [ev]
+        |    strategy:
+        |      mode: $mode
+        |      timestampField: ts
+        |      window: {type: fixed, unit: hour, size: 6}
+        |      trigger:
+        |        type: afterWatermark
+        |        earlyFiringTrigger:
+        |          {type: afterProcessingTime, pastFirstElementDelay: 1}
+        |    parameters:
+        |      groupFields: []
+        |      aggregations:
+        |        - input: ev
+        |          fields:
+        |            - {name: s, op: sum, field: value}
+        |sinks:
+        |  - name: replaypanes
+        |    module: storage
+        |    input: agg
+        |    parameters:
+        |      {output: $out, format: parquet,
+        |       checkpointLocation: $dir/ckpt}
+        |""".stripMargin
+      def panes(): Seq[(Long, String, Double, Long)] =
+        spark.read.parquet(out)
+          .select(col("window.start").cast("long"), col("__pane"),
+            col("s"), col("__pane_index"))
+          .collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
+            r.getLong(3)))
+          .toSeq.sorted
+      // [0,6h) fires early in batch 0 and ON_TIME in batch 1, whose
+      // 14:00 element moves the clock past its end
+      stageParquet(dir, "b1", Seq((1L, 3600L, 3.0)))
+      val uninterrupted = try {
+        Pipeline.execute(spark, config)
+        StreamRunner.drainAll()
+        stageParquet(dir, "b2", Seq((2L, 7200L, 4.0), (3L, 50400L, 9.0)))
+        StreamRunner.drainAll()
+        panes()
+      } finally StreamRunner.stopAll()
+      assert(uninterrupted.exists(_._2 == "onTime"), s"$mode: $uninterrupted")
+      val commits = new java.io.File(s"$dir/ckpt/$mode/commits")
+      Seq("1", ".1.crc").foreach(n => new java.io.File(commits, n).delete())
+      assert(!new java.io.File(commits, "1").exists())
+      try {
+        Pipeline.execute(spark, config)
+        StreamRunner.drainAll()
+        assert(new java.io.File(commits, "1").exists(),
+          s"$mode: batch 1 was not replayed")
+        assert(panes() == uninterrupted, s"$mode after the replay")
+      } finally StreamRunner.stopAll()
+    }
   }
 
   test("drainUntilWatermark: returns only after a batch executed " +
