@@ -221,17 +221,8 @@ object Bench {
       catch { case _: Throwable => () }
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.localSession()
+    val cpus = spark.sparkContext.defaultParallelism
     // optional comma-separated filter for local micro-benching; the
     // driver never sets it, so round benches always cover everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -366,7 +357,7 @@ object Bench {
       (renderFullJson(times, gcs, errors.toSeq, leaks.toSeq, samples,
         sfDir) + "\n").getBytes("UTF-8"))
     println(renderBenchLine(times, errors.toSeq, leaks.toSeq, samples,
-      cpus.toInt, sfDir))
+      cpus, sfDir))
     System.out.flush()
     // the http gate fixtures' dispatcher threads are non-daemon; a
     // plain return would leave the JVM (and the driver's bench step)

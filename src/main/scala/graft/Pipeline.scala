@@ -107,8 +107,8 @@ object Pipeline {
     VendorSlots.sinks
 
   /** Parse + build all collections; sinks are NOT executed.
-    * `context` selects tagged modules (reference `--context=`). The
-    * run's conf overrides are restored on return; its persisted
+    * `context` selects tagged modules (reference `--context=`). Confs
+    * scoped to graph construction are restored on return; persisted
     * frames stay for the caller's actions (see [[ops.CacheTracker]]). */
   def build(spark: SparkSession, configText: String,
       args: Map[String, String] = Map.empty,
@@ -137,14 +137,11 @@ object Pipeline {
     // triggered case, where a sink action runs DURING construction.
     val sinksStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
     // operator-persisted frames (ngram candidates, benchmark grams)
-    // and module conf overrides (stateShufflePartitions) live exactly
-    // as long as THIS run's sink actions need them: every query
-    // captures its confs at start(), so closing the scope restores
-    // the confs on success and failure alike. It releases the frames
-    // too — unless this run built streaming frames, whose live
-    // micro-batch plans may reference a tracked frame (e.g. a batch
-    // http snapshot joined into a stream); those frames fall to
-    // session cleanup (clearCache).
+    // live exactly as long as THIS run's sink actions need them:
+    // closing the scope releases them — unless this run built
+    // streaming frames, whose live micro-batch plans may reference a
+    // tracked frame (e.g. a batch http snapshot joined into a
+    // stream); those frames fall to session cleanup (clearCache).
     // Decided from this run's own collections, not a global query
     // count: another run may start a stream at the same moment.
     val cacheScope = graft.ops.CacheTracker.beginScope()
@@ -164,8 +161,7 @@ object Pipeline {
               catch { case _: Throwable => None }
             if (alter.isEmpty || depth >= 4 || sinksStarted.get) throw e
             else {
-              // the failed attempt's confs are restored and its
-              // frames are orphans: no sink ran
+              // the failed attempt's frames are orphans: no sink ran
               // (sinksStarted guards the waits case, which rethrows
               // above), so nothing — including any streaming query
               // the RETRY starts — can reference them. Release here,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool (r21 optimization round): dump `.explain("formatted")` for
@@ -20,17 +19,7 @@ object PlanDump {
       "usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,...")
     val Array(sfDir, outDir, suffix, names) = args.take(4)
     val only = names.split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.localSession()
     new java.io.File(outDir).mkdirs()
     (SparkEntry.queries ++ SparkEntry.benchOnly)
       .filter { case (n, _) => only.contains(n) }

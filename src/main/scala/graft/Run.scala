@@ -17,6 +17,17 @@ import java.nio.file.{Files, Paths}
   * reference's per-environment overlay (`MPipelineOptions.context`).
   */
 object Run {
+  /** The confs every entry point's session starts from. */
+  private val baseConfs = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    // lenient reference semantics (Spark 4 defaults ANSI on)
+    "spark.sql.ansi.enabled" -> "false",
+    // only affects genuinely-nanos parquet columns (surfaced as int64,
+    // which Strategy.toTimestamp converts by magnitude); harmless for
+    // micros/NTZ files
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true")
+
   /** The confs a `graft.Run` or `graft.Server` session is built with,
     * given the submitter's conf. A LOCAL run the submitter did not size
     * gets one shuffle partition per core: the 200-partition default
@@ -25,26 +36,34 @@ object Run {
     * submissions keep the Spark default — the driver's core count says
     * nothing about cluster parallelism. */
   def sessionConfs(submitted: org.apache.spark.SparkConf)
-      : Seq[(String, String)] = {
-    val base = Seq(
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.ansi.enabled" -> "false",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.adaptive.enabled" -> "true")
+      : Seq[(String, String)] =
     if (!submitted.contains("spark.sql.shuffle.partitions") &&
         submitted.get("spark.master", "").startsWith("local"))
-      base :+ ("spark.sql.shuffle.partitions" ->
+      baseConfs :+ ("spark.sql.shuffle.partitions" ->
         Runtime.getRuntime.availableProcessors().toString)
-    else base
-  }
+    else baseConfs
 
   /** The entry points' session: [[sessionConfs]] over the submitted
     * conf, logging at WARN. */
-  def session(appName: String): SparkSession = {
-    val spark = sessionConfs(new org.apache.spark.SparkConf())
-      .foldLeft(SparkSession.builder().appName(appName)) {
-        case (b, (k, v)) => b.config(k, v)
-      }.getOrCreate()
+  def session(appName: String): SparkSession =
+    open(SparkSession.builder().appName(appName),
+      sessionConfs(new org.apache.spark.SparkConf()))
+
+  /** The dev tools' session (Verify, Bench, PlanDump): the base confs
+    * on `local[cpus]` with one shuffle partition per core and the UI
+    * off, logging at WARN. `cpus` is `SPARK_GRAFT_CPUS` (default 4). */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    open(SparkSession.builder().master(s"local[$cpus]"), baseConfs ++ Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.ui.enabled" -> "false"))
+  }
+
+  private def open(builder: SparkSession.Builder,
+      confs: Seq[(String, String)]): SparkSession = {
+    val spark = confs.foldLeft(builder) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

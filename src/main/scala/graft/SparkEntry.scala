@@ -6765,12 +6765,6 @@ sources:
           base, into, n)
       stage(inL, "l1", "event_id % 2 = 0")
       stage(inR, "r1", "event_id % 2 = 1")
-      // stream-stream joins keep FOUR state stores per shuffle
-      // partition, checkpointed every micro-batch — state-partition
-      // count is the deployment knob that must match state VOLUME,
-      // not core count (32 partitions on this fixture spends 3× the
-      // join's own cost on empty-store bookkeeping). Size it to the
-      // fixture and restore after the drain.
       Pipeline.execute(s, s"""
 sources:
   - name: evl
@@ -6802,7 +6796,6 @@ transforms:
       maxIntervalSpan: 2h
       leftWatermark: 60d
       rightWatermark: 60d
-      stateShufflePartitions: 4
   - name: sel
     module: select
     inputs: [jn]
@@ -6896,7 +6889,6 @@ transforms:
       maxIntervalSpan: 2h
       leftWatermark: 3d
       rightWatermark: 3d
-      stateShufflePartitions: 4
   - name: sel
     module: select
     inputs: [jn]
@@ -6997,7 +6989,6 @@ transforms:
       maxIntervalSpan: 2h
       leftWatermark: 3d
       rightWatermark: 3d
-      stateShufflePartitions: 4
   - name: sel
     module: select
     inputs: [jn]
@@ -7083,7 +7074,6 @@ transforms:
       maxIntervalSpan: 2h
       leftWatermark: 3d
       rightWatermark: 3d
-      stateShufflePartitions: 4
   - name: sel
     module: select
     inputs: [jn]
@@ -7142,7 +7132,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5}
   - name: sel
     module: select
     inputs: [dd]
@@ -7190,7 +7180,7 @@ transforms:
     module: dedup
     inputs: [emb]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5}
   - name: sel
     module: select
     inputs: [dd]
@@ -7237,7 +7227,7 @@ transforms:
     module: dedup
     inputs: [emb]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: embedding, field: embedding, idField: vec_id, threshold: 0.15, planes: 4, hashAlgo: md5}
 sinks:
   - name: sk
     module: storage
@@ -7514,7 +7504,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5}
   - name: sel
     module: select
     inputs: [dd]
@@ -7563,7 +7553,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5}
 sinks:
   - name: sk
     module: storage
@@ -7621,7 +7611,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: minhash, field: text, idField: doc_id, hashAlgo: md5}
 sinks:
   - name: sk
     module: storage
@@ -7718,7 +7708,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: winnow, field: text, idField: doc_id, threshold: 0.5, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: winnow, field: text, idField: doc_id, threshold: 0.5, hashAlgo: md5}
   - name: sel
     module: select
     inputs: [dd]
@@ -7880,7 +7870,7 @@ transforms:
     module: dedup
     inputs: [docs]
     strategy: {timestampField: ts, allowedLateness: 315360000}
-    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5, stateShufflePartitions: 8}
+    parameters: {method: ngram, field: text, idField: doc_id, ngramSize: 5, threshold: 0.7, hashAlgo: md5}
 sinks:
   - name: sk
     module: storage
@@ -8098,7 +8088,6 @@ transforms:
       maxIntervalSpan: 2h
       leftWatermark: 60d
       rightWatermark: 60d
-      stateShufflePartitions: 4
   - name: sel
     module: select
     inputs: [jn]

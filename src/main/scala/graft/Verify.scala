@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional 3rd arg: comma-separated query names (fast iteration)
     val only = rest.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // lenient reference semantics (Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      // only affects genuinely-nanos parquet columns (surfaced as
-      // int64, which Strategy.toTimestamp converts by magnitude);
-      // harmless for micros/NTZ files — kept so a testdata
-      // regeneration back to TIMESTAMP(NANOS) stays readable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.localSession()
     // drift tripwire: one-line diagnosis when the driver regenerates
     // the testdata with a different physical ts encoding (this once
     // silently flipped five gates red)

@@ -118,20 +118,6 @@ object DedupTransform {
             "window the stream upstream and dedup each window's batch " +
             "output.")
     }
-    // state-store partition count for THIS job (shared semantics
-    // with the stream-stream join's knob): streaming dedup keeps one
-    // state store per shuffle partition, and the right count follows
-    // the job's fingerprint/bucket cardinality, not the session.
-    // Scoped to the run (CacheTracker.runConf); Spark bakes the
-    // count into the checkpoint at first start.
-    if (raw.isStreaming)
-      p.int("stateShufflePartitions").foreach { n =>
-        require(n > 0,
-          s"dedup ${cfg.name}: stateShufflePartitions must be " +
-            s"positive, got $n")
-        graft.ops.CacheTracker.runConf(raw.sparkSession,
-          "spark.sql.shuffle.partitions", n.toString)
-      }
     // read once: every signature, bucket and fingerprint below hashes
     // the same way (md5 = the SQL-replayable audit mode)
     val md5Mode = p.str("hashAlgo").contains("md5")
@@ -804,10 +790,9 @@ object DedupTransform {
       // partitioning (a file stream staging a handful of files per
       // batch = a handful of tasks, regardless of cores or shuffle
       // partitions). Widening the watermarked batch to cluster
-      // parallelism decouples compute width from
-      // `stateShufflePartitions`: state stores sized to live-bucket
-      // volume, signature compute sized to cores (r22 matrix on q183:
-      // state 8 alone 4.1 s, +widen 3.2 s, baseline 5.5 s at 32/32)
+      // parallelism sizes signature compute to cores, whatever the
+      // state shuffle's width (r22 matrix on q183 at 8 state
+      // partitions: 4.1 s unwidened, 3.2 s widened)
       .repartition(raw.sparkSession.sparkContext.defaultParallelism)
       .select(col(idField).cast(StringType).as("__id"), col(ts).as("__ts"),
         col(field).as("__t"))

@@ -2,15 +2,16 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** The one way the engine scopes a session conf: set a key and get
-  * back an undo that puts back exactly what was there. A key nobody
+/** The one way the engine scopes a session conf: run a body with
+  * keys set, then put back exactly what was there. A key nobody
   * had set is UNSET again, never set to the default it read as — a
   * set() marks the key explicitly configured, so every later "is it
   * user-set?" probe (`sessionState.conf.contains`) would read true
   * and the session conf would differ from the one the caller had. */
 object ConfScope {
 
-  def set(sess: SparkSession, key: String, value: String): () => Unit = {
+  private def set(sess: SparkSession, key: String,
+      value: String): () => Unit = {
     val conf = sess.sessionState.conf
     val prior =
       if (conf.contains(key)) Some(conf.getConfString(key)) else None

@@ -400,19 +400,10 @@ class JoinSpec extends AnyFunSuite {
          "leftWatermark":"10m","rightWatermark":"10m"}""", sl, sr))
     assert(e4.getMessage.contains("must be a timestamp"),
       e4.getMessage)
-    // stateShufflePartitions is validated > 0 (its scoping is pinned
-    // through Pipeline.execute below)
-    val e5 = intercept[IllegalArgumentException](join(
-      """{"method":"interval","by":["u"],"leftOn":"ts",
-         "rightStart":"s","rightEnd":"e","maxIntervalSpan":"2h",
-         "leftWatermark":"10m","rightWatermark":"10m",
-         "stateShufflePartitions":0}""", sl, sr))
-    assert(e5.getMessage.contains("stateShufflePartitions"),
-      e5.getMessage)
   }
 
-  test("stateShufflePartitions: scoped to the run, restored even " +
-      "when the build fails") {
+  test("stream-stream join state width follows the session; a run " +
+      "leaves its conf as found") {
     val key = "spark.sql.shuffle.partitions"
     val dir = java.nio.file.Files.createTempDirectory("graft-jssp")
       .toString
@@ -421,10 +412,16 @@ class JoinSpec extends AnyFunSuite {
       .write.parquet(s"$dir/l")
     Seq((9L, 1L, t0, new java.sql.Timestamp(t0.getTime + 3600000L)))
       .toDF("wid", "u", "s", "e").write.parquet(s"$dir/r")
+    (1L to 64L).map(k => (k, k * 0.5)).toDF("k", "v")
+      .write.parquet(s"$dir/b")
+    // the retired stateShufflePartitions option is accepted and
+    // ignored: it neither sizes the join's state nor leaks into the
+    // run's batch GROUP BY
     def config(rightStart: String) = s"""
       |sources:
       |  - {name: l, module: storage, parameters: {path: $dir/l, stream: true}}
       |  - {name: r, module: storage, parameters: {path: $dir/r, stream: true}}
+      |  - {name: b, module: storage, parameters: {path: $dir/b}}
       |transforms:
       |  - name: jn
       |    module: join
@@ -433,27 +430,38 @@ class JoinSpec extends AnyFunSuite {
       |      rightStart: $rightStart, rightEnd: e, maxIntervalSpan: 2h,
       |      leftWatermark: 10m, rightWatermark: 10m,
       |      stateShufflePartitions: 7}
+      |  - name: agg
+      |    module: sql
+      |    inputs: [b]
+      |    parameters: {sql: "SELECT k, sum(v) AS v FROM b GROUP BY k"}
       |sinks:
       |  - {name: jssp, module: memory, input: jn,
       |     parameters: {outputMode: append, checkpointLocation: $dir/ckpt}}
+      |  - {name: agg_out, module: storage, input: agg,
+      |     parameters: {output: "$dir/out", format: parquet}}
       |""".stripMargin
-    val conf = spark.conf.getAll
-    // the conf is scoped before the missing field fails the build
-    val e = intercept[IllegalArgumentException](
-      Pipeline.execute(spark, config("nosuch")))
-    assert(e.getMessage.contains("'nosuch' not found"), e.getMessage)
-    assert(spark.conf.getAll == conf)
-    // a run that starts its query: the query keeps the per-job count,
-    // the session gets its own back as soon as the run returns
-    try {
-      Pipeline.execute(spark, config("s"))
+    // AQE off: the batch GROUP BY writes one part file per shuffle
+    // partition, so the file count reads the width the run used
+    graft.ops.ConfScope(spark, "spark.sql.adaptive.enabled" -> "false",
+        key -> "4") {
+      val conf = spark.conf.getAll
+      val e = intercept[IllegalArgumentException](
+        Pipeline.execute(spark, config("nosuch")))
+      assert(e.getMessage.contains("'nosuch' not found"), e.getMessage)
       assert(spark.conf.getAll == conf)
-      graft.streaming.StreamRunner.drainAll()
-      assert(spark.table("jssp").count() == 1L)
-      val offsets = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/ckpt/offsets/0")))
-      assert(offsets.contains(s""""$key":"7""""), offsets)
-    } finally graft.streaming.StreamRunner.stopAll()
+      try {
+        Pipeline.execute(spark, config("s"))
+        assert(spark.conf.getAll == conf)
+        val parts = new java.io.File(s"$dir/out").listFiles()
+          .count(_.getName.startsWith("part-"))
+        assert(parts == 4, s"batch sink wrote $parts part files")
+        graft.streaming.StreamRunner.drainAll()
+        assert(spark.table("jssp").count() == 1L)
+        val offsets = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"$dir/ckpt/offsets/0")))
+        assert(offsets.contains(s""""$key":"4""""), offsets)
+      } finally graft.streaming.StreamRunner.stopAll()
+    }
   }
 
   test("reserved columns, bad method, and missing params fail " +

@@ -4,12 +4,11 @@ import graft.streaming.StreamRunner
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the r22 optimization-round internals for the streaming
-  * near-dedup paths: `stateShufflePartitions` (state stores sized to
-  * live-bucket volume, scoped per run and restored when it returns)
-  * must change ONLY the physical shape — the drained candidate
-  * multiset stays identical to the un-knobbed run, and the session's
-  * shuffle-partition conf is restored afterwards. */
+/** Pins the r22 optimization-round internals: the streaming
+  * near-dedup paths keep their state stores on the session's shuffle-
+  * partition count, which must change ONLY the physical shape — the
+  * drained candidate multiset is the same at any width — and pipeline
+  * construction compiles operator caches adaptively. */
 class Round22OptSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -35,7 +34,7 @@ class Round22OptSpec extends AnyFunSuite {
     (3L, 300L, "an entirely different document about spark state"),
     (4L, 400L, "the quick brown fox jumps over the lazy dog again"))
 
-  private def runNgram(extra: String): Seq[(Long, Long)] = {
+  private def runNgram(): Seq[(Long, Long)] = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-r22opt").toString
     stage(dir, "b1", docs.take(2))
@@ -50,7 +49,7 @@ class Round22OptSpec extends AnyFunSuite {
       |    inputs: [d]
       |    strategy: {timestampField: ts, allowedLateness: 36000}
       |    parameters: {method: ngram, field: text, idField: doc_id,
-      |      ngramSize: 5, threshold: 0.5, hashAlgo: md5$extra}
+      |      ngramSize: 5, threshold: 0.5, hashAlgo: md5}
       |sinks:
       |  - name: r22c
       |    module: memory
@@ -66,17 +65,15 @@ class Round22OptSpec extends AnyFunSuite {
       .map(p => (p._1.toLong, p._2.toLong)).distinct.sorted
   }
 
-  test("stateShufflePartitions changes shape, not values; the " +
-      "scoped conf restores") {
+  test("the session shuffle-partition count changes shape, not values") {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
-    val plain = runNgram("")
-    assert(plain.nonEmpty, "fixture must produce candidates")
-    val knobbed = runNgram(", stateShufflePartitions: 2")
-    assert(knobbed == plain,
-      s"the knob must not change the candidate set: $knobbed vs $plain")
-    assert(spark.conf.get(key) == prior,
-      "scoped shuffle-partition conf must restore after stopAll")
+    val narrow = graft.ops.ConfScope(spark, key -> "2")(runNgram())
+    assert(narrow.nonEmpty, "fixture must produce candidates")
+    val plain = runNgram()
+    assert(narrow == plain,
+      s"the state width must not change the candidate set: $narrow vs $plain")
+    assert(spark.conf.get(key) == prior)
   }
 
   test("pipeline construction compiles operator caches adaptively " +

@@ -686,7 +686,7 @@ transforms:
     module: dedup
     inputs: [d]
     strategy: {timestampField: ts, allowedLateness: $horizon}
-    parameters: {method: minhash, field: text, idField: doc_id, stateShufflePartitions: 32}
+    parameters: {method: minhash, field: text, idField: doc_id}
 sinks:
   - name: sk
     module: storage

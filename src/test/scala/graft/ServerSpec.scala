@@ -184,7 +184,7 @@ transforms:
       |    inputs: [d]
       |    strategy: {timestampField: ts, allowedLateness: 36000}
       |    parameters: {method: ngram, field: text, idField: doc_id,
-      |      ngramSize: 5, threshold: 0.5, stateShufflePartitions: 2}
+      |      ngramSize: 5, threshold: 0.5}
       |  - name: cnt
       |    module: aggregation
       |    inputs: [d]

@@ -120,23 +120,6 @@ class StreamingDedupSpec extends AnyFunSuite {
         |""".stripMargin)
     }
     assert(e3.getMessage.contains("timestampField"))
-    // per-job state-store partition knob (join-module semantics):
-    // validated loudly, not silently ignored
-    val e4 = intercept[IllegalArgumentException] {
-      Pipeline.build(spark, s"""
-        |sources:
-        |  - name: ev
-        |    module: storage
-        |    parameters: {path: $dir/in, stream: true}
-        |transforms:
-        |  - name: dd
-        |    module: dedup
-        |    inputs: [ev]
-        |    strategy: {timestampField: ts, allowedLateness: 60}
-        |    parameters: {method: minhash, field: text, stateShufflePartitions: 0}
-        |""".stripMargin)
-    }
-    assert(e4.getMessage.contains("stateShufflePartitions"))
   }
 
   test("streaming minhash LSH flags within-horizon near-dups per " +

@@ -2295,8 +2295,8 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-crr")
       .toString
     stageParquet(dir, "b1", Seq((1L, 3600L, 3.0), (2L, 3660L, 4.0)))
-    // the pane pipeline plus a stream-stream join sized to 3 state
-    // partitions, sharing one source (as the stream benchmark does)
+    // the pane pipeline plus a stream-stream join, sharing one source
+    // (as the stream benchmark does)
     val config = exactPaneConfig(dir, "crpanes", "{}").replace(
       "sinks:", s"""|  - name: lft
       |    module: sql
@@ -2313,8 +2313,7 @@ class StreamingSpec extends AnyFunSuite {
       |    inputs: [lft, wins]
       |    parameters: {method: interval, by: [u], leftOn: ts,
       |      rightStart: s, rightEnd: e, maxIntervalSpan: 60,
-      |      leftWatermark: 60, rightWatermark: 60,
-      |      stateShufflePartitions: 3}
+      |      leftWatermark: 60, rightWatermark: 60}
       |sinks:
       |  - {name: crjoin, module: memory, input: jn,
       |     parameters: {outputMode: append,
@@ -2322,18 +2321,19 @@ class StreamingSpec extends AnyFunSuite {
     val conf = spark.conf.getAll
     try {
       Pipeline.execute(spark, config)
-      // the join's state partitions and the pane store's listing
-      // threshold were both scoped — and both are gone already
+      // the pane store's listing threshold was scoped — and is gone
+      // already
       assert(spark.conf.getAll == conf)
       StreamRunner.drainAll()
       assert(spark.table("crjoin").count() == 2L)
       assert(StreamRunner.paneStore.get("crpanes").map(_._1).toList ==
         List("early"))
-      // the join query captured its count when it started
+      // the join query sized its state to the session's count
+      val parts = conf("spark.sql.shuffle.partitions")
       val offsets = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$dir/ckpt_join/offsets/0")))
       assert(offsets.contains(
-        "\"spark.sql.shuffle.partitions\":\"3\""), offsets)
+        s"\"spark.sql.shuffle.partitions\":\"$parts\""), offsets)
     } finally StreamRunner.stopAll()
   }
 
