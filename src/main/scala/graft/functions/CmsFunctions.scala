@@ -61,13 +61,6 @@ object CmsFunctions {
       ExpressionEncoder[Array[Byte]](), ExpressionEncoder[Array[Byte]]()),
       ExpressionEncoder[Array[Byte]]())(sketch)
 
-  /** Version-envelope wrapper for the native `count_min_sketch`
-    * aggregate's output — one scalar call per GROUP, so the native
-    * aggregate stays in the hot path. */
-  def wrapPayload(sketch: Column): Column =
-    org.apache.spark.sql.functions.udf(
-      (b: Array[Byte]) => SketchPayload.wrap(b)).apply(sketch)
-
   /** Point-frequency estimate of a (string-normalized) value from a
     * binary count-min sketch column. The common probe shape joins
     * MANY probe rows against ONE sketch, so the deserialized grid

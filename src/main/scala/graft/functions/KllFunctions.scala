@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 
 /** Mergeable quantile sketches (DataSketches KLL) — the third
   * mergeable-sketch family next to HLL (distincts) and frequent-items
@@ -20,103 +18,36 @@ import org.apache.spark.sql.functions.udaf
   * bounded-domain oracles pin exact order statistics; beyond that the
   * rank error is the published KLL bound (~1.65/sqrt(k) normalized).
   *
-  * The aggregation buffer batches raw values and folds them into the
-  * serialized sketch every [[KllFunctions.batchSize]] rows, so the
-  * per-row cost is an append, not a heapify — the sketch
-  * deserializes O(n / batch) times per partition. */
+  * Every helper is Spark's native DataSketches KLL expression
+  * (`kll_sketch_agg_double` and friends, the same sketch library and
+  * serialization), so both stages partial-combine map-side as
+  * typed imperative aggregates and the reads stay Catalyst
+  * expressions. */
 object KllFunctions {
 
-  private val batchSize = 1024
-
-  private def fold(bytes: Array[Byte], vals: Seq[Double],
-      k: Int): Array[Byte] = {
-    val sk =
-      if (bytes == null) KllDoublesSketch.newHeapInstance(k)
-      else KllDoublesSketch.heapify(Memory.wrap(bytes))
-    vals.foreach(sk.update)
-    sk.toByteArray
-  }
-
-  private def mergeBytes(a: Array[Byte], b: Array[Byte],
-      k: Int): Array[Byte] = {
-    if (a == null) return b
-    if (b == null) return a
-    val sk = KllDoublesSketch.newHeapInstance(k)
-    sk.merge(KllDoublesSketch.heapify(Memory.wrap(a)))
-    sk.merge(KllDoublesSketch.heapify(Memory.wrap(b)))
-    sk.toByteArray
-  }
-
-  private class KllAgg(k: Int,
-      bufEnc: Encoder[(Array[Byte], Seq[Double])],
-      outEnc: Encoder[Array[Byte]])
-    extends Aggregator[java.lang.Double,
-      (Array[Byte], Seq[Double]), Array[Byte]] {
-    def zero: (Array[Byte], Seq[Double]) = (null, Vector.empty)
-    def reduce(b: (Array[Byte], Seq[Double]), a: java.lang.Double)
-        : (Array[Byte], Seq[Double]) =
-      if (a == null) b
-      else {
-        val pend = b._2 :+ a.doubleValue
-        if (pend.size >= batchSize) (fold(b._1, pend, k), Vector.empty)
-        else (b._1, pend)
-      }
-    def merge(b1: (Array[Byte], Seq[Double]),
-        b2: (Array[Byte], Seq[Double])): (Array[Byte], Seq[Double]) =
-      (mergeBytes(fold(b1._1, b1._2, k), fold(b2._1, b2._2, k), k),
-        Vector.empty)
-    def finish(b: (Array[Byte], Seq[Double])): Array[Byte] =
-      fold(b._1, b._2, k)
-    def bufferEncoder: Encoder[(Array[Byte], Seq[Double])] = bufEnc
-    def outputEncoder: Encoder[Array[Byte]] = outEnc
-  }
-
-  private class KllMergeAgg(k: Int,
-      bufEnc: Encoder[Array[Byte]], outEnc: Encoder[Array[Byte]])
-    extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    def zero: Array[Byte] = null
-    def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] =
-      mergeBytes(b, a, k)
-    def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] =
-      mergeBytes(b1, b2, k)
-    def finish(b: Array[Byte]): Array[Byte] =
-      if (b == null) KllDoublesSketch.newHeapInstance(k).toByteArray
-      else b
-    def bufferEncoder: Encoder[Array[Byte]] = bufEnc
-    def outputEncoder: Encoder[Array[Byte]] = outEnc
-  }
-
   def kllSketch(k: Int, value: Column): Column =
-    udaf(new KllAgg(k,
-      ExpressionEncoder[(Array[Byte], Seq[Double])](),
-      ExpressionEncoder[Array[Byte]]()),
-      ExpressionEncoder[java.lang.Double]())(value)
+    kll_sketch_agg_double(value, k)
 
   def kllMerge(k: Int, sketch: Column): Column =
-    udaf(new KllMergeAgg(k,
-      ExpressionEncoder[Array[Byte]](), ExpressionEncoder[Array[Byte]]()),
-      ExpressionEncoder[Array[Byte]]())(sketch)
+    kll_merge_agg_double(sketch, k)
+
+  // an all-null group yields an EMPTY sketch, which Spark's getters
+  // reject (KLL_INVALID_INPUT_SKETCH_BUFFER): read only non-empty
+  // sketches, so null/empty both read as null
+  private def nonEmpty(sketch: Column, read: Column): Column =
+    when(kll_sketch_get_n_double(sketch) > 0, read)
 
   /** Quantile of a binary KLL sketch column at `fraction`, inclusive
     * search (the smallest retained value whose rank ≥ fraction — for
     * an exact sketch, the ⌈q·n⌉-th order statistic). Null for
     * null/empty sketches. */
-  def kllQuantile(sketch: Column, fraction: Double): Column = {
-    val f = org.apache.spark.sql.functions.udf(
-      (bytes: Array[Byte]) =>
-        if (bytes == null) null
-        else {
-          val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
-          if (sk.isEmpty) null
-          else java.lang.Double.valueOf(sk.getQuantile(fraction))
-        })
-    f(sketch)
-  }
+  def kllQuantile(sketch: Column, fraction: Double): Column =
+    nonEmpty(sketch, kll_sketch_get_quantile_double(sketch, lit(fraction)))
 
   /** Driver-side quantile read of a binary KLL sketch at several
     * fractions (inclusive search, like [[kllQuantile]]): None for
-    * null/empty sketches. Used by the drift profiler to derive
-    * baseline-anchored quantile bucket edges from one sketch pass.
+    * null/empty sketches. Used by the profilers to derive quantile
+    * columns and baseline-anchored bucket edges from one sketch pass.
     * Exactness note: with an exact sketch (n ≤ k) the inclusive
     * quantile at fraction f is the value at the FIRST rank ≥ f·n,
     * where f·n is computed in double arithmetic — an oracle replay
@@ -138,15 +69,6 @@ object KllFunctions {
     * exact, i.e. n ≤ k). The eval-side read of a quantile index:
     * "what fraction of the corpus scores at or below this
     * threshold". Null for null/empty sketches. */
-  def kllRank(sketch: Column, value: Double): Column = {
-    val f = org.apache.spark.sql.functions.udf(
-      (bytes: Array[Byte]) =>
-        if (bytes == null) null
-        else {
-          val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
-          if (sk.isEmpty) null
-          else java.lang.Double.valueOf(sk.getRank(value))
-        })
-    f(sketch)
-  }
+  def kllRank(sketch: Column, value: Double): Column =
+    nonEmpty(sketch, kll_sketch_get_rank_double(sketch, lit(value)))
 }

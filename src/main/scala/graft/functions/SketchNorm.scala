@@ -70,10 +70,10 @@ object SketchNorm {
 }
 
 /** Version envelope for persisted theta/CMS sketch payloads: a
-  * 3-byte header (magic "GS" + normalization version) prepended at
-  * every sketch-producing aggregate's finish and stripped at every
-  * consumer. Raw DataSketches/Spark sketch bytes never start with
-  * the magic (theta byte 0 is a 1..4 preamble-longs count, Spark's
+  * 3-byte header (magic "GS" + normalization version) prepended to
+  * every emitted sketch and stripped at every consumer. Raw
+  * DataSketches/Spark sketch bytes never start with the magic (theta
+  * byte 0 is a 1..4 preamble-longs count, Spark's
   * CountMinSketch a big-endian version int), so the header doubles
   * as a provenance probe: a payload WITHOUT it predates the
   * envelope — possibly also the round-14 fractional-rendering
@@ -119,4 +119,13 @@ object SketchPayload {
       payload
     }
   }
+
+  /** [[wrap]] as a Catalyst prepend on a binary sketch column. */
+  def wrap(sketch: Column): Column =
+    concat(lit(Array(M0, M1, NormVersion)), sketch)
+
+  /** [[unwrap]] as a Catalyst expression on a binary payload column
+    * (once per sketch value). */
+  def unwrap(payload: Column, where: String): Column =
+    org.apache.spark.sql.graft.SketchExpressions.unwrap(payload, where)
 }

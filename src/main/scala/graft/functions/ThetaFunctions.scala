@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches, UpdateSketch}
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 /** Mergeable distinct-SET sketches (DataSketches Theta) — the fourth
   * mergeable-sketch family next to HLL (distinct counts),
@@ -27,132 +24,35 @@ import org.apache.spark.sql.functions.udaf
   * so bounded-domain oracles pin exact values — beyond that the
   * published relative standard error is ~1/sqrt(2^lgK).
   *
-  * The aggregation buffer batches raw values and folds them into the
-  * serialized sketch every [[ThetaFunctions.batchSize]] rows, like
-  * the KLL agg — per-row cost is an append, and the sketch
-  * round-trips O(n / batch) times per partition. */
+  * Every helper is Spark's native DataSketches theta expression
+  * (`theta_sketch_agg`, `theta_union_agg`, `theta_sketch_estimate`,
+  * `theta_intersection`, `theta_difference`). Emitted sketches carry
+  * the [[SketchPayload]] envelope, prepended once per group; every
+  * consumer strips it once per sketch value. Estimates are Spark's
+  * rounded counts, returned as doubles. */
 object ThetaFunctions {
 
-  private val batchSize = 1024
-
-  private def fold(bytes: Array[Byte], vals: Seq[String],
-      lgK: Int): Array[Byte] = {
-    if (vals.isEmpty && bytes != null) return bytes
-    val upd = UpdateSketch.builder.setLogNominalEntries(lgK).build()
-    vals.foreach(v => if (v != null) upd.update(v))
-    if (bytes == null) upd.compact.toByteArray
-    else {
-      val u = SetOperation.builder.setLogNominalEntries(lgK)
-        .buildUnion()
-      u.union(Sketches.wrapCompactSketch(Memory.wrap(bytes)))
-      u.union(upd.compact)
-      u.getResult.toByteArray
-    }
-  }
-
-  private def mergeBytes(a: Array[Byte], b: Array[Byte],
-      lgK: Int): Array[Byte] = {
-    if (a == null) return b
-    if (b == null) return a
-    val u = SetOperation.builder.setLogNominalEntries(lgK).buildUnion()
-    u.union(Sketches.wrapCompactSketch(Memory.wrap(a)))
-    u.union(Sketches.wrapCompactSketch(Memory.wrap(b)))
-    u.getResult.toByteArray
-  }
-
-  private class ThetaAgg(lgK: Int,
-      bufEnc: Encoder[(Array[Byte], Seq[String])],
-      outEnc: Encoder[Array[Byte]])
-    extends Aggregator[String, (Array[Byte], Seq[String]), Array[Byte]] {
-    def zero: (Array[Byte], Seq[String]) = (null, Vector.empty)
-    def reduce(b: (Array[Byte], Seq[String]), a: String)
-        : (Array[Byte], Seq[String]) =
-      if (a == null) b
-      else {
-        val pend = b._2 :+ a
-        if (pend.size >= batchSize) (fold(b._1, pend, lgK), Vector.empty)
-        else (b._1, pend)
-      }
-    def merge(b1: (Array[Byte], Seq[String]),
-        b2: (Array[Byte], Seq[String])): (Array[Byte], Seq[String]) =
-      (mergeBytes(fold(b1._1, b1._2, lgK), fold(b2._1, b2._2, lgK),
-        lgK), Vector.empty)
-    // internal buffers stay raw; only the EMITTED payload carries
-    // the version envelope
-    def finish(b: (Array[Byte], Seq[String])): Array[Byte] =
-      SketchPayload.wrap(fold(b._1, b._2, lgK))
-    def bufferEncoder: Encoder[(Array[Byte], Seq[String])] = bufEnc
-    def outputEncoder: Encoder[Array[Byte]] = outEnc
-  }
-
-  private class ThetaMergeAgg(lgK: Int,
-      bufEnc: Encoder[Array[Byte]], outEnc: Encoder[Array[Byte]])
-    extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    def zero: Array[Byte] = null
-    def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] =
-      mergeBytes(b, SketchPayload.unwrap(a, "theta_union"), lgK)
-    def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] =
-      mergeBytes(b1, b2, lgK)
-    def finish(b: Array[Byte]): Array[Byte] =
-      SketchPayload.wrap(
-        if (b == null)
-          UpdateSketch.builder.setLogNominalEntries(lgK).build()
-            .compact.toByteArray
-        else b)
-    def bufferEncoder: Encoder[Array[Byte]] = bufEnc
-    def outputEncoder: Encoder[Array[Byte]] = outEnc
-  }
-
   def thetaSketch(lgK: Int, value: Column): Column =
-    udaf(new ThetaAgg(lgK,
-      ExpressionEncoder[(Array[Byte], Seq[String])](),
-      ExpressionEncoder[Array[Byte]]()),
-      ExpressionEncoder[String]())(value)
+    SketchPayload.wrap(theta_sketch_agg(value.cast(StringType), lgK))
 
   def thetaUnion(lgK: Int, sketch: Column): Column =
-    udaf(new ThetaMergeAgg(lgK,
-      ExpressionEncoder[Array[Byte]](), ExpressionEncoder[Array[Byte]]()),
-      ExpressionEncoder[Array[Byte]]())(sketch)
-
-  private def sk(bytes: Array[Byte], where: String): CompactSketch =
-    Sketches.wrapCompactSketch(
-      Memory.wrap(SketchPayload.unwrap(bytes, where)))
+    SketchPayload.wrap(theta_union_agg(
+      SketchPayload.unwrap(sketch, "theta_union"), lgK))
 
   /** Distinct-count estimate of a binary theta sketch column. */
-  def thetaEstimate(sketch: Column): Column = {
-    val f = org.apache.spark.sql.functions.udf(
-      (bytes: Array[Byte]) =>
-        if (bytes == null) null
-        else java.lang.Double.valueOf(
-          sk(bytes, "theta_estimate").getEstimate))
-    f(sketch)
-  }
+  def thetaEstimate(sketch: Column): Column =
+    theta_sketch_estimate(SketchPayload.unwrap(sketch, "theta_estimate"))
+      .cast(DoubleType)
 
   /** Estimate of |A ∩ B| from two binary theta sketch columns. */
-  def thetaIntersect(a: Column, b: Column): Column = {
-    val f = org.apache.spark.sql.functions.udf(
-      (x: Array[Byte], y: Array[Byte]) =>
-        if (x == null || y == null) null
-        else {
-          val i = SetOperation.builder.buildIntersection()
-          i.intersect(sk(x, "theta_intersect"))
-          i.intersect(sk(y, "theta_intersect"))
-          java.lang.Double.valueOf(i.getResult.getEstimate)
-        })
-    f(a, b)
-  }
+  def thetaIntersect(a: Column, b: Column): Column =
+    theta_sketch_estimate(theta_intersection(
+      SketchPayload.unwrap(a, "theta_intersect"),
+      SketchPayload.unwrap(b, "theta_intersect"))).cast(DoubleType)
 
   /** Estimate of |A \ B| from two binary theta sketch columns. */
-  def thetaDifference(a: Column, b: Column): Column = {
-    val f = org.apache.spark.sql.functions.udf(
-      (x: Array[Byte], y: Array[Byte]) =>
-        if (x == null || y == null) null
-        else {
-          val d = SetOperation.builder.buildANotB()
-          java.lang.Double.valueOf(
-            d.aNotB(sk(x, "theta_difference"),
-              sk(y, "theta_difference")).getEstimate)
-        })
-    f(a, b)
-  }
+  def thetaDifference(a: Column, b: Column): Column =
+    theta_sketch_estimate(theta_difference(
+      SketchPayload.unwrap(a, "theta_difference"),
+      SketchPayload.unwrap(b, "theta_difference"))).cast(DoubleType)
 }

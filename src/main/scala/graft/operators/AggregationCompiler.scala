@@ -25,7 +25,10 @@ import org.apache.spark.sql.types._
   */
 object AggregationCompiler {
 
-  def compile(op: JsonNode, schema: StructType): Column = {
+  /** `module` ("aggregation <name>", "pivot <name>") prefixes
+    * validation errors. */
+  def compile(op: JsonNode, schema: StructType,
+      module: String): Column = {
     val func = op.str("op").orElse(op.str("func")).getOrElse(
       throw new IllegalArgumentException(s"aggregation op required: $op"))
     val name = op.str("name").getOrElse(func)
@@ -43,6 +46,14 @@ object AggregationCompiler {
       case Some(condNode) =>
         when(FilterCompiler.compile(condNode, schema), c)
       case None => c
+    }
+    // DataSketches' nominal-entries range: outside it the sketch
+    // fails inside a task, so reject it while the plan is built
+    def thetaLgK: Int = {
+      val lgK = op.int("lgK").getOrElse(12)
+      require(lgK >= 4 && lgK <= 26,
+        s"$module: $func field '$name' needs lgK in [4, 26], got $lgK")
+      lgK
     }
     def eventTime: Column = op.str("orderField").map(col).getOrElse {
       if (schema.fieldNames.contains("__event_time")) col("__event_time")
@@ -165,13 +176,12 @@ object AggregationCompiler {
         // distinct identity is the STRING rendering of the value —
         // normalized (SketchNorm) so the same logical number sketched
         // from differently-typed columns intersects correctly
-        graft.functions.ThetaFunctions.thetaSketch(
-          op.int("lgK").getOrElse(12),
+        graft.functions.ThetaFunctions.thetaSketch(thetaLgK,
           guarded(graft.functions.SketchNorm.normalize(
             sketchInputType(op, schema), valueCol)))
       case "theta_union" =>
-        graft.functions.ThetaFunctions.thetaUnion(
-          op.int("lgK").getOrElse(12), guarded(valueCol))
+        graft.functions.ThetaFunctions.thetaUnion(thetaLgK,
+          guarded(valueCol))
       // mergeable FREQUENCY sketches (count-min, Spark's native
       // aggregate): point-frequency estimates for keys chosen AFTER
       // the scan — top_k only retains its heavy hitters. One-sided
@@ -181,9 +191,9 @@ object AggregationCompiler {
       // Values are string-normalized like theta, so build and probe
       // sides agree across column types.
       case "cms_sketch" =>
-        // wrapPayload stamps the version envelope on the native
-        // aggregate's per-group output (one scalar call per group)
-        graft.functions.CmsFunctions.wrapPayload(count_min_sketch(
+        // the version envelope is prepended to the native
+        // aggregate's per-group output
+        graft.functions.SketchPayload.wrap(count_min_sketch(
           guarded(graft.functions.SketchNorm.normalize(
             sketchInputType(op, schema), valueCol)),
           lit(op.dbl("eps").getOrElse(1e-4)),

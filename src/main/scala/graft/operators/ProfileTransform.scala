@@ -117,20 +117,14 @@ object ProfileTransform {
     val r = df.agg(aggs.head, aggs.tail: _*).head()
     // decode the per-column quantiles from the one collected stat row
     // (driver-side: one bounded binary sketch per numeric column)
-    def quantiles(c: String): Seq[java.lang.Double] =
-      if (!numeric(c) || fractions.isEmpty)
-        fractions.map(_ => null: java.lang.Double)
-      else {
-        val bytes = r.getAs[Array[Byte]](s"__kll_$c")
-        if (bytes == null) fractions.map(_ => null: java.lang.Double)
-        else {
-          val sk = org.apache.datasketches.kll.KllDoublesSketch
-            .heapify(org.apache.datasketches.memory.Memory.wrap(bytes))
-          if (sk.isEmpty) fractions.map(_ => null: java.lang.Double)
-          else fractions.map(f =>
-            java.lang.Double.valueOf(sk.getQuantile(f)))
-        }
-      }
+    def quantiles(c: String): Seq[java.lang.Double] = {
+      val qs =
+        if (!numeric(c) || fractions.isEmpty) None
+        else graft.functions.KllFunctions.quantilesAt(
+          r.getAs[Array[Byte]](s"__kll_$c"), fractions)
+      qs.map(_.map(java.lang.Double.valueOf))
+        .getOrElse(fractions.map(_ => null: java.lang.Double))
+    }
     def opt[T](name: String): Option[T] = {
       val i = r.fieldIndex(name)
       if (r.isNullAt(i)) None else Some(r.getAs[T](i))

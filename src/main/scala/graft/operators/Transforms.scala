@@ -496,7 +496,8 @@ object AggregationTransform {
       windowCol.map(_.column.as("window")).toSeq ++ groupFields.map(col)
     val fieldNodes = fieldsOf(d)
     val aggCols = fieldNodes
-      .map(AggregationCompiler.compile(_, df.schema))
+      .map(AggregationCompiler.compile(_, df.schema,
+        s"aggregation ${cfg.name}"))
     // timestampCombiner (reference Strategy.java:72-73, Beam
     // TimestampCombiner): stamps the aggregate's OUTPUT event time
     // as `__event_time`, which downstream modules pick up for
@@ -840,7 +841,7 @@ object PivotTransform {
       s"pivot ${cfg.name} requires aggregations (op configs, same " +
         "grammar as the aggregation module)")
     val aggCols = aggDefs.map { d =>
-      AggregationCompiler.compile(d, df.schema)
+      AggregationCompiler.compile(d, df.schema, s"pivot ${cfg.name}")
     }
     val grouped = df.groupBy(groupFields.map(col): _*)
     val pivoted =

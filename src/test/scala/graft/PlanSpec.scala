@@ -267,6 +267,28 @@ class PlanSpec extends AnyFunSuite {
       "no aggregate below the first exchange")
   }
 
+  test("q114 kll sketches run on Spark's native aggregates, " +
+      "partial-combined at both stages") {
+    val p = plan("q114_kll_sketch")
+    assert(p.contains("partial_kll_sketch_agg_double"),
+      "sketch build lost its native map-side partial:\n" + p)
+    assert(p.contains("partial_kll_merge_agg_double"),
+      "sketch merge lost its native map-side partial:\n" + p)
+    assert(!p.contains("ScalaAggregator"),
+      "a hand-written sketch aggregator is back in the plan")
+  }
+
+  test("q122 theta sketches run on Spark's native aggregates, " +
+      "partial-combined at both stages") {
+    val p = plan("q122_theta_overlap")
+    assert(p.contains("partial_theta_sketch_agg"),
+      "sketch build lost its native map-side partial:\n" + p)
+    assert(p.contains("partial_theta_union_agg"),
+      "sketch union lost its native map-side partial:\n" + p)
+    assert(!p.contains("ScalaAggregator"),
+      "a hand-written sketch aggregator is back in the plan")
+  }
+
   test("q128 triangles: equi-joined wedges, no cartesian, no window") {
     val p = plan("q128_triangles")
     assert(!p.contains("CartesianProduct") &&
