@@ -22,10 +22,16 @@ import org.apache.spark.sql.SparkSession
   *    Errors return 400 with the exception message.
   *
   * Each `/run` and `/schema` request runs on its own clone of the
-  * server's session (`cloneSession`), so its temp views (`sql`
-  * modules), scoped confs and listener registrations stay with the
-  * request and never reach the server's session; the SparkContext
-  * and cache manager are shared. Requests run CONCURRENTLY on one
+  * server's session (`SessionBridge.requestSession`), so its temp
+  * views (`sql` modules), scoped confs and listener registrations
+  * stay with the request and never reach the server's session; the
+  * SparkContext and cache manager are shared. Request clones carry
+  * no per-session artifact state: their tasks share the executors'
+  * class loader, so code generated for one request is compiled once
+  * and reused by every later one. Artifacts added to the server's
+  * session with `addArtifact` do not reach request tasks; jars given
+  * at submit (`--jars`) do. A `/schema` request releases whatever its
+  * build persisted before it answers. Requests run CONCURRENTLY on one
   * handler thread per core — most of a request is single-threaded
   * planning work (config resolution, graph construction, Catalyst)
   * that one thread would serialize; the server holds no lock.
@@ -87,12 +93,12 @@ object Server {
             java.net.URLDecoder.decode(v, "UTF-8")
         }.toMap
 
-    /** Run `f` on a fresh clone of the server's session. */
+    /** Run `f` on a fresh request clone of the server's session. */
     def handle(ex: com.sun.net.httpserver.HttpExchange)(
         f: SparkSession => (Int, String)): Unit =
       try {
         val (code, body) =
-          f(org.apache.spark.sql.graft.SessionBridge.cloneSession(spark))
+          f(org.apache.spark.sql.graft.SessionBridge.requestSession(spark))
         respond(ex, code, body)
       } catch {
         case e: Throwable =>
@@ -110,17 +116,21 @@ object Server {
       (ex: com.sun.net.httpserver.HttpExchange) => handle(ex) { sess =>
         val cfg = new String(ex.getRequestBody.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
-        val built = Pipeline.build(sess, cfg,
-          queryParams(ex).collect {
-            case (k, v) if k.startsWith("args.") =>
-              k.stripPrefix("args.") -> v
-          })
-        val o = graft.config.Json.obj()
-        built.toSeq.sortBy(_._1).foreach { case (n, df) =>
-          o.set[com.fasterxml.jackson.databind.JsonNode](n,
-            graft.config.Json.parse(df.schema.json))
-        }
-        (200, o.toString)
+        // no action ever reads what the build persisted: release it
+        val scope = graft.ops.CacheTracker.beginScope()
+        try {
+          val built = Pipeline.build(sess, cfg,
+            queryParams(ex).collect {
+              case (k, v) if k.startsWith("args.") =>
+                k.stripPrefix("args.") -> v
+            })
+          val o = graft.config.Json.obj()
+          built.toSeq.sortBy(_._1).foreach { case (n, df) =>
+            o.set[com.fasterxml.jackson.databind.JsonNode](n,
+              graft.config.Json.parse(df.schema.json))
+          }
+          (200, o.toString)
+        } finally scope.close(release = true)
       })
 
     srv.createContext("/run",

@@ -6,6 +6,7 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset,
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.internal.SQLConf
 
 /** `cloneSession()` is `private[sql]` but bytecode-public in the
   * bundled Spark: a clone shares the SparkContext, cache manager and
@@ -14,6 +15,25 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 object SessionBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[ClassicSession].cloneSession()
+
+  /** A clone of `spark` for one server request whose jobs carry no
+    * per-session artifact state. Spark keys its codegen cache on
+    * (context class loader, code); an artifact-isolated clone sends
+    * its own session UUID with every job, so the executors build a
+    * class loader per clone and recompile every generated class. A
+    * clone takes its artifact state from the session it is cloned
+    * FROM, so isolation is turned off on a private intermediate clone
+    * and the request gets a clone of that: it sees the server's live
+    * conf, temp views and functions, and the server's own session is
+    * never written. Artifacts added to the server's session with
+    * `addArtifact` do not reach request tasks; jars given at submit
+    * do. */
+  def requestSession(spark: SparkSession): SparkSession = {
+    val mid = spark.asInstanceOf[ClassicSession].cloneSession()
+    mid.sessionState.conf.setConf(
+      SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
+    mid.cloneSession()
+  }
 
   /** `df` with its file-stream sources created on `sess`. A file
     * stream lists each micro-batch's new files through the session

@@ -133,6 +133,46 @@ transforms:
     assert(spark.conf.getAll == conf)
   }
 
+  test("a repeated request compiles no generated code again") {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val first = http("POST", "/run?counts=true", cfg)
+    assert(first._1 == 200, first._2)
+    val conf = spark.conf.getAll
+    val before = compiles.getCount
+    val second = http("POST", "/run?counts=true", cfg)
+    assert(second == first)
+    // each request clone would otherwise send its own artifact state,
+    // and the executors would compile every class again for it
+    assert(compiles.getCount == before)
+    assert(spark.conf.getAll == conf)
+  }
+
+  test("a schema request releases the frames its build persisted") {
+    // sj_j is a join that sj_twice reads twice: the build pins it
+    val joinTwice = s"""
+sources:
+  - name: sj_n
+    module: storage
+    parameters: {path: "$nations"}
+transforms:
+  - name: sj_j
+    module: sql
+    inputs: [sj_n]
+    parameters:
+      sql: "SELECT a.n_nationkey, b.n_regionkey FROM sj_n a JOIN sj_n b ON a.n_nationkey = b.n_nationkey"
+  - name: sj_twice
+    module: sql
+    inputs: [sj_j]
+    parameters: {sql: "SELECT * FROM sj_j UNION ALL SELECT * FROM sj_j"}
+"""
+    spark.catalog.clearCache()
+    val (code, body) = http("POST", "/schema", joinTwice)
+    assert(code == 200, body)
+    assert(graft.config.Json.parse(body)("sj_twice").isDefined)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("requests inherit the engine's SQL functions instead of " +
       "registering them again") {
     val id = org.apache.spark.sql.catalyst.FunctionIdentifier(
