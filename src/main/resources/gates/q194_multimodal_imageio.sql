@@ -1,0 +1,14 @@
+-- real-codec roundtrip: the generated PNG's decoded properties
+-- are pure doc_id arithmetic (dims), constants (3-channel RGB,
+-- png magic), and the resize targets — a hash match proves the
+-- JDK encode→decode→rescale→re-encode→decode chain end-to-end
+SELECT doc_id,
+           CAST(doc_id % 24 + 4 AS BIGINT) AS width,
+           CAST((doc_id * 7) % 16 + 3 AS BIGINT) AS height,
+           CAST(3 AS BIGINT) AS channels,
+           'png' AS format,
+           true AS ok,
+           CAST(17 AS BIGINT) AS width2,
+           CAST(11 AS BIGINT) AS height2,
+           'png' AS format2
+         FROM documents

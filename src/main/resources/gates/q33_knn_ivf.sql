@@ -1,0 +1,49 @@
+-- IVF with external codebook: cell p = position p in the
+-- codebookIds list (ascending ids here, so row_number over
+-- vec_id reproduces it); corpus assigns to its nearest centroid,
+-- queries probe the 6 nearest, candidates rank by cosine with
+-- the q24 tie-break
+-- md5-seeded auto-fit IVF: centroid p = the corpus vector with
+-- the (p+1)-smallest md5(vec_id) — fitIterations defaults to 0
+-- in md5 mode, so the engine's auto-derived codebook is exactly
+-- this ORDER BY md5 LIMIT 16 selection; assignment/probe/rank
+-- replay as in q33c
+WITH e AS (
+           SELECT vec_id, embedding FROM embeddings
+           WHERE embedding IS NOT NULL),
+         seed AS (
+           SELECT vec_id, embedding FROM e
+           ORDER BY md5(CAST(vec_id AS VARCHAR)), CAST(vec_id AS VARCHAR)
+           LIMIT 16),
+         cents AS (
+           SELECT row_number() OVER (
+               ORDER BY md5(CAST(vec_id AS VARCHAR)),
+                 CAST(vec_id AS VARCHAR)) - 1 AS cell,
+             embedding AS cvec
+           FROM seed),
+         sims AS (
+           SELECT e.vec_id, cents.cell,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY list_cosine_similarity(
+                 CAST(e.embedding AS DOUBLE[]),
+                 CAST(cents.cvec AS DOUBLE[])) DESC, cents.cell) AS rn
+           FROM e CROSS JOIN cents),
+         c_assign AS (SELECT vec_id, cell FROM sims WHERE rn = 1),
+         q_assign AS (
+           SELECT vec_id, cell FROM sims WHERE rn <= 6 AND vec_id < 5),
+         pairs AS (
+           SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+           FROM c_assign c JOIN q_assign q ON c.cell = q.cell
+           WHERE c.vec_id <> q.vec_id),
+         ranked AS (
+           SELECT p.query_id, p.neighbor_id,
+             row_number() OVER (PARTITION BY p.query_id
+               ORDER BY list_cosine_similarity(
+                 CAST(eq.embedding AS DOUBLE[]),
+                 CAST(ec.embedding AS DOUBLE[])) DESC,
+                 p.neighbor_id) AS rank
+           FROM pairs p
+           JOIN e eq ON eq.vec_id = p.query_id
+           JOIN e ec ON ec.vec_id = p.neighbor_id)
+         SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
+         FROM ranked WHERE rank <= 5

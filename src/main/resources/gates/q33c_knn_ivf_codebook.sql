@@ -1,0 +1,34 @@
+WITH e AS (
+           SELECT vec_id, embedding FROM embeddings
+           WHERE embedding IS NOT NULL),
+         cents AS (
+           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
+             embedding AS cvec
+           FROM e WHERE vec_id IN (0, 31, 62, 93, 124, 155, 186, 217,
+             248, 279, 310, 341, 372, 403, 434, 465)),
+         sims AS (
+           SELECT e.vec_id, cents.cell,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY list_cosine_similarity(
+                 CAST(e.embedding AS DOUBLE[]),
+                 CAST(cents.cvec AS DOUBLE[])) DESC, cents.cell) AS rn
+           FROM e CROSS JOIN cents),
+         c_assign AS (SELECT vec_id, cell FROM sims WHERE rn = 1),
+         q_assign AS (
+           SELECT vec_id, cell FROM sims WHERE rn <= 6 AND vec_id < 5),
+         pairs AS (
+           SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+           FROM c_assign c JOIN q_assign q ON c.cell = q.cell
+           WHERE c.vec_id <> q.vec_id),
+         ranked AS (
+           SELECT p.query_id, p.neighbor_id,
+             row_number() OVER (PARTITION BY p.query_id
+               ORDER BY list_cosine_similarity(
+                 CAST(eq.embedding AS DOUBLE[]),
+                 CAST(ec.embedding AS DOUBLE[])) DESC,
+                 p.neighbor_id) AS rank
+           FROM pairs p
+           JOIN e eq ON eq.vec_id = p.query_id
+           JOIN e ec ON ec.vec_id = p.neighbor_id)
+         SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
+         FROM ranked WHERE rank <= 5
