@@ -817,7 +817,7 @@ sinks:
         col("__pane").as("pane"))
     }),
 
-    // §2.9 ACCUMULATING accumulation, exact engine (exactPanes):
+    // §2.9 ACCUMULATING accumulation, exact pane engine:
     // batches split at Jan 11 03:00 — INSIDE a 6h window — so the
     // [Jan 11 00:00, 06:00) window fires an early pane from batch 1
     // and a cumulative ON_TIME pane when batch 2's clock closes
@@ -886,7 +886,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: fixed, unit: hour, size: 6}
       trigger:
@@ -952,7 +951,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: fixed, unit: hour, size: 6}
       trigger:
@@ -1018,7 +1016,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: calendar, unit: day, timezone: Asia/Tokyo}
       trigger:
@@ -1088,7 +1085,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: calendar, unit: day, timezone: Europe/Berlin}
       trigger:
@@ -1155,7 +1151,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: sliding, unit: hour, size: 12, period: 6}
       trigger:
@@ -1225,7 +1220,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: calendar, unit: day, size: 3, startDate: "2024-01-02", timezone: Asia/Tokyo}
       trigger:
@@ -1294,7 +1288,6 @@ transforms:
     inputs: [ev]
     strategy:
       mode: accumulating
-      exactPanes: true
       timestampField: ts
       window: {type: calendar, unit: week, offset: 2, timezone: Europe/Berlin}
       trigger:
