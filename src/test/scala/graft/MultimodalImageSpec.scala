@@ -399,4 +399,46 @@ class MultimodalImageSpec extends AnyFunSuite {
     assert(chain(err).exists(_.contains("onnxruntime")),
       s"expected the onnxruntime jar error, got: ${chain(err)}")
   }
+
+  test("embed fast path fails loudly on a contract-violating " +
+      "session: a missing 'out' tensor and a short output both " +
+      "name the problem instead of emitting null embeddings") {
+    import graft.operators.{MultimodalTransform, OnnxTransform}
+    val rows = Seq((1L, 8, 8), (2L, 8, 8)).toDF("doc_id", "w", "h")
+    def embed(): Unit = {
+      val cfg = Pipeline.ModuleCfg("mm", "multimodal", Seq("in"), Nil,
+        graft.config.Json.parse(
+          """{"ops": [
+              {"op": "generate", "widthField": "w",
+               "heightField": "h", "name": "img"},
+              {"op": "embed", "field": "img", "model": "stub:bad",
+               "grid": 8, "name": "emb"}]}"""),
+        graft.config.Json.obj())
+      MultimodalTransform.build(spark, cfg, Map("in" -> rows))("mm")
+        .collect()
+      ()
+    }
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil
+      else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    val prev = OnnxTransform.sessionFactory
+    try {
+      // wrong tensor name: the error must name the tensors returned
+      OnnxTransform.sessionFactory = _ => new OnnxTransform.Session {
+        def run(inputs: Map[String, IndexedSeq[Any]], n: Int) =
+          Map("embedding" -> IndexedSeq.fill(n)(Array(1.0)))
+      }
+      val e1 = intercept[Exception](embed())
+      assert(chain(e1).exists(m => m.contains("'out' tensor") &&
+        m.contains("embedding")), chain(e1))
+      // short output: one vector for two inputs
+      OnnxTransform.sessionFactory = _ => new OnnxTransform.Session {
+        def run(inputs: Map[String, IndexedSeq[Any]], n: Int) =
+          Map("out" -> IndexedSeq(Array(1.0)))
+      }
+      val e2 = intercept[Exception](embed())
+      assert(chain(e2).exists(_.contains("one output per row")),
+        chain(e2))
+    } finally OnnxTransform.sessionFactory = prev
+  }
 }

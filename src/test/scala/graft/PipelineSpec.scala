@@ -649,4 +649,59 @@ class PipelineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("render the same path") ||
       Option(e.getCause).exists(_.getMessage.contains("render the same path")))
   }
+
+  test("pipeline construction compiles operator caches adaptively " +
+      "and restores the session conf") {
+    val key =
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val prior = spark.conf.get(key)
+    assert(prior == "false", "this pin assumes the Spark default")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-r22cache").toString
+    Seq((10L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(s"$dir/docs")
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta iota"))
+      .toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(s"$dir/bench")
+    // decontaminate persists its benchmark gram set and counts it
+    // DURING construction — with the construction-scoped conf the
+    // cached plan is compiled with free output partitioning, so the
+    // tiny distinct materializes AQE-coalesced instead of at the
+    // session shuffle-partition count (the q132/q126/q140 mechanism)
+    val partsKey = "spark.sql.shuffle.partitions"
+    val partsPrior = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "32")
+    try {
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      Pipeline.build(spark, s"""
+        |sources:
+        |  - name: docs
+        |    module: storage
+        |    parameters: {path: $dir/docs}
+        |  - name: bench
+        |    module: storage
+        |    parameters: {path: $dir/bench}
+        |transforms:
+        |  - name: dd
+        |    module: dedup
+        |    inputs: [docs, bench]
+        |    parameters: {method: decontaminate, action: flag,
+        |      field: text, idField: doc_id, ngramSize: 3}
+        |""".stripMargin)
+      assert(spark.conf.get(key) == prior,
+        "the construction-scoped conf must restore afterwards")
+      val cached = spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => rddsBefore.contains(id) }
+      assert(cached.nonEmpty,
+        "decontaminate must have materialized its persisted gram set")
+      val parts = cached.values.map(_.getNumPartitions)
+      assert(parts.forall(_ < 32),
+        s"cached frames must coalesce below the session partition " +
+          s"count, got $parts")
+    } finally {
+      spark.conf.set(partsKey, partsPrior)
+      spark.catalog.clearCache()
+    }
+  }
 }

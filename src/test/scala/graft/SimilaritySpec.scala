@@ -398,4 +398,57 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("lsh or ivf"), e.getMessage)
   }
+
+  test("prebuilt-index validation re-runs after the index dir " +
+      "changes: a null-__cell append is caught even though an " +
+      "earlier query job validated (and memoized) the same dir") {
+    val dim = 8
+    val corpus = (1L to 60L).map(i => (i, intVec(i, dim)))
+      .toDF("vec_id", "embedding")
+    val queries = (1001L to 1003L).map(i => (i, intVec(i * 7, dim)))
+      .toDF("vec_id", "embedding")
+    val built = Pipeline.transforms("similarity")(spark,
+      Pipeline.ModuleCfg("idx", "similarity", Seq("c"), Nil,
+        graft.config.Json.parse(
+          """{"action": "index", "field": "embedding",
+              "idField": "vec_id", "pqM": 4, "pqCodebookSize": 16,
+              "centroids": 4, "hashAlgo": "md5"}"""),
+        graft.config.Json.obj()),
+      Map("c" -> corpus))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-memostale").toString
+    built("idx").write.parquet(s"$dir/codes")
+    built("idx.codebook").write.parquet(s"$dir/cb")
+    built("idx.centroids").write.parquet(s"$dir/cents")
+    def query(): org.apache.spark.sql.DataFrame =
+      Pipeline.transforms("similarity")(spark,
+        Pipeline.ModuleCfg("knn", "similarity",
+          Seq("i", "q", "cb", "ct"), Nil,
+          graft.config.Json.parse(
+            """{"method": "ivf", "field": "embedding",
+                "idField": "vec_id", "k": 3, "nProbe": 2,
+                "indexInput": "i", "codebookInput": "cb",
+                "centroidsInput": "ct"}"""),
+          graft.config.Json.obj()),
+        Map("i" -> spark.read.parquet(s"$dir/codes"),
+          "q" -> queries,
+          "cb" -> spark.read.parquet(s"$dir/cb"),
+          "ct" -> spark.read.parquet(s"$dir/cents")))("knn")
+    // first query job validates the healthy index and memoizes it
+    assert(query().count() > 0)
+    // the dir then grows IN PLACE by a cell-less increment (the
+    // exact corruption the validation exists to catch): rows whose
+    // __cell is null can never be reached by an ivf probe
+    built("idx")
+      .withColumn("__cell",
+        org.apache.spark.sql.functions.lit(null).cast("int"))
+      .withColumn("vec_id",
+        org.apache.spark.sql.functions.col("vec_id") + 1000)
+      .write.mode("append").parquet(s"$dir/codes")
+    // a memo keyed on the plan alone would skip validation here and
+    // serve the unreachable rows silently; the file-set key must
+    // re-validate and throw the null-__cell error
+    val e = intercept[IllegalArgumentException](query())
+    assert(e.getMessage.contains("null __cell"), e.getMessage)
+  }
 }

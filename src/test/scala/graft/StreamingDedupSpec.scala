@@ -12,10 +12,10 @@ class StreamingDedupSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def stage(dir: String, file: String,
-      rows: Seq[(Long, Long, String)]): Unit = {
+      rows: Seq[(Long, Long, String)], idCol: String = "id"): Unit = {
     val tmp = s"$dir/tmp-$file"
-    rows.toDF("id", "secs", "text")
-      .select($"id", timestamp_seconds($"secs").as("ts"), $"text")
+    rows.toDF(idCol, "secs", "text")
+      .select(col(idCol), timestamp_seconds($"secs").as("ts"), $"text")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -992,5 +992,53 @@ class StreamingDedupSpec extends AnyFunSuite {
         assert(got == engineGolden(name), name)
       }
     } finally StreamRunner.stopAll()
+  }
+
+  private val ngramDocs = Seq(
+    (1L, 100L, "the quick brown fox jumps over the lazy dog again"),
+    (2L, 200L, "the quick brown fox jumps over the lazy dog again!"),
+    (3L, 300L, "an entirely different document about spark state"),
+    (4L, 400L, "the quick brown fox jumps over the lazy dog again"))
+
+  private def runNgram(): Seq[(Long, Long)] = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-r22opt").toString
+    stage(dir, "b1", ngramDocs.take(2), "doc_id")
+    Pipeline.execute(spark, s"""
+      |sources:
+      |  - name: d
+      |    module: storage
+      |    parameters: {path: $dir/in, stream: true}
+      |transforms:
+      |  - name: dd
+      |    module: dedup
+      |    inputs: [d]
+      |    strategy: {timestampField: ts, allowedLateness: 36000}
+      |    parameters: {method: ngram, field: text, idField: doc_id,
+      |      ngramSize: 5, threshold: 0.5, hashAlgo: md5}
+      |sinks:
+      |  - name: r22c
+      |    module: memory
+      |    input: dd
+      |    parameters: {outputMode: append}
+      |""".stripMargin)
+    StreamRunner.drainAll()
+    stage(dir, "b2", ngramDocs.drop(2), "doc_id")
+    StreamRunner.drainAll()
+    StreamRunner.stopAll()
+    spark.sql("SELECT doc_id, __dup_of FROM r22c")
+      .as[(String, String)].collect().toSeq
+      .map(p => (p._1.toLong, p._2.toLong)).distinct.sorted
+  }
+
+  test("the session shuffle-partition count changes shape, not values") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    val narrow = graft.ops.ConfScope(spark, key -> "2")(runNgram())
+    assert(narrow.nonEmpty, "fixture must produce candidates")
+    val plain = runNgram()
+    assert(narrow == plain,
+      s"the state width must not change the candidate set: $narrow vs $plain")
+    assert(spark.conf.get(key) == prior)
   }
 }
