@@ -48,15 +48,8 @@ object GateFiles {
     Option(getClass.getResourceAsStream(s"/gates/$file")).map { in =>
       val raw = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
         finally in.close()
-      body(raw, if (file.endsWith(".sql")) "--" else "#")
+      val comment = if (file.endsWith(".sql")) "--" else "#"
+      raw.linesWithSeparators.dropWhile(_.startsWith(comment)).mkString
+        .stripSuffix("\n")
     }
-
-  private def body(raw: String, comment: String): String = {
-    var s = raw
-    while (s.startsWith(comment)) {
-      val nl = s.indexOf('\n')
-      s = if (nl < 0) "" else s.substring(nl + 1)
-    }
-    s.stripSuffix("\n")
-  }
 }
