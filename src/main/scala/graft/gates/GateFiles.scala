@@ -44,7 +44,7 @@ object GateFiles {
   }
 
   /** `gates/<file>` without its comment header and final newline. */
-  def text(file: String): Option[String] =
+  private def text(file: String): Option[String] =
     Option(getClass.getResourceAsStream(s"/gates/$file")).map { in =>
       val raw = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
         finally in.close()
