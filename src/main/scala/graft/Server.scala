@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   *    available data of the streaming queries THIS request started,
   *    like Run's --drain).
   *    Returns the built collection names, plus row counts when
-  *    `counts=true` (counting forces full computation — opt-in).
+  *    `counts=true` (counting forces full computation — opt-in). Each
+  *    batch collection is counted in one Spark job
+  *    (`SessionBridge.count`): its own plan runs, with no count
+  *    aggregate and no exchange for one.
   *    Errors return 400 with the exception message.
   *
   * Each `/run` and `/schema` request runs on its own clone of the
@@ -31,7 +34,12 @@ import org.apache.spark.sql.SparkSession
   * and reused by every later one. Artifacts added to the server's
   * session with `addArtifact` do not reach request tasks; jars given
   * at submit (`--jars`) do. A `/schema` request releases whatever its
-  * build persisted before it answers. Requests run CONCURRENTLY on one
+  * build persisted before it answers. A storage source without a
+  * declared `schema` reuses the schema Spark inferred while its file
+  * listing is unchanged (same format, paths, options and session
+  * conf, every leaf file with the same length and modification time),
+  * so a repeated request runs no inference job; declaring `schema`
+  * skips inference altogether. Requests run CONCURRENTLY on one
   * handler thread per core — most of a request is single-threaded
   * planning work (config resolution, graph construction, Catalyst)
   * that one thread would serialize; the server holds no lock.
@@ -154,7 +162,8 @@ object Server {
         if (q.get("counts").contains("true")) {
           val counts = o.putObject("counts")
           built.toSeq.sortBy(_._1).foreach { case (n, df) =>
-            if (!df.isStreaming) counts.put(n, df.count())
+            if (!df.isStreaming)
+              counts.put(n, org.apache.spark.sql.graft.SessionBridge.count(df))
           }
         }
         (200, o.toString)

@@ -121,11 +121,18 @@ object StorageSource {
       throw new IllegalStateException(
         "storage tfrecord is batch-only (the format has no sync " +
           "markers for incremental tailing); parquet/csv/json stream")
+    val declared = p("schema").map(SchemaMapper.toStructType)
+    // csv reads a header row and infers column types unless declared
+    val options = (if (format == "csv")
+        Map("header" -> p.bool("header").getOrElse(true).toString,
+          "inferSchema" -> declared.isEmpty.toString)
+      else Map.empty[String, String]) ++
+      p("options").toSeq.flatMap(o => o.names.map(k => k -> o.str(k).get))
     var df =
       if (format == "tfrecord") {
         // tf.Example records carry only bytes/float/int64 lists, so
         // the logical schema must be declared (ops/TFRecords)
-        val st = p("schema").map(SchemaMapper.toStructType).getOrElse(
+        val st = declared.getOrElse(
           throw new IllegalArgumentException(
             "storage tfrecord source requires schema (tf.Example has " +
               "no embedded logical types)"))
@@ -133,41 +140,86 @@ object StorageSource {
       } else if (format == "avro") {
         // container files via avro-core/avro-mapred (no spark-avro
         // jar in this image) — block-splittable, see ops/AvroFiles
-        graft.ops.AvroFiles.read(spark, paths,
-          p("schema").map(SchemaMapper.toStructType))
+        graft.ops.AvroFiles.read(spark, paths, declared)
       } else if (streaming) {
-        // Structured Streaming file source: same formats, same schema
-        var r = spark.readStream.format(format)
-        val schema = p("schema").map(SchemaMapper.toStructType).getOrElse(
-          // file streams need an explicit schema; infer from a batch
-          // read of the existing files (driver-side, once)
-          spark.read.format(format).load(paths: _*).schema)
-        r = r.schema(schema)
-        if (format == "csv")
-          r = r.option("header", p.bool("header").getOrElse(true).toString)
-        p("options").foreach(_.names.foreach { k =>
-          r = r.option(k, cfg.params("options").get.str(k).get)
-        })
+        // Structured Streaming file source: same formats and options;
+        // it needs an explicit schema, so one is inferred from the
+        // files present now (driver-side, once)
+        val r = spark.readStream.format(format).options(options).schema(
+          declared.getOrElse(
+            InferredSchemas.load(spark, format, options, paths).schema))
         // readStream.load takes one path; several paths union
         paths.map(r.load).reduceLeft(_.unionByName(_))
-      } else {
-        var reader = spark.read.format(format)
-        p("schema").foreach(s =>
-          reader = reader.schema(SchemaMapper.toStructType(s)))
-        if (format == "csv")
-          reader = reader
-            .option("header", p.bool("header").getOrElse(true).toString)
-            .option("inferSchema", p("schema").isEmpty.toString)
-        p("options").foreach(_.names.foreach { k =>
-          reader = reader.option(k, cfg.params("options").get.str(k).get)
-        })
-        reader.load(paths: _*)
+      } else declared match {
+        case Some(st) =>
+          spark.read.format(format).options(options).schema(st)
+            .load(paths: _*)
+        case None => InferredSchemas.load(spark, format, options, paths)
       }
     // `fields` projection prunes the scan (StorageSource.java:209-239)
     val fields = p.strArr("fields")
     if (fields.nonEmpty) df = df.select(fields.map(col): _*)
     SourceCommon.finish(df, cfg)
   }
+}
+
+/** A file read whose schema Spark infers, remembering that schema.
+  * The key holds everything the schema depends on: format, paths,
+  * reader options, the session's SQL conf and the (path, length,
+  * modification time) of every leaf file under the globbed paths,
+  * hidden files included — more than Spark's own listing reads, so a
+  * changed listing can only miss. A hit still lists the files and
+  * hands the schema to the reader, which then runs no inference job;
+  * a miss returns the frame Spark built while inferring. Schemas
+  * only, never data; the last 64 keys are kept. */
+private object InferredSchemas {
+  private case class Key(format: String, paths: Seq[String],
+      options: Map[String, String], conf: Map[String, String],
+      files: Seq[(String, Long, Long)])
+
+  private val memo = new java.util.LinkedHashMap[Key, StructType](
+      16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[Key, StructType]): Boolean = size > 64
+  }
+
+  def load(spark: SparkSession, format: String,
+      options: Map[String, String], paths: Seq[String]): DataFrame = {
+    val reader = spark.read.format(format).options(options)
+    val key = leafFiles(spark, paths)
+      .map(Key(format, paths, options, spark.conf.getAll, _))
+    key.flatMap(k => memo.synchronized(Option(memo.get(k)))) match {
+      case Some(schema) => reader.schema(schema).load(paths: _*)
+      case None =>
+        val df = reader.load(paths: _*)
+        // a listing that changed while Spark inferred keeps nothing
+        key.filter(k => leafFiles(spark, paths).contains(k.files))
+          .foreach(k => memo.synchronized(memo.put(k, df.schema)))
+        df
+    }
+  }
+
+  /** (path, length, modification time) of every file under `paths`;
+    * None when a path matches nothing or cannot be listed, so the read
+    * skips the memo and Spark reports the path as it always has. */
+  private def leafFiles(spark: SparkSession, paths: Seq[String])
+      : Option[Seq[(String, Long, Long)]] = scala.util.Try {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    val hadoop = spark.sessionState.newHadoopConf()
+    def leaves(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+        .sortBy(_.getPath.toString).flatMap(leaves(fs, _))
+      else Seq(st)
+    val matched = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoop)
+      Option(fs.globStatus(path)).filter(_.nonEmpty)
+        .map(_.toSeq.flatMap(leaves(fs, _)))
+    }
+    if (matched.contains(None)) None
+    else Some(matched.flatten.flatten.map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime)))
+  }.toOption.flatten
 }
 
 /** `rate` streaming source — the reference's streaming `create` rate

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset,
   SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.internal.SQLConf
@@ -33,6 +33,17 @@ object SessionBridge {
     mid.sessionState.conf.setConf(
       SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED, false)
     mid.cloneSession()
+  }
+
+  /** `df`'s row count in one job. `Dataset.count()` plans a count
+    * aggregate whose exchange AQE runs as a job of its own; this runs
+    * `df.select()`'s plan and counts its rows, inside a SQL execution
+    * named `count`, so listeners and observed metrics see a finished
+    * action as they do for `df.count()`. */
+  def count(df: DataFrame): Long = {
+    val qe = df.select().queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("count"))(
+      qe.executedPlan.execute().count())
   }
 
   /** `df` with its file-stream sources created on `sess`. A file

@@ -745,4 +745,109 @@ class ModulesSpec extends AnyFunSuite {
     val n = ok.count()
     assert(ok.agg(max($"rn".cast("long"))).head.getLong(0) == n)
   }
+
+  /** The `s` frame of a storage source over `path` (more parameters in
+    * `extra`), and the Spark jobs its build ran. */
+  private def storageBuild(path: String, extra: String = "")
+      : (org.apache.spark.sql.DataFrame, Int) = {
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = org.apache.spark.graft.ListenerProbe.jobs(
+        spark.sparkContext) {
+      df = Pipeline.build(spark, s"""
+        |sources:
+        |  - name: s
+        |    module: storage
+        |    parameters: {path: "$path"$extra}
+        |""".stripMargin)("s")
+    }
+    (df, jobs)
+  }
+  private def schemaOf(path: String, extra: String = ""): String =
+    storageBuild(path, extra)._1.schema.catalogString
+
+  private def tmpDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix)
+
+  test("storage source: a second build of an unchanged source reuses " +
+      "its inferred schema and runs no job") {
+    val path = s"${tmpDir("graft-memo")}/t"
+    Seq((1L, "a"), (2L, "b")).toDF("id", "name").write.parquet(path)
+    val (first, inferred) = storageBuild(path)
+    assert(inferred > 0, "the first build infers with a job")
+    val (second, jobs) = storageBuild(path)
+    assert(jobs == 0)
+    assert(second.schema == first.schema)
+    assert(second.as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("storage source: a rewritten file, an added file or an " +
+      "inference conf makes the next build infer again") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = tmpDir("graft-memo")
+    // one parquet file at a fixed path, rewritten in place
+    def writeFile(df: org.apache.spark.sql.DataFrame,
+        to: java.nio.file.Path): Unit = {
+      val out = s"${tmpDir("graft-memo-w")}/w"
+      df.coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, to, StandardCopyOption.REPLACE_EXISTING)
+    }
+    val file = dir.resolve("t.parquet")
+    writeFile(Seq(1L).toDF("id"), file)
+    assert(schemaOf(s"$file") == "struct<id:bigint>")
+    writeFile(Seq((1L, "a")).toDF("id", "name"), file)
+    assert(schemaOf(s"$file") == "struct<id:bigint,name:string>")
+    // json infers over every file, so a new file can add a field
+    val json = Files.createDirectory(dir.resolve("json"))
+    Files.writeString(json.resolve("a.json"), "{\"id\": 1}\n")
+    assert(schemaOf(s"$json", ", format: json") == "struct<id:bigint>")
+    Files.writeString(json.resolve("b.json"), "{\"id\": 2, \"n\": \"b\"}\n")
+    assert(schemaOf(s"$json", ", format: json") ==
+      "struct<id:bigint,n:string>")
+    // the session conf is part of what inference reads (parquet
+    // written by Spark carries its own schema, which parquet confs
+    // such as binaryAsString do not change; csv type inference
+    // follows spark.sql.timestampType)
+    val csv = Files.createDirectory(dir.resolve("csv"))
+    Files.writeString(csv.resolve("a.csv"), "ts\n2020-01-01 00:00:00\n")
+    assert(schemaOf(s"$csv", ", format: csv") == "struct<ts:timestamp>")
+    assert(graft.ops.ConfScope(spark,
+      "spark.sql.timestampType" -> "TIMESTAMP_NTZ")(
+        schemaOf(s"$csv", ", format: csv")) == "struct<ts:timestamp_ntz>")
+    assert(schemaOf(s"$csv", ", format: csv") == "struct<ts:timestamp>")
+  }
+
+  test("storage source: a declared schema skips inference and the " +
+      "remembered schema") {
+    val path = s"${tmpDir("graft-memo")}/t"
+    Seq((1L, "a")).toDF("id", "name").write.parquet(path)
+    val declared = ", schema: {fields: [{name: id, type: int64}]}"
+    val (df, jobs) = storageBuild(path, declared)
+    assert(jobs == 0 && df.schema.catalogString == "struct<id:bigint>")
+    // the declared build left nothing behind: this one infers
+    assert(storageBuild(path)._2 > 0)
+    assert(schemaOf(path, declared) == "struct<id:bigint>")
+  }
+
+  test("storage source: a missing path fails as Spark's reader does") {
+    val missing = s"${tmpDir("graft-memo")}/nope"
+    val direct = intercept[Exception](
+      spark.read.format("parquet").load(missing)).getMessage
+    val built = intercept[Exception](storageBuild(missing)).getMessage
+    assert(built.contains(direct), built)
+  }
+
+  test("storage source: a streaming csv source reads its header and " +
+      "infers types like the batch one") {
+    val dir = tmpDir("graft-csv")
+    java.nio.file.Files.writeString(dir.resolve("a.csv"),
+      "id,name\n1,a\n2,b\n")
+    val batch = schemaOf(s"$dir", ", format: csv")
+    assert(batch == "struct<id:int,name:string>")
+    val (stream, _) = storageBuild(s"$dir", ", format: csv, stream: true")
+    assert(stream.isStreaming)
+    assert(stream.schema.catalogString == batch)
+  }
 }

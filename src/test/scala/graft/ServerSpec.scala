@@ -148,6 +148,69 @@ transforms:
     assert(spark.conf.getAll == conf)
   }
 
+  test("a repeated request runs no inference job and counts each " +
+      "collection without a count aggregate") {
+    val first = http("POST", "/run?counts=true", cfg)
+    assert(first._1 == 200, first._2)
+    val jobs = org.apache.spark.graft.ListenerProbe.jobs(
+        spark.sparkContext) {
+      assert(http("POST", "/run?counts=true", cfg) == first)
+    }
+    // n: its scan; agg: its own shuffle stage, then its result
+    assert(jobs == 3)
+  }
+
+  test("the one-job count equals df.count() on gates with a limit, a " +
+      "global sort, a union, an aggregation, a window and a join") {
+    import org.apache.spark.sql.graft.SessionBridge
+    val gates = graft.gates.GateFiles.configs.toMap
+    // the testdata directory `cfg` reads its nations from
+    val dir = cfg.split('"')(1).stripSuffix("/nation.parquet")
+    val sess = SessionBridge.cloneSession(spark)
+    val scope = graft.ops.CacheTracker.beginScope()
+    try Seq("q1_pricing", "q3_sql_join", "q6_union", "q8_window",
+        "q9_limit").foreach { gate =>
+      val (out, config) = gates(gate)
+      val built = Pipeline.build(sess, config, Map("dir" -> dir))
+      val sorted = built(out).orderBy(built(out).columns.head)
+      (built.toSeq ++ Seq("sorted" -> sorted, "limited" -> sorted.limit(7),
+          "limit" -> built(out).limit(7))).foreach { case (n, df) =>
+        assert(SessionBridge.count(df) == df.count(), s"$gate: $n")
+      }
+    } finally scope.close(release = true)
+  }
+
+  test("counts fire a logging tap on the counted collection") {
+    val tapped = s"""
+sources:
+  - name: srv_tn
+    module: storage
+    parameters: {path: "$nations"}
+transforms:
+  - name: srv_tagg
+    module: aggregation
+    inputs: [srv_tn]
+    loggings: [{name: srv_tagg, level: info}]
+    parameters:
+      groupFields: [n_regionkey]
+      aggregations:
+        - input: srv_tn
+          fields:
+            - {name: cnt, op: count}
+"""
+    graft.LoggingTaps.observed.remove("srv_tagg.srv_tagg|info")
+    val (code, body) = http("POST", "/run?counts=true", tapped)
+    assert(code == 200, body)
+    assert(graft.config.Json.parse(body)("counts").get.long("srv_tagg")
+      .contains(5L), body)
+    val seen = (1 to 50).exists { _ =>
+      val m = graft.LoggingTaps.observed.get("srv_tagg.srv_tagg|info")
+      if (m == null) { Thread.sleep(100); false }
+      else { assert(m("count") == 5L); true }
+    }
+    assert(seen, "the tap never reported")
+  }
+
   test("a schema request releases the frames its build persisted") {
     // sj_j is a join that sj_twice reads twice: the build pins it
     val joinTwice = s"""
